@@ -105,14 +105,15 @@ def shingle_arrays(
 
 def _make_minhash_kernel(num_hashes: int, id_col: str, shingle_col: str):
     """Build the Arrow/Python MinHash-signature kernel for
-    ``minhash_signatures_from_arrays(kernel="arrow")`` — shipped as a
+    ``minhash_signatures_from_arrays`` — shipped as a
     closure (the similarity._make_kernel_helpers discipline, so bare
     driver sessions from a foreign cwd need no package import on the
     workers).
 
     Value contract: mh_h = min over the doc's shingles of
     int(md5(f"{h}:{shingle}")[:8], 16) — bit-identical to the JVM
-    ``array_min(transform(shingles, hash32(seed=h)))`` fold (pinned by
+    ``array_min(transform(shingles, hash32(seed=h)))`` fold (pinned
+    against tests/jvm_reference.py by
     tests/test_dedup.py::test_minhash_kernel_identical). Empty or NULL
     shingle arrays yield NULL signatures (array_min of an empty array);
     NULL elements are skipped exactly as array_min skips the
@@ -182,63 +183,29 @@ def minhash_signatures_from_arrays(
     num_hashes: int = 16,
     id_col: str = "doc_id",
     shingle_col: str = "shingles",
-    kernel: str = "arrow",
 ) -> DataFrame:
-    """MinHash signatures as a NARROW projection: for each seed h,
-    array_min over the per-document shingle array's hashes. No explode,
+    """MinHash signatures as a NARROW pass: for each seed h, the min of
+    hash32(h, shingle) over the per-document shingle array. No explode,
     no groupBy — the signature stage has zero shuffles, versus the
     exploded form which shuffled every (doc, shingle, seed) row into a
     per-document aggregate. Same md5-derived values bit-for-bit.
     Output is (id, mh_0..mh_{H-1}) only — the wide shingle arrays stay
     behind.
 
-    ``kernel="arrow"`` (default, r20 — guide §4.2): the H·|shingles|
-    interpreted md5 folds per document run instead as one mapInPandas
-    pass with a per-worker DISTINCT-shingle memo (_make_minhash_kernel
-    — values bit-identical, pinned by test_minhash_kernel_identical).
-    ``kernel="jvm"`` keeps the expression fold as the equivalence
-    reference. NOTE the arrow path ships (id, shingles) through the
+    Runs as one mapInPandas pass with a per-worker DISTINCT-shingle
+    memo (_make_minhash_kernel; values bit-identical to the JVM
+    ``array_min(transform(...))`` fold, pinned by
+    test_minhash_kernel_identical). Only (id, shingles) cross the
     Python boundary — callers that chain more columns should project
     first (they all do: the input is the narrow shingle frame)."""
-    if kernel == "arrow":
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        kfn = _make_minhash_kernel(num_hashes, id_col, shingle_col)
-        out_schema = T.StructType(
-            [T.StructField(id_col, sh_arrays.schema[id_col].dataType, True)]
-            + [
-                T.StructField(f"mh_{h}", T.LongType(), True)
-                for h in range(num_hashes)
-            ]
-        )
-        return sh_arrays.select(id_col, shingle_col).mapInPandas(
-            kfn, schema=out_schema
-        )
-    def _mh(h: int):
-        # closure FACTORY, never a default arg: pyspark binds every
-        # lambda parameter — defaults included — to a higher-order
-        # lambda variable, so `lambda s, h=h:` silently made h the
-        # ELEMENT INDEX column and hash32's f-string seed stringified
-        # it into "Column<'y_N'>:" — a literal carrying the session's
-        # lambda-variable counter. Signatures still deduplicated
-        # (distinct y_N per column ≈ distinct hash functions) and every
-        # oracle stayed green because exact-Jaccard verify saturates
-        # recall at fixture scale, but values broke the documented
-        # md5(seed:shingle) contract and CHANGED PER PLAN BUILD — fatal
-        # for r10's incremental pipeline, which joins a new batch's
-        # band keys against band keys persisted by an earlier plan
-        # (caught by test_training_data_incremental; same trap as the
-        # r9 streaming-SimHash note, now also guarded by a hash32
-        # seed-type assert).
-        return lambda s: hash32(s, seed=h)
-
-    sigs = sh_arrays.withColumns(
-        {
-            f"mh_{h}": F.array_min(F.transform(F.col(shingle_col), _mh(h)))
-            for h in range(num_hashes)
-        }
+    kfn = _make_minhash_kernel(num_hashes, id_col, shingle_col)
+    out_schema = T.StructType(
+        [T.StructField(id_col, sh_arrays.schema[id_col].dataType, True)]
+        + [T.StructField(f"mh_{h}", T.LongType(), True) for h in range(num_hashes)]
     )
-    return sigs.select(id_col, *[f"mh_{h}" for h in range(num_hashes)])
+    return sh_arrays.select(id_col, shingle_col).mapInPandas(kfn, schema=out_schema)
 
 
 def minhash_signatures(

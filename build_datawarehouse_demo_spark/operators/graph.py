@@ -72,7 +72,8 @@ def pagerank(
 
     Dangling mass (nodes with no out-edges) is dropped, not
     redistributed — the standard simplification; both this and the SQL
-    oracle implement identical semantics.  Returns (node, rank) with
+    oracle implement identical semantics.  Edges with a NULL endpoint
+    are dropped (pagerank_share).  Returns (node, rank) with
     full-precision doubles; callers round for display/oracle hashing.
 
     ``broadcast_ranks`` (default) hints the |nodes|-row rank and
@@ -114,7 +115,10 @@ def pagerank_share(
     edges: DataFrame, src: str = "src", dst: str = "dst", weight: str = "w"
 ) -> DataFrame:
     """(e_src, e_dst, share) with share = w / out_weight(src) — the
-    stationary per-iteration join input, derived once."""
+    stationary per-iteration join input, derived once. Edges with a
+    NULL endpoint are dropped on input: they name no node, so they
+    carry no rank and count toward no out-weight."""
+    edges = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
     out_w = edges.groupBy(src).agg(F.sum(weight).alias("out_w"))
     return edges.join(out_w, on=src).select(
         F.col(src).alias("e_src"),

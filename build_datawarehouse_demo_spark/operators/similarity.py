@@ -204,19 +204,18 @@ def _kernel_centroid_data(
     and per-centroid norms computed with the dot()/norm() fold's exact
     dimension-sequential order. Centroid rows whose vector is NULL,
     wrong-dimension or zero-norm get cnorm 0 → denom 0 → NULL cosine
-    for every corpus row, exactly the zip_with/when(denom>0) behavior
-    of the JVM kernel. The collect here is the same driver-side
-    materialization the former broadcast-hash-join paid in
-    BroadcastExchange — bounded by the quantizer sizing (nlist ≈ √n),
-    never corpus-scale.
+    for every corpus row, exactly the cosine() when(denom>0) behavior.
+    The collect is the same driver-side materialization a broadcast
+    join pays — bounded by the quantizer sizing (nlist ≈ √n), never
+    corpus-scale.
 
     Input contract (ADVICE r19, documented): centroid/probe ids must
-    be UNIQUE and vectors uniform-dimension — duplicates collapse via
-    the dict below (last row wins) and dim is inferred from the first
-    non-empty vector of the smallest id, where the JVM join path would
-    score every row as-is. Every caller (quantizer training, index
-    build/append, probe routing) produces unique-id, fixed-dim
-    centroid tables by construction."""
+    be UNIQUE and vectors uniform-dimension — rows with a NULL id are
+    dropped, duplicates collapse via the dict below (last row wins)
+    and dim is inferred from the first non-empty vector of the
+    smallest id, where a join plan would score every row as-is. Every
+    caller (quantizer training, index build/append, probe routing)
+    produces unique-id, fixed-dim centroid tables by construction."""
     import numpy as np
 
     rows = centroids.select(
@@ -255,88 +254,6 @@ def _kernel_centroid_data(
 #: scoring temporary to ~256 MB of float64 cells per task whatever the
 #: Arrow batch size or centroid count
 _KERNEL_BLOCK_CELLS = 1 << 25
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    top_n: int = 1,
-    kernel: str = "arrow",
-) -> DataFrame:
-    """Assign each vector to its ``top_n`` max-cosine centroids
-    (broadcast centroids, one narrow pass — this is the 'build the IVF
-    index' step; at 100 TB it's a single map stage). top_n=1 is index
-    build (each vector lives in ONE inverted list); top_n>1 is the
-    probe-side ``nprobe`` routing.
-
-    top_n=1 (the hot path: every Lloyd iteration, every index build)
-    computes the argmax with a map-side-combining ``max_by`` aggregate
-    instead of a row_number window (r17): the scored join emits
-    |corpus|·|centroids| rows, and the former window SHUFFLED AND
-    SORTED all of them, where the aggregate collapses each vector's
-    centroid scores to one row inside the join's own partitions before
-    any exchange. Winner identical to the window's (sim desc,
-    centroid_id asc): the ordering key coalesces NULL cosines to -2 —
-    below the cosine range, so a zero-norm vector still loses to every
-    real score and an all-null row still assigns to the smallest
-    centroid id, exactly as nulls-last desc ordering did (cosine()
-    returns NULL, never NaN, for zero norms — see its docstring).
-
-    ``kernel="arrow"`` (default, r19 — guide §4.2) computes the same
-    scores WITHOUT materializing the |corpus|·|centroids| joined rows
-    through the JVM: centroids are collected once (bounded nlist rows —
-    the same driver materialization the broadcast join paid), shipped
-    as a numpy matrix via a broadcast variable, and one mapInPandas
-    pass scores each Arrow batch with the dimension-sequential
-    multiply-then-add loop — BIT-IDENTICAL to the dot()/norm() fold
-    (the staged_projections precedent; pinned by
-    tests/test_similarity.py::test_ivf_assign_kernels_identical) — and
-    emits only the winner (or top_n) rows. ``kernel="jvm"`` keeps the
-    join+max_by/window plan (the equivalence-test reference and the
-    no-Arrow fallback). The arrow kernel drops centroid rows with a
-    NULL centroid id (ill-formed input the JVM path would score
-    meaninglessly). Corpus ``id_col`` values must be UNIQUE (ADVICE
-    r19, documented): the kernel emits one row per INPUT row, where
-    the JVM max_by/window path groups by id and would emit one row per
-    DISTINCT id — every caller feeds unique vec ids by construction
-    (parquet key columns, chunk uids)."""
-    if kernel == "arrow":
-        return _ivf_assign_arrow(
-            corpus, centroids, id_col, vec_col, centroid_id_col, top_n
-        )
-    c = corpus.select(F.col(id_col), _as_double(vec_col).alias("__v"))
-    cent = centroids.select(F.col(centroid_id_col), _as_double(vec_col).alias("__c"))
-    scored = c.join(F.broadcast(cent)).withColumn("sim", cosine(F.col("__v"), F.col("__c")))
-    if top_n == 1:
-        ordk = F.struct(
-            F.coalesce(F.col("sim"), F.lit(-2.0)).alias("s"),
-            (-F.col(centroid_id_col)).alias("nc"),
-        )
-        return (
-            scored.groupBy(id_col)
-            .agg(
-                F.max_by(
-                    F.struct(
-                        F.col(centroid_id_col).alias("__cid"), F.col("__v")
-                    ),
-                    ordk,
-                ).alias("__b")
-            )
-            .select(
-                id_col,
-                F.col("__b.__cid").alias(centroid_id_col),
-                F.col("__b.__v").alias("__v"),
-            )
-        )
-    w = Window.partitionBy(id_col).orderBy(F.col("sim").desc(), F.col(centroid_id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_n)
-        .select(id_col, centroid_id_col, F.col("__v").alias("__v"))
-    )
 
 
 def _make_kernel_helpers():
@@ -394,20 +311,38 @@ def _make_kernel_helpers():
 _rows_to_matrix, _kernel_sims = _make_kernel_helpers()
 
 
-def _ivf_assign_arrow(
+def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroid_id_col: str,
-    top_n: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    centroid_id_col: str = "centroid_id",
+    top_n: int = 1,
 ) -> DataFrame:
-    """Arrow/numpy assign kernel (see ivf_assign's docstring): one
-    mapInPandas pass over (id, __v), centroid matrix shipped once per
-    executor as a broadcast variable, scores computed in the JVM fold's
-    exact IEEE order, winner(s) chosen by (key desc, centroid_id asc)
-    via first-occurrence argmax / stable argsort over the
-    ascending-cid-ordered matrix columns."""
+    """Assign each vector to its ``top_n`` max-cosine centroids
+    (broadcast centroids, one narrow pass — this is the 'build the IVF
+    index' step; at 100 TB it's a single map stage). top_n=1 is index
+    build (each vector lives in ONE inverted list); top_n>1 is the
+    probe-side ``nprobe`` routing. Returns (id, centroid_id, __v).
+
+    Centroids are collected once (bounded nlist rows — the same driver
+    materialization a broadcast join pays), shipped as a numpy matrix
+    via a broadcast variable, and one mapInPandas pass scores each
+    Arrow batch with the dimension-sequential multiply-then-add loop —
+    BIT-IDENTICAL to the cosine()/dot()/norm() fold (pinned against the
+    join reference in tests/jvm_reference.py by
+    tests/test_similarity.py::test_ivf_assign_kernels_identical) — and
+    emits only the winner (or top_n) rows: the |corpus|·|centroids|
+    scored rows never materialize. Winners order by (cosine desc,
+    centroid_id asc); a NULL cosine (zero-norm, NULL or wrong-dimension
+    vector — cosine() returns NULL, never NaN) ranks below every real
+    score, so such a row still assigns to the smallest centroid id.
+
+    Input contract: corpus ``id_col`` values must be UNIQUE — the
+    kernel emits rows per INPUT row, where a group-by-id plan would
+    emit one per DISTINCT id; every caller feeds unique vec ids by
+    construction (parquet key columns, chunk uids). Centroid rows with
+    a NULL centroid id are dropped (see _kernel_centroid_data)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -1438,7 +1373,7 @@ def embedding_near_dup_pairs_bucketed(
     )
 
 
-def _lloyd_partial_sums_arrow(
+def _lloyd_partial_sums(
     corpus: DataFrame,
     centroids: DataFrame,
     id_col: str,
@@ -1446,9 +1381,9 @@ def _lloyd_partial_sums_arrow(
     centroid_id_col: str,
 ) -> DataFrame:
     """One mapInPandas pass: assign each vector to its winning centroid
-    (the _ivf_assign_arrow scoring, bit-identical ordering) and emit
+    (the ivf_assign scoring, bit-identical ordering) and emit
     per-(centroid, dim) partial (sum, count) rows for the Lloyd mean.
-    Contribution semantics replicate the JVM posexplode+avg exactly:
+    Contribution semantics replicate a posexplode+avg exactly:
     NULL vectors contribute nothing; wrong-length vectors contribute
     over their OWN length; None elements are skipped but still
     materialize the (centroid, dim) group (count 0) so an all-null cell
@@ -1551,7 +1486,6 @@ def kmeans_lloyd_step(
     centroid_id_col: str = "centroid_id",
     round_to: int | None = 6,
     as_dims: bool = False,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """One Lloyd iteration: assign every vector to its max-cosine
     centroid (ivf_assign — broadcast centroids, narrow pass), then
@@ -1573,39 +1507,24 @@ def kmeans_lloyd_step(
     hash-based checkers can canonicalize (array cells crash the
     driver's pandas sort, VERDICT.md round 2 item 1).
 
-    ``kernel="arrow"`` (default, r19 — guide §4.2/§2.3): assignment AND
-    per-(centroid, dim) partial sums run in ONE mapInPandas pass —
-    the |corpus|·|centroids| scored join and the |corpus|·dim
-    posexplode never materialize; the only exchange carries
-    (centroid, dim, partial sum, count) rows, one set per task. The
-    assignment winner is bit-identical to the JVM kernel (see
-    ivf_assign); the mean's float-summation order differs from avg()'s
-    partial merge only WITHIN a task's partial (numpy pairwise vs
+    Assignment AND per-(centroid, dim) partial sums run in ONE
+    mapInPandas pass (_lloyd_partial_sums) — the |corpus|·|centroids|
+    scored rows and the |corpus|·dim posexplode never materialize; the
+    only exchange carries (centroid, dim, partial sum, count) rows, one
+    set per task. The assignment winner is bit-identical to
+    ivf_assign's; the mean's float-summation order differs from a
+    sequential avg() only WITHIN a task's partial (numpy pairwise vs
     sequential), which sits below the ``round_to`` guard exactly like
-    the partition-order variance the JVM partial aggregate already
-    has (see the round_to note above). ``kernel="jvm"`` keeps the old
-    plan for the equivalence test."""
-    if kernel == "arrow":
-        parts = _lloyd_partial_sums_arrow(
-            corpus, centroids, id_col, vec_col, centroid_id_col
-        )
-        mean_col = F.when(
-            F.sum("pcnt") > 0, F.sum("psum") / F.sum("pcnt")
-        ).otherwise(F.lit(None))
-        if round_to is not None:
-            mean_col = F.round(mean_col, round_to)
-        per_dim = parts.groupBy(centroid_id_col, "dim").agg(mean_col.alias("m"))
-    else:
-        assigned = ivf_assign(
-            corpus, centroids, id_col, vec_col, centroid_id_col, kernel="jvm"
-        )
-        dims = assigned.select(
-            centroid_id_col, F.posexplode(F.col("__v")).alias("dim", "x")
-        )
-        mean_col = F.avg("x")
-        if round_to is not None:
-            mean_col = F.round(mean_col, round_to)
-        per_dim = dims.groupBy(centroid_id_col, "dim").agg(mean_col.alias("m"))
+    the partition-order variance any partial aggregate has (pinned
+    against the posexplode+avg reference in tests/jvm_reference.py by
+    test_lloyd_step_kernels_identical)."""
+    parts = _lloyd_partial_sums(corpus, centroids, id_col, vec_col, centroid_id_col)
+    mean_col = F.when(F.sum("pcnt") > 0, F.sum("psum") / F.sum("pcnt")).otherwise(
+        F.lit(None)
+    )
+    if round_to is not None:
+        mean_col = F.round(mean_col, round_to)
+    per_dim = parts.groupBy(centroid_id_col, "dim").agg(mean_col.alias("m"))
     if as_dims:
         return per_dim
     return (
@@ -1786,7 +1705,6 @@ def ivf_assign_two_level(
     gprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Two-level inverted-list build: each vector routes to its
     ``gprobe`` nearest SUPER-centroids (broadcast, ~√nlist of them),
@@ -1802,59 +1720,19 @@ def ivf_assign_two_level(
     Output matches ivf_assign: (id, centroid_id, __v) — feed to
     ivf_topk_assigned.
 
-    ``kernel="arrow"`` (default, r19 — guide §4.2): BOTH levels run in
-    one mapInPandas pass — super routing, member scoring and the
-    winner pick never materialize the routed×members joined rows or
-    the per-id row_number exchange. Scores use the exact fold order
-    (see ivf_assign); the winner ordering (sim desc NULLS LAST,
-    centroid_id asc) and the drop-rows-with-no-candidates behavior
-    replicate the JVM window path row-for-row (pinned by
-    tests/test_similarity.py::test_two_level_kernels_identical)."""
-    if kernel == "arrow":
-        return _ivf_assign_two_level_arrow(
-            corpus, centroids, super_centroids, centroid_groups, gprobe, id_col, vec_col
-        )
-    routed = ivf_assign(
-        corpus,
-        super_centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        centroid_id_col="group_id",
-        top_n=gprobe,
-        kernel="jvm",
-    )
-    cmap = centroid_groups.select("centroid_id", "group_id")
-    cvecs = centroids.select(F.col("centroid_id"), _as_double(vec_col).alias("__c"))
-    scored = (
-        routed.join(F.broadcast(cmap), "group_id")
-        .join(F.broadcast(cvecs), "centroid_id")
-        .withColumn("sim", cosine(F.col("__v"), F.col("__c")))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("sim").desc(), F.col("centroid_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "centroid_id", "__v")
-    )
-
-
-def _ivf_assign_two_level_arrow(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    super_centroids: DataFrame,
-    centroid_groups: DataFrame,
-    gprobe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Fused two-level assign kernel (see ivf_assign_two_level): per
-    batch, route to the gprobe best super-centroids (stable argsort —
-    group_id asc on ties, NULLs ordered last via the -2 sentinel),
-    then score only those groups' member centroids group-by-group
-    (vectorized per (slot, group) cohort) and keep the best
-    (key desc, centroid_id asc) across slots. Candidate sets are
-    disjoint (each centroid lives in one group), so the cross-slot
-    merge needs only the running (best_key, best_cid_index) pair."""
+    BOTH levels run in one mapInPandas pass: per batch, route to the
+    gprobe best super-centroids (stable argsort — group_id asc on
+    ties, NULL cosines last), then score only those groups' member
+    centroids group-by-group (vectorized per (slot, group) cohort) and
+    keep the best (cosine desc, centroid_id asc) across slots; rows
+    with no candidate centroid drop. Candidate sets are disjoint, so
+    the cross-slot merge needs only the running (best_key,
+    best_cid_index) pair. Scores use ivf_assign's exact fold order
+    (pinned row-for-row against the join/window reference in
+    tests/jvm_reference.py by
+    tests/test_similarity.py::test_two_level_kernels_identical). Same
+    input contract as ivf_assign: unique corpus ids; NULL-id centroid
+    and super-centroid rows are dropped."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T

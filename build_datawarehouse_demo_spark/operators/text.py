@@ -776,13 +776,18 @@ def default_classifier_weights(dim: int, seed: int = 0) -> list[float]:
     ]
 
 
+#: default classifier bias — shared by quality_classifier_score and the
+#: fused clean front (plans.training_data.clean_filter_survivors)
+CLF_BIAS = 0.0
+
+
 def quality_classifier_score(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     dim: int = 64,
     weights: list[float] | None = None,
-    bias: float = 0.0,
+    bias: float = CLF_BIAS,
     threshold: float = 0.5,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -958,19 +963,35 @@ GOPHER_STOPWORDS: tuple[str, ...] = (
     "the", "be", "to", "of", "and", "that", "have", "with",
 )
 
+# Gopher thresholds (Rae et al. 2021, Appendix A1.1.2-3): the defaults
+# of gopher_quality_rules / gopher_repetition_rules, also read by the
+# fused clean front (plans.training_data.clean_filter_survivors), which
+# does not expose them as knobs.
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_WORD_LEN = 3.0
+GOPHER_MAX_MEAN_WORD_LEN = 10.0
+GOPHER_MAX_SYMBOL_WORD_RATIO = 0.1
+GOPHER_MAX_BULLET_LINE_RATIO = 0.9
+GOPHER_MAX_ELLIPSIS_LINE_RATIO = 0.3
+GOPHER_MIN_ALPHA_WORD_RATIO = 0.8
+GOPHER_MAX_DUP_LINE_FRAC = 0.30
+GOPHER_MAX_DUP_PARA_FRAC = 0.30
+GOPHER_MAX_DUP_LINE_CHAR_FRAC = 0.20
+GOPHER_MAX_DUP_PARA_CHAR_FRAC = 0.20
+
 
 def gopher_quality_rules(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    max_bullet_line_ratio: float = 0.9,
-    max_ellipsis_line_ratio: float = 0.3,
-    min_alpha_word_ratio: float = 0.8,
+    max_words: int = GOPHER_MAX_WORDS,
+    min_mean_word_len: float = GOPHER_MIN_MEAN_WORD_LEN,
+    max_mean_word_len: float = GOPHER_MAX_MEAN_WORD_LEN,
+    max_symbol_word_ratio: float = GOPHER_MAX_SYMBOL_WORD_RATIO,
+    max_bullet_line_ratio: float = GOPHER_MAX_BULLET_LINE_RATIO,
+    max_ellipsis_line_ratio: float = GOPHER_MAX_ELLIPSIS_LINE_RATIO,
+    min_alpha_word_ratio: float = GOPHER_MIN_ALPHA_WORD_RATIO,
     min_stopword_hits: int = 2,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -1333,10 +1354,10 @@ def gopher_repetition_rules(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_dup_line_frac: float = 0.30,
-    max_dup_para_frac: float = 0.30,
-    max_dup_line_char_frac: float = 0.20,
-    max_dup_para_char_frac: float = 0.20,
+    max_dup_line_frac: float = GOPHER_MAX_DUP_LINE_FRAC,
+    max_dup_para_frac: float = GOPHER_MAX_DUP_PARA_FRAC,
+    max_dup_line_char_frac: float = GOPHER_MAX_DUP_LINE_CHAR_FRAC,
+    max_dup_para_char_frac: float = GOPHER_MAX_DUP_PARA_CHAR_FRAC,
     max_top_gram_char_frac: tuple[float, float, float] = (0.20, 0.18, 0.16),
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -1441,6 +1462,23 @@ def gopher_repetition_rules(
     )
 
 
+#: Code points whose lowercase differs between Spark's ``lower()`` and
+#: Python 3.11's ``str.lower`` (Unicode 16 letters missing from Python's
+#: older case tables), mapped to Spark's result — a ``str.translate``
+#: table applied after ``str.lower``. Recomputed through Spark over
+#: every non-surrogate code point by
+#: tests/test_text.py::test_spark_lower_fixups_table.
+_SPARK_LOWER_FIXUPS: dict[int, int] = {
+    0x1C89: 0x1C8A,
+    0xA7CB: 0x0264,
+    0xA7CC: 0xA7CD,
+    0xA7DA: 0xA7DB,
+    0xA7DC: 0x019B,
+    # Garay capital letters U+10D50..U+10D65 -> small U+10D70..U+10D85
+    **{c: c + 0x20 for c in range(0x10D50, 0x10D66)},
+}
+
+
 def _make_clean_front_kernel(
     min_words_per_line: int,
     min_sentences: int,
@@ -1469,7 +1507,7 @@ def _make_clean_front_kernel(
     """Build the fused Arrow/Python kernel of the modern cleaning
     stack's filter FRONT (C4 line filters -> Gopher quality -> Gopher
     repetition -> linear classifier) for
-    ``plans.training_data.clean_filter_survivors(kernel="arrow")``.
+    ``plans.training_data.clean_filter_survivors``.
 
     Returned as a CLOSURE so cloudpickle ships it by value to the
     executor Python workers (the similarity._make_kernel_helpers
@@ -1477,10 +1515,10 @@ def _make_clean_front_kernel(
     import this package, which fails on the driver's bare session from
     a foreign cwd).
 
-    Equivalence contract (guide §4.2, the r19 IVF-kernel discipline —
-    pinned by tests/test_text.py clean-front kernel tests): every
-    per-document decision reproduces the JVM expression chain's
-    semantics on the batteries' documented input domain:
+    Equivalence contract (pinned against the JVM expression chain in
+    tests/jvm_reference.py by the tests/test_text.py clean-front
+    kernel tests): every per-document decision reproduces the chain's
+    semantics:
 
     - Spark ``trim``/``ltrim``/``rtrim`` strip the SPACE character
       only (SPARK-17299) -> ``str.strip(' ')``;
@@ -1500,14 +1538,15 @@ def _make_clean_front_kernel(
       sigmoid uses the platform ``exp`` where the JVM uses
       ``Math.exp`` — a potential last-ulp difference absorbed by the
       6dp round exactly as the Spark-vs-DuckDB oracle already
-      tolerates (same function family, same rounding boundary).
-
-    Known, documented divergence (the ivf_assign NULL-centroid
-    precedent): locale-sensitive ``lower()`` edge cases (e.g. Turkish
-    dotted I) and non-BMP case mapping may differ between the JVM and
-    Python — the batteries' corpora are ASCII by construction and the
-    equivalence pytest pins behavior on representative + adversarial
-    inputs.
+      tolerates (same function family, same rounding boundary);
+    - lowercasing: Spark's ``lower()`` uses newer Unicode case tables
+      than Python's ``str.lower``; the code points where they differ
+      are patched by ``_SPARK_LOWER_FIXUPS`` (recomputed through Spark
+      over every code point by
+      tests/test_text.py::test_spark_lower_fixups_table). This front
+      only compares lowered text against ASCII markers, which none of
+      those code points lower to; the featured front applies the table
+      to its ``cleaned`` output.
     """
     import math
     import re
@@ -1696,17 +1735,17 @@ def _make_featured_front_kernel(
 ):
     """Build the fused Arrow/Python kernel of the HEURISTIC feature
     front (clean_normalize -> lang_id -> quality_score -> keep-filter)
-    for ``plans.training_data._featured_survivors(kernel="arrow")`` —
-    the r20 twin of _make_clean_front_kernel over the other pipeline
-    family (prepare_training_data / prepare_training_data_neardup and
-    their incremental/keep-best arms).
+    for ``plans.training_data._featured_survivors`` — the twin of
+    _make_clean_front_kernel over the other pipeline family
+    (prepare_training_data / prepare_training_data_neardup and their
+    incremental/keep-best arms).
 
     Shipped as a closure (the _make_kernel_helpers discipline). The
     exact-dedup window (min id per md5(cleaned)) deliberately STAYS in
     SQL on the kernel's output — it is the pipeline's one semantic
     exchange, not per-row Python work.
 
-    Equivalence contract (pinned by
+    Equivalence contract (pinned against tests/jvm_reference.py by
     tests/test_text.py::test_featured_front_kernel_identical*): the
     same Java-regex/trim/round conventions as _make_clean_front_kernel
     (documented there), plus:
@@ -1720,13 +1759,16 @@ def _make_featured_front_kernel(
       hits, ties to the lexicographically first language code; zero
       hits everywhere -> 'und';
     - counts (stopword/marker hits, punct chars) are integer set/regex
-      counts with no float involvement.
+      counts with no float involvement;
+    - ``cleaned`` is lowered as Spark's ``lower()`` does: ``str.lower``
+      then, for non-ASCII text only, the ``_SPARK_LOWER_FIXUPS`` table.
     """
     import re
 
     ws_re = re.compile(r"[ \t\n\x0B\x0C\r]+")
     ctrl_re = re.compile(r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]")
     punct_re = re.compile(r"[^a-zA-Z0-9 \t\n\x0B\x0C\r]")
+    lower_fixups = _SPARK_LOWER_FIXUPS
     en_set = frozenset(lang_markers["en"])
     marker_sets = [(lang, frozenset(ms)) for lang, ms in sorted(lang_markers.items())]
     min_tok = int(min_tokens)
@@ -1777,6 +1819,8 @@ def _make_featured_front_kernel(
                 c = ctrl_re.sub("", text)
                 c = ws_re.sub(" ", c)
                 cleaned = c.strip(" ").lower()
+                if not cleaned.isascii():
+                    cleaned = cleaned.translate(lower_fixups)
                 out_ids.append(ids.iat[i])
                 out_cleaned.append(cleaned)
                 out_lang.append(best_lang)

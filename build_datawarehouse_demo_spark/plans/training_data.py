@@ -10,11 +10,11 @@ Each stage is the SAME operator registered (and oracle-checked)
 individually — this module only wires them, so the composed result is
 exactly what a user would get calling the pieces themselves.
 
-Scale shape: the feature stages (clean/langid/quality) are one
-codegen'd scan — withColumn chains over the same row, no joins between
-them. The only shuffle is the dedup window on the cleaned-text digest
-(16-byte key). The split assignment is a narrow hash filter. At 100 TB
-this is: one scan, one digest-keyed exchange, done.
+Scale shape: the feature stages (clean/langid/quality) are one fused
+mapInPandas pass over the scan — no joins between them. The only
+shuffle is the dedup window on the cleaned-text digest (16-byte key).
+The split assignment is a narrow hash filter. At 100 TB this is: one
+scan, one digest-keyed exchange, done.
 """
 
 from __future__ import annotations
@@ -34,82 +34,44 @@ def _featured_survivors(
     text_col: str,
     min_tokens: int,
     min_quality: float,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """The shared front half of both pipelines: clean -> langid ->
-    quality (one codegen'd scan, optimizer barrier, see inline note) ->
-    filter -> exact dedup (min id per md5(cleaned), ONE digest-keyed
-    exchange). Returns the exact-dedup survivors carrying
+    quality -> filter -> exact dedup (min id per md5(cleaned), ONE
+    digest-keyed exchange). Returns the exact-dedup survivors carrying
     (id, cleaned, pred_lang, n_tokens, quality).
 
-    ``kernel="arrow"`` (default, r20 — guide §4.2, the
-    clean_filter_survivors twin): the feature chain + keep-filter run
-    fused in one mapInPandas pass
-    (operators/text._make_featured_front_kernel) — the document is
-    tokenized ONCE where the JVM chain's interpreted HOF folds
-    re-split it per feature (the ~10-20 split() evals per row the
-    staging comments document), with bit-identical `quality` doubles
-    (exact IEEE op-order replay). The exact-dedup window stays in SQL
-    below either kernel — it is the pipeline's one semantic exchange.
-    ``kernel="jvm"`` keeps the expression chain as the equivalence
-    reference (pinned by
-    tests/test_text.py::test_featured_front_kernel_identical*)."""
+    The feature chain + keep-filter run fused in one mapInPandas pass
+    (operators/text._make_featured_front_kernel): the document is
+    tokenized ONCE, with `quality` doubles bit-identical to the
+    clean_normalize/lang_id/quality_score expression chain (exact IEEE
+    op-order replay; pinned by
+    tests/test_text.py::test_featured_front_kernel_identical*). The
+    exact-dedup window stays in SQL — it is the pipeline's one
+    semantic exchange."""
+    from pyspark.sql import types as T
+
     from build_datawarehouse_demo_spark.operators.text import (
         LANG_MARKERS,
         _make_featured_front_kernel,
-        clean_normalize,
-        lang_id,
-        quality_score,
     )
 
-    if kernel == "arrow":
-        from pyspark.sql import types as T
-
-        kfn = _make_featured_front_kernel(
-            min_tokens=min_tokens,
-            min_quality=min_quality,
-            lang_markers=LANG_MARKERS,
-            id_col=id_col,
-            text_col=text_col,
-        )
-        out_schema = T.StructType(
-            [
-                T.StructField(id_col, df.schema[id_col].dataType, True),
-                T.StructField("cleaned", T.StringType(), True),
-                T.StructField("pred_lang", T.StringType(), True),
-                T.StructField("n_tokens", T.LongType(), True),
-                T.StructField("quality", T.DoubleType(), True),
-            ]
-        )
-        kept = df.select(id_col, text_col).mapInPandas(kfn, schema=out_schema)
-        digest_w = Window.partitionBy(F.md5(F.col("cleaned")))
-        return (
-            kept.withColumn("__keep", F.min(id_col).over(digest_w))
-            .filter(F.col(id_col) == F.col("__keep"))
-            .drop("__keep")
-            .select(id_col, "cleaned", "pred_lang", "n_tokens", "quality")
-        )
-
-    featured = quality_score(lang_id(clean_normalize(df, text_col), text_col), text_col)
-    # Optimizer barrier: without it, PushDownPredicates substitutes the
-    # filter below the feature projection, re-evaluating
-    # split(trim(text)) ~20x per row (higher-order functions get no
-    # codegen CSE) BELOW the rebalance exchange — the heaviest stage
-    # runs once per reference at scan parallelism. The barrier must be
-    # (a) REFERENCED by the predicate, or column pruning deletes it and
-    # pushdown proceeds, and (b) inside a single non-splittable OR, or
-    # the conjuncts push individually. `mono_id < 0` is always false,
-    # so semantics are unchanged; the projection containing mono_id is
-    # nondeterministic, so the filter stays above it and the features
-    # compute ONCE. Nothing is lost at scale: the predicate needs the
-    # computed features, so it could never prune the scan anyway.
-    featured = featured.withColumn("__barrier", F.monotonically_increasing_id())
-    keep = (
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("quality") >= min_quality)
-        & (F.col("pred_lang") != "und")
-    ) | (F.col("__barrier") < F.lit(0))
-    kept = featured.filter(keep).drop("__barrier")
+    kfn = _make_featured_front_kernel(
+        min_tokens=min_tokens,
+        min_quality=min_quality,
+        lang_markers=LANG_MARKERS,
+        id_col=id_col,
+        text_col=text_col,
+    )
+    out_schema = T.StructType(
+        [
+            T.StructField(id_col, df.schema[id_col].dataType, True),
+            T.StructField("cleaned", T.StringType(), True),
+            T.StructField("pred_lang", T.StringType(), True),
+            T.StructField("n_tokens", T.LongType(), True),
+            T.StructField("quality", T.DoubleType(), True),
+        ]
+    )
+    kept = df.select(id_col, text_col).mapInPandas(kfn, schema=out_schema)
     # exact dedup INSIDE the pipeline: min-id-per-digest via a window
     # (one exchange on the 16-byte digest), keeping the survivor's
     # feature columns — the grouped exact_dedup form returns only
@@ -187,8 +149,8 @@ def prepare_training_data_neardup(
     from the fixture's row count alone.
 
     Scale shape (the 100 TB posture, stage by stage):
-    - features are ONE codegen'd scan (barrier-pinned, see
-      test_scale_layout); exact dedup is one 16-byte-digest exchange;
+    - features are ONE fused scan (_featured_survivors); exact dedup
+      is one 16-byte-digest exchange;
     - survivors are localCheckpoint'ed ONCE: five downstream consumers
       (signature build, two verify sides, span grams, final join)
       would otherwise each re-run the feature scan. On a production
@@ -1168,22 +1130,6 @@ def prepare_training_data_neardup_incremental(
     return training_data_neardup_apply(new_df, state, **params)["output"]
 
 
-def _barrier_keep(df: DataFrame, *out_cols: str) -> DataFrame:
-    """Filter ``kept`` behind the optimizer barrier (the
-    _featured_survivors trick, factored): a nondeterministic column
-    REFERENCED by the predicate inside a single non-splittable OR, so
-    PushDownPredicates cannot substitute the battery's feature
-    expressions below the projection (higher-order functions get no
-    codegen CSE — an unpinned filter re-evaluates the token split once
-    per rule reference). ``kept`` may be NULL (the classifier's
-    no-verdict rows): NULL OR false is NULL, so those rows drop, same
-    as the oracle's WHERE."""
-    b = df.withColumn("__barrier", F.monotonically_increasing_id())
-    return b.filter(
-        (F.col("kept") | (F.col("__barrier") < F.lit(0)))
-    ).select(*out_cols)
-
-
 def _clean_reps(
     survivors: DataFrame,
     comp: DataFrame,
@@ -1266,133 +1212,65 @@ def clean_filter_survivors(
     clf_dim: int = 64,
     clf_weights: list[float] | None = None,
     clf_threshold: float = 0.5,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """The filter FRONT of the modern cleaning stack — C4 line filters
-    → Gopher quality → Gopher repetition → linear classifier, each
-    battery the individually-oracle-checked operator, each filter
-    barrier-pinned (_barrier_keep). Exposed separately so the plan
-    shape is testable: the whole front is NARROW — chained projections
-    and filters over one scan, zero Exchange, zero join (pinned by
-    tests/test_scale_layout.py::test_clean_filter_front_is_narrow).
-    Returns the un-materialized survivors
+    → Gopher quality → Gopher repetition → linear classifier — with
+    each battery's decision identical to the individually-oracle-checked
+    operator. Returns the un-materialized survivors
     (id, cleaned, n_ws_tokens, clf_score).
 
-    ``kernel="arrow"`` (default, r20 — guide §4.2, the VERDICT r19
-    item-4 rewrite done the way the IVF family was done): the four
-    batteries run FUSED in one mapInPandas pass
-    (operators/text._make_clean_front_kernel) — the document is
-    tokenized ONCE where the JVM chain re-splits it per battery, the
-    interpreted HOF folds (mean-length aggregate, per-token md5 +
-    weight fold, sorted-gram run-length folds — none of which enter
-    whole-stage codegen) become plain vectorizable Python over Arrow
-    batches, and the md5 token-bucket lookup is memoized per worker
-    across batches. Same narrow shape: one scan, zero Exchange, zero
-    join (pinned by test_clean_filter_front_arrow_is_narrow).
-    ``kernel="jvm"`` keeps the barrier-pinned expression chain — the
-    equivalence reference (pinned row-identical by
-    tests/test_text.py::test_clean_front_kernel_identical*)."""
-    from build_datawarehouse_demo_spark.operators.text import (
-        GOPHER_STOPWORDS,
-        _make_clean_front_kernel,
-        c4_line_filters,
-        default_classifier_weights,
-        gopher_quality_rules,
-        gopher_repetition_rules,
-        quality_classifier_score,
-    )
+    The four batteries run FUSED in one mapInPandas pass
+    (operators/text._make_clean_front_kernel): the document is
+    tokenized ONCE, and the md5 token-bucket lookup is memoized per
+    worker across batches. Rows are identical to the operators'
+    expression chain (pinned by
+    tests/test_text.py::test_clean_front_kernel_identical*). The front
+    is NARROW: one scan, zero Exchange, zero join (pinned by
+    tests/test_scale_layout.py::test_clean_filter_front_arrow_is_narrow).
+    Thresholds this signature does not expose are the operators'
+    defaults (the shared constants in operators/text.py)."""
+    from pyspark.sql import types as T
 
-    if kernel == "arrow":
-        from pyspark.sql import types as T
+    from build_datawarehouse_demo_spark.operators import text as tx
 
-        kfn = _make_clean_front_kernel(
-            min_words_per_line=min_words_per_line,
-            min_sentences=min_sentences,
-            min_words=min_words,
-            max_words=100_000,
-            min_mean_word_len=3.0,
-            max_mean_word_len=10.0,
-            max_symbol_word_ratio=0.1,
-            max_bullet_line_ratio=0.9,
-            max_ellipsis_line_ratio=0.3,
-            min_alpha_word_ratio=0.8,
-            min_stopword_hits=min_stopword_hits,
-            stopwords=GOPHER_STOPWORDS,
-            max_dup_line_frac=0.30,
-            max_dup_para_frac=0.30,
-            max_dup_line_char_frac=0.20,
-            max_dup_para_char_frac=0.20,
-            max_top_gram_char_frac=max_top_gram_char_frac,
-            clf_dim=clf_dim,
-            clf_weights=(
-                clf_weights
-                if clf_weights is not None
-                else default_classifier_weights(clf_dim)
-            ),
-            clf_bias=0.0,
-            clf_threshold=clf_threshold,
-            id_col=id_col,
-            text_col=text_col,
-        )
-        out_schema = T.StructType(
-            [
-                T.StructField(id_col, df.schema[id_col].dataType, True),
-                T.StructField("cleaned", T.StringType(), True),
-                T.StructField("n_ws_tokens", T.LongType(), True),
-                T.StructField("clf_score", T.DoubleType(), True),
-            ]
-        )
-        return df.select(id_col, text_col).mapInPandas(kfn, schema=out_schema)
-
-    c4 = _barrier_keep(
-        c4_line_filters(
-            df,
-            text_col,
-            id_col,
-            min_words_per_line=min_words_per_line,
-            min_sentences=min_sentences,
+    kfn = tx._make_clean_front_kernel(
+        min_words_per_line=min_words_per_line,
+        min_sentences=min_sentences,
+        min_words=min_words,
+        max_words=tx.GOPHER_MAX_WORDS,
+        min_mean_word_len=tx.GOPHER_MIN_MEAN_WORD_LEN,
+        max_mean_word_len=tx.GOPHER_MAX_MEAN_WORD_LEN,
+        max_symbol_word_ratio=tx.GOPHER_MAX_SYMBOL_WORD_RATIO,
+        max_bullet_line_ratio=tx.GOPHER_MAX_BULLET_LINE_RATIO,
+        max_ellipsis_line_ratio=tx.GOPHER_MAX_ELLIPSIS_LINE_RATIO,
+        min_alpha_word_ratio=tx.GOPHER_MIN_ALPHA_WORD_RATIO,
+        min_stopword_hits=min_stopword_hits,
+        stopwords=tx.GOPHER_STOPWORDS,
+        max_dup_line_frac=tx.GOPHER_MAX_DUP_LINE_FRAC,
+        max_dup_para_frac=tx.GOPHER_MAX_DUP_PARA_FRAC,
+        max_dup_line_char_frac=tx.GOPHER_MAX_DUP_LINE_CHAR_FRAC,
+        max_dup_para_char_frac=tx.GOPHER_MAX_DUP_PARA_CHAR_FRAC,
+        max_top_gram_char_frac=max_top_gram_char_frac,
+        clf_dim=clf_dim,
+        clf_weights=(
+            clf_weights
+            if clf_weights is not None
+            else tx.default_classifier_weights(clf_dim)
         ),
-        id_col,
-        "cleaned",
+        clf_bias=tx.CLF_BIAS,
+        clf_threshold=clf_threshold,
+        id_col=id_col,
+        text_col=text_col,
     )
-    gq = _barrier_keep(
-        gopher_quality_rules(
-            c4,
-            "cleaned",
-            id_col,
-            min_words=min_words,
-            min_stopword_hits=min_stopword_hits,
-            passthrough=("cleaned",),
-        ),
-        id_col,
-        "cleaned",
+    out_schema = T.StructType(
+        [
+            T.StructField(id_col, df.schema[id_col].dataType, True),
+            T.StructField("cleaned", T.StringType(), True),
+            T.StructField("n_ws_tokens", T.LongType(), True),
+            T.StructField("clf_score", T.DoubleType(), True),
+        ]
     )
-    gr = _barrier_keep(
-        gopher_repetition_rules(
-            gq,
-            "cleaned",
-            id_col,
-            max_top_gram_char_frac=max_top_gram_char_frac,
-            passthrough=("cleaned",),
-        ),
-        id_col,
-        "cleaned",
-    )
-    return _barrier_keep(
-        quality_classifier_score(
-            gr,
-            "cleaned",
-            id_col,
-            dim=clf_dim,
-            weights=clf_weights,
-            threshold=clf_threshold,
-            passthrough=("cleaned",),
-        ),
-        id_col,
-        "cleaned",
-        "n_ws_tokens",
-        "clf_score",
-    )
+    return df.select(id_col, text_col).mapInPandas(kfn, schema=out_schema)
 
 
 def prepare_clean_filter_dedup(
@@ -1434,12 +1312,9 @@ def prepare_clean_filter_dedup(
     component step keeps the min-id representative of every duplicate
     class, exact or fuzzy, in one pass.
 
-    Scale shape (the 100 TB posture): the four filter batteries are
-    chained projections over the same row — ONE codegen'd scan, each
-    filter barrier-pinned (_barrier_keep) so no battery's HOF features
-    are re-evaluated per rule reference; Catalyst's CollapseProject
-    cost guard keeps the heavy `cleaned` producer un-inlined. The
-    first exchange is the MinHash banding groupBy; candidates stay
+    Scale shape (the 100 TB posture): the four filter batteries run as
+    ONE fused pass over the scan (clean_filter_survivors). The first
+    exchange is the MinHash banding groupBy; candidates stay
     linear by the auto-sizing law; components run in O(log n) star
     rounds over the PAIR graph; the split is a narrow hash projection.
 

@@ -415,8 +415,8 @@ def register_round12_clean_filter_dedup() -> None:
         fixture → C4 line filters → Gopher quality → Gopher
         repetition → linear classifier → auto-banded MinHash-LSH
         near-dup removal (subsumes exact dedup) → hash split. The four
-        filter batteries fuse into ONE codegen'd scan (barrier-pinned
-        filters); the first exchange is the MinHash banding groupBy;
+        filter batteries fuse into ONE Arrow pass over the scan; the
+        first exchange is the MinHash banding groupBy;
         banding auto-sizes from the raw corpus count and the oracle
         pins it through the same minhash_auto_params."""
         from build_datawarehouse_demo_spark.plans.training_data import (

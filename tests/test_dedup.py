@@ -15,6 +15,7 @@ from build_datawarehouse_demo_spark.operators.dedup import (
     simhash_near_pairs,
     word_shingles,
 )
+from tests import jvm_reference
 
 DOC = "the quick brown fox jumps over the lazy dog again and again today"
 
@@ -683,8 +684,9 @@ def test_keep_best_supports_string_ids(spark):
 
 
 def test_minhash_kernel_identical(spark):
-    """minhash_signatures_from_arrays(kernel='arrow') must be
-    BIT-IDENTICAL to the JVM array_min/transform fold (kernel='jvm') —
+    """minhash_signatures_from_arrays (the Arrow kernel) must be
+    BIT-IDENTICAL to the JVM array_min/transform fold
+    (tests/jvm_reference.py) —
     including NULL/empty shingle arrays (NULL signatures) and NULL
     elements (skipped, as array_min skips the null-propagated hash).
     Full-fixture equivalence (sf0.1 + sf1 survivor corpora,
@@ -706,14 +708,11 @@ def test_minhash_kernel_identical(spark):
     for H in (4, 24):
         jvm = sorted(
             tuple(r)
-            for r in minhash_signatures_from_arrays(
-                df, H, "doc_id", kernel="jvm"
+            for r in jvm_reference.minhash_signatures_from_arrays(
+                df, H, "doc_id"
             ).collect()
         )
         arw = sorted(
-            tuple(r)
-            for r in minhash_signatures_from_arrays(
-                df, H, "doc_id", kernel="arrow"
-            ).collect()
+            tuple(r) for r in minhash_signatures_from_arrays(df, H, "doc_id").collect()
         )
         assert jvm == arw, (H, jvm[:2], arw[:2])

@@ -41,6 +41,21 @@ def test_pagerank_matches_reference(spark, edges):
         assert math.isclose(got[v], want[v], rel_tol=1e-12), (v, got[v], want[v])
 
 
+def test_pagerank_drops_null_endpoint_edges(spark):
+    """A NULL-dst (or NULL-src) edge names no node: the result has
+    exactly one rank row per non-null node, and the ranks equal the
+    reference over the non-null edges alone."""
+    good = [("a", "b", 1), ("b", "a", 1), ("b", "c", 2)]
+    df = spark.createDataFrame(
+        good + [("a", None, 1), (None, "c", 5)], "src string, dst string, w long"
+    )
+    rows = pagerank(df).collect()
+    assert sorted(r["node"] for r in rows) == ["a", "b", "c"]
+    want = _reference_pagerank(good)
+    for r in rows:
+        assert math.isclose(r["rank"], want[r["node"]], rel_tol=1e-12), r
+
+
 def test_pagerank_two_cycle_is_stationary(spark):
     df = spark.createDataFrame([("a", "b", 1), ("b", "a", 1)], "src string, dst string, w long")
     got = {r["node"]: r["rank"] for r in pagerank(df).collect()}

@@ -519,3 +519,45 @@ def test_merge_delete_all_rows_keeps_table_readable(spark, tmp_path):
     merge_into_partitioned_parquet(spark, path, feed2, ["id"], ["seq", "id"], "part")
     rows = {(r.id, r.part, r.v) for r in spark.read.parquet(path).collect()}
     assert rows == {(7, 2, 9.0)}
+
+
+def test_merge_delete_all_rows_escapes_partition_path(spark, tmp_path):
+    """Partition values needing Hive path escaping (space, ':' and '%'):
+    deleting a partition's rows removes Spark's ESCAPED directory, and
+    the schema anchor left after the last delete lands in the escaped
+    directory, so readback keeps the schema and the partition value."""
+    from build_datawarehouse_demo_spark.operators.merge import (
+        merge_into_partitioned_parquet,
+    )
+
+    odd = "a b:c%"
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(0, odd, 5.0), (1, "plain", 6.0)], "id long, part string, v double"
+    ).write.mode("overwrite").partitionBy("part").parquet(path)
+
+    def delete(i, part):
+        feed = spark.createDataFrame(
+            [(i, part, 0.0, "D", 1)],
+            "id long, part string, v double, op string, seq int",
+        )
+        merge_into_partitioned_parquet(spark, path, feed, ["id"], ["seq", "id"], "part")
+
+    delete(1, "plain")
+    assert {(r.id, r.part) for r in spark.read.parquet(path).collect()} == {(0, odd)}
+    delete(0, odd)
+
+    back = spark.read.parquet(path)
+    assert back.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in back.schema.fields] == [
+        ("id", "bigint"), ("v", "double"), ("part", "string"),
+    ]
+    # the anchor file sits in the partition directory Spark itself
+    # names for `odd`, so partition discovery reads the value back
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    from urllib.parse import unquote
+
+    (anchor,) = back.inputFiles()  # a URI: path characters %-encoded
+    part_dir = unquote(anchor).rsplit("/", 2)[-2]
+    assert part_dir == "part=a b%3Ac%25"
+    assert utils.unescapePathName(part_dir.split("=", 1)[1]) == odd

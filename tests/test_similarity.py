@@ -16,6 +16,7 @@ from build_datawarehouse_demo_spark.operators.similarity import (
     embedding_near_dup_pairs_exact,
     ivf_topk,
 )
+from tests import jvm_reference
 
 
 def _vec_df(spark, mat, id_col="vec_id"):
@@ -949,6 +950,7 @@ def test_semdedup_incremental_matches_two_phase_reference(spark):
 
 # ---------------------------------------------------------------------------
 # r19: Arrow assign kernels must be row-identical to the JVM join paths
+# (the join/window references live in tests/jvm_reference.py)
 # ---------------------------------------------------------------------------
 
 
@@ -983,16 +985,16 @@ def test_ivf_assign_kernels_identical(spark, kernel_corpus, kernel_cents):
     from build_datawarehouse_demo_spark.operators.similarity import ivf_assign
 
     for top_n in (1, 3):
-        jvm = ivf_assign(kernel_corpus, kernel_cents, top_n=top_n, kernel="jvm")
-        arrow = ivf_assign(kernel_corpus, kernel_cents, top_n=top_n, kernel="arrow")
+        jvm = jvm_reference.ivf_assign(kernel_corpus, kernel_cents, top_n=top_n)
+        arrow = ivf_assign(kernel_corpus, kernel_cents, top_n=top_n)
         assert _rowset(jvm) == _rowset(arrow), f"top_n={top_n}"
 
 
 def test_lloyd_step_kernels_identical(spark, kernel_corpus, kernel_cents):
     from build_datawarehouse_demo_spark.operators.similarity import kmeans_lloyd_step
 
-    jvm = kmeans_lloyd_step(kernel_corpus, kernel_cents, as_dims=True, kernel="jvm")
-    arrow = kmeans_lloyd_step(kernel_corpus, kernel_cents, as_dims=True, kernel="arrow")
+    jvm = jvm_reference.kmeans_lloyd_step_dims(kernel_corpus, kernel_cents)
+    arrow = kmeans_lloyd_step(kernel_corpus, kernel_cents, as_dims=True)
     assert _rowset(jvm) == _rowset(arrow)
 
 
@@ -1004,12 +1006,10 @@ def test_two_level_kernels_identical(spark, kernel_corpus, kernel_cents):
 
     sup, groups = ivf_group_centroids(kernel_cents, n_groups=3, n_iter=1)
     sup, groups = sup.localCheckpoint(), groups.localCheckpoint()
-    jvm = ivf_assign_two_level(
-        kernel_corpus, kernel_cents, sup, groups, gprobe=2, kernel="jvm"
+    jvm = jvm_reference.ivf_assign_two_level(
+        kernel_corpus, kernel_cents, sup, groups, gprobe=2
     )
-    arrow = ivf_assign_two_level(
-        kernel_corpus, kernel_cents, sup, groups, gprobe=2, kernel="arrow"
-    )
+    arrow = ivf_assign_two_level(kernel_corpus, kernel_cents, sup, groups, gprobe=2)
     assert _rowset(jvm) == _rowset(arrow)
 
 

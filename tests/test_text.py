@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from build_datawarehouse_demo_spark.operators.text import (
@@ -10,6 +12,7 @@ from build_datawarehouse_demo_spark.operators.text import (
     quality_score,
     token_count,
 )
+from tests import jvm_reference
 
 
 def test_token_count_ws_and_regex(spark):
@@ -1150,13 +1153,46 @@ def _edge_corpus_rows():
         # single-char and short-token mean-word-length extremes
         (22, ("a b c d e f g h i j." + " k l m n o p q r s t.") * 3),
         (23, (" ".join(["supercalifragilistic"] * 12) + ".") * 3),
+        # the code points whose lowercase Spark and Python 3.11 disagree
+        # on (_SPARK_LOWER_FIXUPS), in a document that passes the
+        # permissive fronts, and one token per letter
+        (24, passing + "\nthe new capitals " + SPARK_LOWER_DIVERGENT
+             + " are in this line."),
+        (25, "the and of is " + " ".join(SPARK_LOWER_DIVERGENT) + " ok."),
     ]
     return rows
 
 
+#: U+1C89, U+A7CB, U+A7CC, U+A7DA, U+A7DC and U+10D50..U+10D65: the 27
+#: letters Spark's lower() maps but Python 3.11's str.lower leaves as is
+SPARK_LOWER_DIVERGENT = "\u1c89\ua7cb\ua7cc\ua7da\ua7dc" + "".join(
+    chr(c) for c in range(0x10D50, 0x10D66)
+)
+
+
+def test_spark_lower_fixups_table(spark):
+    """_SPARK_LOWER_FIXUPS must be exactly the code points where
+    Spark's lower() and Python's str.lower disagree, mapped to Spark's
+    result — recomputed over every non-surrogate code point, one
+    code point per array element (no casing context), 4096 per row."""
+    from build_datawarehouse_demo_spark.operators.text import _SPARK_LOWER_FIXUPS
+
+    cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    rows = [(s, [chr(c) for c in cps[s : s + 4096]]) for s in range(0, len(cps), 4096)]
+    df = spark.createDataFrame(rows, "s long, chars array<string>")
+    diff = {}
+    for r in df.select("chars", F.transform("chars", F.lower).alias("low")).collect():
+        for ch, low in zip(r.chars, r.low):
+            if ch.lower() != low:
+                diff[ord(ch)] = low
+    table = {k: chr(v) for k, v in _SPARK_LOWER_FIXUPS.items()}
+    assert diff == table
+    assert set(SPARK_LOWER_DIVERGENT) == {chr(c) for c in table}
+
+
 def test_clean_front_kernel_identical_edge_corpus(spark):
-    """kernel='arrow' (fused mapInPandas front) must be ROW-IDENTICAL
-    to kernel='jvm' (the barrier-pinned expression chain) on the
+    """The fused mapInPandas front must be ROW-IDENTICAL to the JVM
+    expression chain (tests/jvm_reference.py) on the
     adversarial corpus — ids, cleaned text, token counts and rounded
     classifier scores (the r19 IVF-kernel equivalence discipline).
     Full-fixture equivalence (sf0.01 + sf0.1 pageified documents,
@@ -1176,20 +1212,19 @@ def test_clean_front_kernel_identical_edge_corpus(spark):
              clf_dim=16, clf_threshold=0.0),  # permissive: more rows pass
     ):
         jvm = sorted(
-            tuple(r) for r in clean_filter_survivors(df, kernel="jvm", **kw).collect()
+            tuple(r) for r in jvm_reference.clean_filter_survivors(df, **kw).collect()
         )
-        arw = sorted(
-            tuple(r) for r in clean_filter_survivors(df, kernel="arrow", **kw).collect()
-        )
+        arw = sorted(tuple(r) for r in clean_filter_survivors(df, **kw).collect())
         assert jvm == arw, (kw, jvm[:3], arw[:3])
     # the permissive run must actually exercise survivors
     assert len(arw) > 0
 
 
 def test_featured_front_kernel_identical_edge_corpus(spark):
-    """_featured_survivors(kernel='arrow') must be ROW-IDENTICAL to
-    kernel='jvm' — including the UNROUNDED `quality` doubles (exact
-    IEEE op-order replay) and the post-kernel exact-dedup window.
+    """_featured_survivors (the fused Arrow front) must be ROW-IDENTICAL
+    to the JVM expression chain (tests/jvm_reference.py) — including
+    the UNROUNDED `quality` doubles (exact IEEE op-order replay) and
+    the post-kernel exact-dedup window.
     Full-fixture equivalence (sf0.01 + sf0.1 documents, row-identical)
     is recorded in OPTIMIZATION_r20.md."""
     from build_datawarehouse_demo_spark.plans.training_data import (
@@ -1214,15 +1249,78 @@ def test_featured_front_kernel_identical_edge_corpus(spark):
     for min_tokens, min_quality in ((5, 0.3), (1, 0.0), (0, 0.5)):
         jvm = sorted(
             tuple(r)
-            for r in _featured_survivors(
-                df, "doc_id", "text", min_tokens, min_quality, kernel="jvm"
+            for r in jvm_reference.featured_survivors(
+                df, "doc_id", "text", min_tokens, min_quality
             ).collect()
         )
         arw = sorted(
             tuple(r)
             for r in _featured_survivors(
-                df, "doc_id", "text", min_tokens, min_quality, kernel="arrow"
+                df, "doc_id", "text", min_tokens, min_quality
             ).collect()
         )
         assert jvm == arw, ((min_tokens, min_quality), jvm[:3], arw[:3])
     assert len(arw) > 0
+
+
+def _unicode_corpus_rows(docs):
+    return [
+        (i, "\n".join(" ".join(line) + "." for line in doc)) for i, doc in enumerate(docs)
+    ]
+
+
+_unicode_words = st.one_of(
+    st.sampled_from(
+        ["the", "and", "of", "is", "to", "der", "le", "Σ", "ΌΣΟΣ", "İ", "ß", "\U0001d400"]
+        + list(SPARK_LOWER_DIVERGENT)
+    ),
+    st.text(
+        alphabet=st.characters(blacklist_categories=("Cs",)), min_size=1, max_size=6
+    ),
+)
+
+
+@given(
+    docs=st.lists(
+        st.lists(st.lists(_unicode_words, min_size=1, max_size=8), min_size=1, max_size=4),
+        min_size=1,
+        max_size=12,
+    )
+)
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_front_kernels_and_minhash_identical_unicode_corpus(spark, docs):
+    """Random unicode documents (any non-surrogate code point, casing
+    specials, the Spark/Python lower() divergent letters, English
+    markers so rows survive the filters): both fused fronts and the
+    MinHash kernel equal their JVM references row for row."""
+    from build_datawarehouse_demo_spark.operators.dedup import (
+        minhash_signatures_from_arrays,
+        shingle_arrays,
+    )
+    from build_datawarehouse_demo_spark.plans.training_data import (
+        _featured_survivors,
+        clean_filter_survivors,
+    )
+
+    df = spark.createDataFrame(_unicode_corpus_rows(docs), "doc_id long, text string")
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    assert rows(_featured_survivors(df, "doc_id", "text", 1, 0.0)) == rows(
+        jvm_reference.featured_survivors(df, "doc_id", "text", 1, 0.0)
+    )
+    kw = dict(min_words_per_line=1, min_sentences=1, min_words=1,
+              min_stopword_hits=0, max_top_gram_char_frac=(1.0, 1.0, 1.0),
+              clf_dim=16, clf_threshold=0.0)
+    assert rows(clean_filter_survivors(df, **kw)) == rows(
+        jvm_reference.clean_filter_survivors(df, **kw)
+    )
+    sh = shingle_arrays(df, k=2).localCheckpoint()
+    assert rows(minhash_signatures_from_arrays(sh, 8)) == rows(
+        jvm_reference.minhash_signatures_from_arrays(sh, 8)
+    )
