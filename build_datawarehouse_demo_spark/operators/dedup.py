@@ -103,6 +103,12 @@ def shingle_arrays(
     )
 
 
+# Byte budget of one task's shingle -> hash-vector memo (the vectors'
+# 8 * num_hashes bytes each); the memo is cleared when it fills, so a
+# task over an unbounded shingle vocabulary stays bounded.
+_MINHASH_MEMO_BYTES = 64 << 20
+
+
 def _make_minhash_kernel(num_hashes: int, id_col: str, shingle_col: str):
     """Build the Arrow/Python MinHash-signature kernel for
     ``minhash_signatures_from_arrays`` — shipped as a
@@ -123,8 +129,10 @@ def _make_minhash_kernel(num_hashes: int, id_col: str, shingle_col: str):
     md5-expressions PER SHINGLE PER DOCUMENT per plan reference; the
     kernel hashes each DISTINCT shingle once per worker (md5 prefix
     states for the H seeds are pre-fed and copied, and the H-vector is
-    memoized across batches in a per-task dict), then a doc's signature
-    is one vectorized element-wise min."""
+    memoized across batches in a per-task dict, cleared when it reaches
+    ``_MINHASH_MEMO_BYTES``), then a doc's signature is one vectorized
+    element-wise min."""
+    memo_cap = max(1, _MINHASH_MEMO_BYTES // (8 * num_hashes))
 
     def kernel(batches):
         import hashlib
@@ -145,6 +153,8 @@ def _make_minhash_kernel(num_hashes: int, id_col: str, shingle_col: str):
                     m.update(b)
                     vals.append(int(m.hexdigest()[:8], 16))
                 v = np.asarray(vals, dtype=np.int64)
+                if len(memo) >= memo_cap:
+                    memo.clear()
                 memo[s] = v
             return v
 

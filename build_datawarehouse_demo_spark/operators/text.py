@@ -1479,6 +1479,11 @@ _SPARK_LOWER_FIXUPS: dict[int, int] = {
 }
 
 
+# Entry cap of one task's token -> classifier-bucket memo in the clean
+# front kernel; the memo is cleared when it fills.
+_BUCKET_CACHE_ENTRIES = 1 << 18
+
+
 def _make_clean_front_kernel(
     min_words_per_line: int,
     min_sentences: int,
@@ -1563,6 +1568,7 @@ def _make_clean_front_kernel(
     weights = [float(w) for w in clf_weights]
     n_sent_min = int(min_sentences)
     min_wpl = int(min_words_per_line)
+    bucket_cap = _BUCKET_CACHE_ENTRIES  # bound at plan time, shipped in the closure
 
     def round6(x: float) -> float:
         # BigDecimal.valueOf == shortest-roundtrip decimal; +0.0
@@ -1679,6 +1685,8 @@ def _make_clean_front_kernel(
             b = cache.get(t)
             if b is None:
                 b = int(hashlib.md5(f"0:{t}".encode()).hexdigest()[:8], 16) % clf_dim
+                if len(cache) >= bucket_cap:
+                    cache.clear()
                 cache[t] = b
             return b
 

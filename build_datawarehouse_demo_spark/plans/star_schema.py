@@ -75,7 +75,8 @@ def build_warehouse(
     # dim_date: one row per date_id with the date parts, under the
     # reference's create_dim_date column names (`day`, `day_of_week` —
     # /root/reference/transformation.py:127-137); parts are
-    # functionally dependent on date_id so subset-dedup is exact.
+    # functionally dependent on date_id, and the spine has one row per
+    # day with an injective date_id (yyyymmdd), so no dedup (no shuffle).
     out["dim_date"] = dim_datetime.select(
         "date_id",
         "full_date",
@@ -84,7 +85,7 @@ def build_warehouse(
         F.col("day_of_month").alias("day"),
         "day_of_week",
         "quarter",
-    ).dropDuplicates(["date_id"])
+    )
 
     if (business := raw.get("business")) is not None:
         out.update(_business_tables(business))

@@ -7,6 +7,10 @@ tables through the session catalog with overwrite semantics. At 100 TB
 the writer, not the transform, is where partitioning is decided —
 callers pass `partition_by` for date-partitioned facts so downstream
 scans get partition pruning.
+
+The empty-skip runs inside the write, not before it: `save_table`
+counts the rows it writes as an observed metric and undoes the publish
+when the count is 0, so each table costs one pass over its plan.
 """
 
 from __future__ import annotations
@@ -59,18 +63,44 @@ def save_table(
     skip_empty: bool = True,
     path: str | None = None,
 ) -> bool:
-    """Materialize one DataFrame as a named catalog table.
+    """Materialize one DataFrame as a named catalog table, in ONE pass
+    over its plan.
 
-    Mirrors the reference's empty-skip guard
-    (/root/reference/transformation.py:528-538) with `isEmpty()` —
-    cheap on a lazy plan (limit-1 semantics), unlike a full count.
+    Mirrors the reference's empty-skip guard (its transformation.py,
+    lines 528-538) without a pre-pass: a
+    row count rides along the write as an observed metric
+    (``df.observe``, counted on the executors), and an empty result is
+    undone afterwards — the catalog entry is dropped and ``path`` is
+    deleted, so an empty frame leaves no table and no files. (An
+    ``isEmpty()`` pre-pass would run the plan twice: ``limit(1)`` still
+    runs every upstream shuffle, window and broadcast stage.)
+    Empty-frame cases:
 
-    Returns True if written, False if skipped.
+    - ``overwrite`` of an existing table: the old rows are replaced by
+      nothing, so the table is removed;
+    - ``append``: no rows were added — an existing table and its files
+      stay (Spark may add one schema-only empty file);
+    - ``ignore`` onto an existing table: Spark writes nothing (and
+      never reports the metric), so this is answered from the catalog
+      before writing.
+
+    ``skip_empty=False`` is the plain write. Returns True if rows were
+    written, False otherwise.
     """
-    if skip_empty and df.isEmpty():
-        log.warning("skipping empty table %s", name)
-        return False
-    writer = df.write.mode(mode).format("parquet")
+    spark = df.sparkSession
+    out = df
+    if skip_empty:
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        existed = mode in ("append", "ignore") and spark.catalog.tableExists(name)
+        if existed and mode == "ignore":
+            return False
+        # unnamed: each Observation gets a unique metric name, so
+        # concurrent saves (save_tables_concurrent) cannot collide
+        obs = Observation()
+        out = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    writer = out.write.mode(mode).format("parquet")
     if path is not None:
         writer = writer.option("path", path)
     if partition_by:
@@ -82,8 +112,18 @@ def save_table(
         # joins (/root/reference/transformation.py:334-338).
         writer = writer.bucketBy(n, *cols).sortBy(*cols)
     writer.saveAsTable(name)
+    # pins are keyed on the caller's exact frame, not the observed one
     _release_surrogate_pins(df, name)
-    return True
+    if not skip_empty or obs.get["rows"] > 0:
+        return True
+    if not existed:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        if path is not None:
+            jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+            hconf = spark.sparkContext._jsc.hadoopConfiguration()
+            jpath.getFileSystem(hconf).delete(jpath, True)
+    log.warning("skipping empty table %s", name)
+    return False
 
 
 def save_tables(

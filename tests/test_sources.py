@@ -77,6 +77,105 @@ def test_save_table_skips_empty(spark):
         spark.sql("DROP TABLE IF EXISTS t_empty_test")
 
 
+def test_save_table_empty_leaves_no_table_and_no_files(spark, tmp_path):
+    import os
+
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "e")
+    for empty in (
+        spark.createDataFrame([], "id long, v string"),
+        spark.range(10).selectExpr("id", "'x' AS v").filter(F.lit(False)),
+        # empty only at runtime, after a shuffle
+        spark.range(10).groupBy("id").count().filter("count > 1"),
+    ):
+        assert save_table(empty, "t_empty_gone", path=path) is False
+        assert not spark.catalog.tableExists("t_empty_gone")
+        assert not os.path.exists(path)
+
+
+def test_save_table_empty_overwrite_removes_existing_table(spark, tmp_path):
+    import os
+
+    path = str(tmp_path / "t")
+    full = spark.createDataFrame([(1, "x")], "id long, v string")
+    assert save_table(full, "t_empty_over", path=path) is True
+    assert save_table(full.limit(0), "t_empty_over", path=path) is False
+    assert not spark.catalog.tableExists("t_empty_over")
+    assert not os.path.exists(path)
+
+
+def test_save_table_empty_append_keeps_existing_rows(spark, tmp_path):
+    import glob
+
+    path = str(tmp_path / "a")
+    full = spark.createDataFrame([(1, "x"), (2, "y")], "id long, v string")
+    assert save_table(full, "t_empty_append", path=path) is True
+    files = glob.glob(f"{path}/*.parquet")
+    assert save_table(full.limit(0), "t_empty_append", mode="append", path=path) is False
+    assert spark.table("t_empty_append").count() == 2
+    # the existing files stay (Spark may add one schema-only empty file)
+    assert set(files) <= set(glob.glob(f"{path}/*.parquet"))
+    assert save_table(full, "t_empty_append", mode="append", path=path) is True
+    assert spark.table("t_empty_append").count() == 4
+    spark.sql("DROP TABLE IF EXISTS t_empty_append")
+
+
+def _call_with_deadline(fn, seconds=120):
+    """Run fn in a daemon thread; fail instead of hanging the suite."""
+    import threading
+
+    out = []
+    t = threading.Thread(target=lambda: out.append(fn()), daemon=True)
+    t.start()
+    t.join(timeout=seconds)
+    assert not t.is_alive(), f"{fn} did not return within {seconds}s"
+    assert out, f"{fn} raised"
+    return out[0]
+
+
+def test_save_table_ignore_onto_existing_table_returns(spark, tmp_path):
+    """Spark skips an `ignore` write onto an existing table, so no row
+    count is ever observed; save_table must answer without waiting."""
+    full = spark.createDataFrame([(1, "x")], "id long, v string")
+    assert save_table(full, "t_ignore", path=str(tmp_path / "i")) is True
+    for frame in (full, full.limit(0)):
+        assert _call_with_deadline(
+            lambda: save_table(frame, "t_ignore", mode="ignore")
+        ) is False
+    assert spark.table("t_ignore").count() == 1
+    spark.sql("DROP TABLE IF EXISTS t_ignore")
+
+
+def test_save_tables_concurrent_mixed_empty(spark, tmp_path):
+    """More concurrent saves than cores, half of them empty: each save's
+    row count is its own, so the results do not cross."""
+    from build_datawarehouse_demo_spark.sources.writers import save_tables_concurrent
+
+    full = spark.createDataFrame([(1, "x")], "id long, v string")
+    frames = {f"t_conc_{i}": full.limit(i % 2) for i in range(12)}
+    out = _call_with_deadline(
+        lambda: save_tables_concurrent(frames, base_path=str(tmp_path), max_workers=12)
+    )
+    assert out == {name: i % 2 == 1 for i, name in enumerate(frames)}
+    for i, name in enumerate(frames):
+        assert spark.catalog.tableExists(name) == (i % 2 == 1)
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_save_table_publishes_narrow_frame_in_one_job(spark, tmp_path):
+    """The empty-skip rides along the write: no pre-pass job."""
+    sc = spark.sparkContext
+    frame = spark.range(1000).selectExpr("id", "id * 2 AS v")
+    sc.setJobGroup("save_table_one_job", "save_table job count")
+    try:
+        assert save_table(frame, "t_one_job", path=str(tmp_path / "o")) is True
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("save_table_one_job")) == 1
+    spark.sql("DROP TABLE IF EXISTS t_one_job")
+
+
 def test_compact_small_files_reduces_file_count(spark, tmp_path):
     from build_datawarehouse_demo_spark.sources.writers import compact_parquet_dir
 

@@ -1324,3 +1324,38 @@ def test_front_kernels_and_minhash_identical_unicode_corpus(spark, docs):
     assert rows(minhash_signatures_from_arrays(sh, 8)) == rows(
         jvm_reference.minhash_signatures_from_arrays(sh, 8)
     )
+
+
+def test_kernel_memos_evict_and_stay_identical(spark, monkeypatch):
+    """The per-task memos (MinHash shingle vectors, clean-front token
+    buckets) are bounded and cleared when full. With the caps at 2
+    entries they evict constantly, and the kernels still equal their
+    JVM references row for row."""
+    from build_datawarehouse_demo_spark.operators import dedup, text
+    from build_datawarehouse_demo_spark.operators.dedup import (
+        minhash_signatures_from_arrays,
+        shingle_arrays,
+    )
+    from build_datawarehouse_demo_spark.plans.training_data import (
+        clean_filter_survivors,
+    )
+
+    H = 8
+    monkeypatch.setattr(dedup, "_MINHASH_MEMO_BYTES", 2 * 8 * H)
+    monkeypatch.setattr(text, "_BUCKET_CACHE_ENTRIES", 2)
+    df = spark.createDataFrame(_edge_corpus_rows(), "doc_id long, text string")
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    kw = dict(min_words_per_line=3, min_sentences=1, min_words=5,
+              min_stopword_hits=1, max_top_gram_char_frac=(0.5, 0.5, 0.5),
+              clf_dim=16, clf_threshold=0.0)
+    survivors = rows(clean_filter_survivors(df, **kw))
+    assert survivors and survivors == rows(
+        jvm_reference.clean_filter_survivors(df, **kw)
+    )
+    sh = shingle_arrays(df, k=2).localCheckpoint()
+    sigs = rows(minhash_signatures_from_arrays(sh, H))
+    assert sigs == rows(jvm_reference.minhash_signatures_from_arrays(sh, H))
+    assert any(r[1] is not None for r in sigs)
