@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from build_datawarehouse_demo_spark.sources.writers import save_table
+
 
 def transition_edges(
     events: DataFrame,
@@ -152,17 +154,15 @@ def write_bucketed_share(share: DataFrame, table: str, buckets: int = 32) -> Dat
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(p):
         fs.delete(p, True)
-    (
-        # repartition on the bucket key first so each task holds exactly
-        # one bucket's rows -> ONE file per bucket, which is what lets
-        # the bucketed read claim sortedness (multi-file buckets force a
-        # Sort back into every join)
-        share.repartition(buckets, "e_src")
-        .write.format("parquet")
-        .bucketBy(buckets, "e_src")
-        .sortBy("e_src")
-        .mode("overwrite")
-        .saveAsTable(table)
+    # repartition on the bucket key first so each task holds exactly
+    # one bucket's rows -> ONE file per bucket, which is what lets
+    # the bucketed read claim sortedness (multi-file buckets force a
+    # Sort back into every join)
+    save_table(
+        share.repartition(buckets, "e_src"),
+        table,
+        bucket_by=(buckets, ("e_src",)),
+        skip_empty=False,
     )
     return spark.table(table)
 

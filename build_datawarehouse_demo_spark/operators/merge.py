@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from build_datawarehouse_demo_spark.operators.scd import apply_cdc_changes
+from build_datawarehouse_demo_spark.sources.writers import parquet_writer
 
 
 def tombstone_store_path(target_path: str) -> str:
@@ -161,7 +162,7 @@ def _dynamic_overwrite(
     prior = spark.conf.get(conf_key, None)
     try:
         spark.conf.set(conf_key, "dynamic")
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+        parquet_writer(df).mode("overwrite").partitionBy(partition_col).save(path)
     finally:
         if prior is None:
             spark.conf.unset(conf_key)
@@ -311,13 +312,13 @@ def merge_into_partitioned_parquet(
         if keep_tomb:
             winners = winners.localCheckpoint(eager=True)
             is_del = F.col(op_col) == delete_op
-            _retain(winners.where(is_del).select(*tomb_cols), winners).write.mode(
-                "overwrite"
-            ).partitionBy(partition_col).parquet(tomb_path)
+            parquet_writer(
+                _retain(winners.where(is_del).select(*tomb_cols), winners)
+            ).mode("overwrite").partitionBy(partition_col).save(tomb_path)
             winners = winners.where(~is_del)
-        winners.drop(*([op_col] if op_col else [])).write.mode(
+        parquet_writer(winners.drop(*([op_col] if op_col else []))).mode(
             "overwrite"
-        ).partitionBy(partition_col).parquet(target_path)
+        ).partitionBy(partition_col).save(target_path)
         return sorted(part_vals)
 
     target = spark.read.parquet(target_path)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from build_datawarehouse_demo_spark.sources.writers import save_table
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ via zip_with + left-fold aggregate (deterministic
@@ -984,12 +986,12 @@ def ivf_index_append(
     lists = assigned.select(
         F.col(id_col), "centroid_id", F.col("__v").alias("vec")
     ).localCheckpoint()
-    (
-        lists.write.mode("append")
-        .format("parquet")
-        .bucketBy(buckets, "centroid_id")
-        .sortBy("centroid_id")
-        .saveAsTable(table_name)
+    save_table(
+        lists,
+        table_name,
+        mode="append",
+        bucket_by=(buckets, ("centroid_id",)),
+        skip_empty=False,
     )
     return lists.select(id_col, "centroid_id")
 

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from build_datawarehouse_demo_spark.sources.writers import parquet_writer
+
 NATIVE_FORMATS = ("parquet", "orc", "json", "csv")
 JAR_FORMATS = {
     "delta": "io.delta:delta-spark",
@@ -65,7 +67,8 @@ def write_table(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "ove
         _require_jar_format(df.sparkSession, fmt)
     elif fmt not in NATIVE_FORMATS:
         raise ValueError(f"unknown format {fmt!r}")
-    writer = df.write.mode(mode)
+    writer = parquet_writer(df) if fmt == "parquet" else df.write.format(fmt)
+    writer = writer.mode(mode)
     for k, v in options.items():
         writer = writer.option(k, v)
-    writer.format(fmt).save(path)
+    writer.save(path)

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from build_datawarehouse_demo_spark.operators.scd import apply_cdc_changes, upsert
+from build_datawarehouse_demo_spark.sources.writers import save_table
 
 
 def apply_batch_upsert(
@@ -43,11 +44,11 @@ def apply_batch_upsert(
         batch_df, key_cols=key_cols, order_cols=order_cols, op_col=None
     )
     if not spark.catalog.tableExists(table_name):
-        collapsed.write.mode("overwrite").format("parquet").saveAsTable(table_name)
+        save_table(collapsed, table_name, skip_empty=False)
         return
     current = spark.table(table_name)
     merged = upsert(current, collapsed, key=key_cols).localCheckpoint()
-    merged.write.mode("overwrite").format("parquet").saveAsTable(table_name)
+    save_table(merged, table_name, skip_empty=False)
 
 
 def stream_upsert_to_table(

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import types as T
 
 from build_datawarehouse_demo_spark.sources.generators import gen_date_range, gen_hour_dim
@@ -174,6 +175,90 @@ def test_save_table_publishes_narrow_frame_in_one_job(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("save_table_one_job")) == 1
     spark.sql("DROP TABLE IF EXISTS t_one_job")
+
+
+def _column_chunks(path):
+    """(column name, compression, encodings) of every column chunk of
+    every parquet file under ``path``, from the pyarrow footers."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(f"{path}/**/*.parquet", recursive=True)
+    assert files, path
+    out = []
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for c in range(rg.num_columns):
+                col = rg.column(c)
+                out.append((col.path_in_schema, col.compression, set(col.encodings)))
+    return out
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [{}, {"partition_by": ("part",)}, {"bucket_by": (4, ("id",))}],
+    ids=["plain", "partition_by", "bucket_by"],
+)
+def test_save_table_writes_zstd_v2_layout(spark, tmp_path, kwargs):
+    """Every column chunk is zstd, and the v2 writer delta-encodes a
+    monotone bigint (v1 pages would store it PLAIN)."""
+    frame = spark.range(0, 1500, 1, 2).selectExpr(
+        "id", "cast(id % 3 AS int) AS part", "concat('k', id % 7) AS s"
+    )
+    out = str(tmp_path / "t")
+    assert save_table(frame, "t_layout", path=out, **kwargs) is True
+    chunks = _column_chunks(out)
+    assert {comp for _, comp, _ in chunks} == {"ZSTD"}
+    id_encodings = [enc for name, _, enc in chunks if name == "id"]
+    assert id_encodings and all("DELTA_BINARY_PACKED" in e for e in id_encodings)
+    assert spark.table("t_layout").count() == 1500
+    spark.sql("DROP TABLE IF EXISTS t_layout")
+
+
+def test_save_table_layout_reads_back_same_in_spark_and_duckdb(spark, tmp_path):
+    """DuckDB decodes the v2 pages (delta strings from the dictionary
+    fallback, NULLs, decimals, timestamps, arrays) to the same rows as
+    Spark."""
+    import duckdb
+
+    from tools.check_oracle import _hash_frame
+
+    frame = spark.range(1500).selectExpr(
+        "id",
+        "sha2(cast(id AS string), 256) AS s",
+        "CASE WHEN id % 5 = 0 THEN NULL ELSE cast(id AS double) / 4 END AS d",
+        "cast(id * 1.37 AS decimal(12, 2)) AS dec",
+        "timestamp_seconds(1600000000 + id * 3607) AS ts",
+        "CASE WHEN id % 7 = 0 THEN NULL"
+        " ELSE array(cast(id AS double) / 2, -cast(id AS double)) END AS v",
+    )
+    out = str(tmp_path / "rt")
+    assert save_table(frame, "t_layout_rt", path=out) is True
+    chunks = _column_chunks(out)
+    assert any("DELTA_BYTE_ARRAY" in enc for name, _, enc in chunks if name == "s")
+    assert {comp for _, comp, _ in chunks} == {"ZSTD"}
+
+    # decimals and timestamps cross as strings: the engines' pandas
+    # conversions of those types differ, the decoded values must not
+    spark_pdf = spark.read.parquet(out).selectExpr(
+        "id", "s", "d", "cast(dec AS string) AS dec",
+        "date_format(ts, 'yyyy-MM-dd HH:mm:ss') AS ts", "v",
+    ).toPandas()
+    con = duckdb.connect()
+    duck_pdf = con.execute(
+        f"""SELECT id, s, d, CAST(dec AS VARCHAR) AS dec,
+                   strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts, v
+            FROM read_parquet('{out}/*.parquet')"""
+    ).df()
+    con.close()
+    for pdf in (spark_pdf, duck_pdf):  # numpy arrays -> lists for the hash
+        pdf["v"] = [None if x is None or isinstance(x, float) else list(x) for x in pdf["v"]]
+    assert _hash_frame(spark_pdf) == _hash_frame(duck_pdf)
+    assert len(spark_pdf) == 1500 and spark_pdf["d"].isna().sum() == 300
+    spark.sql("DROP TABLE IF EXISTS t_layout_rt")
 
 
 def test_compact_small_files_reduces_file_count(spark, tmp_path):

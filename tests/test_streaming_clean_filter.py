@@ -197,6 +197,40 @@ def test_stream_migration_hook_rebands_at_boundary(spark, tmp_path):
     )
 
 
+def _settled_persistent_rdd_ids(sc) -> set[int]:
+    """Ids of the persistent RDDs once unreferenced ones are cleaned.
+    A dropped DataFrame's cached or ``localCheckpoint`` RDD stays
+    registered until Python releases its py4j proxies, the JVM collects
+    the RDD, and Spark's ContextCleaner (polling every 100 ms) unpersists
+    it — so a bare count races that cleanup. Collect on both sides and
+    poll until the set holds still for two rounds. Only ids cross over:
+    a py4j proxy held here would itself keep its RDD alive."""
+    import gc
+    import time
+
+    prev = None
+    for _ in range(40):
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(0.25)
+        cur = {int(i) for i in sc._jsc.getPersistentRDDs().keySet()}
+        if cur == prev:
+            return cur
+        prev = cur
+    return prev
+
+
+def _describe_rdds(sc, ids) -> list[str]:
+    """Name and creation call site of each persistent RDD in ``ids``."""
+    rdds = sc._jsc.getPersistentRDDs()
+    out = []
+    for i in sorted(ids):
+        r = rdds.get(i)
+        if r is not None:
+            out.append(f"{i} {r.rdd().name()} @ {r.rdd().getCreationSite()}")
+    return out
+
+
 def test_stream_soak_compaction_gc_and_cadence_across_restarts(spark, tmp_path):
     """Lifetime soak (r16, VERDICT r15 item 6 + the batch_id cadence
     ADVICE): 20 micro-batches across 4 stream RESTARTS from one
@@ -223,16 +257,14 @@ def test_stream_soak_compaction_gc_and_cadence_across_restarts(spark, tmp_path):
 
     sc = spark.sparkContext
 
-    def n_persistent():
-        return sc._jsc.sc().getPersistentRDDs().size()
-
     old_rows = [
         (i, " ".join(f"sk{i}_{j}" for j in range(20)) + ".") for i in range(4)
     ]
     old = spark.createDataFrame(old_rows, "doc_id long, text string")
     holder = {"state": clean_filter_dedup_state(old, corpus_n=len(old_rows), **LOOSE)}
     holder["state"]["output"].count()
-    baseline = n_persistent()
+    base_ids = _settled_persistent_rdd_ids(sc)
+    baseline = len(base_ids)
 
     feed = str(tmp_path / "feed")
     ckpt = str(tmp_path / "ckpt")
@@ -280,7 +312,10 @@ def test_stream_soak_compaction_gc_and_cadence_across_restarts(spark, tmp_path):
         }
         assert len(gens) == 1, (session, gens)
         # retained blocks bounded: back at/below the post-build baseline
-        assert n_persistent() <= baseline, (session, baseline, n_persistent())
+        ids = _settled_persistent_rdd_ids(sc)
+        assert len(ids) <= baseline, (
+            session, baseline, len(ids), _describe_rdds(sc, ids - base_ids)
+        )
         # rebuild parity at this compaction point
         full = prepare_clean_filter_dedup(
             spark.createDataFrame(all_rows, "doc_id long, text string"),
