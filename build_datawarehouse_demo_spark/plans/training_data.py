@@ -19,6 +19,7 @@ scan, one digest-keyed exchange, done.
 
 from __future__ import annotations
 
+import functools
 import logging
 
 from pyspark.sql import DataFrame
@@ -525,21 +526,19 @@ def _collapsed_pair_state(
 
 
 def _apply_rep_candidates(
-    new_sh: DataFrame,
-    old_surv: DataFrame,
+    new_surv: DataFrame,
     state: dict,
     id_col: str,
     shingle_k: int,
-    num_hashes: int,
-    bands: int,
     threshold: float,
 ) -> dict:
     """The refresh batch's near-dup delta against a collapsed state —
-    shared by both incremental applies (r14). Computes the batch's
-    digest groups, signs/bands REPS only with the state's frozen
-    banding, generates rep-level new-new (self-join) and new-old
-    (join against the STORED rep-level band keys) candidates, verifies
-    at rep level, and re-expands through BOTH member maps. A stored
+    shared by both incremental applies (r14). Shingles the batch's
+    survivors ``new_surv``, computes their digest groups, signs/bands
+    REPS only with the state's frozen banding, generates rep-level
+    new-new (self-join) and new-old (join against the STORED rep-level
+    band keys) candidates, verifies at rep level, and re-expands
+    through BOTH member maps. A stored
     boilerplate group of k_old copies meeting m re-crawled copies is
     ONE (band, band_key) row pair per band at the join — the k_old·m
     member pairs appear only in the verified OUTPUT expansion, which
@@ -555,6 +554,9 @@ def _apply_rep_candidates(
         shingle_digest_groups,
     )
 
+    bands = state["bands"]
+    num_hashes = bands * state["rows"]
+    new_sh = shingle_arrays(new_surv, id_col, "cleaned", shingle_k)
     m_new, r_new = shingle_digest_groups(new_sh, id_col)
     new_rep_sh = r_new.select(id_col, "shingles")
     new_sigs = minhash_signatures_from_arrays(new_rep_sh, num_hashes, id_col)
@@ -588,7 +590,10 @@ def _apply_rep_candidates(
         .distinct()
     )
     old_cand_sh = shingle_arrays(
-        old_surv.join(cand_ids, id_col, "left_semi"), id_col, "cleaned", shingle_k
+        state["survivors"].join(cand_ids, id_col, "left_semi"),
+        id_col,
+        "cleaned",
+        shingle_k,
     )
     arrays = new_rep_sh.union(old_cand_sh)
     rep_pairs = _verify_jaccard_pairs(rep_cand, arrays, arrays, threshold, id_col)
@@ -689,6 +694,238 @@ def _verify_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+def _check_keep_policy(
+    state: dict, rank_col: str | None, soft_weights: bool, op: str
+) -> None:
+    """Refuse an apply or migration (``op``) whose keep policy differs
+    from the one ``state`` was built with — the policy is part of the
+    state's identity. Shared by both incremental pipelines."""
+    for key, built, called in (
+        ("rank_col", state.get("rank_col"), rank_col),
+        ("soft_weights", bool(state.get("soft_weights")), bool(soft_weights)),
+    ):
+        if built != called:
+            raise ValueError(
+                f"keep-policy mismatch: state was built with {key}={built!r}, "
+                f"{op} called with {called!r} — the policy is part of the "
+                f"state's identity"
+            )
+
+
+def _labeled(
+    frame: DataFrame, comp: DataFrame, id_col: str, name: str = "__cid"
+) -> DataFrame:
+    """``frame`` with its component label in column ``name``, from a
+    star component map ``comp`` (id_col, component); a document outside
+    the pair graph is its own singleton component."""
+    return (
+        frame.join(comp, id_col, "left")
+        .withColumn(name, F.coalesce(F.col("component"), F.col(id_col)))
+        .drop("component")
+    )
+
+
+def _refresh_spans(
+    state: dict,
+    rep_feats: DataFrame,
+    added_docs: DataFrame,
+    added_ids: DataFrame,
+    dropped_ids: DataFrame,
+    comp: DataFrame,
+    rank_col: str | None,
+    *,
+    id_col: str,
+    span_window: int,
+    span_min_docs: int,
+    val_frac: float,
+    test_frac: float,
+) -> tuple[DataFrame, DataFrame]:
+    """The near-dup pipeline's span stage after its representative set
+    changed — the one delta refresh both training_data_neardup_apply
+    (reps a batch added or displaced) and
+    migrate_training_data_neardup_banding (reps a re-banding added or
+    dropped) run.
+
+    ``rep_feats`` are the REFRESHED reps' survivor features,
+    ``added_docs`` / ``added_ids`` the reps that entered the set and
+    ``dropped_ids`` the stored reps that left it; ``comp`` is the
+    refreshed component map (id_col, component). Gram stats change
+    ONLY for digests touched by added or dropped reps' grams, so:
+
+    - affected docs = any refreshed rep sharing a changed digest, plus
+      every added rep; they rebuild with remove_spans_given_owners
+      against stats over the refreshed global gram table restricted to
+      the digests they contain;
+    - every other kept rep reuses its stored output row verbatim (its
+      grams' dup status and owner provably did not change — counts
+      move only via added/dropped reps' grams, owners only via drops,
+      and those digests are all marked).
+
+    Under keep-best the label is the component min, not the winner's
+    own id: a reused row whose component LABEL moved (a merge lowered
+    the min without changing its text or gram stats) is re-emitted
+    with the refreshed label — a projection over the changed rows,
+    never a span rebuild.
+
+    Returns (output, rep_grams)."""
+    from build_datawarehouse_demo_spark.operators.dedup import (
+        remove_spans_given_owners,
+        _window_gram_rows,
+    )
+    from build_datawarehouse_demo_spark.operators.sampling import train_val_test_split
+
+    added_grams = _window_gram_rows(
+        added_docs.select(id_col, "cleaned"), id_col, "cleaned", span_window
+    ).localCheckpoint()
+    old_grams = state["rep_grams"]
+    dropped_grams = old_grams.join(dropped_ids, id_col)
+    # lazy: three consumers below each re-scan the stored gram blocks
+    # through the (broadcast-small) anti-join instead of paying an
+    # eager corpus-scale copy of the biggest state frame
+    grams_union = old_grams.join(dropped_ids, id_col, "left_anti").union(added_grams)
+    changed_digests = (
+        added_grams.select("gram_md5")
+        .union(dropped_grams.select("gram_md5"))
+        .distinct()
+    )
+    affected_ids = (
+        grams_union.join(changed_digests, "gram_md5")
+        .select(id_col)
+        .union(added_ids)
+        .distinct()
+        .localCheckpoint()
+    )
+    # stats for every digest an affected doc contains, over the
+    # REFRESHED global gram table (two digest-keyed semi-joins)
+    digests_needed = (
+        grams_union.join(affected_ids, id_col).select("gram_md5").distinct()
+    )
+    owners = (
+        grams_union.join(digests_needed, "gram_md5")
+        .groupBy("gram_md5")
+        .agg(F.countDistinct(id_col).alias("__nd"), F.min(id_col).alias("__owner"))
+        .filter(F.col("__nd") >= span_min_docs)
+        .select("gram_md5", "__owner")
+    )
+    affected_docs = rep_feats.join(affected_ids, id_col).localCheckpoint()
+    rebuilt = remove_spans_given_owners(
+        affected_docs.select(id_col, "cleaned"), owners, id_col, "cleaned", span_window
+    )
+    aff = affected_docs.select(id_col, "pred_lang", "quality")
+    if rank_col is None:
+        # min-id policy: every rep IS its component's label
+        cid = F.col(id_col)
+    else:
+        aff = _labeled(aff, comp, id_col)
+        cid = F.col("__cid")
+    recomputed = aff.join(rebuilt, id_col).select(
+        id_col,
+        "pred_lang",
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        "quality",
+        cid.alias("component_id"),
+        "cleaned_text",
+        "n_tokens_removed",
+    )
+    recomputed_out = train_val_test_split(
+        recomputed, id_col, val_frac=val_frac, test_frac=test_frac
+    ).localCheckpoint()  # the span-rebuild DELTA — the only heavy subtree here
+    reused = (
+        state["output"]
+        .join(dropped_ids, id_col, "left_anti")
+        .join(affected_ids, id_col, "left_anti")
+    )
+    if rank_col is not None:
+        ru_lab = (
+            _labeled(reused.select(id_col, "component_id"), comp, id_col)
+            .filter(F.col("__cid") != F.col("component_id"))
+            .select(id_col, "__cid")
+            .localCheckpoint()
+        )
+        relabeled = reused.drop("component_id").join(ru_lab, id_col).select(
+            id_col,
+            "pred_lang",
+            "n_tokens",
+            "quality",
+            F.col("__cid").alias("component_id"),
+            "cleaned_text",
+            "n_tokens_removed",
+            "split",
+        )
+        reused = reused.join(
+            ru_lab.select(id_col), id_col, "left_anti"
+        ).unionByName(relabeled)
+    return reused.unionByName(recomputed_out), grams_union
+
+
+def _finish_fold(
+    result: dict,
+    state: dict,
+    new_surv: DataFrame,
+    retire_scope: set | None,
+    migrate,
+    *,
+    migrate_banding: bool,
+    compact_to: str | None,
+    compact_path: str | None,
+    compact_keep_superseded: bool,
+    compact_retire_fold_rdds: bool,
+    id_col: str,
+) -> dict:
+    """The apply epilogue both incremental pipelines share, after the
+    fold built ``result`` from ``state`` and the batch's checkpointed
+    survivors ``new_surv``:
+
+    - the opt-in ``n_survivors`` counter gains the O(batch) fold delta
+      (new_surv is checkpoint-backed, so this counts cached blocks, not
+      the corpus — r16 ADVICE); seed it once with
+      ``state["n_survivors"] = state["survivors"].count()``;
+    - ``migrate_banding``: the frozen-banding migration ``migrate``
+      (the pipeline's migration with its parameters bound) runs at the
+      grown corpus size — a no-op between minhash_auto_params
+      boundaries; at a boundary the replaced frames' checkpoint blocks
+      are retired unless ``compact_keep_superseded``;
+    - ``compact_to``: compact, retire the superseded blocks (inside
+      compact_state), then sweep every RDD persisted since
+      ``retire_scope`` — the batch order. The streaming sinks keep
+      their own retry-safe order (streaming/sinks._stream_state_append).
+    """
+    if state.get("n_survivors") is not None:
+        result["n_survivors"] = state["n_survivors"] + new_surv.count()
+    if migrate_banding:
+        n = result.get("n_survivors")
+        if n is None:
+            # observable fallback (r17 ADVICE): without the seeded
+            # counter this pays a corpus-sized count EVERY fold — the
+            # exact cost the r16 incremental counter removed
+            log.warning(
+                "migrate_banding=True without a seeded n_survivors "
+                "counter: falling back to a corpus-sized "
+                "survivors.count() this fold. Seed it once with "
+                'state["n_survivors"] = state["survivors"].count() '
+                "to make the per-fold cost O(batch)."
+            )
+            n = result["survivors"].count()
+        migrated = migrate(result, corpus_n=n)
+        if migrated is not result:
+            if not compact_keep_superseded:
+                retire_superseded_state(result, migrated)
+            result = migrated
+    if compact_to is None:
+        return result
+    compacted = compact_state(
+        result,
+        compact_to,
+        base_path=compact_path,
+        id_col=id_col,
+        unpersist_superseded=not compact_keep_superseded,
+    )
+    # hidden fold intermediates (not leaves of any result frame)
+    if compact_retire_fold_rdds:
+        _retire_persistent_rdds_since(new_surv.sparkSession, retire_scope)
+    return compacted
 
 
 def training_data_neardup_apply(
@@ -792,11 +1029,13 @@ def training_data_neardup_apply(
     instead.
 
     ``migrate_banding=True`` (r17): post-fold frozen-banding
-    migration, the batch twin of the streaming hook — see
-    clean_filter_dedup_apply; here it routes through
+    migration — see clean_filter_dedup_apply; here it routes through
     migrate_training_data_neardup_banding (span stage included).
     Corpus size from the optional ``n_survivors`` counter when
-    present, else one survivors count.
+    present, else one survivors count. The counter, the migration
+    hook and compaction are the epilogue both incremental pipelines
+    share (_finish_fold); the span refresh is the one the banding
+    migration also runs (_refresh_spans).
 
     ``rank_col`` (r18, VERDICT r17 item 1): the KEEP-BEST policy, run
     incrementally — the state must have been built with the SAME
@@ -822,27 +1061,14 @@ def training_data_neardup_apply(
     """
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
-        remove_spans_given_owners,
-        shingle_arrays,
-        _window_gram_rows,
     )
-    from build_datawarehouse_demo_spark.operators.sampling import train_val_test_split
 
-    if state.get("rank_col") != rank_col:
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"rank_col={state.get('rank_col')!r}, apply called with "
-            f"{rank_col!r} — the policy is part of the state's identity"
-        )
+    _check_keep_policy(state, rank_col, False, "apply")
     retire_scope = (
         _persistent_rdd_ids(new_df.sparkSession) if compact_to is not None else None
     )
-    bands, rows = state["bands"], state["rows"]
     old_surv = state["survivors"]
-    old_pairs = state["pairs"]
     old_rep_ids = state["rep_ids"]
-    old_grams = state["rep_grams"]
-    old_output = state["output"]
 
     # -- exact stage: batch-internal dedup, then digest anti-join
     #    against the STORED survivor digest table (16-byte keys only —
@@ -863,16 +1089,8 @@ def training_data_neardup_apply(
     #    times meeting m re-crawled copies; both sides now contract to
     #    one rep per distinct shingle set and candidate pairs re-expand
     #    through the member maps only in the verified OUTPUT).
-    new_sh = shingle_arrays(new_surv, id_col, "cleaned", shingle_k)
     delta = _apply_rep_candidates(
-        new_sh,
-        old_surv,
-        state,
-        id_col,
-        shingle_k,
-        bands * rows,
-        bands,
-        jaccard_threshold,
+        new_surv, state, id_col, shingle_k, jaccard_threshold
     )
     # append-only state discipline (r14): every `old ∪ delta` below is
     # a LAZY union — the delta is checkpoint-backed, the old side is
@@ -880,12 +1098,10 @@ def training_data_neardup_apply(
     # never copies corpus-scale frames (the in-memory analog of
     # appending partitions to a bucketed state table; a production
     # run compacts to parquet periodically instead).
-    new_pairs = delta["new_pairs"]
-    pairs_all = old_pairs.union(new_pairs)
+    pairs_all = state["pairs"].union(delta["new_pairs"])
 
     # -- components over the refreshed edge set (pair-graph volume)
-    comp = connected_components_star(pairs_all)
-    compR = comp.withColumnRenamed("node", id_col)
+    compR = connected_components_star(pairs_all).withColumnRenamed("node", id_col)
     if rank_col is None:
         dropped_old = (
             old_rep_ids.join(compR, id_col)
@@ -893,36 +1109,26 @@ def training_data_neardup_apply(
             .select(id_col)
             .localCheckpoint()
         )
-        kept_old_rep_ids = old_rep_ids.join(dropped_old, id_col, "left_anti")
         new_rep_ids = (
-            new_surv.select(id_col)
-            .join(compR, id_col, "left")
-            .filter(F.coalesce(F.col("component"), F.col(id_col)) == F.col(id_col))
+            _labeled(new_surv.select(id_col), compR, id_col)
+            .filter(F.col("__cid") == F.col(id_col))
             .select(id_col)
             .localCheckpoint()
         )
-        touched_labels = None
     else:
         # keep-best rep selection over the TOUCHED components only
         # (see docstring): candidates = those components' stored keeps
         # + the batch's survivors; one slim min_by picks each winner
         from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
-        def _labeled(frame: DataFrame) -> DataFrame:
-            return (
-                frame.join(compR, id_col, "left")
-                .withColumn(
-                    "__cid", F.coalesce(F.col("component"), F.col(id_col))
-                )
-                .drop("component")
-            )
-
-        new_lab = _labeled(new_surv.select(id_col, rank_col))
+        new_lab = _labeled(new_surv.select(id_col, rank_col), compR, id_col)
         touched_labels = new_lab.select("__cid").distinct().localCheckpoint()
         old_keep_lab = _labeled(
             old_surv.join(old_rep_ids, id_col, "left_semi").select(
                 id_col, rank_col
-            )
+            ),
+            compR,
+            id_col,
         ).join(touched_labels, "__cid", "left_semi")
         cand = old_keep_lab.unionByName(
             new_lab.join(touched_labels, "__cid", "left_semi")
@@ -942,180 +1148,69 @@ def training_data_neardup_apply(
             .join(win_ids, id_col, "left_anti")
             .localCheckpoint()
         )
-        kept_old_rep_ids = old_rep_ids.join(dropped_old, id_col, "left_anti")
         new_rep_ids = (
             new_surv.select(id_col)
             .join(win_ids, id_col, "left_semi")
             .localCheckpoint()
         )
+    kept_old_rep_ids = old_rep_ids.join(dropped_old, id_col, "left_anti")
+    added_docs = new_surv.join(new_rep_ids, id_col)
 
     # -- span refresh: delta the gram stats, rebuild only affected docs
-    new_grams = _window_gram_rows(
-        new_surv.join(new_rep_ids, id_col).select(id_col, "cleaned"),
-        id_col,
-        "cleaned",
-        span_window,
-    ).localCheckpoint()
-    dropped_grams = old_grams.join(dropped_old, id_col)
-    kept_old_grams = old_grams.join(dropped_old, id_col, "left_anti")
-    # lazy: three consumers below each re-scan the stored gram blocks
-    # through the (broadcast-small) anti-join instead of paying an
-    # eager corpus-scale copy of the biggest state frame
-    grams_union = kept_old_grams.union(new_grams)
-    changed_digests = (
-        new_grams.select("gram_md5").union(dropped_grams.select("gram_md5")).distinct()
+    output, rep_grams = _refresh_spans(
+        state,
+        old_surv.join(kept_old_rep_ids, id_col).unionByName(added_docs),
+        added_docs,
+        new_rep_ids,
+        dropped_old,
+        compR,
+        rank_col,
+        id_col=id_col,
+        span_window=span_window,
+        span_min_docs=span_min_docs,
+        val_frac=val_frac,
+        test_frac=test_frac,
     )
-    affected_ids = (
-        grams_union.join(changed_digests, "gram_md5")
-        .select(id_col)
-        .union(new_rep_ids)
-        .distinct()
-        .localCheckpoint()
-    )
-    # stats for every digest an affected doc contains, over the
-    # REFRESHED global gram table (two digest-keyed semi-joins)
-    digests_needed = (
-        grams_union.join(affected_ids, id_col).select("gram_md5").distinct()
-    )
-    owners = (
-        grams_union.join(digests_needed, "gram_md5")
-        .groupBy("gram_md5")
-        .agg(F.countDistinct(id_col).alias("__nd"), F.min(id_col).alias("__owner"))
-        .filter(F.col("__nd") >= span_min_docs)
-        .select("gram_md5", "__owner")
-    )
-    all_rep_feats = old_surv.join(kept_old_rep_ids, id_col).unionByName(
-        new_surv.join(new_rep_ids, id_col)
-    )
-    affected_docs = all_rep_feats.join(affected_ids, id_col).localCheckpoint()
-    rebuilt = remove_spans_given_owners(
-        affected_docs.select(id_col, "cleaned"), owners, id_col, "cleaned", span_window
-    )
-    if rank_col is None:
-        # min-id policy: every rep IS its component's label
-        cid = F.col(id_col).alias("component_id")
-        aff = affected_docs.select(id_col, "pred_lang", "quality")
-    else:
-        # keep-best: the label is the component min, not the winner's
-        # own id — attach it from the refreshed component map
-        cid = F.col("__cid").alias("component_id")
-        aff = affected_docs.select(id_col, "pred_lang", "quality").join(
-            compR, id_col, "left"
-        ).withColumn(
-            "__cid", F.coalesce(F.col("component"), F.col(id_col))
-        ).drop("component")
-    recomputed = (
-        aff.join(rebuilt, id_col)
-        .select(
-            id_col,
-            "pred_lang",
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            "quality",
-            cid,
-            "cleaned_text",
-            "n_tokens_removed",
-        )
-    )
-    recomputed_out = train_val_test_split(
-        recomputed, id_col, val_frac=val_frac, test_frac=test_frac
-    ).localCheckpoint()  # the span-rebuild DELTA — the only heavy subtree here
-    reused = old_output.join(kept_old_rep_ids, id_col, "left_semi").join(
-        affected_ids, id_col, "left_anti"
-    )
-    if rank_col is not None:
-        # a kept winner in a TOUCHED component may carry a stale label
-        # (a merge lowers the component min without changing its text
-        # or gram stats): re-emit those rows with the refreshed label
-        # — a touched-scale projection, never a span rebuild
-        ru_lab = (
-            reused.select(id_col)
-            .join(compR, id_col, "left")
-            .withColumn("__cid", F.coalesce(F.col("component"), F.col(id_col)))
-            .drop("component")
-            .join(touched_labels, "__cid", "left_semi")
-            .localCheckpoint()
-        )
-        relabeled = reused.drop("component_id").join(ru_lab, id_col).select(
-            id_col,
-            "pred_lang",
-            "n_tokens",
-            "quality",
-            F.col("__cid").alias("component_id"),
-            "cleaned_text",
-            "n_tokens_removed",
-            "split",
-        )
-        reused = reused.join(
-            ru_lab.select(id_col), id_col, "left_anti"
-        ).unionByName(relabeled)
-    output = reused.unionByName(recomputed_out)
     refreshed = _refreshed_collapse_state(state, delta, id_col)
     result = {
-        "bands": bands,
-        "rows": rows,
+        "bands": state["bands"],
+        "rows": state["rows"],
         "survivors": old_surv.unionByName(new_surv),
-        "band_keys": refreshed["band_keys"],
-        "dg_members": refreshed["dg_members"],
-        "rep_digests": refreshed["rep_digests"],
+        **refreshed,
         "text_digests": state["text_digests"].union(
             new_surv.select(F.md5(F.col("cleaned")).alias("__digest"))
         ),
         "pairs": pairs_all,
         "rep_ids": kept_old_rep_ids.union(new_rep_ids),
-        "rep_grams": grams_union,
+        "rep_grams": rep_grams,
         "output": output,
     }
     if rank_col is not None:
         result["rank_col"] = rank_col
-    if state.get("n_survivors") is not None:
-        # O(batch): counts the checkpoint-backed fold delta, not the
-        # corpus (r16 ADVICE) — opt-in incremental survivor counter,
-        # see clean_filter_dedup_apply.
-        result["n_survivors"] = state["n_survivors"] + new_surv.count()
-    if migrate_banding:
-        # batch twin of the streaming sink's per-fold migration hook
-        # (r16 VERDICT item 4); no-op between auto-params boundaries.
-        n = result.get("n_survivors")
-        if n is None:
-            # observable fallback (r17 ADVICE) — see
-            # clean_filter_dedup_apply
-            log.warning(
-                "migrate_banding=True without a seeded n_survivors "
-                "counter: falling back to a corpus-sized "
-                "survivors.count() this fold. Seed it once with "
-                'state["n_survivors"] = state["survivors"].count() '
-                "to make the per-fold cost O(batch)."
-            )
-            n = result["survivors"].count()
-        migrated = migrate_training_data_neardup_banding(
-            result,
-            corpus_n=n,
-            id_col=id_col,
-            shingle_k=shingle_k,
-            jaccard_threshold=jaccard_threshold,
-            span_window=span_window,
-            span_min_docs=span_min_docs,
-            val_frac=val_frac,
-            test_frac=test_frac,
-            rank_col=rank_col,
-        )
-        if migrated is not result:
-            if not compact_keep_superseded:
-                retire_superseded_state(result, migrated)
-            result = migrated
-    if compact_to is not None:
-        compacted = compact_state(
-            result,
-            compact_to,
-            base_path=compact_path,
-            id_col=id_col,
-            unpersist_superseded=not compact_keep_superseded,
-        )
-        # hidden fold intermediates (not leaves of any result frame)
-        if compact_retire_fold_rdds:
-            _retire_persistent_rdds_since(new_df.sparkSession, retire_scope)
-        return compacted
-    return result
+    migrate = functools.partial(
+        migrate_training_data_neardup_banding,
+        id_col=id_col,
+        shingle_k=shingle_k,
+        jaccard_threshold=jaccard_threshold,
+        span_window=span_window,
+        span_min_docs=span_min_docs,
+        val_frac=val_frac,
+        test_frac=test_frac,
+        rank_col=rank_col,
+    )
+    return _finish_fold(
+        result,
+        state,
+        new_surv,
+        retire_scope,
+        migrate,
+        migrate_banding=migrate_banding,
+        compact_to=compact_to,
+        compact_path=compact_path,
+        compact_keep_superseded=compact_keep_superseded,
+        compact_retire_fold_rdds=compact_retire_fold_rdds,
+        id_col=id_col,
+    )
 
 
 def prepare_training_data_neardup_incremental(
@@ -1147,9 +1242,9 @@ def _clean_reps(
     be a numeric survivor feature column (n_ws_tokens or clf_score)."""
     from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
-    memb = survivors.join(
-        comp.withColumnRenamed("node", id_col), id_col, "left"
-    ).withColumn("component_id", F.coalesce(F.col("component"), F.col(id_col)))
+    memb = _labeled(
+        survivors, comp.withColumnRenamed("node", id_col), id_col, "component_id"
+    )
     if rank_col is None:
         return memb.filter(F.col("component_id") == F.col(id_col)).select(
             id_col, "n_ws_tokens", "clf_score", "component_id"
@@ -1184,9 +1279,9 @@ def _clean_soft_rows(
     drop-free policy — one unit of loss mass per duplicate class).
     One slim (component, count) aggregate joined back on component_id
     — documents shuffle once on the label, never on content."""
-    memb = survivors.join(
-        comp.withColumnRenamed("node", id_col), id_col, "left"
-    ).withColumn("component_id", F.coalesce(F.col("component"), F.col(id_col)))
+    memb = _labeled(
+        survivors, comp.withColumnRenamed("node", id_col), id_col, "component_id"
+    )
     sizes = memb.groupBy("component_id").agg(
         F.count(F.lit(1)).alias("n_members")
     )
@@ -1648,35 +1743,26 @@ def clean_filter_dedup_apply(
     from the state's optional ``n_survivors`` counter when present
     (seed it once with ``state["n_survivors"] =
     state["survivors"].count()``; every fold then adds the O(batch)
-    delta count — r16 ADVICE), else from one survivors count.
+    delta count — r16 ADVICE), else from one survivors count. The
+    streaming sinks run this same hook (streaming/sinks.py).
+
+    The keep-policy guard (_check_keep_policy) and the epilogue —
+    counter, migration hook, compaction (_finish_fold) — are shared
+    with training_data_neardup_apply; this function holds only what
+    differs: the filter front and the representative/output rules.
     """
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
-        shingle_arrays,
     )
     from build_datawarehouse_demo_spark.operators.sampling import (
         train_val_test_split,
     )
 
-    if state.get("rank_col") != rank_col:
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"rank_col={state.get('rank_col')!r}, apply called with "
-            f"{rank_col!r} — the policy is part of the state's identity"
-        )
-    if bool(state.get("soft_weights")) != bool(soft_weights):
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"soft_weights={bool(state.get('soft_weights'))}, apply called "
-            f"with {bool(soft_weights)} — the policy is part of the "
-            f"state's identity"
-        )
+    _check_keep_policy(state, rank_col, soft_weights, "apply")
     retire_scope = (
         _persistent_rdd_ids(new_df.sparkSession) if compact_to is not None else None
     )
-    bands, rows = state["bands"], state["rows"]
     old_surv = state["survivors"]
-    old_pairs = state["pairs"]
     old_output = state["output"]
 
     new_surv = clean_filter_survivors(
@@ -1701,23 +1787,15 @@ def clean_filter_dedup_apply(
     # (formerly ~bands·k_old·m join rows on one hot key), and the
     # k_old·m member pairs appear only in the verified output
     # expansion — the pairs contract.
-    new_sh = shingle_arrays(new_surv, id_col, "cleaned", shingle_k)
     delta = _apply_rep_candidates(
-        new_sh,
-        old_surv,
-        state,
-        id_col,
-        shingle_k,
-        bands * rows,
-        bands,
-        jaccard_threshold,
+        new_surv, state, id_col, shingle_k, jaccard_threshold
     )
     # append-only state discipline (r14, see training_data_neardup_
     # apply): lazy `old ∪ checkpointed-delta` unions — a refresh never
     # copies corpus-scale state frames.
-    pairs_all = old_pairs.union(delta["new_pairs"])
+    pairs_all = state["pairs"].union(delta["new_pairs"])
 
-    comp = connected_components_star(pairs_all)
+    compR = connected_components_star(pairs_all).withColumnRenamed("node", id_col)
     if soft_weights:
         # DROP-FREE refresh (r18): every survivor stays in the output;
         # what a fold can change is the component SIZE (weight) and
@@ -1727,14 +1805,11 @@ def clean_filter_dedup_apply(
         # touched components (their old members are graph nodes, so
         # the stored-survivor scan is pruned to exactly those ids);
         # reuse everything else verbatim.
-        compR = comp.withColumnRenamed("node", id_col)
-        new_lab = (
-            new_surv.select(id_col, "n_ws_tokens", "clf_score")
-            .join(compR, id_col, "left")
-            .withColumn(
-                "component_id", F.coalesce(F.col("component"), F.col(id_col))
-            )
-            .drop("component")
+        new_lab = _labeled(
+            new_surv.select(id_col, "n_ws_tokens", "clf_score"),
+            compR,
+            id_col,
+            "component_id",
         )
         touched = new_lab.select("component_id").distinct().localCheckpoint()
         # old members of touched components: every one is IN the pair
@@ -1766,21 +1841,16 @@ def clean_filter_dedup_apply(
             .localCheckpoint()  # the touched-component member rows
         )
         dropped_old = touched_map.select(id_col).localCheckpoint()
-        reused = old_output.join(dropped_old, id_col, "left_anti")
     elif rank_col is None:
         dropped_old = (
             old_output.select(id_col)
-            .join(comp.withColumnRenamed("node", id_col), id_col)
+            .join(compR, id_col)
             .filter(F.col("component") != F.col(id_col))
             .select(id_col)
             .localCheckpoint()
         )
-        reused = old_output.join(dropped_old, id_col, "left_anti")
         new_reps = (
-            new_surv.join(comp.withColumnRenamed("node", id_col), id_col, "left")
-            .withColumn(
-                "component_id", F.coalesce(F.col("component"), F.col(id_col))
-            )
+            _labeled(new_surv, compR, id_col, "component_id")
             .filter(F.col("component_id") == F.col(id_col))
             .select(id_col, "n_ws_tokens", "clf_score", "component_id")
         )
@@ -1799,39 +1869,23 @@ def clean_filter_dedup_apply(
         # members — one slim min_by, documents never move.
         from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
-        compR = comp.withColumnRenamed("node", id_col)
-
-        def _labeled(frame: DataFrame) -> DataFrame:
-            return (
-                frame.join(compR, id_col, "left")
-                .withColumn(
-                    "component_id",
-                    F.coalesce(F.col("component"), F.col(id_col)),
-                )
-                .drop("component")
-            )
-
-        new_lab = _labeled(new_surv.select(id_col, "n_ws_tokens", "clf_score"))
+        feats = (id_col, "n_ws_tokens", "clf_score")
+        new_lab = _labeled(new_surv.select(*feats), compR, id_col, "component_id")
         touched = new_lab.select("component_id").distinct().localCheckpoint()
         old_keep_lab = _labeled(
-            old_output.select(id_col, "n_ws_tokens", "clf_score")
+            old_output.select(*feats), compR, id_col, "component_id"
         )
         cand = old_keep_lab.unionByName(new_lab).join(
             touched, "component_id", "left_semi"
         )
         winners = cand.groupBy("component_id").agg(
             F.min_by(
-                F.struct(
-                    F.col(id_col), F.col("n_ws_tokens"), F.col("clf_score")
-                ),
+                F.struct(*[F.col(c) for c in feats]),
                 keep_best_key(rank_col, id_col),
             ).alias("__w")
         )
         new_rows = winners.select(
-            F.col(f"__w.{id_col}").alias(id_col),
-            F.col("__w.n_ws_tokens").alias("n_ws_tokens"),
-            F.col("__w.clf_score").alias("clf_score"),
-            "component_id",
+            *[F.col(f"__w.{c}").alias(c) for c in feats], "component_id"
         )
         new_out = (
             train_val_test_split(
@@ -1844,21 +1898,18 @@ def clean_filter_dedup_apply(
         # (their label may have merged downward, their keep may have
         # been displaced); everything else is reused verbatim
         dropped_old = (
-            _labeled(old_output.select(id_col))
+            old_keep_lab.select(id_col, "component_id")
             .join(touched, "component_id", "left_semi")
             .select(id_col)
             .localCheckpoint()
         )
-        reused = old_output.join(dropped_old, id_col, "left_anti")
-    output = reused.unionByName(new_out)
+    output = old_output.join(dropped_old, id_col, "left_anti").unionByName(new_out)
     refreshed = _refreshed_collapse_state(state, delta, id_col)
     result = {
-        "bands": bands,
-        "rows": rows,
+        "bands": state["bands"],
+        "rows": state["rows"],
         "survivors": old_surv.unionByName(new_surv),
-        "band_keys": refreshed["band_keys"],
-        "dg_members": refreshed["dg_members"],
-        "rep_digests": refreshed["rep_digests"],
+        **refreshed,
         "pairs": pairs_all,
         "output": output,
     }
@@ -1866,61 +1917,29 @@ def clean_filter_dedup_apply(
         result["rank_col"] = rank_col
     if soft_weights:
         result["soft_weights"] = True
-    if state.get("n_survivors") is not None:
-        # O(batch): new_surv is checkpoint-backed, so this counts the
-        # fold delta's cached blocks — the incremental twin of a
-        # corpus-sized survivors.count() per fold (r16 ADVICE). The
-        # key is opt-in: seed it once (state["n_survivors"] =
-        # state["survivors"].count()) and every fold maintains it.
-        result["n_survivors"] = state["n_survivors"] + new_surv.count()
-    if migrate_banding:
-        # close the frozen-banding staleness loop in the batch path,
-        # symmetric with the streaming sink's per-fold hook (r16
-        # VERDICT item 4): a no-op between minhash_auto_params
-        # boundaries; at a boundary the state is re-signed at the
-        # grown corpus size and the replaced frames' blocks retired
-        # (unless the caller keeps the pre-fold dict readable).
-        n = result.get("n_survivors")
-        if n is None:
-            # observable fallback (r17 ADVICE): without the seeded
-            # counter this pays a corpus-sized count EVERY fold — the
-            # exact cost the r16 incremental counter removed
-            log.warning(
-                "migrate_banding=True without a seeded n_survivors "
-                "counter: falling back to a corpus-sized "
-                "survivors.count() this fold. Seed it once with "
-                'state["n_survivors"] = state["survivors"].count() '
-                "to make the per-fold cost O(batch)."
-            )
-            n = result["survivors"].count()
-        migrated = migrate_clean_filter_banding(
-            result,
-            corpus_n=n,
-            id_col=id_col,
-            shingle_k=shingle_k,
-            jaccard_threshold=jaccard_threshold,
-            val_frac=val_frac,
-            test_frac=test_frac,
-            rank_col=rank_col,
-            soft_weights=soft_weights,
-        )
-        if migrated is not result:
-            if not compact_keep_superseded:
-                retire_superseded_state(result, migrated)
-            result = migrated
-    if compact_to is not None:
-        compacted = compact_state(
-            result,
-            compact_to,
-            base_path=compact_path,
-            id_col=id_col,
-            unpersist_superseded=not compact_keep_superseded,
-        )
-        # hidden fold intermediates (not leaves of any result frame)
-        if compact_retire_fold_rdds:
-            _retire_persistent_rdds_since(new_df.sparkSession, retire_scope)
-        return compacted
-    return result
+    migrate = functools.partial(
+        migrate_clean_filter_banding,
+        id_col=id_col,
+        shingle_k=shingle_k,
+        jaccard_threshold=jaccard_threshold,
+        val_frac=val_frac,
+        test_frac=test_frac,
+        rank_col=rank_col,
+        soft_weights=soft_weights,
+    )
+    return _finish_fold(
+        result,
+        state,
+        new_surv,
+        retire_scope,
+        migrate,
+        migrate_banding=migrate_banding,
+        compact_to=compact_to,
+        compact_path=compact_path,
+        compact_keep_superseded=compact_keep_superseded,
+        compact_retire_fold_rdds=compact_retire_fold_rdds,
+        id_col=id_col,
+    )
 
 
 def prepare_clean_filter_dedup_incremental(
@@ -1943,21 +1962,22 @@ def prepare_clean_filter_dedup_incremental(
 
 def _rebanded_collapse_frames(
     state: dict,
-    new_bands: int,
-    new_rows: int,
+    corpus_n: int,
     id_col: str,
     shingle_k: int,
     threshold: float,
-) -> dict:
-    """Re-sign the state's digest-group REPS at a new (bands, rows) and
-    recompute the rep-level pair set — the shared core of a banding
-    migration. Reps-only cost: ONE distinct-content scan (survivors
+) -> dict | None:
+    """Re-sign the state's digest-group REPS at
+    ``minhash_auto_params(corpus_n)`` and recompute the rep-level pair
+    set — the shared core of a banding migration. Reps-only cost: ONE distinct-content scan (survivors
     semi-joined to the rep ids, re-shingled), one signature pass over
     reps, one banded self-join, one verify, one expansion through the
     stored member map. The member map, digests and survivors are
     untouched — no member is ever re-shingled.
 
-    Returns {band_keys, pairs}, both checkpointed. The recomputed
+    Returns None when the auto params are unchanged (the migration
+    is a no-op), else {bands, rows, band_keys, pairs}, both frames
+    checkpointed. The recomputed
     pairs are exactly what a full rebuild at the new banding verifies:
     candidacy and jaccard depend only on the shingle set (the digest-
     collapse losslessness argument), and within-group pairs regenerate
@@ -1965,10 +1985,14 @@ def _rebanded_collapse_frames(
     in every band)."""
     from build_datawarehouse_demo_spark.operators.dedup import (
         lsh_band_keys,
+        minhash_auto_params,
         minhash_signatures_from_arrays,
         shingle_arrays,
     )
 
+    new_bands, new_rows = minhash_auto_params(corpus_n, threshold=threshold)
+    if (new_bands, new_rows) == (state["bands"], state["rows"]):
+        return None
     rep_ids = state["rep_digests"].select(id_col)
     rep_sh = shingle_arrays(
         state["survivors"].join(rep_ids, id_col, "left_semi"),
@@ -1994,7 +2018,12 @@ def _rebanded_collapse_frames(
     pairs = _expand_rep_pairs(
         rep_pairs, self_reps, state["dg_members"], id_col, threshold
     ).localCheckpoint()
-    return {"band_keys": band_keys, "pairs": pairs}
+    return {
+        "bands": new_bands,
+        "rows": new_rows,
+        "band_keys": band_keys,
+        "pairs": pairs,
+    }
 
 
 def migrate_clean_filter_banding(
@@ -2042,35 +2071,18 @@ def migrate_clean_filter_banding(
     """
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
-        minhash_auto_params,
     )
     from build_datawarehouse_demo_spark.operators.sampling import (
         train_val_test_split,
     )
 
-    if state.get("rank_col") != rank_col:
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"rank_col={state.get('rank_col')!r}, migration called with "
-            f"{rank_col!r} — the policy is part of the state's identity"
-        )
-    if bool(state.get("soft_weights")) != bool(soft_weights):
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"soft_weights={bool(state.get('soft_weights'))}, migration "
-            f"called with {bool(soft_weights)} — the policy is part of "
-            f"the state's identity"
-        )
-    new_bands, new_rows = minhash_auto_params(
-        corpus_n, threshold=jaccard_threshold
-    )
-    if (new_bands, new_rows) == (state["bands"], state["rows"]):
-        return state
+    _check_keep_policy(state, rank_col, soft_weights, "migration")
     rebanded = _rebanded_collapse_frames(
-        state, new_bands, new_rows, id_col, shingle_k, jaccard_threshold
+        state, corpus_n, id_col, shingle_k, jaccard_threshold
     )
-    pairs = rebanded["pairs"]
-    comp = connected_components_star(pairs)
+    if rebanded is None:
+        return state
+    comp = connected_components_star(rebanded["pairs"])
     if soft_weights:
         rows_out = _clean_soft_rows(state["survivors"], comp, id_col)
         out_cols = (
@@ -2087,23 +2099,9 @@ def migrate_clean_filter_banding(
         .select(*out_cols)
         .localCheckpoint()
     )
-    out = {
-        "bands": new_bands,
-        "rows": new_rows,
-        "survivors": state["survivors"],
-        "band_keys": rebanded["band_keys"],
-        "dg_members": state["dg_members"],
-        "rep_digests": state["rep_digests"],
-        "pairs": pairs,
-        "output": output,
-    }
-    if state.get("n_survivors") is not None:
-        out["n_survivors"] = state["n_survivors"]  # survivors untouched
-    if rank_col is not None:
-        out["rank_col"] = rank_col
-    if soft_weights:
-        out["soft_weights"] = True
-    return out
+    # survivors, member maps, digests, the counter and the keep policy
+    # pass through untouched
+    return {**state, **rebanded, "output": output}
 
 
 def migrate_training_data_neardup_banding(
@@ -2127,18 +2125,11 @@ def migrate_training_data_neardup_banding(
     gram statistics are computed over the REP set, and re-banding can
     change that set (components merge under pairs the new banding
     catches; they can split under pairs it misses). The refresh is the
-    apply's span-delta machinery re-aimed at the rep-set diff:
-
-    - dropped reps (component min fell below them under new pairs) and
-      ADDED reps (their component lost its bridging pair) mark their
-      grams' digests changed;
-    - affected docs = any refreshed rep sharing a changed digest, plus
-      every added rep; they rebuild with remove_spans_given_owners
-      against stats over the refreshed global gram table restricted to
-      their digests; untouched reps reuse their stored output rows
-      verbatim (their grams' dup status and owner provably did not
-      change — counts and owners move only via dropped/added reps'
-      grams, and those digests are all marked).
+    apply's own span stage (_refresh_spans) aimed at the rep-set diff:
+    dropped reps (component min fell below them under new pairs) and
+    ADDED reps (their component lost its bridging pair) mark their
+    grams' digests changed, affected docs rebuild, untouched reps
+    reuse their stored output rows verbatim.
 
     No-op when the auto params are unchanged. Returns the same dict
     shape; survivors / dg_members / rep_digests / text_digests pass
@@ -2150,42 +2141,23 @@ def migrate_training_data_neardup_banding(
     """
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
-        minhash_auto_params,
-        remove_spans_given_owners,
-        _window_gram_rows,
-    )
-    from build_datawarehouse_demo_spark.operators.sampling import (
-        train_val_test_split,
     )
 
-    if state.get("rank_col") != rank_col:
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"rank_col={state.get('rank_col')!r}, migration called with "
-            f"{rank_col!r} — the policy is part of the state's identity"
-        )
-    new_bands, new_rows = minhash_auto_params(
-        corpus_n, threshold=jaccard_threshold
-    )
-    if (new_bands, new_rows) == (state["bands"], state["rows"]):
-        return state
+    _check_keep_policy(state, rank_col, False, "migration")
     rebanded = _rebanded_collapse_frames(
-        state, new_bands, new_rows, id_col, shingle_k, jaccard_threshold
+        state, corpus_n, id_col, shingle_k, jaccard_threshold
     )
-    pairs = rebanded["pairs"]
+    if rebanded is None:
+        return state
     surv = state["survivors"]
     old_rep_ids = state["rep_ids"]
-    old_grams = state["rep_grams"]
-
-    comp = connected_components_star(pairs)
-    compR = comp.withColumnRenamed("node", id_col)
+    compR = connected_components_star(rebanded["pairs"]).withColumnRenamed(
+        "node", id_col
+    )
     if rank_col is None:
         rep_ids = (
-            surv.select(id_col)
-            .join(compR, id_col, "left")
-            .filter(
-                F.coalesce(F.col("component"), F.col(id_col)) == F.col(id_col)
-            )
+            _labeled(surv.select(id_col), compR, id_col)
+            .filter(F.col("__cid") == F.col(id_col))
             .select(id_col)
             .localCheckpoint()
         )
@@ -2196,14 +2168,9 @@ def migrate_training_data_neardup_banding(
         # already runs at
         from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
-        memb = (
-            surv.select(id_col, rank_col)
-            .join(compR, id_col, "left")
-            .withColumn("__cid", F.coalesce(F.col("component"), F.col(id_col)))
-            .drop("component")
-        )
         rep_ids = (
-            memb.groupBy("__cid")
+            _labeled(surv.select(id_col, rank_col), compR, id_col)
+            .groupBy("__cid")
             .agg(
                 F.min_by(F.col(id_col), keep_best_key(rank_col, id_col)).alias(
                     "__keep"
@@ -2214,123 +2181,27 @@ def migrate_training_data_neardup_banding(
         )
     dropped = old_rep_ids.join(rep_ids, id_col, "left_anti").localCheckpoint()
     added = rep_ids.join(old_rep_ids, id_col, "left_anti").localCheckpoint()
-
-    # span refresh over the rep-set diff (the apply's delta machinery)
-    added_grams = _window_gram_rows(
-        surv.join(added, id_col, "left_semi").select(id_col, "cleaned"),
-        id_col,
-        "cleaned",
-        span_window,
-    ).localCheckpoint()
-    dropped_grams = old_grams.join(dropped, id_col)
-    kept_old_grams = old_grams.join(dropped, id_col, "left_anti")
-    grams_union = kept_old_grams.union(added_grams)
-    changed_digests = (
-        added_grams.select("gram_md5")
-        .union(dropped_grams.select("gram_md5"))
-        .distinct()
+    output, rep_grams = _refresh_spans(
+        state,
+        surv.join(rep_ids, id_col, "left_semi"),
+        surv.join(added, id_col, "left_semi"),
+        added,
+        dropped,
+        compR,
+        rank_col,
+        id_col=id_col,
+        span_window=span_window,
+        span_min_docs=span_min_docs,
+        val_frac=val_frac,
+        test_frac=test_frac,
     )
-    affected_ids = (
-        grams_union.join(changed_digests, "gram_md5")
-        .select(id_col)
-        .union(added.select(id_col))
-        .distinct()
-        .localCheckpoint()
-    )
-    digests_needed = (
-        grams_union.join(affected_ids, id_col).select("gram_md5").distinct()
-    )
-    owners = (
-        grams_union.join(digests_needed, "gram_md5")
-        .groupBy("gram_md5")
-        .agg(F.countDistinct(id_col).alias("__nd"), F.min(id_col).alias("__owner"))
-        .filter(F.col("__nd") >= span_min_docs)
-        .select("gram_md5", "__owner")
-    )
-    affected_docs = (
-        surv.join(rep_ids, id_col, "left_semi")
-        .join(affected_ids, id_col)
-        .localCheckpoint()
-    )
-    rebuilt = remove_spans_given_owners(
-        affected_docs.select(id_col, "cleaned"), owners, id_col, "cleaned", span_window
-    )
-    if rank_col is None:
-        cid = F.col(id_col).alias("component_id")
-        aff = affected_docs.select(id_col, "pred_lang", "quality")
-    else:
-        # keep-best: the label is the component min under the NEW
-        # pairs, not the winner's own id
-        cid = F.col("__cid").alias("component_id")
-        aff = (
-            affected_docs.select(id_col, "pred_lang", "quality")
-            .join(compR, id_col, "left")
-            .withColumn("__cid", F.coalesce(F.col("component"), F.col(id_col)))
-            .drop("component")
-        )
-    recomputed = (
-        aff.join(rebuilt, id_col)
-        .select(
-            id_col,
-            "pred_lang",
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            "quality",
-            cid,
-            "cleaned_text",
-            "n_tokens_removed",
-        )
-    )
-    recomputed_out = train_val_test_split(
-        recomputed, id_col, val_frac=val_frac, test_frac=test_frac
-    ).localCheckpoint()
-    reused = state["output"].join(rep_ids, id_col, "left_semi").join(
-        affected_ids, id_col, "left_anti"
-    )
-    if rank_col is not None:
-        # kept winners whose component LABEL moved under the new pair
-        # set re-emit their stored rows with the refreshed label (a
-        # projection over the changed rows only — never a span rebuild)
-        ru_lab = (
-            reused.select(id_col, "component_id")
-            .join(compR, id_col, "left")
-            .withColumn("__cid", F.coalesce(F.col("component"), F.col(id_col)))
-            .drop("component")
-            .filter(F.col("__cid") != F.col("component_id"))
-            .select(id_col, "__cid")
-            .localCheckpoint()
-        )
-        relabeled = reused.drop("component_id").join(ru_lab, id_col).select(
-            id_col,
-            "pred_lang",
-            "n_tokens",
-            "quality",
-            F.col("__cid").alias("component_id"),
-            "cleaned_text",
-            "n_tokens_removed",
-            "split",
-        )
-        reused = reused.join(
-            ru_lab.select(id_col), id_col, "left_anti"
-        ).unionByName(relabeled)
-    output = reused.unionByName(recomputed_out)
-    out = {
-        "bands": new_bands,
-        "rows": new_rows,
-        "survivors": surv,
-        "band_keys": rebanded["band_keys"],
-        "dg_members": state["dg_members"],
-        "rep_digests": state["rep_digests"],
-        "text_digests": state["text_digests"],
-        "pairs": pairs,
+    return {
+        **state,
+        **rebanded,
         "rep_ids": rep_ids,
-        "rep_grams": grams_union,
+        "rep_grams": rep_grams,
         "output": output,
     }
-    if state.get("n_survivors") is not None:
-        out["n_survivors"] = state["n_survivors"]  # survivors untouched
-    if rank_col is not None:
-        out["rank_col"] = rank_col
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2580,7 +2451,6 @@ def compact_state(
     id_col: str = "doc_id",
     n_buckets: int = 8,
     unpersist_superseded: bool = True,
-    keep_generations: int = 1,
     gc_superseded: bool = True,
 ) -> dict:
     """Materialize an incremental curation state (the dict of
@@ -2619,13 +2489,12 @@ def compact_state(
     Spark refuses to overwrite a table it is reading from — fresh
     generation names make repeated compaction safe. Superseded
     generations are GARBAGE-COLLECTED once the new one is committed
-    (r15 VERDICT item 3): after phase 2, every generation older than
-    the newest ``keep_generations`` is dropped — tables AND files
-    (external locations are read back from the catalog) — so a
-    daily-fold production run holds a constant table count instead of
-    leaking one state copy per compaction. With
-    ``unpersist_superseded=False`` the effective keep is at least 2,
-    so the generation a still-held pre-compaction dict may scan
+    (r15 VERDICT item 3): after phase 2, every generation but the
+    newest is dropped — tables AND files (external locations are read
+    back from the catalog) — so a daily-fold production run holds a
+    constant table count instead of leaking one state copy per
+    compaction. With ``unpersist_superseded=False`` the newest TWO are
+    kept, so the generation a still-held pre-compaction dict may scan
     survives alongside its checkpoint blocks. Discovery and GC work
     over file://, hdfs:// and s3a:// alike (Hadoop FileSystem API,
     r16); restart contract: keep the SAME ``base_path`` for a prefix
@@ -2675,8 +2544,8 @@ def compact_state(
             if isinstance(val, DataFrame):
                 _unpersist_checkpoint_leaves(val)
     # generation GC: the new generation is committed and the old
-    # blocks retired — drop everything older than the newest
-    # `keep_generations` (a kept pre-compaction dict keeps one extra).
+    # blocks retired — drop everything but the newest generation (a
+    # kept pre-compaction dict keeps one extra).
     # ``gc_superseded=False`` suppresses this entirely for callers
     # that must defer ALL GC past an external swap point (r17 ADVICE:
     # the streaming sinks' pre-swap internal GC could, under two
@@ -2684,6 +2553,6 @@ def compact_state(
     # still-unswapped holder reads — the sinks now GC only after the
     # swap commits, via gc_generations).
     if gc_superseded:
-        eff_keep = max(keep_generations, 1 if unpersist_superseded else 2)
-        gc_generations(spark, prefix, base_path, keep_generations=eff_keep)
+        keep = 1 if unpersist_superseded else 2
+        gc_generations(spark, prefix, base_path, keep_generations=keep)
     return out

@@ -140,6 +140,113 @@ def stream_rag_index_append(
     )
 
 
+def _stream_state_append(
+    docs: DataFrame,
+    holder: dict,
+    checkpoint_dir: str,
+    fold,
+    *,
+    id_col: str,
+    compact_every: int,
+    compact_to: str | None,
+    compact_path: str | None,
+    migrate_banding: bool,
+    knobs: dict,
+):
+    """The incremental-state streaming sink both corpus pipelines
+    share: every micro-batch is folded into ``holder["state"]`` by
+    ``fold`` (clean_filter_dedup_apply or training_data_neardup_apply,
+    called with ``knobs``). The contract is documented on
+    stream_clean_filter_state_append.
+
+    The per-fold banding migration is the apply's own
+    ``migrate_banding=True`` epilogue (plans/training_data._finish_fold:
+    counter, migration bound to the apply's own parameters, retire the
+    superseded frames). Compaction is NOT delegated: the sink keeps its
+    retry-safe order (write without GC, swap the holder, then retire,
+    sweep and GC), which differs from the apply's on purpose.
+    """
+    from build_datawarehouse_demo_spark.plans.training_data import (
+        _persistent_rdd_ids,
+        _retire_persistent_rdds_since,
+        compact_state,
+        gc_generations,
+        retire_superseded_state,
+    )
+
+    if compact_every and not compact_to:
+        raise ValueError("compact_every requires compact_to (table-name prefix)")
+    # retire scope for compaction, snapshotted at WIRING time: after a
+    # compacting fold, every frame is a table scan, so every RDD
+    # persisted since the stream started (hidden fold intermediates
+    # from ALL folds in the window, not just the compacting one) is
+    # garbage and is retired in one sweep — the bounded-blocks
+    # lifetime contract. Same concurrency caveat as the applies'
+    # compact_retire_fold_rdds: the sweep diffs the session-global
+    # persistent-RDD set, so do not run this stream alongside another
+    # job that persists RDDs it wants to keep.
+    scope0 = _persistent_rdd_ids(docs.sparkSession) if compact_every else None
+    if migrate_banding and holder["state"].get("n_survivors") is None:
+        # seed the incremental survivor counter ONCE at wiring (r16
+        # ADVICE: the hook formerly recounted the full survivor frame
+        # — a corpus-sized job — every micro-batch). Each fold's apply
+        # then adds its O(batch) delta count; a replayed batch folds
+        # an empty fresh set and adds 0, so the counter survives
+        # at-least-once delivery and restarts with the same holder.
+        holder["state"]["n_survivors"] = holder["state"]["survivors"].count()
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        seen = holder["state"]["survivors"].select(id_col)
+        fresh = batch_df.join(seen, id_col, "left_anti")
+        st = fold(
+            fresh,
+            holder["state"],
+            id_col=id_col,
+            migrate_banding=migrate_banding,
+            **knobs,
+        )
+        if compact_every and batch_id % compact_every == compact_every - 1:
+            # retry safety (r16 ADVICE): write the new generation and
+            # SWAP the live state before retiring anything — a
+            # foreachBatch retry between compaction and the swap must
+            # still find the pre-swap blocks and generation files
+            # readable (the former order unpersisted and GC'd first,
+            # so a retry failed permanently on missing checkpoint
+            # blocks). NO GC through the write (r17 ADVICE closed the
+            # consecutive-retry hole: the former pre-swap internal GC
+            # kept only 2 generations counting the one just written,
+            # so a second crash-before-swap retry could drop the
+            # generation the still-unswapped holder reads); after the
+            # swap commits, retire the superseded leaves (the new
+            # frames are pure table scans, so this frees every old
+            # leaf), sweep hidden fold intermediates, and GC down to
+            # one generation. A crash mid-retire replays against the
+            # compacted holder state — the fold is then empty and the
+            # re-compaction supersedes this generation normally.
+            old = st
+            st = compact_state(
+                old,
+                compact_to,
+                base_path=compact_path,
+                id_col=id_col,
+                unpersist_superseded=False,
+                gc_superseded=False,
+            )
+            holder["state"] = st
+            retire_superseded_state(old, st)
+            _retire_persistent_rdds_since(spark, scope0)
+            gc_generations(spark, compact_to, base_path=compact_path)
+        holder["state"] = st
+
+    return (
+        docs.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_clean_filter_state_append(
     docs: DataFrame,
     holder: dict,
@@ -221,110 +328,26 @@ def stream_clean_filter_state_append(
     10.6x candidate blowup of a 400x-stale banding,
     BENCH_BANDING_MIGRATION_r15_b100.json, is what this prevents).
     Checkpoint leaves the migrated state no longer references are
-    retired immediately (retire_superseded_state).
+    retired immediately (retire_superseded_state). The migration is the
+    apply's own ``migrate_banding=True`` epilogue, so it always runs
+    with the apply's parameters; the sink body is _stream_state_append,
+    shared with stream_training_data_state_append.
     """
     from build_datawarehouse_demo_spark.plans.training_data import (
-        _persistent_rdd_ids,
-        _retire_persistent_rdds_since,
         clean_filter_dedup_apply,
-        compact_state,
-        gc_generations,
-        migrate_clean_filter_banding,
-        retire_superseded_state,
     )
 
-    if compact_every and not compact_to:
-        raise ValueError("compact_every requires compact_to (table-name prefix)")
-    # the migration op shares these knobs with the apply — they must
-    # describe the same pipeline parameters in both calls
-    mig_knobs = {
-        k: knobs[k]
-        for k in (
-            "shingle_k",
-            "jaccard_threshold",
-            "val_frac",
-            "test_frac",
-            # keep policy is part of the state's identity
-            "rank_col",
-            "soft_weights",
-        )
-        if k in knobs
-    }
-    # retire scope for compaction, snapshotted at WIRING time: after a
-    # compacting fold, every frame is a table scan, so every RDD
-    # persisted since the stream started (hidden fold intermediates
-    # from ALL folds in the window, not just the compacting one) is
-    # garbage and is retired in one sweep — the bounded-blocks
-    # lifetime contract. Same concurrency caveat as the applies'
-    # compact_retire_fold_rdds: the sweep diffs the session-global
-    # persistent-RDD set, so do not run this stream alongside another
-    # job that persists RDDs it wants to keep.
-    scope0 = _persistent_rdd_ids(docs.sparkSession) if compact_every else None
-    if migrate_banding and holder["state"].get("n_survivors") is None:
-        # seed the incremental survivor counter ONCE at wiring (r16
-        # ADVICE: the hook formerly recounted the full survivor frame
-        # — a corpus-sized job — every micro-batch). Each fold's apply
-        # then adds its O(batch) delta count; a replayed batch folds
-        # an empty fresh set and adds 0, so the counter survives
-        # at-least-once delivery and restarts with the same holder.
-        holder["state"]["n_survivors"] = holder["state"]["survivors"].count()
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        seen = holder["state"]["survivors"].select(id_col)
-        fresh = batch_df.join(seen, id_col, "left_anti")
-        compact_now = bool(compact_every) and (
-            batch_id % compact_every == compact_every - 1
-        )
-        st = clean_filter_dedup_apply(fresh, holder["state"], id_col=id_col, **knobs)
-        if migrate_banding:
-            migrated = migrate_clean_filter_banding(
-                st, corpus_n=st["n_survivors"], id_col=id_col, **mig_knobs
-            )
-            if migrated is not st:
-                # boundary crossed: free the replaced frames' blocks
-                # (band_keys/pairs/output), keep everything the
-                # migrated state still reads (survivors, member maps)
-                retire_superseded_state(st, migrated)
-                st = migrated
-        if compact_now:
-            # retry safety (r16 ADVICE): write the new generation and
-            # SWAP the live state before retiring anything — a
-            # foreachBatch retry between compaction and the swap must
-            # still find the pre-swap blocks and generation files
-            # readable (the former order unpersisted and GC'd first,
-            # so a retry failed permanently on missing checkpoint
-            # blocks). NO GC through the write (r17 ADVICE closed the
-            # consecutive-retry hole: the former pre-swap internal GC
-            # kept only 2 generations counting the one just written,
-            # so a second crash-before-swap retry could drop the
-            # generation the still-unswapped holder reads); after the
-            # swap commits, retire the superseded leaves (the new
-            # frames are pure table scans, so this frees every old
-            # leaf), sweep hidden fold intermediates, and GC down to
-            # one generation. A crash mid-retire replays against the
-            # compacted holder state — the fold is then empty and the
-            # re-compaction supersedes this generation normally.
-            old = st
-            st = compact_state(
-                old,
-                compact_to,
-                base_path=compact_path,
-                id_col=id_col,
-                unpersist_superseded=False,
-                gc_superseded=False,
-            )
-            holder["state"] = st
-            retire_superseded_state(old, st)
-            _retire_persistent_rdds_since(spark, scope0)
-            gc_generations(spark, compact_to, base_path=compact_path)
-        holder["state"] = st
-
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_state_append(
+        docs,
+        holder,
+        checkpoint_dir,
+        clean_filter_dedup_apply,
+        id_col=id_col,
+        compact_every=compact_every,
+        compact_to=compact_to,
+        compact_path=compact_path,
+        migrate_banding=migrate_banding,
+        knobs=knobs,
     )
 
 
@@ -351,8 +374,9 @@ def stream_training_data_state_append(
     REUSED — only the batch is scanned, only span-affected documents
     rebuild.
 
-    Contract-identical to the clean sink, delegated to the same
-    machinery (read its docstring for the details):
+    Contract-identical to the clean sink: both are thin wrappers over
+    the one shared sink, _stream_state_append (read the clean sink's
+    docstring for the details):
     - ``holder`` = {"state": <training_data_neardup_state dict>},
       refreshed after every batch; ``knobs`` are the apply's filter /
       banding / span parameters and must match the state build.
@@ -366,86 +390,31 @@ def stream_training_data_state_append(
     - ``compact_every=N`` / ``compact_to`` / ``compact_path``: every
       N batches (batch_id-derived cadence, retry/restart-stable) the
       state compacts to bucketed parquet generations with the
-      retry-safe order — write keeping 2 generations, SWAP the
-      holder, then retire superseded blocks + hidden fold RDDs and GC
-      to one generation.
+      retry-safe order — write without GC, SWAP the holder, then
+      retire superseded blocks + hidden fold RDDs and GC to one
+      generation.
     - ``migrate_banding=True``: per-fold frozen-banding migration at
       the incremental survivor count (seeded once at wiring, += each
-      fold's O(batch) delta), through
+      fold's O(batch) delta), run by the apply's own
+      ``migrate_banding`` epilogue through
       migrate_training_data_neardup_banding — span output repaired
       for exactly the rep-set diff; superseded frames retired.
     """
     from build_datawarehouse_demo_spark.plans.training_data import (
-        _persistent_rdd_ids,
-        _retire_persistent_rdds_since,
-        compact_state,
-        gc_generations,
-        migrate_training_data_neardup_banding,
-        retire_superseded_state,
         training_data_neardup_apply,
     )
 
-    if compact_every and not compact_to:
-        raise ValueError("compact_every requires compact_to (table-name prefix)")
-    mig_knobs = {
-        k: knobs[k]
-        for k in (
-            "shingle_k",
-            "jaccard_threshold",
-            "span_window",
-            "span_min_docs",
-            "val_frac",
-            "test_frac",
-            "rank_col",  # keep policy is part of the state's identity
-        )
-        if k in knobs
-    }
-    scope0 = _persistent_rdd_ids(docs.sparkSession) if compact_every else None
-    if migrate_banding and holder["state"].get("n_survivors") is None:
-        holder["state"]["n_survivors"] = holder["state"]["survivors"].count()
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        seen = holder["state"]["survivors"].select(id_col)
-        fresh = batch_df.join(seen, id_col, "left_anti")
-        compact_now = bool(compact_every) and (
-            batch_id % compact_every == compact_every - 1
-        )
-        st = training_data_neardup_apply(
-            fresh, holder["state"], id_col=id_col, **knobs
-        )
-        if migrate_banding:
-            migrated = migrate_training_data_neardup_banding(
-                st, corpus_n=st["n_survivors"], id_col=id_col, **mig_knobs
-            )
-            if migrated is not st:
-                retire_superseded_state(st, migrated)
-                st = migrated
-        if compact_now:
-            # same retry-safe order as the clean sink: write with ALL
-            # GC suppressed (r17 ADVICE — pre-swap GC could strand a
-            # twice-retried unswapped holder), swap, THEN retire and
-            # GC to 1
-            old = st
-            st = compact_state(
-                old,
-                compact_to,
-                base_path=compact_path,
-                id_col=id_col,
-                unpersist_superseded=False,
-                gc_superseded=False,
-            )
-            holder["state"] = st
-            retire_superseded_state(old, st)
-            _retire_persistent_rdds_since(spark, scope0)
-            gc_generations(spark, compact_to, base_path=compact_path)
-        holder["state"] = st
-
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_state_append(
+        docs,
+        holder,
+        checkpoint_dir,
+        training_data_neardup_apply,
+        id_col=id_col,
+        compact_every=compact_every,
+        compact_to=compact_to,
+        compact_path=compact_path,
+        migrate_banding=migrate_banding,
+        knobs=knobs,
     )
 
 

@@ -1,19 +1,25 @@
-"""Package surface: one kernel per operator, one parquet writer.
+"""Package surface: one kernel per operator, one parquet writer, one
+fold lifecycle.
 
 Every operator ships exactly one implementation; the JVM expression
 chains the fused kernels are pinned against live in
 tests/jvm_reference.py, not behind a user-facing switch. Every parquet
 write goes through `sources.writers.parquet_writer`, the one place the
-on-disk layout is set.
+on-disk layout is set. The incremental corpus pipelines share one
+keep-policy guard, one apply epilogue and one streaming state sink.
+Every package import in the repo's scripts resolves.
 """
 
 from __future__ import annotations
 
 import ast
 import importlib
+import importlib.util
 import inspect
 import os
 import pkgutil
+
+import pytest
 
 import build_datawarehouse_demo_spark as pkg
 
@@ -119,3 +125,135 @@ def test_parquet_writes_go_through_the_writer_seam():
                 with open(path) as fh:
                     offenders += [f"{rel}:{n}" for n in _direct_parquet_writes(fh.read())]
     assert offenders == []
+
+
+#: package subtrees that hold the incremental fold lifecycle
+_LIFECYCLE_SCOPE = ("plans", "streaming")
+#: lifecycle steps both corpus pipelines share: each literal may appear
+#: in exactly one function
+_WRITTEN_ONCE = ("keep-policy mismatch", "without a seeded n_survivors")
+_STATE_SINKS = ("stream_clean_filter_state_append", "stream_training_data_state_append")
+
+
+def _top_level_functions(src: str) -> dict:
+    """name -> def node for each module-level function; a nested def
+    counts as part of the function that encloses it."""
+    return {
+        node.name: node
+        for node in ast.parse(src).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+
+
+def _contains_literal(fn, text: str) -> bool:
+    return any(
+        isinstance(n, ast.Constant) and isinstance(n.value, str) and text in n.value
+        for n in ast.walk(fn)
+    )
+
+
+def _calls_attr(fn, attr: str) -> bool:
+    return any(
+        isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == attr
+        for n in ast.walk(fn)
+    )
+
+
+def _lifecycle_functions():
+    """(relative module path, name, def node) for every top-level
+    function under the lifecycle scope."""
+    root = os.path.dirname(pkg.__file__)
+    for sub in _LIFECYCLE_SCOPE:
+        for dirpath, _, files in os.walk(os.path.join(root, sub)):
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    path = os.path.join(dirpath, f)
+                    with open(path) as fh:
+                        fns = _top_level_functions(fh.read())
+                    for name, fn in fns.items():
+                        yield os.path.relpath(path, root), name, fn
+
+
+def test_written_once_detector_sees_fstrings_and_nested_defs():
+    src = "\n".join(
+        [
+            "def a():",
+            "    raise ValueError(f'keep-policy mismatch: {x}')",
+            "def b():",
+            "    def inner():",
+            "        log.warning('x without a seeded n_survivors y')",
+            "def c():",
+            "    return 'unrelated'",
+        ]
+    )
+    fns = _top_level_functions(src)
+    assert sorted(fns) == ["a", "b", "c"]
+    assert [n for n, fn in fns.items() if _contains_literal(fn, _WRITTEN_ONCE[0])] == ["a"]
+    assert [n for n, fn in fns.items() if _contains_literal(fn, _WRITTEN_ONCE[1])] == ["b"]
+
+
+@pytest.mark.parametrize("literal", _WRITTEN_ONCE)
+def test_fold_lifecycle_step_written_once(literal):
+    owners = [
+        f"{rel}:{name}"
+        for rel, name, fn in _lifecycle_functions()
+        if _contains_literal(fn, literal)
+    ]
+    assert len(owners) == 1, owners
+
+
+def test_state_sinks_share_one_foreach_batch():
+    """Both incremental-state sinks reach ``.foreachBatch(`` through the
+    same single function; neither writes its own."""
+    from build_datawarehouse_demo_spark.streaming import sinks
+
+    fns = _top_level_functions(inspect.getsource(sinks))
+    owners = set()
+    for sink in _STATE_SINKS:
+        assert not _calls_attr(fns[sink], "foreachBatch"), sink
+        callees = {
+            n.func.id
+            for n in ast.walk(fns[sink])
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id in fns
+        }
+        owners |= {c for c in callees if _calls_attr(fns[c], "foreachBatch")}
+    assert len(owners) == 1, owners
+
+
+#: scripts outside the package that import its internals
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SCRIPTS = sorted(
+    os.path.join("tools", f) for f in os.listdir(os.path.join(_REPO, "tools")) if f.endswith(".py")
+) + ["bench.py"]
+
+
+def _package_imports(src: str) -> list[tuple[str, str | None]]:
+    """(module, name) for each ``from build_datawarehouse_demo_spark…
+    import name`` in ``src``; (module, None) for a plain ``import``."""
+    out = []
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == pkg.__name__:
+            out += [(node.module, a.name) for a in node.names]
+        elif isinstance(node, ast.Import):
+            out += [(a.name, None) for a in node.names if a.name.split(".")[0] == pkg.__name__]
+    return out
+
+
+def _resolves(module: str, name: str | None) -> bool:
+    try:
+        mod = importlib.import_module(module)
+        return name is None or hasattr(mod, name) or importlib.util.find_spec(f"{module}.{name}") is not None
+    except ImportError:
+        return False
+
+
+def test_script_imports_resolve():
+    """Every package import in tools/*.py and bench.py names something
+    that exists — nothing in the suite runs those scripts, so a moved
+    or renamed helper would otherwise break them silently."""
+    missing = []
+    for script in _SCRIPTS:
+        with open(os.path.join(_REPO, script)) as fh:
+            imports = _package_imports(fh.read())
+        missing += [f"{script}: {m}.{n}" for m, n in imports if not _resolves(m, n)]
+    assert missing == []
