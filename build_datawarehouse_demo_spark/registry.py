@@ -100,178 +100,27 @@ def _rotation_rank() -> dict[str, int]:
 
 
 def _load_all() -> None:
-    """Import every module that registers queries (idempotent), then
-    reorder the registry by rotation rank (see _rotation_rank)."""
+    """Import every family module (each key registers on import, once),
+    then order the registry by rotation rank (see _rotation_rank)."""
     global _LOADED, _QUERIES, _ORACLES
     if _LOADED:
         return
-    from build_datawarehouse_demo_spark.registry_parity import register_parity  # noqa
-    from build_datawarehouse_demo_spark.registry_round5 import register_round5  # noqa
-    from build_datawarehouse_demo_spark.registry_round6 import (  # noqa
-        register_round6,
-        register_round6_analytics,
-        register_round6_basket,
-        register_round6_lsh_auto,
-        register_round6_quality,
-        register_round6_quality_ri,
-        register_round6_streaming,
+    from build_datawarehouse_demo_spark import (  # noqa: F401
+        registry_dedup,
+        registry_graph,
+        registry_joins,
+        registry_parity,
+        registry_pipelines,
+        registry_sampling,
+        registry_similarity,
+        registry_sql,
+        registry_star,
+        registry_streaming,
+        registry_text,
     )
-    from build_datawarehouse_demo_spark.registry_round7 import (  # noqa
-        register_round7_ann,
-        register_round7_asof,
-        register_round7_graph,
-        register_round7_interval,
-        register_round7_minhash_auto,
-        register_round7_simhash_auto,
-        register_round7_profiling,
-        register_round7_regexp,
-        register_round7_sampling,
-        register_round7_star,
-        register_round7_url,
-    )
-    from build_datawarehouse_demo_spark.registry_round8 import (  # noqa
-        register_round8_ann,
-        register_round8_asof,
-        register_round8_ivf_index,
-        register_round8_multimodal,
-        register_round8_sampling,
-        register_round8_simhash_components,
-        register_round8_simhash_scalable,
-        register_round8_spans,
-    )
-    from build_datawarehouse_demo_spark.registry_round9 import (  # noqa
-        register_round9_bpe,
-        register_round9_ivf_append,
-        register_round9_pipeline,
-        register_round9_streaming_neardup,
-        register_round9_temperature,
-    )
-    from build_datawarehouse_demo_spark.registry_round10 import (  # noqa
-        register_round10_fetch,
-        register_round10_incremental,
-        register_round10_streaming_front,
-        register_round10_classifier,
-        register_round10_curation,
-        register_round10_rag,
-        register_round10_c4,
-        register_round10_rag_append,
-        register_round10_gopher,
-        register_round10_token_budget,
-        register_round10_training_ops,
-    )
-    from build_datawarehouse_demo_spark.registry_round11 import (  # noqa
-        register_round11_gopher_repetition,
-    )
-    from build_datawarehouse_demo_spark.registry_round12 import (  # noqa
-        register_round12_clean_filter_dedup,
-        register_round12_dup_ngrams,
-        register_round12_streaming_rag,
-    )
-    from build_datawarehouse_demo_spark.registry_round13 import (  # noqa
-        register_round13_incremental_clean,
-    )
-    from build_datawarehouse_demo_spark.registry_round14 import (  # noqa
-        register_round14_leakage_safe_split,
-        register_round14_epoch_capped_mix,
-        register_round14_logreg_train,
-        register_round14_streaming_clean_filter,
-    )
-    from build_datawarehouse_demo_spark.registry_round15 import (  # noqa
-        register_round15_banding_migration,
-        register_round15_neardup_migration,
-    )
-    from build_datawarehouse_demo_spark.registry_round17 import (  # noqa
-        register_round17_keep_best,
-        register_round17_streaming_migration,
-        register_round17_soft_dedup,
-        register_round17_streaming_neardup_state,
-    )
-    from build_datawarehouse_demo_spark.registry_round18 import (  # noqa
-        register_round18_keep_best_incremental,
-        register_round18_weighted_mix,
-        register_round18_weighted_temperature_mix,
-        register_round18_neardup_keep_best,
-        register_round18_soft_incremental,
-    )
-    from build_datawarehouse_demo_spark.registry_round19 import (  # noqa
-        register_round19_weighted_epoch_mix,
-        register_round19_keep_best_soft,
-    )
-    from build_datawarehouse_demo_spark.registry_sql import register_layer_b  # noqa
-    from build_datawarehouse_demo_spark.registry_extensions import register_extensions  # noqa
-
-    register_extensions()
-    register_parity()
-    register_layer_b()
-    register_round5()
-    register_round6()
-    register_round6_analytics()
-    register_round6_basket()
-    register_round6_lsh_auto()
-    register_round6_quality()
-    register_round6_quality_ri()
-    register_round6_streaming()
-    register_round7_ann()
-    register_round7_asof()
-    register_round7_graph()
-    register_round7_interval()
-    register_round7_minhash_auto()
-    register_round7_simhash_auto()
-    register_round7_profiling()
-    register_round7_regexp()
-    register_round7_sampling()
-    register_round7_star()
-    register_round7_url()
-    register_round8_ann()
-    register_round8_asof()
-    register_round8_ivf_index()
-    register_round8_multimodal()
-    register_round8_sampling()
-    register_round8_simhash_components()
-    register_round8_simhash_scalable()
-    register_round8_spans()
-    register_round9_pipeline()
-    register_round9_temperature()
-    register_round9_bpe()
-    register_round9_ivf_append()
-    register_round9_streaming_neardup()
-    register_round10_incremental()
-    register_round10_fetch()
-    register_round10_streaming_front()
-    register_round10_training_ops()
-    register_round10_curation()
-    register_round10_token_budget()
-    register_round10_rag()
-    register_round10_rag_append()
-    register_round10_c4()
-    register_round10_gopher()
-    register_round10_classifier()
-    register_round11_gopher_repetition()
-    register_round12_clean_filter_dedup()
-    register_round12_streaming_rag()
-    register_round12_dup_ngrams()
-    register_round13_incremental_clean()
-    register_round14_leakage_safe_split()
-    register_round14_epoch_capped_mix()
-    register_round14_logreg_train()
-    register_round14_streaming_clean_filter()
-    register_round15_banding_migration()
-    register_round15_neardup_migration()
-    register_round17_streaming_migration()
-    register_round17_keep_best()
-    register_round17_streaming_neardup_state()
-    register_round17_soft_dedup()
-    register_round18_keep_best_incremental()
-    register_round18_weighted_mix()
-    register_round18_weighted_temperature_mix()
-    register_round18_neardup_keep_best()
-    register_round18_soft_incremental()
-    register_round19_weighted_epoch_mix()
-    register_round19_keep_best_soft()
 
     rank = _rotation_rank()
-    reg_order = {k: i for i, k in enumerate(_QUERIES)}
-    ordered = sorted(_QUERIES, key=lambda k: (rank.get(k, 0), reg_order[k]))
+    ordered = sorted(_QUERIES, key=lambda k: (rank.get(k, 0), k))
     _QUERIES = {k: _QUERIES[k] for k in ordered}
     _ORACLES = {k: _ORACLES[k] for k in ordered if k in _ORACLES}
     _LOADED = True

@@ -1,1369 +1,6 @@
-"""Round-7 registry entries: auto-sized ANN search, trained IVF
-(k-means index build composed with nprobe search).
-
-Same oracle discipline as registry_extensions: exact integer /
-md5-derived values wherever possible, identical aliases on both sides.
-Count-pinned constants (plane counts, nlist) derive from the DRIVER
-fixture's parquet metadata at registration, never hard-coded row
-counts (round-6 ADVICE: a literal 500 silently diverges impl vs
-oracle if the fixture changes).
-"""
-
-from __future__ import annotations
-
-import math
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from build_datawarehouse_demo_spark.registry import register
-from build_datawarehouse_demo_spark.sources.readers import read_parquet
-
-#: the driver's correctness gate runs queries at this sf_dir — pinned
-#: oracle constants must be derived from ITS tables
-_DRIVER_SF_DIR = "/root/testdata/sf0.01"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = True) -> DataFrame:
-    return read_parquet(spark, f"{sf_dir}/{name}.parquet", rebalance=rebalance)
-
-
-def _driver_rows(table: str, default: int) -> int:
-    """Row count of the driver fixture's table from parquet metadata
-    (no Spark session needed at import time).
-
-    Only a genuinely ABSENT capability/fixture falls back to the
-    pinned default (r7 ADVICE: a bare `except Exception` swallowed
-    every error, so a moved fixture silently diverged oracle pins from
-    the data and the correctness gate failed far from the cause) —
-    and the fallback announces itself."""
-    try:
-        import pyarrow.dataset as pds
-
-        return pds.dataset(f"{_DRIVER_SF_DIR}/{table}.parquet").count_rows()
-    except (ImportError, FileNotFoundError, OSError) as e:
-        import warnings
-
-        warnings.warn(
-            f"_driver_rows({table!r}): falling back to pinned default "
-            f"{default} ({type(e).__name__}: {e}) — oracle constants may "
-            "diverge from the fixture",
-            stacklevel=2,
-        )
-        return default
-
-
-def _cos_sql(a: str, b: str) -> str:
-    """Null-guarded cosine, matching operators.similarity.cosine's
-    zero-norm -> NULL contract."""
-    return (
-        f"(CASE WHEN list_dot_product({a},{a}) > 0 AND "
-        f"list_dot_product({b},{b}) > 0 "
-        f"THEN list_cosine_similarity({a}, {b}) END)"
-    )
-
-
-#: the trained-IVF pins — derived from the SAME functions the impl
-#: calls at runtime, never re-derived formulas (r6 ADVICE discipline)
-IVF_NPROBE = 4
-IVF_GPROBE = 2
-_IVF_DIM = 64
-
-
-def _ivf_pins() -> tuple[int, int, int]:
-    from build_datawarehouse_demo_spark.operators.similarity import (
-        ivf_sample_modulus,
-    )
-
-    n_emb = _driver_rows("embeddings", 500)
-    nlist = max(2, math.ceil(math.sqrt(n_emb)))
-    sample_k = ivf_sample_modulus(n_emb, nlist)
-    ngroups = max(1, math.ceil(math.sqrt(nlist)))
-    return nlist, sample_k, ngroups
-
-
-def _lloyd_sql(prev: str, out: str, corpus: str = "e", dim: int = _IVF_DIM) -> str:
-    """One Lloyd iteration in SQL over ``corpus`` (vec_id, v): assign
-    every vector to its max-cosine centroid of `prev` (cid, cv),
-    re-pack per-dim 6dp-rounded means as the new centroid list `out`."""
-    return f"""
-    a_{out} AS (
-      SELECT vec_id, cid, v FROM (
-        SELECT e.vec_id, c.cid, e.v,
-               row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY {_cos_sql("e.v", "c.cv")} DESC, c.cid) AS rn
-        FROM {corpus} e, {prev} c
-      ) WHERE rn = 1
-    ),
-    {out} AS (
-      SELECT cid, list(m ORDER BY dim) AS cv FROM (
-        SELECT cid, i AS dim, round(avg(v[i]), 6) AS m
-        FROM a_{out}, unnest(generate_series(1, {dim})) AS g(i)
-        GROUP BY 1, 2
-      ) GROUP BY cid
-    )"""
-
-
-def ivf_trained_with_block(
-    corpus_where: str = "TRUE",
-    n_corpus: int | None = None,
-    source_sql: str = "embeddings",
-    seed_where: str | None = None,
-    dim: int = _IVF_DIM,
-) -> str:
-    """The shared WITH block of the LINEARIZED trained-IVF build
-    (sampled training -> super-centroid grouping -> two-level
-    assignment), ending with the ``lists`` (vec_id, cid, v) and ``c2``
-    (centroids) CTEs — reused by sim_ivf_trained (r7/r8), the
-    persisted-index entries (r8), and (r10, via ``corpus_where``/
-    ``n_corpus``) the incremental-SemDeDup entry, whose quantizer
-    trains on the OLD corpus subset only. Defaults reproduce the
-    original full-corpus block (WHERE TRUE) with the same pins."""
-    if n_corpus is None:
-        nlist, sample_k, ngroups = _ivf_pins()
-    else:
-        from build_datawarehouse_demo_spark.operators.similarity import (
-            ivf_sample_modulus,
-        )
-
-        nlist = max(2, math.ceil(math.sqrt(n_corpus)))
-        sample_k = ivf_sample_modulus(n_corpus, nlist)
-        ngroups = max(1, math.ceil(math.sqrt(nlist)))
-    if seed_where is None:
-        seed_where = f"vec_id < {nlist}"
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {source_sql}
-               WHERE {corpus_where}),
-    samp AS (
-      SELECT vec_id, v FROM e
-      WHERE CAST(('0x' || substr(md5('0:ivftrain:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT)
-            % {sample_k} = 0
-    ),
-    c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE {seed_where}),
-    {_lloyd_sql("c0", "c1", corpus="samp", dim=dim)},
-    {_lloyd_sql("c1", "c2", corpus="samp", dim=dim)},
-    cc AS (SELECT cid AS vec_id, cv AS v FROM c2),
-    s0 AS (SELECT cid, cv FROM c2 ORDER BY cid LIMIT {ngroups}),
-    {_lloyd_sql("s0", "s1", corpus="cc", dim=dim)},
-    grp AS (
-      SELECT cid, gid FROM (
-        SELECT c.cid, s.cid AS gid,
-               row_number() OVER (PARTITION BY c.cid
-                   ORDER BY {_cos_sql("c.cv", "s.cv")} DESC, s.cid) AS rn
-        FROM c2 c, s1 s
-      ) WHERE rn = 1
-    ),
-    route AS (
-      SELECT vec_id, gid, v FROM (
-        SELECT e.vec_id, s.cid AS gid, e.v,
-               row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY {_cos_sql("e.v", "s.cv")} DESC, s.cid) AS rn
-        FROM e, s1 s
-      ) WHERE rn <= {IVF_GPROBE}
-    ),
-    lists AS (
-      SELECT vec_id, cid, v FROM (
-        SELECT r.vec_id, g.cid, r.v,
-               row_number() OVER (PARTITION BY r.vec_id
-                   ORDER BY {_cos_sql("r.v", "c.cv")} DESC, g.cid) AS rn
-        FROM route r JOIN grp g ON g.gid = r.gid JOIN c2 c ON c.cid = g.cid
-      ) WHERE rn = 1
-    )"""
-
-
-def ivf_trained_search_sql() -> str:
-    """Full search SQL: nprobe routing over the trained centroids +
-    exact rerank of the routed inverted lists."""
-    return f"""
-    {ivf_trained_with_block()},
-    p AS (SELECT vec_id AS probe_id, v AS pv FROM e WHERE vec_id < 10),
-    pa AS (
-      SELECT probe_id, pv, cid FROM (
-        SELECT p.probe_id, p.pv, c.cid,
-               row_number() OVER (PARTITION BY p.probe_id
-                   ORDER BY {_cos_sql("p.pv", "c.cv")} DESC, c.cid) AS rn
-        FROM p, c2 c
-      ) WHERE rn <= {IVF_NPROBE}
-    ),
-    scored AS (
-      SELECT pa.probe_id, l.vec_id, {_cos_sql("pa.pv", "l.v")} AS cos
-      FROM pa JOIN lists l ON l.cid = pa.cid AND l.vec_id <> pa.probe_id
-    ),
-    ranked AS (
-      SELECT probe_id, vec_id, cos,
-             CAST(row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-      FROM scored
-    )
-    SELECT probe_id, vec_id, round(cos, 6) AS cosine, rank
-    FROM ranked WHERE rank <= 5
-    """
-
-
-def register_round7_ann() -> None:
-    # ------------------------------------------------------------------
-    # auto-sized ANN search (VERDICT r6 item 2): the n_planes=None lane
-    # of ann_rp_lsh_topk finally gets a correctness row — the exact gap
-    # that let the dedup lane's fixed signature hide until sf4
-    # ------------------------------------------------------------------
-    from build_datawarehouse_demo_spark.operators.similarity import (
-        ann_auto_planes,
-        rp_planes,
-    )
-
-    _N_EMB = _driver_rows("embeddings", 500)
-    # the SAME function the impl calls — no formula mirroring to drift
-    _AUTO_PLANES = ann_auto_planes(_N_EMB)
-    _ap = rp_planes(_AUTO_PLANES, 64)
-    _ap_sql = " + ".join(
-        f"(CASE WHEN list_dot_product(v, [{', '.join(str(x) for x in plane)}]) >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, plane in enumerate(_ap)
-    )
-
-    @register(
-        "sim_ann_rp_lsh_auto",
-        oracle=f"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ),
-        sig AS (
-          SELECT vec_id, v, CAST({_ap_sql} AS INTEGER) AS s FROM e
-        ),
-        p AS (SELECT vec_id AS probe_id, v AS pv, s FROM sig WHERE vec_id < 10),
-        variants AS (
-          SELECT probe_id, pv, s FROM p
-          UNION ALL
-          SELECT probe_id, pv, CAST(xor(s, 1 << i) AS INTEGER) FROM p,
-                 unnest(generate_series(0, {_AUTO_PLANES - 1})) AS g(i)
-        ),
-        cand AS (
-          SELECT DISTINCT v.probe_id, c.vec_id
-          FROM sig c JOIN variants v ON c.s = v.s AND c.vec_id <> v.probe_id
-        ),
-        scored AS (
-          SELECT cd.probe_id, cd.vec_id, {_cos_sql("pe.v", "ce.v")} AS cos
-          FROM cand cd
-          JOIN e pe ON pe.vec_id = cd.probe_id
-          JOIN e ce ON ce.vec_id = cd.vec_id
-        ),
-        ranked AS (
-          SELECT probe_id, vec_id, cos,
-                 CAST(row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-          FROM scored
-        )
-        SELECT probe_id, vec_id, round(cos, 6) AS cosine, rank
-        FROM ranked WHERE rank <= 5
-        """,
-    )
-    def q_ann_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """ANN search with the CORPUS-SIZED signature (n_planes=None →
-        ceil(log2(n/64)) in [8,24], one count() action) + Hamming-1
-        multiprobe as the recall compensation — the scale-safe lane
-        that mirrors dedup_embedding_cosine_auto's fix: a fixed
-        signature's per-probe verify cost grows n/2^planes (linear per
-        probe once n dwarfs the bucket space), auto-sizing keeps
-        buckets ~64 deep. Oracle pins the plane count the formula
-        picks at the driver fixture's corpus size."""
-        from build_datawarehouse_demo_spark.operators.similarity import (
-            ann_rp_lsh_topk,
-        )
-
-        emb = _t(spark, sf_dir, "embeddings")
-        probes = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("probe_id"), "embedding"
-        )
-        return ann_rp_lsh_topk(
-            emb, probes, k=5, n_planes=None, dim=64, multiprobe=True
-        )
-
-    # ------------------------------------------------------------------
-    # trained IVF (VERDICT r6 item 4): the index BUILD becomes part of
-    # the engine — nlist ≈ sqrt(n) centroids derived by 2 Lloyd
-    # iterations from deterministic seeds, searched with nprobe > 1
-    # ------------------------------------------------------------------
-    @register("sim_ivf_trained", oracle=ivf_trained_search_sql())
-    def q_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """IVF with a TRAINED index, LINEARIZED build (r8, VERDICT r7
-        item 1 — the r7 full-corpus flat Lloyd measured exponent 1.42):
-
-        - the coarse quantizer trains on a BOUNDED md5-hash sample of
-          ~64·nlist vectors (ivf_train_sampled; the FAISS convention),
-          so training is O(n_iter·64·nlist²) = O(n) at nlist≈√n
-          instead of O(n_iter·n·√n);
-        - the one remaining full-corpus pass — list assignment — is
-          TWO-LEVEL (ivf_group_centroids + ivf_assign_two_level):
-          vectors route through ~√nlist super-centroids (gprobe=2),
-          then score only the routed groups' centroids, so per-row
-          assignment work is ~3·√nlist ≈ n^0.25, not nlist ≈ √n.
-
-        AMORTIZED quantizer (r12, VERDICT r11 item 5): the trained
-        centroids come from the persisted index's single-slot memo
-        (_ensure_ivf_index — built once per (session, sf_dir); the
-        always-retrain ingest stays measured by sim_ivf_index_build's
-        force=True), and super-centroids/groups are re-derived from
-        the stored centroid table with the same deterministic
-        functions the build used — the ivf_index_append frozen-
-        quantizer contract, so every value is unchanged. What this
-        lane still pays PER RUN is the production per-batch cost: the
-        full-corpus two-level assignment + the nprobe search.
-
-        nlist ≈ sqrt(n) centroids from 2 Lloyd iterations (round_to=6
-        so both engines feed identical centroids into each next step)
-        over deterministic seeds (first nlist vectors), searched with
-        nprobe=4 (probes are tiny — they route against the FULL
-        centroid set). At the driver fixture (n=500) the sample
-        modulus is 1 — full-corpus training, so driver-scale results
-        still exercise every stage. Recall-vs-brute measured in
-        tests/test_similarity.py (planted-cluster corpus ≥0.9; the
-        two-level assignment's recall-vs-flat is pinned there too)."""
-        from build_datawarehouse_demo_spark.operators.similarity import (
-            ivf_assign_two_level,
-            ivf_group_centroids,
-            ivf_topk_assigned,
-        )
-        from build_datawarehouse_demo_spark.registry_round8 import (
-            _ensure_ivf_index,
-        )
-
-        emb = _t(spark, sf_dir, "embeddings")
-        _, stored = _ensure_ivf_index(spark, sf_dir)
-        # the persisted centroid table stores the vector as `vec`
-        # (build_ivf_index's schema); this lane's operators speak the
-        # (centroid_id, embedding) contract
-        cents = stored.select("centroid_id", F.col("vec").alias("embedding"))
-        # nlist from the CORPUS count — this matches the ORACLE's
-        # sizing (the oracle also derives nlist = ceil(sqrt(n))), which
-        # is the contract this lane is checked against. It does NOT
-        # always mirror build_ivf_index, which derives its grouping
-        # from the TRAINED centroid count (r9 ADVICE — Lloyd drops
-        # emptied clusters, so the stored table can be smaller): across
-        # a sqrt boundary the re-derived super-centroid grouping here
-        # would diverge from ivf_index_append's frozen-quantizer
-        # routing. Values stay correct either way (grouping only
-        # routes candidate generation; scoring is exact), but a caller
-        # wanting build-parity routing should size ngroups from
-        # cents.count() instead (r12 ADVICE, documented trade).
-        n = emb.count()
-        nlist = max(2, math.ceil(math.sqrt(n)))
-        ngroups = max(1, math.ceil(math.sqrt(nlist)))
-        sup, groups = ivf_group_centroids(cents, n_groups=ngroups, n_iter=1, round_to=6)
-        assigned = ivf_assign_two_level(emb, cents, sup, groups, gprobe=IVF_GPROBE)
-        probes = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("probe_id"), "embedding"
-        )
-        return ivf_topk_assigned(assigned, cents, probes, k=5, nprobe=IVF_NPROBE)
-
-
-def register_round7_star() -> None:
-    # ------------------------------------------------------------------
-    # the FULL warehouse build as a driver-visible oracle entry
-    # (VERDICT r6 item 7): plans/star_schema.py — the reference's
-    # actual deliverable (EP2, /root/reference/transformation.py:602-697)
-    # — was pytest-only; here a Yelp-shaped fixture is derived
-    # DETERMINISTICALLY from the driver's TPC-H-ish tables, the whole
-    # ~22-table star schema builds as one lazy Catalyst DAG, and the
-    # result surfaces as (table_name, n_rows, integer checksum) rows
-    # the DuckDB oracle restates end to end (explodes, map unnests,
-    # JSON highlights, hour parsing with %24 wrap, keep-null vs
-    # drop-miss date resolution, lexicographic surrogate keys, the
-    # scalable contiguous checkin id — whose sum is n(n+1)/2 by the
-    # contiguity contract, which the checksum therefore pins).
-    # Every checksum term is integer-valued so sums are exact in both
-    # engines regardless of float addition order.
-    @register("pipeline_star_schema_build", oracle=_STAR_ORACLE)
-    def q_star_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from build_datawarehouse_demo_spark.plans.star_schema import build_warehouse
-
-        raw = _yelp_fixture_from_driver_tables(spark, sf_dir)
-        wh = build_warehouse(spark, raw)
-        return _summarize_warehouse(wh)
-
-
-def _yelp_fixture_from_driver_tables(
-    spark: SparkSession, sf_dir: str
-) -> dict[str, DataFrame]:
-    """Deterministic, SQL-mirrorable Yelp-shaped raw inputs derived
-    from the driver's tables — every value is an arithmetic/string
-    function of the source keys so the DuckDB oracle can restate the
-    derivation exactly. Planted malformations exercise the build's
-    guard paths: NULL/'' categories, NULL attribute/hour maps, a
-    'garbage' hour range, 'not json' highlights, out-of-spine dates,
-    'T' trace precipitation."""
-    part = _t(spark, sf_dir, "part", rebalance=False)
-    cust = _t(spark, sf_dir, "customer", rebalance=False)
-    orders = _t(spark, sf_dir, "orders", rebalance=False)
-    li = _t(spark, sf_dir, "lineitem", rebalance=False)
-
-    pk = F.col("p_partkey")
-    business = part.select(
-        F.concat(F.lit("b"), pk).alias("business_id"),
-        F.col("p_name").alias("name"),
-        F.col("p_type").alias("address"),
-        F.col("p_brand").alias("city"),
-        F.concat(F.lit("S"), pk % 5).alias("state"),
-        F.col("p_size").cast("string").alias("postal_code"),
-        (pk % 90).cast("double").alias("latitude"),
-        (pk % 180).cast("double").alias("longitude"),
-        ((pk % 5) + 1).cast("double").alias("stars"),
-        F.col("p_size").cast("int").alias("review_count"),
-        (pk % 2).cast("int").alias("is_open"),
-        F.when(pk % 10 == 0, F.lit(None).cast("string"))
-        .when(pk % 10 == 1, F.lit(""))
-        .otherwise(F.concat("p_type", F.lit(", "), "p_brand"))
-        .alias("categories"),
-        F.when(
-            pk % 7 != 0,
-            F.create_map(
-                F.lit("Brand"), F.col("p_brand"),
-                F.lit("Size"), F.col("p_size").cast("string"),
-            ),
-        ).alias("attributes"),
-        F.when(
-            pk % 5 != 0,
-            F.create_map(
-                F.lit("Monday"), F.lit("9:0-17:0"),
-                F.lit("Friday"),
-                F.concat((pk % 14).cast("string"), F.lit(":0-"), (pk % 14 + 12).cast("string"), F.lit(":0")),
-                F.lit("Sunday"), F.lit("garbage"),
-            ),
-        ).alias("hours"),
-    )
-
-    ck = F.col("c_custkey")
-    user = cust.select(
-        F.concat(F.lit("u"), ck).alias("user_id"),
-        F.col("c_name").alias("name"),
-        (ck % 100).cast("int").alias("review_count"),
-        F.date_add(F.lit("2010-01-01").cast("date"), (ck % 2000).cast("int"))
-        .cast("string")
-        .alias("yelping_since"),
-        (ck % 7).cast("int").alias("useful"),
-        (ck % 5).cast("int").alias("funny"),
-        (ck % 3).cast("int").alias("cool"),
-        (ck % 11).cast("int").alias("fans"),
-        (((ck % 40) + 10) / F.lit(10.0)).alias("average_stars"),
-        F.when(ck % 4 == 0, F.lit(""))
-        .when(ck % 4 == 1, F.lit("2015"))
-        .when(ck % 4 == 2, F.lit("2015,2016"))
-        .otherwise(F.lit("2016,2017,2018"))
-        .alias("elite"),
-        F.when(ck % 3 == 0, F.lit("")).otherwise(
-            F.concat(F.lit("u"), ck % 50, F.lit(",u"), ck % 97)
-        ).alias("friends"),
-    )
-
-    ok = F.col("o_orderkey")
-    review = orders.select(
-        F.concat(F.lit("r"), ok).alias("review_id"),
-        F.concat(F.lit("b"), ok % 2000).alias("business_id"),
-        F.concat(F.lit("u"), F.col("o_custkey")).alias("user_id"),
-        ((ok % 5) + 1).cast("double").alias("stars"),
-        (ok % 4).cast("int").alias("useful"),
-        (ok % 3).cast("int").alias("funny"),
-        (ok % 2).cast("int").alias("cool"),
-        F.col("o_orderpriority").alias("text"),
-        F.when(ok % 97 == 0, F.lit("2031-01-01 00:00:00"))  # past spine end -> null id
-        .otherwise(F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss"))
-        .alias("date"),
-    )
-
-    checkin = (
-        orders.select(
-            F.concat(F.lit("b"), F.col("o_custkey") % 300).alias("business_id"),
-            F.when(ok % 89 == 0, F.lit("garbage")).otherwise(
-                F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss")
-            ).alias("elem"),
-        )
-        .groupBy("business_id")
-        .agg(F.concat_ws(", ", F.sort_array(F.collect_list("elem"))).alias("date"))
-    )
-
-    tip = li.where((F.col("l_linenumber") == 1) & (F.col("l_orderkey") % 4 == 0)).select(
-        F.concat("l_returnflag", "l_linestatus").alias("text"),
-        F.col("l_quantity").cast("int").alias("compliment_count"),
-        F.concat(F.lit("b"), F.col("l_partkey") % 2000).alias("business_id"),
-        F.concat(F.lit("u"), F.col("l_suppkey") % 1500).alias("user_id"),
-        F.date_format("l_shipdate", "yyyy-MM-dd HH:mm:ss").alias("date"),
-    )
-
-    covid = part.where(pk % 4 == 0).select(
-        F.concat(F.lit("b"), pk).alias("business_id"),
-        F.when(pk % 8 == 0, F.lit("TRUE")).otherwise(F.lit("FALSE")).alias("Grubhub enabled"),
-        F.when(pk % 3 == 0, F.lit("TRUE")).otherwise(F.lit("FALSE")).alias("Request a Quote Enabled"),
-        F.when(pk % 5 == 0, F.lit("")).otherwise(
-            F.concat(F.lit("open"), (pk % 5).cast("string"))
-        ).alias("Covid Banner"),
-        F.lit("").alias("Temporary Closed Until"),
-        F.when(pk % 6 == 0, F.lit("TRUE")).otherwise(F.lit("FALSE")).alias("Virtual Services Offered"),
-        F.when(
-            pk % 3 == 0,
-            F.concat(
-                F.lit('[{"identifier":"h'), (pk % 7).cast("string"),
-                F.lit('","params":"p","type":"t1"},{"identifier":"h'),
-                (pk % 5).cast("string"), F.lit('","params":"q","type":"t2"}]'),
-            ),
-        ).when(pk % 3 == 1, F.lit("not json")).alias("highlights"),
-    )
-
-    days = orders.select(F.to_date("o_orderdate").alias("d")).distinct()
-    dd, dm = F.dayofmonth("d"), F.month("d")
-    temperature = days.select(
-        (F.year("d") * 10000 + dm * 100 + dd).cast("int").alias("date"),
-        dd.cast("double").alias("min"),
-        (dd + 20).cast("double").alias("max"),
-        dm.cast("double").alias("normal_min"),
-        (dm + 15).cast("double").alias("normal_max"),
-    ).unionByName(
-        spark.createDataFrame(
-            [(19000101, 1.0, 2.0, 1.0, 2.0)],  # pre-spine -> null datetime_id
-            "date int, min double, max double, normal_min double, normal_max double",
-        )
-    )
-    precipitation = days.where(dm == 1).select(
-        (F.year("d") * 10000 + dm * 100 + dd).cast("int").alias("date"),
-        F.when(dd % 10 == 0, F.lit("T"))  # NOAA trace marker -> try_cast null
-        .otherwise(dd.cast("string"))
-        .alias("precipitation"),
-        (dd * 2).cast("double").alias("precipitation_normal"),
-    )
-
-    return {
-        "business": business,
-        "user": user,
-        "review": review,
-        "checkin": checkin,
-        "tip": tip,
-        "covid_features": covid,
-        "temperature": temperature,
-        "precipitation": precipitation,
-    }
-
-
-def _summarize_warehouse(wh: dict[str, DataFrame]) -> DataFrame:
-    """(table_name, n_rows, checksum) — one exact-integer checksum per
-    table, unioned and ordered. Checksum terms are all integral so the
-    double-free BIGINT sums are bit-exact in any engine/order."""
-    L = F.length
-    big = lambda c: F.col(c).cast("bigint")  # noqa: E731
-    key = lambda c: F.substring(F.col(c), 2, 12).cast("bigint")  # strip 'b'/'u'/'r'
-
-    def row(name: str, expr, extra=None):
-        df = wh[name]
-        n = F.count(F.lit(1))
-        chk = F.coalesce(F.sum(expr.cast("bigint")), F.lit(0)).cast("bigint")
-        if extra == "contiguous_id_sum":
-            # checkin_id is contiguous 1..n by surrogate_key_scalable's
-            # contract -> its sum is n(n+1)/2 (exact in double far
-            # beyond this table's size; the oracle states n*(n+1)//2)
-            chk = (chk + (n * (n + 1) / 2)).cast("bigint")
-        return df.agg(n.alias("n_rows"), chk.alias("checksum")).select(
-            F.lit(name).alias("table_name"), "n_rows", "checksum"
-        )
-
-    dow = L("day_of_week")
-    parts = [
-        row("dim_datetime", big("datetime_id") + big("date_id") + big("day_of_month")
-            + big("month") + big("year") + big("quarter") + big("hour_id") + dow),
-        row("dim_date", big("date_id") + big("year") + big("month") + big("day")
-            + big("quarter") + dow),
-        row("dim_hour", big("hour_id") + L("hour_of_day")),
-        row("dim_business", key("business_id") + big("review_count") + big("is_open")
-            + F.col("stars").cast("bigint") + L("name") + L("city") + L("postal_code")),
-        row("dim_category", big("category_id") * L("category_name")),
-        row("fact_business_categories", big("category_id") * (F.lit(1) + key("business_id"))),
-        row("dim_attribute", big("attribute_id") * (L("attribute_name") + L("attribute_value"))),
-        row("fact_business_attributes", big("attribute_id") * (F.lit(1) + key("business_id"))),
-        row("fact_business_hours", key("business_id") + big("open_hour_id")
-            + big("close_hour_id") + dow + L("open_time") + L("close_time")),
-        row("dim_user", key("user_id") + big("review_count") + big("useful") + big("funny")
-            + big("cool") + big("fans") + F.round(F.col("average_stars") * 10, 0).cast("bigint")
-            + L("name") + F.year("yelping_since").cast("bigint")),
-        row("dim_elite", big("elite_id") * F.col("elite_year").cast("bigint")),
-        row("fact_user_elite", big("elite_id") * (F.lit(1) + key("user_id"))),
-        row("dim_friend", big("friend_id") * (F.lit(1) + key("friend_name"))),
-        row("fact_user_friend", big("friend_id") * (F.lit(1) + key("user_id"))),
-        row("fact_reviews", key("review_id") + F.col("stars").cast("bigint") + big("useful")
-            + big("funny") + big("cool") + L("text") + key("user_id") + key("business_id")
-            + F.coalesce(big("datetime_id"), F.lit(-1))),
-        row("fact_checkins", key("business_id") + big("datetime_id"),
-            extra="contiguous_id_sum"),
-        row("fact_tips", F.coalesce(big("datetime_id"), F.lit(-1)) + big("compliment_count")
-            + L("text") + key("business_id") + key("user_id")),
-        row("fact_covid_features", key("business_id") + L("grubhub_enabled")
-            + L("request_a_quote_enabled") + L("covid_banner")
-            + L("temporary_closed_until") + L("virtual_services_offered")),
-        row("dim_highlights", big("highlight_id") * (L("identifier") + L("params") + L("type"))),
-        row("fact_business_highlights", big("highlight_id") * (F.lit(1) + key("business_id"))),
-        row("dim_temperature", F.coalesce(big("datetime_id"), F.lit(-1))
-            + F.col("min_temperature").cast("bigint") + F.col("max_temperature").cast("bigint")
-            + F.col("normal_min_temperature").cast("bigint")
-            + F.col("normal_max_temperature").cast("bigint")),
-        row("dim_precipitation", F.coalesce(big("datetime_id"), F.lit(-1))
-            + F.coalesce(F.col("precipitation").cast("bigint"), F.lit(-7))
-            + F.col("normal_precipitation").cast("bigint")),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("table_name")
-
-
-# The whole fixture derivation + star-schema build restated in DuckDB
-# SQL, one summary row per warehouse table. Each CTE mirrors a build
-# step (file:line refs point at the Spark implementation being
-# replicated). dtid(x) = datediff from the spine start is
-# resolve_datetime_id's join outcome for in-spine dates.
-_STAR_ORACLE = """
-WITH
-spine AS (
-  SELECT d,
-         CAST(datediff('day', DATE '1948-09-06', CAST(d AS DATE)) AS BIGINT) AS dtid,
-         CAST(strftime(d, '%Y%m%d') AS BIGINT) AS date_id,
-         CAST(dayofmonth(d) AS BIGINT) AS day, CAST(month(d) AS BIGINT) AS month,
-         CAST(year(d) AS BIGINT) AS year, CAST(quarter(d) AS BIGINT) AS quarter,
-         length(dayname(d)) AS dowlen
-  FROM generate_series(DATE '1948-09-06', DATE '2025-12-31', INTERVAL 1 DAY) AS t(d)
-),
-pp AS (SELECT p_partkey AS p, p_name, p_brand, p_type, p_size FROM part),
-cc AS (SELECT c_custkey AS c, c_name FROM customer),
-oo AS (
-  SELECT o_orderkey AS ok, o_custkey AS ck, o_orderpriority AS prio,
-         CAST(datediff('day', DATE '1948-09-06', CAST(o_orderdate AS DATE)) AS BIGINT) AS dtid,
-         CAST(o_orderdate AS DATE) AS od
-  FROM orders
-),
-cats AS (
-  SELECT c AS name FROM (
-    SELECT DISTINCT p_type AS c FROM pp WHERE p % 10 NOT IN (0, 1)
-    UNION SELECT DISTINCT p_brand FROM pp WHERE p % 10 NOT IN (0, 1)
-  )
-),
-cat_ids AS (SELECT name, row_number() OVER (ORDER BY name) AS id FROM cats),
-cat_rows AS (
-  SELECT p, p_type AS name FROM pp WHERE p % 10 NOT IN (0, 1)
-  UNION ALL SELECT p, p_brand FROM pp WHERE p % 10 NOT IN (0, 1)
-),
-attr_rows AS (
-  SELECT p, 'Brand' AS an, p_brand AS av FROM pp WHERE p % 7 <> 0
-  UNION ALL SELECT p, 'Size', CAST(p_size AS VARCHAR) FROM pp WHERE p % 7 <> 0
-),
-attr_ids AS (
-  SELECT an, av, row_number() OVER (ORDER BY an, av) AS id
-  FROM (SELECT DISTINCT an, av FROM attr_rows)
-),
-hours_rows AS (  -- Monday fixed 9-17; Friday p%14 -> +12 with %24 wrap; Sunday 'garbage' dropped
-  SELECT p, 9 AS oh, 17 AS ch, 6 AS dlen, 3 AS otlen, 4 AS ctlen FROM pp WHERE p % 5 <> 0
-  UNION ALL
-  SELECT p, p % 14, (p % 14 + 12) % 24, 6,
-         length(CAST(p % 14 AS VARCHAR)) + 2, length(CAST(p % 14 + 12 AS VARCHAR)) + 2
-  FROM pp WHERE p % 5 <> 0
-),
-elite_rows AS (
-  SELECT c, '2015' AS yr FROM cc WHERE c % 4 = 1
-  UNION ALL SELECT c, y FROM cc, unnest(['2015', '2016']) AS u(y) WHERE c % 4 = 2
-  UNION ALL SELECT c, y FROM cc, unnest(['2016', '2017', '2018']) AS u(y) WHERE c % 4 = 3
-),
-elite_ids AS (
-  SELECT yr, row_number() OVER (ORDER BY yr) AS id
-  FROM (SELECT DISTINCT yr FROM elite_rows)
-),
-friend_rows AS (
-  SELECT c, 'u' || CAST(c % 50 AS VARCHAR) AS fn FROM cc WHERE c % 3 <> 0
-  UNION ALL SELECT c, 'u' || CAST(c % 97 AS VARCHAR) FROM cc WHERE c % 3 <> 0
-),
-friend_ids AS (
-  SELECT fn, row_number() OVER (ORDER BY fn) AS id
-  FROM (SELECT DISTINCT fn FROM friend_rows)
-),
-hl_rows AS (
-  SELECT p, 'h' || CAST(p % 7 AS VARCHAR) AS ident, 'p' AS par, 't1' AS typ
-  FROM pp WHERE p % 4 = 0 AND p % 3 = 0
-  UNION ALL
-  SELECT p, 'h' || CAST(p % 5 AS VARCHAR), 'q', 't2'
-  FROM pp WHERE p % 4 = 0 AND p % 3 = 0
-),
-hl_ids AS (
-  SELECT ident, par, typ, row_number() OVER (ORDER BY ident, par, typ) AS id
-  FROM (SELECT DISTINCT ident, par, typ FROM hl_rows)
-),
-tdays AS (
-  SELECT CAST(dayofmonth(od) AS BIGINT) AS day, CAST(month(od) AS BIGINT) AS mon,
-         CAST(datediff('day', DATE '1948-09-06', od) AS BIGINT) AS dtid
-  FROM (SELECT DISTINCT od FROM oo)
-),
-tips AS (
-  SELECT CAST(datediff('day', DATE '1948-09-06', CAST(l_shipdate AS DATE)) AS BIGINT) AS dtid,
-         CAST(l_quantity AS BIGINT) AS comp, l_partkey % 2000 AS bk, l_suppkey % 1500 AS uk
-  FROM lineitem WHERE l_linenumber = 1 AND l_orderkey % 4 = 0
+# Kept only because perfbench/workloads.py imports these names from here.
+from build_datawarehouse_demo_spark.registry_star import (  # noqa: F401
+    _STAR_ORACLE,
+    _summarize_warehouse,
+    _yelp_fixture_from_driver_tables,
 )
-SELECT * FROM (
-  SELECT 'dim_datetime' AS table_name, count(*) AS n_rows,
-         CAST(sum(dtid + date_id + day + month + year + quarter + 0 + dowlen) AS BIGINT) AS checksum
-  FROM spine
-  UNION ALL
-  SELECT 'dim_date', count(*),
-         CAST(sum(date_id + year + month + day + quarter + dowlen) AS BIGINT)
-  FROM spine
-  UNION ALL
-  SELECT 'dim_hour', 24, CAST(sum(r + 2) AS BIGINT) FROM range(24) AS t(r)
-  UNION ALL
-  SELECT 'dim_business', count(*),
-         CAST(sum(p + p_size + p % 2 + (p % 5 + 1) + length(p_name) + length(p_brand)
-                  + length(CAST(p_size AS VARCHAR))) AS BIGINT)
-  FROM pp
-  UNION ALL
-  SELECT 'dim_category', count(*), CAST(sum(id * length(name)) AS BIGINT) FROM cat_ids
-  UNION ALL
-  SELECT 'fact_business_categories', count(*), CAST(sum(i.id * (1 + r.p)) AS BIGINT)
-  FROM cat_rows r JOIN cat_ids i ON i.name = r.name
-  UNION ALL
-  SELECT 'dim_attribute', count(*),
-         CAST(sum(id * (length(an) + length(av))) AS BIGINT) FROM attr_ids
-  UNION ALL
-  SELECT 'fact_business_attributes', count(*), CAST(sum(i.id * (1 + r.p)) AS BIGINT)
-  FROM attr_rows r JOIN attr_ids i ON i.an = r.an AND i.av = r.av
-  UNION ALL
-  SELECT 'fact_business_hours', count(*),
-         CAST(sum(p + oh + ch + dlen + otlen + ctlen) AS BIGINT) FROM hours_rows
-  UNION ALL
-  SELECT 'dim_user', count(*),
-         CAST(sum(c + c % 100 + c % 7 + c % 5 + c % 3 + c % 11
-                  + round(((c % 40 + 10) / 10.0) * 10)
-                  + length(c_name)
-                  + year(DATE '2010-01-01' + CAST(c % 2000 AS INTEGER))) AS BIGINT)
-  FROM cc
-  UNION ALL
-  SELECT 'dim_elite', count(*), CAST(sum(id * CAST(yr AS BIGINT)) AS BIGINT) FROM elite_ids
-  UNION ALL
-  SELECT 'fact_user_elite', count(*), CAST(sum(i.id * (1 + r.c)) AS BIGINT)
-  FROM elite_rows r JOIN elite_ids i ON i.yr = r.yr
-  UNION ALL
-  SELECT 'dim_friend', count(*),
-         CAST(sum(id * (1 + CAST(substr(fn, 2) AS BIGINT))) AS BIGINT) FROM friend_ids
-  UNION ALL
-  SELECT 'fact_user_friend', count(*), CAST(sum(i.id * (1 + r.c)) AS BIGINT)
-  FROM friend_rows r JOIN friend_ids i ON i.fn = r.fn
-  UNION ALL
-  SELECT 'fact_reviews', count(*),
-         CAST(sum(ok + (ok % 5 + 1) + ok % 4 + ok % 3 + ok % 2 + length(prio)
-                  + ck + ok % 2000
-                  + CASE WHEN ok % 97 = 0 THEN -1 ELSE dtid END) AS BIGINT)
-  FROM oo
-  UNION ALL
-  SELECT 'fact_checkins', count(*),
-         CAST(sum(ck % 300 + dtid) + count(*) * (count(*) + 1) // 2 AS BIGINT)
-  FROM oo WHERE ok % 89 <> 0
-  UNION ALL
-  SELECT 'fact_tips', count(*),
-         CAST(sum(dtid + comp + 2 + bk + uk) AS BIGINT) FROM tips
-  UNION ALL
-  SELECT 'fact_covid_features', count(*),
-         CAST(sum(p
-                  + CASE WHEN p % 8 = 0 THEN 4 ELSE 5 END
-                  + CASE WHEN p % 3 = 0 THEN 4 ELSE 5 END
-                  + CASE WHEN p % 5 = 0 THEN 0 ELSE 5 END
-                  + 0
-                  + CASE WHEN p % 6 = 0 THEN 4 ELSE 5 END) AS BIGINT)
-  FROM pp WHERE p % 4 = 0
-  UNION ALL
-  SELECT 'dim_highlights', count(*),
-         CAST(sum(id * (length(ident) + length(par) + length(typ))) AS BIGINT) FROM hl_ids
-  UNION ALL
-  SELECT 'fact_business_highlights', count(*), CAST(sum(i.id * (1 + r.p)) AS BIGINT)
-  FROM hl_rows r JOIN hl_ids i ON i.ident = r.ident AND i.par = r.par AND i.typ = r.typ
-  UNION ALL
-  SELECT 'dim_temperature', count(*) + 1,
-         CAST(sum(dtid + day + (day + 20) + mon + (mon + 15)) + (-1 + 1 + 2 + 1 + 2) AS BIGINT)
-  FROM tdays
-  UNION ALL
-  SELECT 'dim_precipitation', count(*),
-         CAST(sum(dtid + CASE WHEN day % 10 = 0 THEN -7 ELSE day END + day * 2) AS BIGINT)
-  FROM tdays WHERE mon = 1
-)
-ORDER BY table_name
-"""
-
-
-def register_round7_graph() -> None:
-    # ------------------------------------------------------------------
-    # exact triangle counting — the third graph primitive next to
-    # PageRank and connected components; the degree-ordered
-    # node-iterator (Suri & Vassilvitskii, WWW'11) keeps every reducer
-    # cold: wedges are enumerated only from each vertex's
-    # lower-(degree,id) side, bounding total wedge volume by |E|^1.5
-    # regardless of celebrity nodes
-    # ------------------------------------------------------------------
-    @register(
-        "graph_triangle_count",
-        oracle="""
-        WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        e AS (
-          SELECT DISTINCT a.p AS lo, b.p AS hi
-          FROM li a JOIN li b ON a.o = b.o AND a.p < b.p
-        ),
-        deg AS (
-          SELECT v, count(*) AS d
-          FROM (SELECT lo AS v FROM e UNION ALL SELECT hi FROM e) GROUP BY v
-        ),
-        o AS (
-          SELECT CASE WHEN dl.d < dh.d OR (dl.d = dh.d AND e.lo < e.hi)
-                      THEN e.lo ELSE e.hi END AS src,
-                 CASE WHEN dl.d < dh.d OR (dl.d = dh.d AND e.lo < e.hi)
-                      THEN e.hi ELSE e.lo END AS dst
-          FROM e JOIN deg dl ON dl.v = e.lo JOIN deg dh ON dh.v = e.hi
-        ),
-        w AS (
-          SELECT o1.src, o1.dst AS x, o2.dst AS y
-          FROM o o1 JOIN o o2 ON o1.src = o2.src AND o1.dst < o2.dst
-        ),
-        tri AS (
-          SELECT w.src, w.x, w.y FROM w
-          WHERE EXISTS (SELECT 1 FROM e WHERE e.lo = w.x AND e.hi = w.y)
-        ),
-        corners AS (
-          SELECT src AS v FROM tri
-          UNION ALL SELECT x FROM tri
-          UNION ALL SELECT y FROM tri
-        )
-        SELECT v, CAST(count(*) AS BIGINT) AS n_triangles
-        FROM corners GROUP BY v
-        """,
-    )
-    def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Per-part triangle participation in the co-purchase graph
-        (parts sharing an order are adjacent — the assoc_brand_pairs
-        basket shape promoted to a graph). Scale shape: basket pairing
-        is one shuffle on the order key with C(basket,2) fanout;
-        triangle counting is hash aggs + equi-joins over (int,int)
-        pairs only, wedge volume bounded |E|^1.5 by the degree
-        orientation (operators/graph.py:triangle_count)."""
-        from build_datawarehouse_demo_spark.operators.graph import triangle_count
-
-        li = _t(spark, sf_dir, "lineitem", rebalance=False).select(
-            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-        ).dropDuplicates()
-        a = li.select(F.col("o"), F.col("p").alias("pa"))
-        b = li.select(F.col("o"), F.col("p").alias("pb"))
-        edges = (
-            a.join(b, "o")
-            .where(F.col("pa") < F.col("pb"))
-            .select(F.col("pa").alias("a"), F.col("pb").alias("b"))
-        )
-        return triangle_count(edges).select("v", "n_triangles")
-
-
-def register_round7_sampling() -> None:
-    # ------------------------------------------------------------------
-    # quality-weighted sampling — the weighted twin of
-    # sample_reservoir_per_group; w = n_chars stands in for a quality
-    # score (the shape a data-mixing pipeline runs: sample per source
-    # with probability ∝ quality)
-    # ------------------------------------------------------------------
-    @register(
-        "sample_weighted_reservoir",
-        oracle="""
-        WITH h AS (
-          SELECT doc_id, lang, n_chars,
-                 CAST(('0x' || substr(md5('0:wreservoir:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                      AS BIGINT) AS hv
-          FROM documents
-          WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0
-        ),
-        r AS (
-          SELECT doc_id, lang, n_chars,
-                 row_number() OVER (
-                   PARTITION BY lang
-                   ORDER BY ln((hv + 1) / 4294967296.0) / CAST(n_chars AS DOUBLE) DESC,
-                            doc_id
-                 ) AS rn
-          FROM h
-        )
-        SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-        FROM r WHERE rn <= 10
-        """,
-    )
-    def q_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Exactly min(10, |group|) docs per language, inclusion
-        probability ∝ n_chars (Efraimidis–Spirakis A-ES keyed on the
-        engine-portable id hash — operators/sampling.py)."""
-        from build_datawarehouse_demo_spark.operators.sampling import (
-            weighted_reservoir_per_group,
-        )
-
-        docs = _t(spark, sf_dir, "documents", rebalance=False).select(
-            "doc_id", "lang", "n_chars"
-        )
-        return weighted_reservoir_per_group(
-            docs, group_col="lang", id_col="doc_id", weight_col="n_chars", k=10
-        )
-
-
-def register_round7_interval() -> None:
-    # ------------------------------------------------------------------
-    # UNKEYED interval-overlap join — the inequality-join shape that is
-    # a nested-loop O(n*m) unless gridded; completes the temporal-join
-    # family next to asof (point->latest) and range (point-in-interval)
-    # ------------------------------------------------------------------
-    @register(
-        "join_interval_overlap",
-        oracle="""
-        WITH v AS (
-          SELECT event_id AS l_id, epoch_us(ts) AS l_lo,
-                 epoch_us(ts) + CAST(floor(value * 60000000) AS BIGINT) AS l_hi
-          FROM events WHERE event_type = 'view'
-        ),
-        c AS (
-          SELECT event_id AS r_id, epoch_us(ts) AS r_lo,
-                 epoch_us(ts) + CAST(floor(value * 30000000) AS BIGINT) AS r_hi
-          FROM events WHERE event_type = 'click'
-        )
-        SELECT l_id, r_id,
-               CAST(least(l_hi, r_hi) - greatest(l_lo, r_lo) AS BIGINT) AS overlap_us
-        FROM v JOIN c ON l_lo < r_hi AND r_lo < l_hi
-        """,
-    )
-    def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """view-session × click-session overlap pairs (sessions =
-        [ts, ts + value-scaled length)). The oracle is the quadratic
-        inequality join (DuckDB's IEJoin executes it); the Spark plan
-        is the gridded equi-join of
-        operators/asof.py:interval_overlap_join — each overlapping
-        pair claimed exactly once by its overlap-start cell, so no
-        dedup exchange. A hash match proves the grid decomposition
-        lossless and duplicate-free."""
-        from build_datawarehouse_demo_spark.operators.asof import (
-            interval_overlap_join,
-        )
-
-        ev = _t(spark, sf_dir, "events", rebalance=False)
-        # ts arrives TIMESTAMP_NTZ; unix_micros needs TIMESTAMP. A tz
-        # offset shifts BOTH sides' endpoints uniformly, and the output
-        # carries only ids + durations — tz-invariant by construction.
-        us = F.unix_micros(F.col("ts").cast("timestamp"))
-        views = ev.where(F.col("event_type") == "view").select(
-            F.col("event_id").alias("l_id"),
-            us.alias("l_lo"),
-            (us + F.floor(F.col("value") * 60_000_000).cast("long")).alias("l_hi"),
-        )
-        clicks = ev.where(F.col("event_type") == "click").select(
-            F.col("event_id").alias("r_id"),
-            us.alias("r_lo"),
-            (us + F.floor(F.col("value") * 30_000_000).cast("long")).alias("r_hi"),
-        )
-        pairs = interval_overlap_join(
-            views, clicks, "l_lo", "l_hi", "r_lo", "r_hi", bucket_width=7.2e9
-        )
-        return pairs.select(
-            "l_id",
-            "r_id",
-            (F.least("l_hi", "r_hi") - F.greatest("l_lo", "r_lo"))
-            .cast("bigint")
-            .alias("overlap_us"),
-        )
-
-
-def register_round7_asof() -> None:
-    # ------------------------------------------------------------------
-    # tolerance-bounded as-of join — pandas merge_asof's `tolerance`
-    # in the one-shuffle union+carry formulation: matches farther than
-    # the bound null out as if absent
-    # ------------------------------------------------------------------
-    @register(
-        "join_asof_tolerance",
-        oracle="""
-        WITH b AS (
-          SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
-          FROM orders GROUP BY o_custkey, o_orderdate
-        ),
-        a AS (
-          SELECT e.event_id, e.user_id, e.ts, b.o_orderkey, b.o_orderdate
-          FROM events e
-          ASOF LEFT JOIN b ON e.user_id = b.o_custkey AND e.ts >= b.o_orderdate
-        )
-        SELECT event_id, user_id,
-               CASE WHEN o_orderdate + INTERVAL 30 DAY >= ts
-                    THEN o_orderkey END AS last_orderkey,
-               CASE WHEN o_orderdate + INTERVAL 30 DAY >= ts
-                    THEN o_orderdate END AS asof_time
-        FROM a
-        """,
-    )
-    def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """join_asof with a 30-day lookback bound: an order more than
-        30 days before the event is no match (stale quotes / expired
-        sessions semantics). Same one-exchange plan — the bound is a
-        per-row predicate on the carried payload (operators/asof.py),
-        checked against DuckDB's native ASOF JOIN + CASE."""
-        from build_datawarehouse_demo_spark.operators.asof import asof_join
-
-        events = _t(spark, sf_dir, "events", rebalance=False).select(
-            "event_id", F.col("user_id"), "ts"
-        )
-        orders = _t(spark, sf_dir, "orders", rebalance=False).select(
-            F.col("o_custkey").alias("user_id"),
-            "o_orderdate",
-            F.col("o_orderkey").alias("last_orderkey"),
-        )
-        out = asof_join(
-            events,
-            orders,
-            key="user_id",
-            probe_time="ts",
-            build_time="o_orderdate",
-            build_cols=("last_orderkey",),
-            build_order=("last_orderkey",),
-            tolerance=F.expr("INTERVAL '30' DAY"),
-        )
-        return out.select("event_id", "user_id", "last_orderkey", "asof_time")
-
-
-def register_round7_url() -> None:
-    # ------------------------------------------------------------------
-    # URL canonicalization dedup — the normalization every web-corpus
-    # pipeline runs before exact URL dedup (case, default ports,
-    # trailing slashes, tracking params, param order, fragments).
-    # URLs are synthesized deterministically from documents so both
-    # engines derive identical raw inputs.
-    # ------------------------------------------------------------------
-    _RAW_URL_SQL = """
-          'HTTPS://' || CASE WHEN doc_id % 6 = 0 THEN 'alice:pw@' ELSE '' END
-          || CASE WHEN doc_id % 3 = 0 THEN upper(source) ELSE source END
-          || '.Example.COM'
-          || CASE doc_id % 4 WHEN 0 THEN ':443' WHEN 1 THEN ':8080' ELSE '' END
-          || CASE WHEN doc_id % 9 = 0 THEN '/Docs%2fx' ELSE '/Docs' END
-          || '/' || CAST(doc_id % 50 AS STRING)
-          || CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END
-          || CASE doc_id % 5 WHEN 0 THEN '?utm_source=tw&b=2&a=1'
-                             WHEN 1 THEN '?a=1&b=2' ELSE '' END
-          || CASE WHEN doc_id % 7 = 0 THEN '#sec2' ELSE '' END
-    """
-
-    @register(
-        "dedup_url_canonical",
-        oracle=f"""
-        WITH raw AS (
-          SELECT doc_id, {_RAW_URL_SQL} AS url FROM documents
-        ),
-        parts AS (
-          SELECT doc_id, url,
-            lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS proto,
-            -- userinfo stripped before host/port extraction (r8)
-            regexp_replace(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1), '^[^@]*@', '') AS hp,
-            -- fixture injects exactly the '%2f' escape; uppercase it
-            -- (general law pinned by the percent_normalize pytest)
-            replace(regexp_replace(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1), '/+$', ''), '%2f', '%2F') AS path,
-            coalesce(array_to_string(list_sort(list_filter(
-              string_split(coalesce(regexp_extract(url, '\\?([^#]*)', 1), ''), '&'),
-              x -> x <> '' AND NOT starts_with(x, 'utm_')
-                   AND NOT starts_with(x, 'fbclid=')
-                   AND NOT starts_with(x, 'gclid=')
-                   AND NOT starts_with(x, 'msclkid='))), '&'), '') AS qs
-          FROM raw
-        ),
-        canon AS (
-          SELECT doc_id, url,
-            proto || '://'
-            || lower(regexp_extract(hp, '^([^:]*)', 1))
-            || CASE WHEN coalesce(regexp_extract(hp, ':([0-9]+)$', 1), '') IN ('', '443') THEN ''
-                    ELSE ':' || coalesce(regexp_extract(hp, ':([0-9]+)$', 1), '') END
-            || path
-            || CASE WHEN qs = '' THEN '' ELSE '?' || qs END AS curl
-          FROM parts
-        )
-        SELECT curl AS canonical_url,
-               count(*) AS n_docs,
-               count(DISTINCT url) AS n_variants,
-               CAST(min(doc_id) AS BIGINT) AS first_doc_id
-        FROM canon GROUP BY curl
-        """,
-    )
-    def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Canonicalize-then-dedup over deterministic raw URLs: mixed
-        scheme/host case, default port 443 vs explicit 8080, trailing
-        slashes, utm tracking params with shuffled order, fragments —
-        grouped by the canonical form
-        (functions/strings.py:canonicalize_url) with variant counts.
-        The oracle replicates every normalization step with the same
-        regexes + list ops. Scale shape: narrow scalar expressions +
-        one hash agg on the canonical key."""
-        from build_datawarehouse_demo_spark.functions.strings import (
-            canonicalize_url,
-        )
-
-        docs = _t(spark, sf_dir, "documents", rebalance=False)
-        raw = docs.select("doc_id", F.expr(_RAW_URL_SQL.strip()).alias("url"))
-        return (
-            raw.withColumn("canonical_url", canonicalize_url(F.col("url")))
-            .groupBy("canonical_url")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.countDistinct("url").alias("n_variants"),
-                F.min("doc_id").cast("bigint").alias("first_doc_id"),
-            )
-        )
-
-
-def register_round7_profiling() -> None:
-    # ------------------------------------------------------------------
-    # equi-depth histogram — the skew-proof profile twin of
-    # agg_histogram_fixed: boundaries at exact interpolated quantiles,
-    # ~n/8 rows per bucket whatever the distribution
-    # ------------------------------------------------------------------
-    @register(
-        "agg_histogram_equidepth",
-        oracle="""
-        WITH cuts AS (
-          SELECT quantile_cont(o_totalprice,
-                   [0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875]) AS cs
-          FROM orders
-        )
-        SELECT len(list_filter(c.cs, x -> o.o_totalprice > x)) AS bucket_id,
-               count(*) AS n_rows,
-               round(min(o_totalprice), 6) AS lo_value,
-               round(max(o_totalprice), 6) AS hi_value
-        FROM orders o, cuts c
-        WHERE o.o_totalprice IS NOT NULL
-        GROUP BY 1
-        """,
-    )
-    def q_hist_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """8-bucket equi-depth histogram of order totals
-        (operators/profiling.py:histogram_equidepth): one agg for all
-        cutpoints, broadcast back, array-expression bucket assignment,
-        hash agg — two passes, no collect. Oracle = DuckDB
-        quantile_cont (same linear interpolation as F.percentile) +
-        the same count-of-cuts-below assignment."""
-        from build_datawarehouse_demo_spark.operators.profiling import (
-            histogram_equidepth,
-        )
-
-        return histogram_equidepth(
-            _t(spark, sf_dir, "orders", rebalance=False), "o_totalprice", buckets=8
-        )
-
-    # ------------------------------------------------------------------
-    # schema-evolution read — mergeSchema across parquet batches with
-    # different columns: the ingest reality of any long-lived table
-    # ------------------------------------------------------------------
-    @register(
-        "src_parquet_schema_merge",
-        oracle="""
-        SELECT p_partkey, p_name,
-               CAST(NULL AS DOUBLE) AS p_retailprice,
-               CAST(NULL AS INTEGER) AS p_size
-        FROM part
-        UNION ALL
-        SELECT p_partkey, NULL, p_retailprice, p_size FROM part
-        """,
-    )
-    def q_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Two parquet batches with DIFFERENT schemas land in one
-        directory (v1: key+name; v2: key+price+size — the add-a-column
-        evolution every ingest pipeline hits); a mergeSchema read
-        unifies them, nulling each batch's missing columns. Scale
-        note: mergeSchema pays a footer read per file at planning —
-        fine per-directory, use explicit schemas at million-file
-        scale."""
-        import os
-        import shutil
-
-        from build_datawarehouse_demo_spark.registry_extensions import (
-            _bucketed_scratch_dir,
-        )
-
-        base = os.path.join(_bucketed_scratch_dir(), "schema_merge")
-        shutil.rmtree(base, ignore_errors=True)
-        part = _t(spark, sf_dir, "part", rebalance=False)
-        part.select("p_partkey", "p_name").write.mode("overwrite").parquet(base)
-        part.select("p_partkey", "p_retailprice", "p_size").write.mode(
-            "append"
-        ).parquet(base)
-        return (
-            spark.read.option("mergeSchema", "true")
-            .parquet(base)
-            .select("p_partkey", "p_name", "p_retailprice", "p_size")
-        )
-
-
-def register_round7_minhash_auto() -> None:
-    # ------------------------------------------------------------------
-    # auto-sized text MinHash LSH — the round-6 embedding-lane fix
-    # applied to the TEXT lane before it bites: fixed rows-per-band
-    # makes background candidates grow bands*n^2*j_bg^r (measured 6.8x
-    # candidates at 4x docs with the fixed 16/4 default); rows grow
-    # log(n) so they stay linear, bands hold recall
-    # ------------------------------------------------------------------
-    from build_datawarehouse_demo_spark.operators.dedup import minhash_auto_params
-    from build_datawarehouse_demo_spark.registry_extensions import _HASH32, _TOK
-
-    _N_DOCS = _driver_rows("documents", 500)
-    _MB, _MR = minhash_auto_params(_N_DOCS)
-    _MNH = _MB * _MR
-
-    @register(
-        "dedup_minhash_lsh_auto",
-        oracle=f"""
-        WITH tok AS (
-          SELECT doc_id, {_TOK} AS w FROM documents
-        ),
-        sh AS (
-          SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-          FROM tok, unnest(generate_series(1, len(w) - 2)) AS t(i)
-          WHERE len(w) >= 3
-        ),
-        mh AS (
-          SELECT doc_id, h,
-                 min({_HASH32.format(expr="h || ':' || shingle")}) AS mhv
-          FROM sh, unnest(generate_series(0, {_MNH - 1})) AS g(h)
-          GROUP BY doc_id, h
-        ),
-        bands AS (
-          SELECT doc_id, h // {_MR} AS band,
-                 string_agg(CAST(mhv AS VARCHAR), '_' ORDER BY h) AS band_key
-          FROM mh GROUP BY doc_id, h // {_MR}
-        ),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM bands a
-          JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-                      AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        inter AS (
-          SELECT c.id_a, c.id_b, count(*) AS n_inter
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.id_a
-          JOIN sh sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-          GROUP BY c.id_a, c.id_b
-        )
-        SELECT i.id_a, i.id_b,
-               CAST(i.n_inter AS DOUBLE) / (na.n + nb.n - i.n_inter) AS jaccard
-        FROM inter i
-        JOIN sizes na ON na.doc_id = i.id_a
-        JOIN sizes nb ON nb.doc_id = i.id_b
-        WHERE CAST(i.n_inter AS DOUBLE) / (na.n + nb.n - i.n_inter) >= 0.8
-        """,
-    )
-    def q_minhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Same semantics as dedup_minhash_lsh but (bands, rows) come
-        from minhash_auto_params at the corpus count — rows_per_band
-        grows ln(n)/ln(1/j_bg) so background candidates stay LINEAR,
-        bands re-solve recall >= 0.93 at the 0.8-Jaccard operating
-        point. At the driver fixture's n the parameters resolve to the
-        oracle's pinned (bands, rows)."""
-        from build_datawarehouse_demo_spark.operators.dedup import (
-            minhash_dedup_pairs,
-        )
-
-        return minhash_dedup_pairs(
-            _t(spark, sf_dir, "documents"), num_hashes=None, bands=None
-        )
-
-
-def register_round7_simhash_auto() -> None:
-    # ------------------------------------------------------------------
-    # auto-sized SimHash blocking — THIRD instance of the fixed-bucket
-    # -space trap (r6: embedding sign-LSH; r7: text MinHash): 4 blocks
-    # of 8 bits = 256 buckets/block saturate once n >> 256*occupancy,
-    # candidates grow blocks*n^2/2^w. Block width now grows log2(n).
-    # ------------------------------------------------------------------
-    from build_datawarehouse_demo_spark.operators.dedup import simhash_auto_width
-    from build_datawarehouse_demo_spark.registry_extensions import _HASH32, _TOK
-
-    _N_DOCS = _driver_rows("documents", 500)
-    _SW = simhash_auto_width(_N_DOCS)  # per-block bits
-    _SBITS = 4 * _SW
-    _SHASH = (
-        _HASH32
-        if _SBITS <= 32
-        else "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-    )
-
-    @register(
-        "dedup_simhash_auto",
-        oracle=f"""
-        WITH tok AS (
-          SELECT DISTINCT doc_id, tok
-          FROM documents, unnest({_TOK}) AS t(tok)
-        ),
-        hashed AS (
-          SELECT doc_id, {_SHASH.format(expr="'0:' || tok")} AS h FROM tok
-        ),
-        votes AS (
-          SELECT doc_id, i AS bit,
-                 sum(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS v
-          FROM hashed, unnest(generate_series(0, {_SBITS - 1})) AS g(i)
-          GROUP BY doc_id, i
-        ),
-        sigs AS (
-          SELECT doc_id,
-                 CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT) AS simhash
-          FROM votes GROUP BY doc_id
-        ),
-        blocked AS (
-          SELECT doc_id, simhash, blk,
-                 (simhash >> (blk * {_SW})) & {(1 << _SW) - 1} AS blk_val
-          FROM sigs, unnest(generate_series(0, 3)) AS g(blk)
-        )
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-        FROM blocked a
-        JOIN blocked b ON a.blk = b.blk AND a.blk_val = b.blk_val AND a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-        """,
-    )
-    def q_simhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Same semantics as dedup_simhash_pairs but the signature
-        width auto-sizes: per-block bits = simhash_auto_width(n) keep
-        bucket occupancy ~64 so candidates stay LINEAR; widths past 32
-        bits draw from the 60-bit md5 hash (hash60). At the driver
-        fixture's n the width resolves to the oracle's pinned value."""
-        from build_datawarehouse_demo_spark.operators.dedup import (
-            simhash,
-            simhash_auto_width,
-            simhash_near_pairs,
-        )
-
-        docs = _t(spark, sf_dir, "documents")
-        w = simhash_auto_width(docs.count())
-        sigs = simhash(docs, bits=4 * w)
-        return simhash_near_pairs(sigs, max_hamming=3, blocks=4, bits=4 * w)
-
-
-def register_round7_regexp() -> None:
-    # ------------------------------------------------------------------
-    # regexp scalar kit — completes the §2.8 scalar-function surface
-    # with the pattern family every ETL reaches for (extract / replace
-    # / count / boolean match), on patterns where Java-regex (Spark)
-    # and RE2 (the oracle engine) semantics coincide
-    # ------------------------------------------------------------------
-    @register(
-        "fn_regexp_kit",
-        oracle="""
-        SELECT c_custkey,
-               coalesce(regexp_extract(c_name, '([0-9]+)$', 1), '') AS trailing_digits,
-               regexp_replace(c_name, '0+', '0', 'g') AS squeezed,
-               CAST(length(c_name) - length(regexp_replace(c_name, '0', '', 'g'))
-                    AS BIGINT) AS n_zeros,
-               (c_name SIMILAR TO '.*[13579]') AS ends_odd
-        FROM customer
-        """,
-    )
-    def q_regexp_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """regexp_extract (trailing digit run), global regexp_replace
-        (squeeze zero runs), occurrence counting (via length delta —
-        identical in both engines, unlike regexp_count's engine-
-        specific overlap rules), and boolean tail match (rlike vs
-        SIMILAR TO). Narrow scalar expressions only — one scan, zero
-        shuffles."""
-        cust = _t(spark, sf_dir, "customer", rebalance=False)
-        name = F.col("c_name")
-        return cust.select(
-            "c_custkey",
-            F.regexp_extract(name, r"([0-9]+)$", 1).alias("trailing_digits"),
-            F.regexp_replace(name, "0+", "0").alias("squeezed"),
-            (F.length(name) - F.length(F.regexp_replace(name, "0", "")))
-            .cast("bigint")
-            .alias("n_zeros"),
-            name.rlike("[13579]$").alias("ends_odd"),
-        )

@@ -1,625 +1,2 @@
-"""Round-9 registry entries.
-
-Theme (VERDICT r8): compose the near-dedup chain into the end-to-end
-training-data pipeline (the round's headline item), generalize
-temperature mixing beyond T=2, add BPE token counting, IVF index
-append, and streaming near-dup.
-
-Same oracle discipline as registry_round7/8: exact integer/md5-derived
-values, identical aliases both sides, pinned constants derived from the
-driver fixture through the SAME functions the implementation calls.
-"""
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from build_datawarehouse_demo_spark.registry import register
-from build_datawarehouse_demo_spark.registry_round7 import (
-    _DRIVER_SF_DIR,
-    _driver_rows,
-    _t,
-)
-
-
-def _driver_source_counts(col: str, id_col: str = "doc_id") -> dict:
-    """Per-value row counts of a driver-fixture documents column —
-    the quota-pin input for the temperature-mix oracles (same
-    fallback discipline as _driver_rows: only a genuinely absent
-    fixture/capability falls back, loudly).
-
-    Counts only rows with a non-null ``id_col`` (ADVICE r9):
-    sample_temperature_mix computes quotas from the DRAWABLE
-    population (rows whose rank key — the id — exists), and its
-    sibling T=1 oracle counts WHERE doc_id IS NOT NULL; pinning the
-    quotas from all-rows counts would encode a silently different
-    population the moment the fixture grows a null id."""
-    try:
-        import collections
-
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(
-            f"{_DRIVER_SF_DIR}/documents.parquet", columns=[col, id_col]
-        )
-        ids = t.column(id_col)
-        vals = t.column(col).to_pylist()
-        return dict(
-            collections.Counter(
-                v for v, ok in zip(vals, ids.is_valid().to_pylist()) if ok
-            )
-        )
-    except (ImportError, FileNotFoundError, OSError) as e:
-        import warnings
-
-        warnings.warn(
-            f"_driver_source_counts({col!r}): fixture unreadable "
-            f"({type(e).__name__}: {e}) — temperature-mix oracle pins may "
-            "diverge from the data",
-            stacklevel=2,
-        )
-        return {}
-
-
-def _quota_values_sql(counts: dict, budget: int, temperature: float) -> str:
-    """The pinned per-source quotas as a DuckDB VALUES body, computed
-    through the SAME temperature_quotas function the operator calls
-    (r6 pinned-constant discipline: derive, never re-formulate). The
-    quota arithmetic itself is exact bigint math — pytest-verified
-    against its own floor contract — so what the oracle independently
-    re-verifies is the ranked draw and the quota JOIN/filter."""
-    from build_datawarehouse_demo_spark.operators.sampling import (
-        temperature_quotas,
-    )
-
-    q = temperature_quotas(counts, budget, temperature)
-    if not q:
-        return "VALUES (NULL, NULL) LIMIT 0"
-    return "VALUES " + ", ".join(
-        "('{}', {})".format(str(s).replace("'", "''"), k)
-        for s, k in sorted(q.items())
-    )
-
-
-def neardup_front_sql() -> str:
-    """The pipeline FRONT HALF (clean → langid → quality → filter) as a
-    DuckDB CTE block ending with ``kept`` (doc_id, cleaned, n_tokens,
-    quality, pred_lang) — shared by the full/incremental chain oracles
-    below and the r10 streaming front-half batch-twin oracle."""
-    from build_datawarehouse_demo_spark.registry_extensions import _TOK
-
-    return rf"""base AS (
-          SELECT doc_id,
-                 lower(trim(regexp_replace(
-                   regexp_replace(text, '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-                   '\s+', ' ', 'g'))) AS cleaned,
-                 {_TOK} AS w,
-                 CAST(len({_TOK}) AS DOUBLE) AS n_tok,
-                 CAST(length(text) AS DOUBLE) AS n_chars,
-                 CAST(len(list_filter({_TOK},
-                      x -> lower(x) IN ('the','a','and','of','to','is'))) AS DOUBLE) AS n_stop,
-                 CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) AS DOUBLE) AS n_punct
-          FROM documents
-        ),
-        qual AS (
-          SELECT doc_id, cleaned, w, CAST(n_tok AS BIGINT) AS n_tokens,
-                 least(1.0, greatest(0.0,
-                   0.4 * (CASE WHEN (CASE WHEN n_tok > 0 THEN (n_chars - (n_tok - 1)) / n_tok ELSE 0.0 END) >= 3
-                               AND (CASE WHEN n_tok > 0 THEN (n_chars - (n_tok - 1)) / n_tok ELSE 0.0 END) <= 8
-                               THEN 1.0 ELSE 0.0 END)
-                   + 0.4 * (CASE WHEN n_tok > 0 THEN n_stop / n_tok ELSE 0.0 END) * 4
-                   + 0.2 * (1 - (CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END)))) AS quality
-          FROM base
-        ),
-        hits AS (
-          SELECT doc_id, 'de' AS lang, len(list_filter(w, x -> lower(x) IN ('der','die','das','und','ist','nicht'))) AS h FROM base
-          UNION ALL
-          SELECT doc_id, 'en', len(list_filter(w, x -> lower(x) IN ('the','a','and','of','to','is'))) FROM base
-          UNION ALL
-          SELECT doc_id, 'es', len(list_filter(w, x -> lower(x) IN ('el','la','y','es','los','que'))) FROM base
-          UNION ALL
-          SELECT doc_id, 'fr', len(list_filter(w, x -> lower(x) IN ('le','la','et','est','les','des'))) FROM base
-          UNION ALL
-          SELECT doc_id, 'zh', len(list_filter(w, x -> lower(x) IN ('de5','shi4','le5','zai4','he2','you3'))) FROM base
-        ),
-        lang AS (
-          SELECT doc_id, CASE WHEN h = 0 THEN 'und' ELSE lang END AS pred_lang
-          FROM hits
-          QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY h DESC, lang) = 1
-        ),
-        kept AS (
-          SELECT q.doc_id, q.cleaned, q.n_tokens, q.quality, l.pred_lang
-          FROM qual q JOIN lang l ON q.doc_id = l.doc_id
-          WHERE q.n_tokens >= 5 AND q.quality >= 0.3 AND l.pred_lang <> 'und'
-        )"""
-
-
-def neardup_full_chain_sql(
-    mb: int, mr: int, keep_best_rank: str | None = None
-) -> str:
-    """The full near-dup corpus-prep chain (clean → langid → quality →
-    filter → exact dedup → MinHash pairs → components → reps → span
-    removal → split) as ONE DuckDB query over ``documents``, with the
-    banding parameters supplied — shared by the r9 full-rebuild oracle
-    (banding auto-sized at the fixture count) and the r10 incremental
-    oracle (banding FROZEN at the OLD-subset count: incremental ≡ full
-    rebuild holds at the state's parameters, exactly like
-    ivf_index_append's frozen-quantizer parity).
-
-    ``keep_best_rank`` (r18): restate the KEEP-BEST policy — each
-    component's representative is the member maximizing (rank DESC
-    NULLS LAST, doc_id ASC) via a row_number window instead of the
-    min-id filter; the span stage then runs over the WINNER set, and
-    component_id is the component's star label (not necessarily the
-    winner's id)."""
-    from build_datawarehouse_demo_spark.registry_extensions import _HASH32
-
-    _MNH = mb * mr
-    _MR = mr
-    _W = 5
-    _CTOK = r"list_filter(regexp_split_to_array(trim(cleaned), '\s+'), x -> x <> '')"
-
-    if keep_best_rank is not None:
-        reps_cte = rf"""reps AS (
-          SELECT doc_id, cleaned, quality, pred_lang, component_id FROM (
-            SELECT sv.doc_id, sv.cleaned, sv.quality, sv.pred_lang,
-                   sv.n_tokens,
-                   COALESCE(c.component, sv.doc_id) AS component_id,
-                   row_number() OVER (
-                     PARTITION BY COALESCE(c.component, sv.doc_id)
-                     ORDER BY sv.{keep_best_rank} DESC NULLS LAST,
-                              sv.doc_id ASC) AS rk
-            FROM surv sv LEFT JOIN compo c ON c.node = sv.doc_id)
-          WHERE rk = 1
-        )"""
-        surv_cols = "doc_id, cleaned, quality, pred_lang, n_tokens"
-    else:
-        reps_cte = rf"""reps AS (
-          SELECT sv.doc_id, sv.cleaned, sv.quality, sv.pred_lang,
-                 COALESCE(c.component, sv.doc_id) AS component_id
-          FROM surv sv LEFT JOIN compo c ON c.node = sv.doc_id
-          WHERE COALESCE(c.component, sv.doc_id) = sv.doc_id
-        )"""
-        surv_cols = "doc_id, cleaned, quality, pred_lang"
-
-    return rf"""
-        WITH RECURSIVE {neardup_front_sql()},
-        surv AS (
-          SELECT {surv_cols}
-          FROM (SELECT *, min(doc_id) OVER (PARTITION BY md5(cleaned)) AS keeper FROM kept)
-          WHERE doc_id = keeper
-        ),
-        ctok AS (SELECT doc_id, {_CTOK} AS w FROM surv),
-        sh AS (
-          SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-          FROM ctok, unnest(generate_series(1, len(w) - 2)) AS t(i)
-          WHERE len(w) >= 3
-        ),
-        mh AS (
-          SELECT doc_id, h,
-                 min({_HASH32.format(expr="h || ':' || shingle")}) AS mhv
-          FROM sh, unnest(generate_series(0, {_MNH - 1})) AS g(h)
-          GROUP BY doc_id, h
-        ),
-        bnd AS (
-          SELECT doc_id, h // {_MR} AS band,
-                 string_agg(CAST(mhv AS VARCHAR), '_' ORDER BY h) AS band_key
-          FROM mh GROUP BY doc_id, h // {_MR}
-        ),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM bnd a
-          JOIN bnd b ON a.band = b.band AND a.band_key = b.band_key
-                    AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        pairs AS MATERIALIZED (
-          SELECT i.id_a, i.id_b
-          FROM (
-            SELECT c.id_a, c.id_b, count(*) AS n_inter
-            FROM cand c
-            JOIN sh sa ON sa.doc_id = c.id_a
-            JOIN sh sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-            GROUP BY c.id_a, c.id_b
-          ) i
-          JOIN sizes na ON na.doc_id = i.id_a
-          JOIN sizes nb ON nb.doc_id = i.id_b
-          WHERE CAST(i.n_inter AS DOUBLE) / (na.n + nb.n - i.n_inter) >= 0.8
-        ),
-        edges AS MATERIALIZED (
-          SELECT id_a AS s, id_b AS d FROM pairs
-          UNION SELECT id_b, id_a FROM pairs
-        ),
-        reach(s, d) AS (
-          SELECT s, d FROM edges
-          UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-        ),
-        compo AS (SELECT s AS node, least(s, min(d)) AS component FROM reach GROUP BY s),
-        {reps_cte},
-        rtoks AS (SELECT doc_id, string_split(cleaned, ' ') AS t FROM reps),
-        grams AS (
-          SELECT doc_id, CAST(i AS INTEGER) AS pos,
-                 md5(array_to_string(t[i:i+{_W - 1}], ' ')) AS g
-          FROM rtoks, unnest(generate_series(1, len(t) - {_W - 1})) AS s(i)
-          WHERE len(t) >= {_W}
-        ),
-        owners AS (
-          SELECT g, min(doc_id) AS owner FROM grams
-          GROUP BY g HAVING count(DISTINCT doc_id) >= 2
-        ),
-        fcov AS (
-          SELECT DISTINCT gr.doc_id, gr.pos + q.off AS idx
-          FROM grams gr
-          JOIN owners o ON o.g = gr.g AND gr.doc_id <> o.owner,
-               unnest(generate_series(0, {_W - 1})) AS q(off)
-        ),
-        scov AS (
-          SELECT DISTINCT gr.doc_id, gr.pos + q.off AS idx
-          FROM grams gr
-          JOIN owners o ON o.g = gr.g AND gr.doc_id = o.owner,
-               unnest(generate_series(0, {_W - 1})) AS q(off)
-        ),
-        removals AS (
-          -- foreign cover MINUS self cover, as an anti-join: DuckDB
-          -- forbids EXCEPT anywhere inside a WITH RECURSIVE block
-          SELECT f.doc_id, f.idx
-          FROM fcov f
-          LEFT JOIN scov p ON p.doc_id = f.doc_id AND p.idx = f.idx
-          WHERE p.idx IS NULL
-        ),
-        stream AS (
-          SELECT doc_id, CAST(i AS INTEGER) AS idx, t[i] AS tok
-          FROM rtoks, unnest(generate_series(1, len(t))) AS s(i)
-        ),
-        rebuilt AS (
-          SELECT s.doc_id,
-                 array_to_string(list(s.tok ORDER BY s.idx), ' ') AS cleaned_text,
-                 count(*) AS kept_toks
-          FROM stream s
-          LEFT JOIN removals r ON r.doc_id = s.doc_id AND r.idx = s.idx
-          WHERE r.idx IS NULL
-          GROUP BY s.doc_id
-        )
-        SELECT rp.doc_id, rp.pred_lang,
-               CAST(len(rt.t) AS BIGINT) AS n_tokens,
-               rp.quality, rp.component_id,
-               COALESCE(rb.cleaned_text, '') AS cleaned_text,
-               CAST(len(rt.t) - COALESCE(rb.kept_toks, 0) AS BIGINT) AS n_tokens_removed,
-               CASE WHEN rp.doc_id IS NULL THEN NULL
-                    WHEN {_HASH32.format(expr="'0:split:' || CAST(rp.doc_id AS VARCHAR)")} % 1000 < 100 THEN 'val'
-                    WHEN {_HASH32.format(expr="'0:split:' || CAST(rp.doc_id AS VARCHAR)")} % 1000 < 200 THEN 'test'
-                    ELSE 'train' END AS split
-        FROM reps rp
-        JOIN rtoks rt ON rt.doc_id = rp.doc_id
-        LEFT JOIN rebuilt rb ON rb.doc_id = rp.doc_id
-        """
-
-
-def register_round9_pipeline() -> None:
-    # ------------------------------------------------------------------
-    # the composed near-dup training pipeline (VERDICT r8 item 1): the
-    # reference-class corpus-prep deliverable end-to-end — every stage
-    # the same individually-oracle-checked operator, restated here as
-    # ONE DuckDB chain so the composition itself is hash-verified
-    # ------------------------------------------------------------------
-    from build_datawarehouse_demo_spark.operators.dedup import minhash_auto_params
-
-    _N_DOCS = _driver_rows("documents", 500)
-    _MB, _MR = minhash_auto_params(_N_DOCS)
-
-    @register(
-        "pipeline_training_data_neardup",
-        oracle=neardup_full_chain_sql(_MB, _MR),
-    )
-    def q_training_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """The full corpus-prep chain as one pipeline: clean -> langid
-        -> quality -> filter -> exact dedup -> auto-banded MinHash
-        pairs -> star-contraction components -> keep representatives ->
-        duplicated-span removal -> split. The oracle restates every
-        stage in DuckDB (banding pinned via minhash_auto_params at the
-        fixture count — the impl sizes from the same raw corpus count),
-        so the COMPOSITION is hash-verified end-to-end, not just the
-        component operators."""
-        from build_datawarehouse_demo_spark.plans.training_data import (
-            prepare_training_data_neardup,
-        )
-
-        return prepare_training_data_neardup(_t(spark, sf_dir, "documents"))
-
-
-def register_round9_temperature() -> None:
-    # ------------------------------------------------------------------
-    # general-temperature corpus mixing (VERDICT r8 item 2): the T=2
-    # restriction is gone — quotas are exact bigint fixed-point math
-    # (temperature_quotas), so ANY T > 0 is engine-reproducible. The
-    # entries run on the SKEWED `lang` column (218/75/73/70/64 at the
-    # fixture) so different temperatures provably produce different
-    # quota vectors; T=1's oracle computes its quotas fully
-    # independently in integer SQL (floor(budget*n/Σn) — the scale
-    # 10^30 cancels exactly), T=1.5 and T=3 pin quotas through the
-    # same function the operator calls.
-    # ------------------------------------------------------------------
-    _BUDGET = 200
-
-    def _rank_sql(src: str) -> str:
-        return f"""
-        ranked AS (
-          SELECT doc_id, {src} AS source,
-                 CAST(row_number() OVER (PARTITION BY {src}
-                     ORDER BY CAST(('0x' || substr(md5('0:temp:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT),
-                              doc_id) AS INTEGER) AS rnk
-          FROM documents WHERE doc_id IS NOT NULL
-        )"""
-
-    @register(
-        "sample_temperature_mix_t1",
-        oracle=f"""
-        WITH c AS (
-          SELECT lang, count(*) AS n FROM documents
-          WHERE doc_id IS NOT NULL GROUP BY lang
-        ),
-        tot AS (SELECT sum(n) AS t FROM c),
-        tgt AS (
-          SELECT lang AS source,
-                 CAST(({_BUDGET} * n) // t AS INTEGER) AS quota
-          FROM c, tot
-        ),
-        {_rank_sql("lang")}
-        SELECT r.doc_id, r.source AS lang, r.rnk, g.quota
-        FROM ranked r JOIN tgt g ON g.source = r.source
-        WHERE r.rnk <= g.quota
-        """,
-    )
-    def q_temp_t1(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """T=1 temperature mix over the skewed lang column — natural
-        proportions: quota = floor(budget * n / Σn). At T=1 the 10^30
-        weight scale cancels exactly, so the oracle computes the
-        quotas INDEPENDENTLY in integer SQL — this entry verifies the
-        quota arithmetic end-to-end, not just the ranked draw."""
-        from build_datawarehouse_demo_spark.operators.sampling import (
-            sample_temperature_mix,
-        )
-
-        docs = _t(spark, sf_dir, "documents", rebalance=False).select("doc_id", "lang")
-        return sample_temperature_mix(
-            docs, "lang", "doc_id", budget=_BUDGET, temperature=1.0
-        ).select("doc_id", "lang", "rnk", "quota")
-
-    def _pinned_oracle(temperature: float) -> str:
-        return f"""
-        WITH tgt(source, quota) AS (
-          {_quota_values_sql(_driver_source_counts("lang"), _BUDGET, temperature)}
-        ),
-        {_rank_sql("lang")}
-        SELECT r.doc_id, r.source AS lang, r.rnk, g.quota
-        FROM ranked r JOIN tgt g ON g.source = r.source
-        WHERE r.rnk <= g.quota
-        """
-
-    def _run_temp(spark: SparkSession, sf_dir: str, temperature: float) -> DataFrame:
-        from build_datawarehouse_demo_spark.operators.sampling import (
-            sample_temperature_mix,
-        )
-
-        docs = _t(spark, sf_dir, "documents", rebalance=False).select(
-            "doc_id", "lang"
-        )
-        return sample_temperature_mix(
-            docs, "lang", "doc_id", budget=_BUDGET, temperature=temperature
-        ).select("doc_id", "lang", "rnk", "quota")
-
-    @register("sample_temperature_mix_t15", oracle=_pinned_oracle(1.5))
-    def q_temp_t15(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """T=1.5 mix over the skewed lang column: quotas ∝ n^(2/3) by
-        the exact-integer fixed-point contract (temperature_quotas),
-        pinned into the oracle through the same function at the fixture
-        counts; ranked draw + quota join/filter verified in SQL."""
-        return _run_temp(spark, sf_dir, 1.5)
-
-    @register("sample_temperature_mix_t3", oracle=_pinned_oracle(3.0))
-    def q_temp_t3(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """T=3 mix over the skewed lang column: quotas ∝ n^(1/3) —
-        strong tail up-weighting — same pinned exact-integer contract
-        as the T=1.5 entry."""
-        return _run_temp(spark, sf_dir, 3.0)
-
-
-def register_round9_bpe() -> None:
-    # ------------------------------------------------------------------
-    # BPE subword token counting (VERDICT r8 item 3): the pinned merge
-    # table (tools/train_bpe.py over the fixture corpus) applied as a
-    # chain of LITERAL regex replaces — the oracle REPLAYS the same
-    # chain in DuckDB (RE2 and Java regex agree exactly on literal
-    # patterns and global leftmost non-overlapping replacement), so the
-    # whole merge procedure is verified independently, not pinned.
-    # ------------------------------------------------------------------
-    from build_datawarehouse_demo_spark.operators.text import DEFAULT_BPE_MERGES
-    from build_datawarehouse_demo_spark.registry_extensions import _TOK
-
-    enc = (
-        "'  ' || array_to_string(list_transform(" + _TOK + ", "
-        "w -> array_to_string(string_split(replace(lower(w), '|', ''), ''), '  ')"
-        "), '  |  ') || '  '"
-    )
-    for a, b in DEFAULT_BPE_MERGES:
-        enc = f"regexp_replace({enc}, ' {a}  {b} ', ' {a}{b} ', 'g')"
-
-    @register(
-        "text_token_count_bpe",
-        oracle=f"""
-        SELECT doc_id,
-               CAST(len({_TOK}) AS BIGINT) AS n_ws_tokens,
-               CAST(len(list_filter(string_split(trim({enc}), '  '),
-                        x -> x <> '' AND x <> '|')) AS BIGINT) AS n_bpe_tokens
-        FROM documents
-        """,
-    )
-    def q_bpe_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Subword token count under the pinned 48-rule BPE table:
-        lowercase words -> characters double-space-joined -> one
-        literal regexp_replace per merge rule (table order; each pass
-        is the engine's leftmost non-overlapping global replace = the
-        standard left-to-right merge scan) -> surviving symbol count.
-        Whitespace count rides alongside for the under-count
-        comparison. Pure codegen'd expressions; linear, shuffle-free."""
-        from build_datawarehouse_demo_spark.operators.text import bpe_token_count
-
-        return bpe_token_count(_t(spark, sf_dir, "documents")).select(
-            "doc_id", "n_ws_tokens", "n_bpe_tokens"
-        )
-
-
-def register_round9_ivf_append() -> None:
-    # ------------------------------------------------------------------
-    # incremental IVF maintenance (VERDICT r8 item 4): build the index
-    # on the corpus MINUS the last 50 vectors, append those 50 against
-    # the frozen stored quantizer, and hash-verify the final lists
-    # against a DuckDB restatement where the quantizer trains on the
-    # old rows and the two-level route covers ALL rows — exact parity
-    # because append rederives (super-centroids, groups) from the
-    # stored centroid table with the same deterministic functions the
-    # build used (pytest: appended lists == union-built lists).
-    # ------------------------------------------------------------------
-    import math
-
-    from build_datawarehouse_demo_spark.operators.similarity import (
-        ivf_sample_modulus,
-    )
-    from build_datawarehouse_demo_spark.registry_round7 import (
-        IVF_GPROBE,
-        _cos_sql,
-        _lloyd_sql,
-    )
-
-    _N_EMB = _driver_rows("embeddings", 500)
-    _SPLIT = _N_EMB - 50
-    _NL = max(2, math.ceil(math.sqrt(_SPLIT)))
-    _SK = ivf_sample_modulus(_SPLIT, _NL)
-    _NG = max(1, math.ceil(math.sqrt(_NL)))
-
-    @register(
-        "sim_ivf_index_append",
-        oracle=f"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        eo AS (SELECT vec_id, v FROM e WHERE vec_id < {_SPLIT}),
-        samp AS (
-          SELECT vec_id, v FROM eo
-          WHERE CAST(('0x' || substr(md5('0:ivftrain:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                % {_SK} = 0
-        ),
-        c0 AS (SELECT vec_id AS cid, v AS cv FROM eo WHERE vec_id < {_NL}),
-        {_lloyd_sql("c0", "c1", corpus="samp")},
-        {_lloyd_sql("c1", "c2", corpus="samp")},
-        cc AS (SELECT cid AS vec_id, cv AS v FROM c2),
-        s0 AS (SELECT cid, cv FROM c2 ORDER BY cid LIMIT {_NG}),
-        {_lloyd_sql("s0", "s1", corpus="cc")},
-        grp AS (
-          SELECT cid, gid FROM (
-            SELECT c.cid, s.cid AS gid,
-                   row_number() OVER (PARTITION BY c.cid
-                       ORDER BY {_cos_sql("c.cv", "s.cv")} DESC, s.cid) AS rn
-            FROM c2 c, s1 s
-          ) WHERE rn = 1
-        ),
-        route AS (
-          SELECT vec_id, gid, v FROM (
-            SELECT e.vec_id, s.cid AS gid, e.v,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY {_cos_sql("e.v", "s.cv")} DESC, s.cid) AS rn
-            FROM e, s1 s
-          ) WHERE rn <= {IVF_GPROBE}
-        ),
-        lists AS (
-          SELECT vec_id, cid FROM (
-            SELECT r.vec_id, g.cid,
-                   row_number() OVER (PARTITION BY r.vec_id
-                       ORDER BY {_cos_sql("r.v", "c.cv")} DESC, g.cid) AS rn
-            FROM route r JOIN grp g ON g.gid = r.gid JOIN c2 c ON c.cid = g.cid
-          ) WHERE rn = 1
-        )
-        SELECT vec_id, cid AS centroid_id FROM lists
-        """,
-    )
-    def q_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Build the trained-IVF index on the first {_SPLIT} vectors,
-        then ivf_index_append the remaining 50 against the frozen
-        stored quantizer (two-level route rederived from the stored
-        centroid table); return the final lists (vec_id, centroid_id).
-        The oracle trains on the old rows only and routes ALL rows —
-        identical by the frozen-quantizer append contract. Always
-        rebuilds (this entry times build + append)."""
-        from build_datawarehouse_demo_spark.operators.similarity import (
-            build_ivf_index,
-            ivf_index_append,
-        )
-        from build_datawarehouse_demo_spark.registry_extensions import (
-            _bucketed_scratch_dir,
-        )
-
-        emb = _t(spark, sf_dir, "embeddings")
-        n = emb.count()
-        split = n - 50
-        nlist = max(2, math.ceil(math.sqrt(split)))
-        old = emb.filter(F.col("vec_id") < split)
-        new = emb.filter(F.col("vec_id") >= split)
-        seeds = old.filter(F.col("vec_id") < nlist).select(
-            F.col("vec_id").alias("centroid_id"), "embedding"
-        )
-        build_ivf_index(
-            old,
-            "ivf_app_idx",
-            seeds=seeds,
-            path=f"{_bucketed_scratch_dir()}/ivf_app_idx",
-            n=split,
-        )
-        ivf_index_append(new, "ivf_app_idx")
-        return spark.table("ivf_app_idx").select("vec_id", "centroid_id")
-
-
-def register_round9_streaming_neardup() -> None:
-    # ------------------------------------------------------------------
-    # streaming near-dup dedup (VERDICT r8 item 5): signature-based
-    # dropDuplicatesWithinWatermark — this entry states the
-    # DETERMINISTIC batch twin (min-id survivor per signature) against
-    # the shared signature SQL; the stream ≡ batch property (near-dups
-    # redelivered across micro-batches still collapse) is the
-    # accompanying pytest, which a batch oracle cannot express
-    # ------------------------------------------------------------------
-    from build_datawarehouse_demo_spark.registry_round8 import _simhash_sig_sql
-
-    @register(
-        "streaming_neardup_collapse_batch",
-        oracle=f"""
-        WITH {_simhash_sig_sql()}
-        SELECT doc_id, simhash,
-               CAST(cnt AS BIGINT) AS cluster_size
-        FROM (
-          SELECT doc_id, simhash,
-                 min(doc_id) OVER (PARTITION BY simhash) AS keep_id,
-                 count(*) OVER (PARTITION BY simhash) AS cnt
-          FROM sigs
-        ) WHERE doc_id = keep_id
-        """,
-    )
-    def q_stream_neardup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Batch form of the streaming near-dup collapse: the NARROW
-        per-row signature expression (simhash_narrow — the one the
-        stream computes, no explode/groupBy) must reproduce the batch
-        operator's exploded signature bit-for-bit; survivors are the
-        min-id canonical per signature with cluster size. The oracle
-        is the shared exploded-signature SQL — so this entry verifies
-        the narrow/exploded equivalence on the full fixture corpus,
-        on top of the unit pytest."""
-        from build_datawarehouse_demo_spark.operators.dedup import (
-            simhash_auto_width,
-        )
-        from build_datawarehouse_demo_spark.streaming.dedup import (
-            neardup_document_stream,
-        )
-
-        docs = _t(spark, sf_dir, "documents")
-        w = simhash_auto_width(docs.count())
-        return neardup_document_stream(docs, bits=4 * w).select(
-            "doc_id", "simhash", "cluster_size"
-        )
+# Kept only because perfbench/workloads.py imports this name from here.
+from build_datawarehouse_demo_spark.registry_common import neardup_full_chain_sql  # noqa: F401

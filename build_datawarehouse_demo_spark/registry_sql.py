@@ -1,31 +1,26 @@
-"""Layer-B query surface (SURVEY.md §2, layer B).
-
-The reference delegates its whole interactive query capability to
-DuckDB SQL over the star schema (/root/reference/test_sql.py:5-14); we
-delegate the same surface to Spark SQL / Catalyst. These queries are
-written in the portable dialect both engines parse, so the oracle IS
-the query text — the strongest possible parity statement.
-
-Determinism: money aggregates in DECIMAL(18,2) (exact → identical
-doubles), explicit sum/count for averages, unique-key tiebreaks under
-every LIMIT and window ORDER BY.
-"""
+"""DOCSTRING sql"""
 
 from __future__ import annotations
 
-from build_datawarehouse_demo_spark.registry import register_sql
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from build_datawarehouse_demo_spark.registry import register, register_sql
+from build_datawarehouse_demo_spark.registry_common import (
+    _t,
+)
+
 
 # exact decimal building blocks
 _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 _QTY = "CAST(l_quantity AS DECIMAL(18,2))"
 
 
-def register_layer_b() -> None:
-    # TPC-H Q1: the canonical scan→hash-agg shape. Catalyst splits the
-    # aggregate into partial (map-side) + final automatically.
-    register_sql(
-        "sql_q1_pricing_summary",
-        f"""
+# TPC-H Q1: the canonical scan→hash-agg shape. Catalyst splits the
+# aggregate into partial (map-side) + final automatically.
+register_sql(
+    "sql_q1_pricing_summary",
+    f"""
         SELECT l_returnflag, l_linestatus,
                CAST(sum({_QTY}) AS DOUBLE) AS sum_qty,
                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -38,13 +33,13 @@ def register_layer_b() -> None:
         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         GROUP BY l_returnflag, l_linestatus
         """,
-    )
+)
 
-    # TPC-H Q3 shape: selective join + agg + top-k with a unique
-    # tiebreak so LIMIT is deterministic.
-    register_sql(
-        "sql_q3_shipping_priority",
-        f"""
+# TPC-H Q3 shape: selective join + agg + top-k with a unique
+# tiebreak so LIMIT is deterministic.
+register_sql(
+    "sql_q3_shipping_priority",
+    f"""
         SELECT o.o_orderkey,
                CAST(sum({_REV}) AS DOUBLE) AS revenue,
                o.o_orderdate
@@ -58,13 +53,13 @@ def register_layer_b() -> None:
         ORDER BY revenue DESC, o.o_orderkey
         LIMIT 10
         """,
-    )
+)
 
-    # TPC-H Q5 shape: five-way join through the dimension chain.
-    # nation/region are broadcast-size; AQE converts at runtime.
-    register_sql(
-        "sql_q5_local_supplier_volume",
-        f"""
+# TPC-H Q5 shape: five-way join through the dimension chain.
+# nation/region are broadcast-size; AQE converts at runtime.
+register_sql(
+    "sql_q5_local_supplier_volume",
+    f"""
         SELECT n.n_name,
                CAST(sum({_REV}) AS DOUBLE) AS revenue
         FROM customer c
@@ -78,13 +73,13 @@ def register_layer_b() -> None:
           AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
         GROUP BY n.n_name
         """,
-    )
+)
 
-    # TPC-H Q6 shape: pure filter + single-row aggregate — the
-    # pushdown showcase (all three predicates reach the parquet scan).
-    register_sql(
-        "sql_q6_forecast_revenue",
-        """
+# TPC-H Q6 shape: pure filter + single-row aggregate — the
+# pushdown showcase (all three predicates reach the parquet scan).
+register_sql(
+    "sql_q6_forecast_revenue",
+    """
         SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
                         * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
                count(*) AS n_items
@@ -94,13 +89,13 @@ def register_layer_b() -> None:
           AND l_discount BETWEEN 0.03 AND 0.07
           AND l_quantity < 24
         """,
-    )
+)
 
-    # window: rank-per-group top-k (no equivalent in the reference ETL;
-    # part of the delivered DuckDB-SQL capability).
-    register_sql(
-        "sql_window_rank_topk",
-        """
+# window: rank-per-group top-k (no equivalent in the reference ETL;
+# part of the delivered DuckDB-SQL capability).
+register_sql(
+    "sql_window_rank_topk",
+    """
         SELECT c_mktsegment, c_custkey, c_acctbal, rk FROM (
           SELECT c_mktsegment, c_custkey, c_acctbal,
                  CAST(row_number() OVER (
@@ -110,12 +105,12 @@ def register_layer_b() -> None:
         ) ranked
         WHERE rk <= 5
         """,
-    )
+)
 
-    # window: running total over an ordered frame.
-    register_sql(
-        "sql_window_running_total",
-        f"""
+# window: running total over an ordered frame.
+register_sql(
+    "sql_window_running_total",
+    f"""
         SELECT l_suppkey, l_orderkey, l_linenumber,
                CAST(sum({_QTY}) OVER (
                    PARTITION BY l_suppkey
@@ -124,12 +119,12 @@ def register_layer_b() -> None:
         FROM lineitem
         WHERE l_suppkey <= 5
         """,
-    )
+)
 
-    # window: lag-based sessionization (30-minute inactivity gap).
-    register_sql(
-        "sql_window_sessionize",
-        """
+# window: lag-based sessionization (30-minute inactivity gap).
+register_sql(
+    "sql_window_sessionize",
+    """
         SELECT user_id, CAST(sum(is_new) AS BIGINT) AS n_sessions
         FROM (
           SELECT user_id,
@@ -141,98 +136,100 @@ def register_layer_b() -> None:
         ) flagged
         GROUP BY user_id
         """,
-    )
+)
 
-    # time-bucketed aggregation over the event stream (batch form of
-    # the streaming tumbling window in streaming/windows.py).
-    register_sql(
-        "sql_agg_events_hourly",
-        """
+# time-bucketed aggregation over the event stream (batch form of
+# the streaming tumbling window in streaming/windows.py).
+register_sql(
+    "sql_agg_events_hourly",
+    """
         SELECT date_trunc('hour', ts) AS hour_ts, event_type,
                count(*) AS n_events,
                CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         FROM events
         GROUP BY date_trunc('hour', ts), event_type
         """,
-    )
+)
 
-    # grouping sets via ROLLUP (subtotals + grand total).
-    register_sql(
-        "sql_agg_rollup",
-        f"""
+# grouping sets via ROLLUP (subtotals + grand total).
+register_sql(
+    "sql_agg_rollup",
+    f"""
         SELECT l_returnflag, l_linestatus,
                CAST(sum({_QTY}) AS DOUBLE) AS sum_qty,
                count(*) AS n_items
         FROM lineitem
         GROUP BY ROLLUP (l_returnflag, l_linestatus)
         """,
-    )
+)
 
-    # pivot expressed portably as conditional aggregation.
-    register_sql(
-        "sql_agg_pivot_conditional",
-        f"""
+# pivot expressed portably as conditional aggregation.
+register_sql(
+    "sql_agg_pivot_conditional",
+    f"""
         SELECT l_returnflag,
                CAST(sum(CASE WHEN l_linestatus = 'O' THEN {_QTY} ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_open,
                CAST(sum(CASE WHEN l_linestatus = 'F' THEN {_QTY} ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_finished
         FROM lineitem
         GROUP BY l_returnflag
         """,
-    )
+)
 
-    # semi join (EXISTS) / anti join (NOT EXISTS): Catalyst plans these
-    # as LeftSemi/LeftAnti — no row duplication, no wide shuffle of the
-    # probe side's payload.
-    register_sql(
-        "sql_join_semi_exists",
-        """
+# semi join (EXISTS) / anti join (NOT EXISTS): Catalyst plans these
+# as LeftSemi/LeftAnti — no row duplication, no wide shuffle of the
+# probe side's payload.
+register_sql(
+    "sql_join_semi_exists",
+    """
         SELECT c_custkey, c_name FROM customer c
         WHERE EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
         """,
-    )
-    register_sql(
-        "sql_join_anti_not_exists",
-        """
+)
+
+register_sql(
+    "sql_join_anti_not_exists",
+    """
         SELECT c_custkey, c_name FROM customer c
         WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
         """,
-    )
+)
 
-    # set ops beyond UNION ALL.
-    register_sql(
-        "sql_setop_intersect",
-        """
+# set ops beyond UNION ALL.
+register_sql(
+    "sql_setop_intersect",
+    """
         SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
         INTERSECT
         SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
         """,
-    )
-    register_sql(
-        "sql_setop_except",
-        """
+)
+
+register_sql(
+    "sql_setop_except",
+    """
         SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
         EXCEPT
         SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
         """,
-    )
+)
 
-    # scalar subquery against an exact-decimal average.
-    register_sql(
-        "sql_scalar_subquery",
-        """
+# scalar subquery against an exact-decimal average.
+register_sql(
+    "sql_scalar_subquery",
+    """
         SELECT o_orderkey, o_totalprice
         FROM orders
         WHERE o_totalprice > 2 * (
             SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*)
             FROM orders)
         """,
-    )
+)
 
-    # CASE/conditional projection + IN-list predicate.
-    register_sql(
-        "sql_case_in_predicate",
-        """
+# CASE/conditional projection + IN-list predicate.
+register_sql(
+    "sql_case_in_predicate",
+    """
         SELECT o_orderkey,
                CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 'hot'
                     WHEN o_orderpriority = '3-MEDIUM' THEN 'warm'
@@ -240,16 +237,16 @@ def register_layer_b() -> None:
         FROM orders
         WHERE o_orderstatus IN ('F', 'O')
         """,
-    )
+)
 
-    # full outer join: both dangling sides survive. Nulls are COALESCEd
-    # to sentinels so the output columns stay non-null BIGINT — a
-    # nullable int column round-trips to pandas as float64 from Spark
-    # but nullable Int64 from DuckDB, which would desync the value hash
-    # (5.0 vs 5) even though the data matches.
-    register_sql(
-        "sql_join_full_outer",
-        """
+# full outer join: both dangling sides survive. Nulls are COALESCEd
+# to sentinels so the output columns stay non-null BIGINT — a
+# nullable int column round-trips to pandas as float64 from Spark
+# but nullable Int64 from DuckDB, which would desync the value hash
+# (5.0 vs 5) even though the data matches.
+register_sql(
+    "sql_join_full_outer",
+    """
         SELECT coalesce(f.o_custkey, CAST(-1 AS BIGINT)) AS custkey_f,
                coalesce(o.o_custkey, CAST(-1 AS BIGINT)) AS custkey_o,
                coalesce(f.n_f, CAST(0 AS BIGINT)) AS n_f,
@@ -258,33 +255,33 @@ def register_layer_b() -> None:
         FULL OUTER JOIN (SELECT o_custkey, count(*) AS n_o FROM orders WHERE o_orderstatus = 'O' GROUP BY o_custkey) o
           ON f.o_custkey = o.o_custkey
         """,
-    )
+)
 
-    # cross join (small × small — the only place a cartesian is sane).
-    register_sql(
-        "sql_join_cross",
-        """
+# cross join (small × small — the only place a cartesian is sane).
+register_sql(
+    "sql_join_cross",
+    """
         SELECT r.r_name, n.n_name
         FROM region r CROSS JOIN nation n
         """,
-    )
+)
 
-    # CUBE: all grouping-set combinations.
-    register_sql(
-        "sql_agg_cube",
-        f"""
+# CUBE: all grouping-set combinations.
+register_sql(
+    "sql_agg_cube",
+    f"""
         SELECT l_returnflag, l_linestatus,
                CAST(sum({_QTY}) AS DOUBLE) AS sum_qty
         FROM lineitem
         GROUP BY CUBE (l_returnflag, l_linestatus)
         """,
-    )
+)
 
-    # explicit GROUPING SETS with grouping() disambiguation of
-    # produced-null vs data-null.
-    register_sql(
-        "sql_agg_grouping_sets",
-        f"""
+# explicit GROUPING SETS with grouping() disambiguation of
+# produced-null vs data-null.
+register_sql(
+    "sql_agg_grouping_sets",
+    f"""
         SELECT l_returnflag, l_linestatus,
                CAST(grouping(l_returnflag) AS INTEGER) AS g_flag,
                CAST(grouping(l_linestatus) AS INTEGER) AS g_status,
@@ -292,74 +289,74 @@ def register_layer_b() -> None:
         FROM lineitem
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         """,
-    )
+)
 
-    # HAVING over an exact-decimal aggregate.
-    register_sql(
-        "sql_agg_having",
-        f"""
+# HAVING over an exact-decimal aggregate.
+register_sql(
+    "sql_agg_having",
+    f"""
         SELECT l_suppkey, CAST(sum({_QTY}) AS DOUBLE) AS total_qty
         FROM lineitem
         GROUP BY l_suppkey
         HAVING sum({_QTY}) > 15000
         """,
-    )
+)
 
-    # TPC-H Q2 shape: correlated scalar subquery (min per correlated
-    # group) — Catalyst decorrelates this into a join + aggregate.
-    register_sql(
-        "sql_correlated_subquery",
-        """
+# TPC-H Q2 shape: correlated scalar subquery (min per correlated
+# group) — Catalyst decorrelates this into a join + aggregate.
+register_sql(
+    "sql_correlated_subquery",
+    """
         SELECT p.p_partkey, p.p_retailprice
         FROM part p
         WHERE p.p_retailprice = (
             SELECT min(p2.p_retailprice) FROM part p2 WHERE p2.p_brand = p.p_brand
         )
         """,
-    )
+)
 
-    # string predicates: LIKE / regexp filter on part names
-    # (regexp_like in Spark, regexp_matches in DuckDB — same regex).
-    register_sql(
-        "sql_string_predicates",
-        """
+# string predicates: LIKE / regexp filter on part names
+# (regexp_like in Spark, regexp_matches in DuckDB — same regex).
+register_sql(
+    "sql_string_predicates",
+    """
         SELECT p_partkey, p_name
         FROM part
         WHERE p_name LIKE '%red%' OR regexp_like(p_name, '^(small|large) ')
         """,
-        oracle="""
+    oracle="""
         SELECT p_partkey, p_name
         FROM part
         WHERE p_name LIKE '%red%' OR regexp_matches(p_name, '^(small|large) ')
         """,
-    )
+)
 
-    # deterministic ordered pagination (ORDER BY unique key + LIMIT/OFFSET).
-    register_sql(
-        "sql_order_limit_offset",
-        """
+# deterministic ordered pagination (ORDER BY unique key + LIMIT/OFFSET).
+register_sql(
+    "sql_order_limit_offset",
+    """
         SELECT o_orderkey, o_totalprice
         FROM orders
         ORDER BY o_totalprice DESC, o_orderkey
         LIMIT 20 OFFSET 40
         """,
-    )
+)
 
-    # UNION (distinct) — dedup across branches.
-    register_sql(
-        "sql_setop_union_distinct",
-        """
+# UNION (distinct) — dedup across branches.
+register_sql(
+    "sql_setop_union_distinct",
+    """
         SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
         UNION
         SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'
         """,
-    )
+)
 
-    # value windows: rank with gaps, dense_rank, percent_rank, ntile
-    # over a total order.
-    register_sql(
-        "sql_window_rank_family",
-        """
+# value windows: rank with gaps, dense_rank, percent_rank, ntile
+# over a total order.
+register_sql(
+    "sql_window_rank_family",
+    """
         SELECT s_suppkey,
                CAST(rank()         OVER w AS INTEGER) AS rnk,
                CAST(dense_rank()   OVER w AS INTEGER) AS drnk,
@@ -368,34 +365,34 @@ def register_layer_b() -> None:
         FROM supplier
         WINDOW w AS (ORDER BY s_acctbal DESC, s_suppkey)
         """,
-    )
+)
 
-    # lead/lag navigation with defaults.
-    register_sql(
-        "sql_window_lead_lag",
-        """
+# lead/lag navigation with defaults.
+register_sql(
+    "sql_window_lead_lag",
+    """
         SELECT o_custkey, o_orderkey,
                lag(o_orderkey, 1, CAST(-1 AS BIGINT)) OVER w AS prev_order,
                lead(o_orderkey, 1, CAST(-1 AS BIGINT)) OVER w AS next_order
         FROM orders
         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
         """,
-    )
+)
 
-    # IN-subquery (planned as a semi join).
-    register_sql(
-        "sql_in_subquery",
-        """
+# IN-subquery (planned as a semi join).
+register_sql(
+    "sql_in_subquery",
+    """
         SELECT s_suppkey, s_name
         FROM supplier
         WHERE s_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
         """,
-    )
+)
 
-    # TPC-H Q4 shape: order-priority count gated by a correlated EXISTS.
-    register_sql(
-        "sql_q4_order_priority",
-        """
+# TPC-H Q4 shape: order-priority count gated by a correlated EXISTS.
+register_sql(
+    "sql_q4_order_priority",
+    """
         SELECT o_orderpriority, count(*) AS order_count
         FROM orders o
         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -404,13 +401,13 @@ def register_layer_b() -> None:
                       WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
         GROUP BY o_orderpriority
         """,
-    )
+)
 
-    # TPC-H Q12 shape: priority-class buckets via conditional agg over
-    # a fact/dim join.
-    register_sql(
-        "sql_q12_priority_classes",
-        """
+# TPC-H Q12 shape: priority-class buckets via conditional agg over
+# a fact/dim join.
+register_sql(
+    "sql_q12_priority_classes",
+    """
         SELECT l.l_linestatus,
                CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -421,12 +418,12 @@ def register_layer_b() -> None:
           AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
         GROUP BY l.l_linestatus
         """,
-    )
+)
 
-    # TPC-H Q10 shape: returned-item revenue per customer, top-20.
-    register_sql(
-        "sql_q10_returned_items",
-        f"""
+# TPC-H Q10 shape: returned-item revenue per customer, top-20.
+register_sql(
+    "sql_q10_returned_items",
+    f"""
         SELECT c.c_custkey, c.c_name, n.n_name,
                CAST(sum({_REV}) AS DOUBLE) AS revenue
         FROM customer c
@@ -440,13 +437,13 @@ def register_layer_b() -> None:
         ORDER BY revenue DESC, c.c_custkey
         LIMIT 20
         """,
-    )
+)
 
-    # TPC-H Q14 shape: ratio of a conditional aggregate to the total —
-    # one pass, two exact-decimal sums.
-    register_sql(
-        "sql_q14_promo_ratio",
-        f"""
+# TPC-H Q14 shape: ratio of a conditional aggregate to the total —
+# one pass, two exact-decimal sums.
+register_sql(
+    "sql_q14_promo_ratio",
+    f"""
         SELECT CAST(100.0 * sum(CASE WHEN p.p_type = 'ECONOMY' THEN {_REV}
                                      ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
                / CAST(sum({_REV}) AS DOUBLE) AS promo_revenue_pct,
@@ -455,20 +452,20 @@ def register_layer_b() -> None:
         WHERE l.l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
           AND l.l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
         """,
-    )
+)
 
-    # ------------------------------------------------------------------
-    # Round-2 widening: the remaining TPC-H shapes expressible on the
-    # driver's table subset (no partsupp; no o_comment/l_receiptdate/
-    # p_container columns — those predicates are adapted, the JOIN/
-    # subquery/aggregation SHAPES are faithful).
-    # ------------------------------------------------------------------
+# ------------------------------------------------------------------
+# Round-2 widening: the remaining TPC-H shapes expressible on the
+# driver's table subset (no partsupp; no o_comment/l_receiptdate/
+# p_container columns — those predicates are adapted, the JOIN/
+# subquery/aggregation SHAPES are faithful).
+# ------------------------------------------------------------------
 
-    # TPC-H Q7 shape: bidirectional nation-pair revenue by year —
-    # 5-way join with a disjunctive pair predicate + year extraction.
-    register_sql(
-        "sql_q7_volume_shipping",
-        f"""
+# TPC-H Q7 shape: bidirectional nation-pair revenue by year —
+# 5-way join with a disjunctive pair predicate + year extraction.
+register_sql(
+    "sql_q7_volume_shipping",
+    f"""
         SELECT supp_nation, cust_nation, l_year,
                CAST(sum(volume) AS DOUBLE) AS revenue
         FROM (
@@ -486,13 +483,13 @@ def register_layer_b() -> None:
         ) shipping
         GROUP BY supp_nation, cust_nation, l_year
         """,
-    )
+)
 
-    # TPC-H Q8 shape: market share — conditional share of a global
-    # aggregate per year over a 6-way join.
-    register_sql(
-        "sql_q8_market_share",
-        f"""
+# TPC-H Q8 shape: market share — conditional share of a global
+# aggregate per year over a 6-way join.
+register_sql(
+    "sql_q8_market_share",
+    f"""
         SELECT o_year,
                CAST(sum(CASE WHEN nation = 'NATION_3' THEN volume
                              ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
@@ -511,13 +508,13 @@ def register_layer_b() -> None:
         ) all_nations
         GROUP BY o_year
         """,
-    )
+)
 
-    # TPC-H Q13 shape: distribution of orders-per-customer — left join
-    # + double aggregation (the histogram-of-group-sizes pattern).
-    register_sql(
-        "sql_q13_customer_distribution",
-        """
+# TPC-H Q13 shape: distribution of orders-per-customer — left join
+# + double aggregation (the histogram-of-group-sizes pattern).
+register_sql(
+    "sql_q13_customer_distribution",
+    """
         SELECT c_count, count(*) AS custdist
         FROM (
           SELECT c.c_custkey, count(o.o_orderkey) AS c_count
@@ -526,13 +523,13 @@ def register_layer_b() -> None:
         ) c_orders
         GROUP BY c_count
         """,
-    )
+)
 
-    # TPC-H Q15 shape: CTE revenue view + scalar-max subquery (top
-    # supplier); exact decimal sums make the max-equality portable.
-    register_sql(
-        "sql_q15_top_supplier",
-        f"""
+# TPC-H Q15 shape: CTE revenue view + scalar-max subquery (top
+# supplier); exact decimal sums make the max-equality portable.
+register_sql(
+    "sql_q15_top_supplier",
+    f"""
         WITH revenue AS (
           SELECT l_suppkey AS supplier_no,
                  CAST(sum({_REV}) AS DOUBLE) AS total_revenue
@@ -545,14 +542,14 @@ def register_layer_b() -> None:
         FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
         WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
         """,
-    )
+)
 
-    # TPC-H Q17 shape: correlated scalar subquery (per-part average)
-    # gating a join+aggregate. Quantities are integer-valued doubles,
-    # so the 0.2*avg threshold is bit-identical across engines.
-    register_sql(
-        "sql_q17_small_quantity_revenue",
-        """
+# TPC-H Q17 shape: correlated scalar subquery (per-part average)
+# gating a join+aggregate. Quantities are integer-valued doubles,
+# so the 0.2*avg threshold is bit-identical across engines.
+register_sql(
+    "sql_q17_small_quantity_revenue",
+    """
         SELECT CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly,
                count(*) AS n_items
         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
@@ -562,13 +559,13 @@ def register_layer_b() -> None:
             WHERE l2.l_partkey = l.l_partkey
           )
         """,
-    )
+)
 
-    # TPC-H Q18 shape: IN over a HAVING subquery + re-aggregation
-    # (large-volume orders).
-    register_sql(
-        "sql_q18_large_volume_customer",
-        f"""
+# TPC-H Q18 shape: IN over a HAVING subquery + re-aggregation
+# (large-volume orders).
+register_sql(
+    "sql_q18_large_volume_customer",
+    f"""
         SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
                CAST(o.o_totalprice AS DOUBLE) AS o_totalprice,
                CAST(sum({_QTY}) AS DOUBLE) AS total_qty
@@ -582,14 +579,14 @@ def register_layer_b() -> None:
         )
         GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice
         """,
-    )
+)
 
-    # TPC-H Q21 shape (adapted: no l_receiptdate — "multi-supplier
-    # orders where this supplier shipped last by ship date"): EXISTS +
-    # NOT EXISTS correlated anti-semantics over the same fact.
-    register_sql(
-        "sql_q21_last_shipper",
-        """
+# TPC-H Q21 shape (adapted: no l_receiptdate — "multi-supplier
+# orders where this supplier shipped last by ship date"): EXISTS +
+# NOT EXISTS correlated anti-semantics over the same fact.
+register_sql(
+    "sql_q21_last_shipper",
+    """
         SELECT s.s_name, count(*) AS numwait
         FROM supplier s
         JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
@@ -606,15 +603,15 @@ def register_layer_b() -> None:
           )
         GROUP BY s.s_name
         """,
-    )
+)
 
-    # TPC-H Q22 shape (adapted: balance threshold via exact integer
-    # cents cross-multiplication — no float-boundary flakiness — and
-    # "no RECENT orders" since every customer here has some order):
-    # scalar aggregate subqueries + NOT EXISTS + group-by.
-    register_sql(
-        "sql_q22_global_sales_opportunity",
-        """
+# TPC-H Q22 shape (adapted: balance threshold via exact integer
+# cents cross-multiplication — no float-boundary flakiness — and
+# "no RECENT orders" since every customer here has some order):
+# scalar aggregate subqueries + NOT EXISTS + group-by.
+register_sql(
+    "sql_q22_global_sales_opportunity",
+    """
         SELECT c_nationkey AS cntry, count(*) AS numcust,
                CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
         FROM customer c
@@ -629,17 +626,17 @@ def register_layer_b() -> None:
           )
         GROUP BY c_nationkey
         """,
-    )
+)
 
-    # TPC-H Q19 shape (adapted to this testdata's part columns: the
-    # container/shipmode attributes don't exist here, so the OR'd
-    # multi-bracket predicate ranges over brand × size × quantity).
-    # The point of the shape survives: a join whose pushable part is
-    # only the disjunction's common support, with per-branch residual
-    # conjuncts evaluated post-join.
-    register_sql(
-        "sql_q19_discounted_revenue",
-        f"""
+# TPC-H Q19 shape (adapted to this testdata's part columns: the
+# container/shipmode attributes don't exist here, so the OR'd
+# multi-bracket predicate ranges over brand × size × quantity).
+# The point of the shape survives: a join whose pushable part is
+# only the disjunction's common support, with per-branch residual
+# conjuncts evaluated post-join.
+register_sql(
+    "sql_q19_discounted_revenue",
+    f"""
         SELECT CAST(sum({_REV}) AS DOUBLE) AS revenue,
                count(*) AS n_lines
         FROM lineitem l
@@ -651,15 +648,15 @@ def register_layer_b() -> None:
            OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 35
                AND l.l_quantity BETWEEN 20 AND 30)
         """,
-    )
+)
 
-    # explicit window FRAME specification: a trailing moving sum/count
-    # over ROWS BETWEEN — the frame-clause surface the rank/lag
-    # entries don't touch. Exact DECIMAL sum; count exposes the ragged
-    # leading frames.
-    register_sql(
-        "sql_window_frame_spec",
-        """
+# explicit window FRAME specification: a trailing moving sum/count
+# over ROWS BETWEEN — the frame-clause surface the rank/lag
+# entries don't touch. Exact DECIMAL sum; count exposes the ragged
+# leading frames.
+register_sql(
+    "sql_window_frame_spec",
+    """
         SELECT o_custkey, o_orderkey,
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
                     OVER w AS DOUBLE) AS trailing_sum,
@@ -669,20 +666,20 @@ def register_layer_b() -> None:
                      ORDER BY o_orderdate, o_orderkey
                      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
         """,
-    )
+)
 
-    # TPC-H Q2 shape (minimum-cost supplier). This testdata has no
-    # partsupp table, so lineitem is the part↔supplier bridge and the
-    # "supply cost" is the observed unit price l_extendedprice /
-    # l_quantity. The shape survives intact: a correlated scalar-min
-    # subquery over the same multi-dim join (part→supplier→nation→
-    # region) that the outer query runs, answered per outer part.
-    # Catalyst rewrites it to an aggregate + join; the min is
-    # order-independent and IEEE division is deterministic, so the
-    # double equality matches DuckDB exactly.
-    register_sql(
-        "sql_q2_min_cost_supplier",
-        """
+# TPC-H Q2 shape (minimum-cost supplier). This testdata has no
+# partsupp table, so lineitem is the part↔supplier bridge and the
+# "supply cost" is the observed unit price l_extendedprice /
+# l_quantity. The shape survives intact: a correlated scalar-min
+# subquery over the same multi-dim join (part→supplier→nation→
+# region) that the outer query runs, answered per outer part.
+# Catalyst rewrites it to an aggregate + join; the min is
+# order-independent and IEEE division is deterministic, so the
+# double equality matches DuckDB exactly.
+register_sql(
+    "sql_q2_min_cost_supplier",
+    """
         SELECT DISTINCT s.s_acctbal, s.s_name, n.n_name,
                p.p_partkey, p.p_name
         FROM part p
@@ -702,16 +699,16 @@ def register_layer_b() -> None:
         ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey
         LIMIT 100
         """,
-    )
+)
 
-    # TPC-H Q9 shape (product-type profit by nation and year). Without
-    # ps_supplycost, cost is proxied by 60% of the part's retail price
-    # per unit — the aggregate-over-5-way-join-with-LIKE shape is what
-    # matters. Exact DECIMAL profit; EXTRACT(YEAR ...) parses in both
-    # engines.
-    register_sql(
-        "sql_q9_product_type_profit",
-        f"""
+# TPC-H Q9 shape (product-type profit by nation and year). Without
+# ps_supplycost, cost is proxied by 60% of the part's retail price
+# per unit — the aggregate-over-5-way-join-with-LIKE shape is what
+# matters. Exact DECIMAL profit; EXTRACT(YEAR ...) parses in both
+# engines.
+register_sql(
+    "sql_q9_product_type_profit",
+    f"""
         SELECT nation, o_year,
                CAST(sum(amount) AS DOUBLE) AS sum_profit
         FROM (
@@ -730,16 +727,16 @@ def register_layer_b() -> None:
         GROUP BY nation, o_year
         ORDER BY nation, o_year DESC
         """,
-    )
+)
 
-    # TPC-H Q11 shape (important stock): per-part inventory value for
-    # suppliers in a nation group, kept only when it exceeds a
-    # fraction of the group total — an uncorrelated scalar subquery in
-    # HAVING that re-runs the same join+agg. Value = extendedprice ×
-    # quantity in exact DECIMAL.
-    register_sql(
-        "sql_q11_important_stock",
-        f"""
+# TPC-H Q11 shape (important stock): per-part inventory value for
+# suppliers in a nation group, kept only when it exceeds a
+# fraction of the group total — an uncorrelated scalar subquery in
+# HAVING that re-runs the same join+agg. Value = extendedprice ×
+# quantity in exact DECIMAL.
+register_sql(
+    "sql_q11_important_stock",
+    f"""
         SELECT l.l_partkey AS ps_partkey,
                CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * {_QTY})
                     AS DOUBLE) AS value
@@ -758,16 +755,16 @@ def register_layer_b() -> None:
             WHERE n2.n_name IN ('NATION_3', 'NATION_7'))
         ORDER BY value DESC, ps_partkey
         """,
-    )
+)
 
-    # TPC-H Q16 shape (supplier-part relationship count): distinct
-    # suppliers per (brand, type, size) bucket with a NOT IN
-    # blacklist subquery. The reference excludes complaint suppliers
-    # via s_comment LIKE; this testdata has no comments, so the
-    # blacklist is negative-balance suppliers (6 exist at sf0.01).
-    register_sql(
-        "sql_q16_supplier_part_count",
-        """
+# TPC-H Q16 shape (supplier-part relationship count): distinct
+# suppliers per (brand, type, size) bucket with a NOT IN
+# blacklist subquery. The reference excludes complaint suppliers
+# via s_comment LIKE; this testdata has no comments, so the
+# blacklist is negative-balance suppliers (6 exist at sf0.01).
+register_sql(
+    "sql_q16_supplier_part_count",
+    """
         SELECT p.p_brand, p.p_type, p.p_size,
                count(DISTINCT l.l_suppkey) AS supplier_cnt
         FROM lineitem l
@@ -780,16 +777,16 @@ def register_layer_b() -> None:
         GROUP BY p.p_brand, p.p_type, p.p_size
         ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
         """,
-    )
+)
 
-    # TPC-H Q20 shape (potential part promotion): nested IN
-    # subqueries — the inner one a LIKE scan over part, the middle one
-    # a grouped HAVING over a year of lineitem — feeding a supplier
-    # semi-join, then a nation filter. Threshold 40 keeps ~226
-    # (supplier, part) groups at sf0.01.
-    register_sql(
-        "sql_q20_promotion_suppliers",
-        """
+# TPC-H Q20 shape (potential part promotion): nested IN
+# subqueries — the inner one a LIKE scan over part, the middle one
+# a grouped HAVING over a year of lineitem — feeding a supplier
+# semi-join, then a nation filter. Threshold 40 keeps ~226
+# (supplier, part) groups at sf0.01.
+register_sql(
+    "sql_q20_promotion_suppliers",
+    """
         SELECT s.s_name, CAST(s.s_acctbal AS DOUBLE) AS s_acctbal
         FROM supplier s
         JOIN nation n ON n.n_nationkey = s.s_nationkey
@@ -805,16 +802,16 @@ def register_layer_b() -> None:
           AND n.n_name IN ('NATION_1', 'NATION_2', 'NATION_3', 'NATION_4')
         ORDER BY s.s_name
         """,
-    )
+)
 
-    # Recursive CTE (Spark 4.x WITH RECURSIVE): generate the month
-    # spine recursively, LEFT JOIN facts onto it — the gaps-preserving
-    # calendar aggregation a pandas reference does with reindex().
-    # Identical text runs on DuckDB (its recursive CTE dialect
-    # matches), so the oracle IS the query.
-    register_sql(
-        "sql_recursive_cte_months",
-        """
+# Recursive CTE (Spark 4.x WITH RECURSIVE): generate the month
+# spine recursively, LEFT JOIN facts onto it — the gaps-preserving
+# calendar aggregation a pandas reference does with reindex().
+# Identical text runs on DuckDB (its recursive CTE dialect
+# matches), so the oracle IS the query.
+register_sql(
+    "sql_recursive_cte_months",
+    """
         WITH RECURSIVE months(m) AS (
           SELECT TIMESTAMP '1995-01-01' AS m
           UNION ALL
@@ -824,53 +821,184 @@ def register_layer_b() -> None:
         FROM months LEFT JOIN lineitem ON date_trunc('month', l_shipdate) = m
         GROUP BY m
         """,
-    )
+)
 
-    # Correlated LATERAL subquery with ORDER BY + LIMIT: top-1 line
-    # item per order. Catalyst must decorrelate this to a window/join
-    # (no per-row re-execution); same text runs on DuckDB.
-    register_sql(
-        "sql_lateral_topk_per_group",
-        """
+# Correlated LATERAL subquery with ORDER BY + LIMIT: top-1 line
+# item per order. Catalyst must decorrelate this to a window/join
+# (no per-row re-execution); same text runs on DuckDB.
+register_sql(
+    "sql_lateral_topk_per_group",
+    """
         SELECT o.o_orderkey, x.l_linenumber, x.l_extendedprice
         FROM orders o,
         LATERAL (SELECT l_linenumber, l_extendedprice FROM lineitem l
                  WHERE l.l_orderkey = o.o_orderkey
                  ORDER BY l_extendedprice DESC, l_linenumber LIMIT 1) x
         """,
-    )
+)
 
-    # Native PIVOT syntax (vs the portable conditional-agg form
-    # registered as sql_agg_pivot_conditional). DuckDB's PIVOT dialect
-    # differs, so the oracle is the conditional-agg equivalent.
-    register_sql(
-        "sql_pivot_native",
-        """
+# Native PIVOT syntax (vs the portable conditional-agg form
+# registered as sql_agg_pivot_conditional). DuckDB's PIVOT dialect
+# differs, so the oracle is the conditional-agg equivalent.
+register_sql(
+    "sql_pivot_native",
+    """
         SELECT * FROM (SELECT l_returnflag, l_linestatus,
                               CAST(l_quantity AS DECIMAL(18,2)) AS q FROM lineitem)
         PIVOT (CAST(sum(q) AS DOUBLE) FOR l_linestatus IN ('O' AS qty_o, 'F' AS qty_f))
         """,
-        oracle="""
+    oracle="""
         SELECT l_returnflag,
                CAST(sum(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_o,
                CAST(sum(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_f
         FROM lineitem GROUP BY l_returnflag
         """,
-    )
+)
 
-    # Native UNPIVOT (wide -> long): nulls excluded by default, which
-    # these non-null columns make moot. Oracle is the UNION ALL
-    # equivalent.
-    register_sql(
-        "sql_unpivot_native",
-        """
+# Native UNPIVOT (wide -> long): nulls excluded by default, which
+# these non-null columns make moot. Oracle is the UNION ALL
+# equivalent.
+register_sql(
+    "sql_unpivot_native",
+    """
         SELECT p_partkey, metric, val FROM
         (SELECT p_partkey, CAST(p_size AS DOUBLE) AS size_v, p_retailprice AS price_v FROM part)
         UNPIVOT (val FOR metric IN (size_v AS size, price_v AS price))
         """,
-        oracle="""
+    oracle="""
         SELECT p_partkey, 'size' AS metric, CAST(p_size AS DOUBLE) AS val FROM part
         UNION ALL
         SELECT p_partkey, 'price' AS metric, p_retailprice AS val FROM part
         """,
+)
+
+
+@register(
+    "sql_variant_extract",
+    oracle="""
+    SELECT event_type,
+           count(*) AS n_events,
+           CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+           min(CAST(json_extract(props, '$.k') AS BIGINT)) AS min_k,
+           max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
+    FROM events
+    GROUP BY event_type
+    """,
+)
+def q_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """VARIANT ingestion (Spark 4): parse_json once at scan time,
+    then typed variant_get extraction — the open-schema semi-
+    structured path that replaces repeated string JSON parsing.
+    At 100 TB the parse happens once per row in the scan project,
+    and the binary variant encoding is far cheaper to re-read than
+    re-parsing JSON text per access."""
+    ev = _t(spark, sf_dir, "events", rebalance=False)
+    # try_parse_json: malformed rows become NULL instead of failing
+    # the scan (the oracle's input is well-formed, so parity holds).
+    k = F.try_variant_get(F.try_parse_json("props"), "$.k", "bigint").alias("k")
+    return (
+        ev.select("event_type", k)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("k").alias("sum_k"),
+            F.min("k").alias("min_k"),
+            F.max("k").alias("max_k"),
+        )
+    )
+
+
+@register(
+    "sql_window_navigation_kit",
+    oracle="""
+    SELECT s_suppkey,
+           cume_dist() OVER w AS cdist,
+           first_value(s_suppkey) OVER w AS first_k,
+           last_value(s_suppkey) OVER (
+             ORDER BY s_acctbal DESC, s_suppkey
+             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
+           ) AS last_k,
+           nth_value(s_suppkey, 3) OVER w AS third_k
+    FROM supplier
+    WINDOW w AS (ORDER BY s_acctbal DESC, s_suppkey)
+    """,
+)
+def q_window_nav(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Navigation-window completeness: cume_dist, first/last/nth
+    value (last_value over the full frame — the default running
+    frame is the classic footgun both engines share). Identical
+    SQL text runs on Catalyst and DuckDB."""
+    from build_datawarehouse_demo_spark.sources.readers import register_star_views
+
+    register_star_views(spark, sf_dir)
+    return spark.sql(
+        """
+        SELECT s_suppkey,
+               cume_dist() OVER w AS cdist,
+               first_value(s_suppkey) OVER w AS first_k,
+               last_value(s_suppkey) OVER (
+                 ORDER BY s_acctbal DESC, s_suppkey
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
+               ) AS last_k,
+               nth_value(s_suppkey, 3) OVER w AS third_k
+        FROM supplier
+        WINDOW w AS (ORDER BY s_acctbal DESC, s_suppkey)
+        """
+    )
+
+
+# ------------------------------------------------------------------
+# statistics family, windowed distinct, incremental-ingest dedup
+# ------------------------------------------------------------------
+
+@register(
+    "sql_agg_stats_family",
+    oracle="""
+    SELECT l_returnflag,
+           count(*) AS n,
+           round(median(l_quantity), 6) AS med_qty,
+           round(stddev_samp(l_quantity), 6) AS sd_qty,
+           round(var_samp(l_quantity), 6) AS var_qty
+    FROM lineitem GROUP BY l_returnflag
+    """,
+)
+def q_stats_family(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact median + sample stddev/variance per group. Both
+    engines compute incremental moments in doubles; at these
+    magnitudes the cross-engine drift sits orders below the 6dp
+    rounding (probed before registration)."""
+    li = _t(spark, sf_dir, "lineitem", rebalance=False)
+    return li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.median("l_quantity"), 6).alias("med_qty"),
+        F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
+        F.round(F.var_samp("l_quantity"), 6).alias("var_qty"),
+    )
+
+
+@register(
+    "sql_window_distinct_running",
+    oracle="""
+    SELECT o_custkey, o_orderkey,
+           count(DISTINCT o_orderpriority) OVER (
+             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+           ) AS n_priorities
+    FROM orders
+    """,
+)
+def q_window_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Running DISTINCT count over a window. Spark has no
+    count(DISTINCT) OVER — size(collect_set() OVER) is the
+    idiomatic equivalent (set state is per distinct value, fine
+    for low-cardinality payloads like priorities; for high-card
+    columns use the HLL sketch entry instead)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    return _t(spark, sf_dir, "orders", rebalance=False).select(
+        "o_custkey",
+        "o_orderkey",
+        F.size(F.collect_set("o_orderpriority").over(w))
+        .cast("bigint")
+        .alias("n_priorities"),
     )
