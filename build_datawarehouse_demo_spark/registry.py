@@ -13,6 +13,12 @@ Determinism rules (so order-insensitive value hashes match the oracle):
 - row_number windows always carry a total order (natural key
   tiebreaks);
 - LIMIT queries order by a unique key suffix.
+
+Layout: one ``registry_<family>.py`` module per operator family (key
+prefix), plus ``registry_common`` for the driver-fixture pins and the
+oracle SQL fragments several families share. A key registers when its
+module is imported, through a module-level ``@register("...")`` or
+``register_sql("...")``; a key may be registered only once.
 """
 
 from __future__ import annotations
@@ -25,8 +31,14 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
 
 
+def _claim(name: str) -> None:
+    if name in _QUERIES:
+        raise ValueError(f"registry key {name!r} is already registered")
+
+
 def register(name: str, oracle: str | None = None):
     def deco(fn):
+        _claim(name)
         _QUERIES[name] = fn
         if oracle is not None:
             _ORACLES[name] = oracle
@@ -45,6 +57,7 @@ def register_sql(name: str, spark_sql: str, oracle: str | None = None) -> None:
         return spark.sql(spark_sql)
 
     fn.__name__ = f"sql_{name}"
+    _claim(name)
     _QUERIES[name] = fn
     _ORACLES[name] = oracle if oracle is not None else spark_sql
 
@@ -80,6 +93,8 @@ def _rotation_rank() -> dict[str, int]:
     (e.g. r2's ml_kmeans_lloyd_step canonicalizer crash) and brand-new
     keys sort to the front, last round's green keys sink to the back,
     and every key gets a driver row within two rounds of its creation.
+    Keys of equal rank sort by name, so the order does not depend on
+    which module registers first.
     """
     import glob
     import json

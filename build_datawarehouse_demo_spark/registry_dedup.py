@@ -1,4 +1,11 @@
-"""DOCSTRING dedup"""
+"""Deduplication keys (``dedup_*``): exact, MinHash/LSH, SimHash,
+n-gram Jaccard/containment, embedding and semantic (SemDeDup)
+near-duplicates, connected-component clustering with the min-id,
+keep-best and soft keep policies, URL canonicalization and substring
+spans. Banding and width pins come from the same auto-sizing
+functions the operators call, evaluated at the driver fixture's
+counts.
+"""
 
 from __future__ import annotations
 
@@ -7,11 +14,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from build_datawarehouse_demo_spark.operators.dedup import simhash_auto_width
 from build_datawarehouse_demo_spark.operators.similarity import (
     lsh_auto_params,
     rp_planes,
-    rp_planes as _rp_planes,
 )
 from build_datawarehouse_demo_spark.registry import register
 from build_datawarehouse_demo_spark.registry_common import (
@@ -31,10 +36,10 @@ from build_datawarehouse_demo_spark.registry_common import (
     _simhash_sig_sql,
     _simhash_sigs_sql,
     _simhash_votes_sql,
+    _SPAN_W,
     _SW,
     _t,
     _TOK,
-    _W,
 )
 
 
@@ -199,8 +204,15 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# banded RP-LSH near-dup: the oracle replicates the EXACT bucketing
+# (same md5-derived planes, same band slicing, same bit weights), so
+# Spark and DuckDB agree bit-for-bit on the approximate result —
+# candidate recall is a documented property of the operator, not
+# drift (operators/similarity.py:embedding_near_dup_pairs_bucketed;
+# recall vs the exact all-pairs verifier is asserted in
+# tests/test_similarity.py).
 _ND_BANDS, _ND_R, _ND_DIM = 8, 8, 64
-_nd_planes = _rp_planes(_ND_BANDS * _ND_R, _ND_DIM)
+_nd_planes = rp_planes(_ND_BANDS * _ND_R, _ND_DIM)
 
 
 def _band_sigs_sql(planes, rows: int) -> str:
@@ -293,6 +305,10 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return batch.join(seen, "digest", "left_anti").select("doc_id", "digest")
 
+
+# Auto-scaled RP-LSH near-dup entry — the scale fix for the
+# quadratic candidate growth BENCH_SCALE_r06_sf1_sf4.json exposed in
+# the fixed-parameter dedup_embedding_cosine (exponent 2.09).
 
 # the oracle replicates the EXACT bucketing lsh_auto_params picks for
 # the driver fixture's embeddings count (a hard-coded 500 would
@@ -473,8 +489,12 @@ def q_minhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
+# ------------------------------------------------------------------
+# auto-sized SimHash blocking — THIRD instance of the fixed-bucket
+# -space trap (r6: embedding sign-LSH; r7: text MinHash): 4 blocks
+# of 8 bits = 256 buckets/block saturate once n >> 256*occupancy,
+# candidates grow blocks*n^2/2^w. Block width now grows log2(n).
+# ------------------------------------------------------------------
 @register(
     "dedup_simhash_auto",
     oracle=f"""
@@ -517,9 +537,9 @@ def q_simhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     grams AS (
       SELECT doc_id, CAST(i AS INTEGER) AS pos,
-             md5(array_to_string(t[i:i+{_W - 1}], ' ')) AS gram_md5
-      FROM toks, unnest(generate_series(1, len(t) - {_W - 1})) AS s(i)
-      WHERE len(t) >= {_W}
+             md5(array_to_string(t[i:i+{_SPAN_W - 1}], ' ')) AS gram_md5
+      FROM toks, unnest(generate_series(1, len(t) - {_SPAN_W - 1})) AS s(i)
+      WHERE len(t) >= {_SPAN_W}
     ),
     dup AS (
       SELECT gram_md5, count(DISTINCT doc_id) AS n_docs
@@ -530,7 +550,7 @@ def q_simhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every {_W}-token window recurring in >= 2 distinct docs,
+    """Every {_SPAN_W}-token window recurring in >= 2 distinct docs,
     with its 1-based token position (duplicate_substring_spans).
     Tokenization is a verbatim single-space split on BOTH sides —
     positions are raw offsets, so no normalization may shift them.
@@ -540,7 +560,7 @@ def q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return duplicate_substring_spans(
-        _t(spark, sf_dir, "documents"), window=_W, min_docs=2
+        _t(spark, sf_dir, "documents"), window=_SPAN_W, min_docs=2
     )
 
 
@@ -552,9 +572,9 @@ def q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     grams AS (
       SELECT doc_id,
-             md5(array_to_string(t[i:i+{_W - 1}], ' ')) AS gram_md5
-      FROM toks, unnest(generate_series(1, len(t) - {_W - 1})) AS s(i)
-      WHERE len(t) >= {_W}
+             md5(array_to_string(t[i:i+{_SPAN_W - 1}], ' ')) AS gram_md5
+      FROM toks, unnest(generate_series(1, len(t) - {_SPAN_W - 1})) AS s(i)
+      WHERE len(t) >= {_SPAN_W}
     ),
     dup AS (
       SELECT gram_md5 FROM grams
@@ -569,7 +589,7 @@ def q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_doc_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doc-level duplication score (fraction of {_W}-token windows
+    """Doc-level duplication score (fraction of {_SPAN_W}-token windows
     recurring in >= 2 docs) — the filtering lever built on the
     span op: documents past a duplication threshold get dropped
     or downweighted in corpus mixing."""
@@ -578,7 +598,7 @@ def q_doc_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return document_duplication_rate(
-        _t(spark, sf_dir, "documents"), window=_W, min_docs=2
+        _t(spark, sf_dir, "documents"), window=_SPAN_W, min_docs=2
     )
 
 
@@ -715,11 +735,19 @@ def q_simhash_components_scalable(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_SD_EPS = 0.3  # fixture operating point: max pairwise cosine in the
+# ------------------------------------------------------------------
+# four published training-data operators the registry lacked:
+# SemDeDup (semantic dedup over the trained coarse quantizer),
+# DSIR importance resampling, CCNet perplexity bucketing, and
+# containment near-dup pairs. Each oracle restates the WHOLE
+# computation in DuckDB (training runs included), per the r7 IVF
+# discipline.
+# ------------------------------------------------------------------
+#: SemDeDup eps at the fixture's operating point: max pairwise cosine in
+#: the driver embeddings is 0.513, p99 0.289, so 0.3 prunes a real (small)
+#: fraction; production corpora tune eps per SemDeDup sec. 4
+_SD_EPS = 0.3
 
-
-# driver embeddings is 0.513, p99 0.289 — 0.3 prunes a real (small)
-# fraction; production corpora tune eps per SemDeDup sec. 4
 
 @register(
     "dedup_semantic_semdedup",
@@ -777,6 +805,17 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_prune(assigned, cents, eps=_SD_EPS)
 
 
+# ------------------------------------------------------------------
+# incremental SemDeDup (r10 theme applied to the semantic lane):
+# fold a new vector batch into an existing run — frozen quantizer,
+# stored verdicts never flip (append-only priority: every stored
+# member outranks every new one; new members keep the paper's
+# order among themselves). The oracle restates the WHOLE two-phase
+# rule: trains the quantizer on the OLD subset only (the
+# parameterized ivf_trained_with_block), assigns BOTH subsets with
+# it, and re-derives the stored-covers-new ∪ earlier-new-covers-new
+# prune set.
+# ------------------------------------------------------------------
 _EMB_SPLIT = (3 * _N_EMB) // 4
 _N_EMB_OLD = _driver_old_subset_count(_EMB_SPLIT, "embeddings", "vec_id")
 
@@ -908,6 +947,13 @@ def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ------------------------------------------------------------------
+# quality-aware dedup keep (r17): the Dolma/FineWeb "keep the
+# preferred copy" policy — the component survivor is the member
+# maximizing (n_chars, then smallest id), not the min id. Same
+# simhash pair graph as dedup_cluster_components, so the two keys
+# differ ONLY in the keep rule and the oracle pins exactly that.
+# ------------------------------------------------------------------
 pair_ctes = f"""
     {_simhash_sigs_sql()},
     blocked AS (
@@ -970,6 +1016,12 @@ def q_dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ------------------------------------------------------------------
+# soft dedup (r17): the drop-free dedup policy — keep every
+# near-duplicate, weight each row 1/|component| so a duplicate
+# CLASS contributes one unit of loss mass (SoftDeDup-style
+# reweighting). Same simhash pair graph as the cluster keys.
+# ------------------------------------------------------------------
 @register(
     "dedup_soft_weights",
     oracle=f"""
@@ -1014,6 +1066,14 @@ def q_dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ------------------------------------------------------------------
+# the COMPOSED curation policy (VERDICT r18 item 5): keep the best
+# copy AND down-weight its near-class. Same simhash pair graph and
+# star components as dedup_cluster_keep_best, so the key differs
+# from its r17 sibling ONLY in the added soft mass — and the oracle
+# pins exactly that composition (row_number keep window + the
+# 1/|component| weight from the same membership).
+# ------------------------------------------------------------------
 @register(
     "dedup_cluster_keep_best_soft",
     oracle=f"""

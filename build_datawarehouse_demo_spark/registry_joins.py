@@ -1,4 +1,7 @@
-"""DOCSTRING joins"""
+"""Join keys (``join_*``, ``skew_*``): equi, lookup, as-of, interval,
+range, fuzzy, bucketed, dynamic-partition-pruned and bloom-filtered
+joins, and the salted and AQE skew handling.
+"""
 
 from __future__ import annotations
 

@@ -1,4 +1,11 @@
-"""DOCSTRING parity"""
+"""Relational parity keys: the reference's scan, projection, filter,
+explode, function, generator, aggregate, set-op, sink and source
+operators, plus the row-level analytics (funnel, retention, basket,
+data-quality and profiling) and the UDF/UDTF surface.
+
+Every op is oracle-checked: identical aliases on both sides, money
+through DECIMAL(18,2), row_number windows with a total order.
+"""
 
 from __future__ import annotations
 

@@ -1,4 +1,9 @@
-"""DOCSTRING similarity"""
+"""Similarity and ML keys (``sim_*``, ``ml_*``, ``multimodal_*``): brute
+force and RP-LSH top-k search, trained and persisted IVF indexes,
+k-means, logistic regression, feature hashing, and the frame, audio
+and image plumbing. Cosine scores are rounded to 6dp after exact
+double math on both engines.
+"""
 
 from __future__ import annotations
 
@@ -584,6 +589,14 @@ def q_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk_assigned(assigned, cents, probes, k=5, nprobe=IVF_NPROBE)
 
 
+# ------------------------------------------------------------------
+# query-directed multiprobe over the auto-sized signature (VERDICT
+# r7 item 4): the Hamming-1 lane probes EVERY 1-bit flip (fanout
+# n_planes+1, recovers only 1-bit misses); the directed lane probes
+# all subsets of the T least-confident bits — constant 2^T fanout
+# and multi-bit-miss recovery, which is what holds recall once
+# auto-sizing grows the signature past ~12 planes
+# ------------------------------------------------------------------
 _DP_PLANES = ann_auto_planes(_N_EMB)
 _T_BITS = 3
 _dp_planes = rp_planes(_DP_PLANES, 64)
@@ -749,6 +762,16 @@ def q_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ------------------------------------------------------------------
+# incremental IVF maintenance (VERDICT r8 item 4): build the index
+# on the corpus MINUS the last 50 vectors, append those 50 against
+# the frozen stored quantizer, and hash-verify the final lists
+# against a DuckDB restatement where the quantizer trains on the
+# old rows and the two-level route covers ALL rows — exact parity
+# because append rederives (super-centroids, groups) from the
+# stored centroid table with the same deterministic functions the
+# build used (pytest: appended lists == union-built lists).
+# ------------------------------------------------------------------
 _SPLIT = _N_EMB - 50
 _NL = max(2, math.ceil(math.sqrt(_SPLIT)))
 _SK = ivf_sample_modulus(_SPLIT, _NL)
@@ -831,6 +854,11 @@ def q_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("ivf_app_idx").select("vec_id", "centroid_id")
 
 
+# ------------------------------------------------------------------
+# second r10 curation batch: embedding-space benchmark
+# decontamination (the semantic twin of text_decontaminate) and the
+# per-slice corpus health report.
+# ------------------------------------------------------------------
 _DC_TAU, _DC_BENCH = 0.4, 20
 
 

@@ -1,4 +1,8 @@
-"""DOCSTRING sql"""
+"""Layer-B SQL keys (``sql_*``): the same SQL text runs on Catalyst and
+on DuckDB (SURVEY.md §2 layer B; the reference delegates full SQL to
+DuckDB, we delegate to Catalyst). The ``sql_q*`` keys are the
+TPC-H-shaped queries the warehouse_query benchmark times.
+"""
 
 from __future__ import annotations
 

@@ -1,4 +1,9 @@
-"""DOCSTRING star"""
+"""Star-schema keys: the warehouse build (``pipeline_star_schema_build``),
+surrogate keys, SCD2 history, incremental rollups, CDC apply, the
+partitioned merge and the flagship priority-revenue query. Also the
+Yelp-shaped fixture builder and star-summary oracle that perfbench's
+warehouse_build workload reuses.
+"""
 
 from __future__ import annotations
 

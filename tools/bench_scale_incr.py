@@ -86,7 +86,7 @@ def leg(sf_dir: str, runs: int) -> None:
         training_data_neardup_apply,
         training_data_neardup_state,
     )
-    from build_datawarehouse_demo_spark.registry_round12 import (
+    from build_datawarehouse_demo_spark.registry_common import (
         _CLF_T,
         _GQ_MINW,
         _GQ_STOP,

@@ -48,7 +48,6 @@ OUT = os.path.join(ROOT, "BENCH_SEMDEDUP_SCALE_r10.json")
 LEGS = ["testdata_local/sf1", "testdata_local/sf4", "testdata_local/sf8"]
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 PPC = 4  # see module docstring — keeps the sampled-train regime active
-EPS = 0.3  # _SD_EPS in registry_round10.py
 GPROBE = 2
 
 
@@ -63,6 +62,7 @@ def run_leg(sf_dir: str) -> dict:
         ivf_train_sampled,
         semdedup_prune,
     )
+    from build_datawarehouse_demo_spark.registry_dedup import _SD_EPS
     from pyspark.sql import functions as F
     import bench
 
@@ -95,7 +95,7 @@ def run_leg(sf_dir: str) -> dict:
         assigned = ivf_assign_two_level(
             corpus, cents, sup, groups, gprobe=GPROBE
         )
-        return semdedup_prune(assigned, cents, eps=EPS)
+        return semdedup_prune(assigned, cents, eps=_SD_EPS)
 
     # JIT/codegen warmup on a small slice (same plan shapes, ~2k rows)
     wn = min(n, 2000)

@@ -44,7 +44,7 @@ def main() -> None:
     from build_datawarehouse_demo_spark.plans.training_data import (
         clean_filter_survivors,
     )
-    from build_datawarehouse_demo_spark.registry_round12 import (
+    from build_datawarehouse_demo_spark.registry_common import (
         _CLF_T,
         _GQ_MINW,
         _GQ_STOP,
