@@ -218,21 +218,6 @@ def minhash_signatures_from_arrays(
     return sh_arrays.select(id_col, shingle_col).mapInPandas(kfn, schema=out_schema)
 
 
-def minhash_signatures(
-    shingled: DataFrame, num_hashes: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
-    """MinHash signature per document: for each seed h, the min of
-    hash32(h, shingle) over the doc's shingle set.
-
-    One groupBy(id) computing all H mins at once (map-side partial
-    aggregation halves the shuffle), not H passes.
-    """
-    aggs = [
-        F.min(hash32(F.col("shingle"), seed=h)).alias(f"mh_{h}") for h in range(num_hashes)
-    ]
-    return shingled.groupBy(id_col).agg(*aggs)
-
-
 def lsh_band_keys(
     signatures: DataFrame,
     num_hashes: int = 16,
@@ -453,37 +438,6 @@ def lsh_candidate_pairs(
             F.least("__ia", "__ib").alias("id_a"),
             F.greatest("__ia", "__ib").alias("id_b"),
         )
-    )
-
-
-def exact_jaccard(
-    shingled: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs: intersection via
-    equi-join on shingle, union by inclusion-exclusion. Only candidate
-    pairs are scored — the expensive exact step runs on the LSH-pruned
-    set. Every input pair gets a score row — zero-intersection pairs
-    (pure hash-collision candidates) come back as jaccard 0.0, not as
-    silently missing rows."""
-    sizes = shingled.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = shingled.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = shingled.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    inter = pairs.join(inter, ["id_a", "id_b"], "left").na.fill({"n_inter": 0})
-    return (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .select("id_a", "id_b", "jaccard")
     )
 
 

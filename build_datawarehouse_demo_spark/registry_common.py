@@ -344,21 +344,9 @@ def ivf_trained_with_block(
     )"""
 
 
-# ------------------------------------------------------------------
-# auto-sized ANN search (VERDICT r6 item 2): the n_planes=None lane
-# of ann_rp_lsh_topk finally gets a correctness row — the exact gap
-# that let the dedup lane's fixed signature hide until sf4
-# ------------------------------------------------------------------
 _N_EMB = _driver_rows("embeddings", 500)
 
 
-# ------------------------------------------------------------------
-# auto-sized text MinHash LSH — the round-6 embedding-lane fix
-# applied to the TEXT lane before it bites: fixed rows-per-band
-# makes background candidates grow bands*n^2*j_bg^r (measured 6.8x
-# candidates at 4x docs with the fixed 16/4 default); rows grow
-# log(n) so they stay linear, bands hold recall
-# ------------------------------------------------------------------
 _N_DOCS = _driver_rows("documents", 500)
 _MB, _MR = minhash_auto_params(_N_DOCS)
 #: auto-width SimHash at the driver fixture: per-block bits, signature
@@ -372,12 +360,6 @@ _SHASH = (
 )
 
 
-# ------------------------------------------------------------------
-# exact substring-duplication spans (Lee et al. 2022): the
-# within-document dedup the whole-doc family can't see —
-# boilerplate/licence/quotation spans recurring across otherwise
-# unique documents, with token positions for span removal
-# ------------------------------------------------------------------
 #: span length in tokens of the exact-substring span keys
 _SPAN_W = 5
 
@@ -583,17 +565,6 @@ def _driver_old_subset_count(
         return split_at
 
 
-# ------------------------------------------------------------------
-# incremental composed pipeline (VERDICT r9 item 3): fold a new
-# batch into a persisted pipeline state — reusing the stored band
-# keys, pairs, gram index and output — and prove the refreshed
-# output IDENTICAL to a full rebuild over old ∪ new at the state's
-# frozen banding parameters. The oracle IS that proof: DuckDB runs
-# the FULL chain over all documents (banding pinned from the OLD
-# subset count, the frozen-quantizer discipline of
-# ivf_index_append) while Spark runs the incremental path over the
-# 75/25 split; a hash match means refresh ≡ rebuild on the fixture.
-# ------------------------------------------------------------------
 _SPLIT_AT = (3 * _N_DOCS) // 4
 _N_OLD = _driver_old_subset_count(_SPLIT_AT)
 _MB_OLD, _MR_OLD = minhash_auto_params(_N_OLD)
@@ -667,24 +638,26 @@ def _rag_chunkvec_src() -> str:
 _chunkvec_src = _rag_chunkvec_src()
 
 
-# ------------------------------------------------------------------
-# incremental RAG index refresh: the r10 incremental theme applied
-# to the retrieval index — build the persisted IVF index on the OLD
-# 3/4 of the corpus, fold the NEW 1/4 in via the frozen-quantizer
-# append (chunk -> embed -> ivf_index_append), search the union.
-# The oracle trains the quantizer on the OLD chunk vectors only,
-# assigns BOTH subsets with it (the ivf_index_append contract:
-# appended vectors land in the IDENTICAL list a frozen-quantizer
-# build would have put them in), and replays the nprobe search over
-# the union lists — a hash match proves refresh ≡ frozen-rebuild
-# end to end THROUGH the persisted table round-trip.
-# ------------------------------------------------------------------
 _SPLIT_DOCS = (3 * _N_DOCS) // 4
 _SPLIT_VEC = _SPLIT_DOCS * CHUNK_UID_STRIDE
 _N_OLD_CHUNKS = _driver_chunk_count(_RAG_STEP, max_doc_id=_SPLIT_DOCS)
 _NL_OLD = max(2, math.ceil(math.sqrt(max(1, _N_OLD_CHUNKS))))
 
 
+# ------------------------------------------------------------------
+# the clean-filter-dedup chain (C4 line filters -> Gopher quality ->
+# Gopher repetition -> linear classifier -> MinHash-LSH near-dup ->
+# split) shared by the batch, incremental, migrated, keep-best, soft
+# and streaming clean-filter keys. The fixture corpus is single-line
+# and punctuation-free, so the keys feed it through pageify, a
+# deterministic adapter the oracle restates verbatim: tokens re-joined
+# into 8-word lines, no terminal punctuation on every 4th line, and a
+# planted 'javascript' line (doc_id % 13 == 0), 'lorem ipsum' line
+# (% 17) and '{' line (% 19), so every C4 rule has work. The knobs
+# below make each stage drop some and keep most of the fixture (500
+# pages -> 400 C4 -> 233 quality -> 197 repetition -> 136 classifier
+# -> 132 near-dup reps); paper defaults stay the operators' defaults.
+# ------------------------------------------------------------------
 _EMPTY_LINES = "CAST(array() AS array<string>)"
 
 #: the planted marker lines (engine and oracle share the literals)
@@ -692,7 +665,7 @@ _JS_LINE = "this javascript line should be dropped."
 _LOREM_LINE = "lorem ipsum dolor sit amet."
 _BRACE_LINE = "config { brace."
 
-#: composition knobs (module docstring: tuned to exercise every stage)
+#: composition knobs (tuned as described above)
 _MIN_WPL, _MIN_SENT = 5, 3
 _GQ_MINW, _GQ_STOP = 30, 1
 _TOPG = (0.09, 0.08, 0.16)
@@ -701,7 +674,7 @@ _QC_DIM, _CLF_T = 64, 0.45
 
 def _tok_of(col: str) -> str:
     """DuckDB whitespace tokenization of an arbitrary column — the
-    registry_extensions._TOK convention generalized beyond `text`."""
+    _TOK convention generalized beyond `text`."""
     return rf"list_filter(regexp_split_to_array(trim({col}), '\s+'), x -> x <> '')"
 
 
@@ -780,9 +753,9 @@ def _clean_filter_dedup_sql(
     near-dup (banding supplied, candidates bucket-joined, exact-Jaccard
     verified) → star components (recursive-CTE restatement) → min-id
     representatives → hash split. Every fragment is the SAME SQL shape
-    already green on the component entries (registry_round10 C4 /
-    gopher / classifier, registry_round11 repetition, registry_round9
-    minhash+components), re-rooted on the previous stage's survivors —
+    already green on the component entries (the C4 /
+    gopher / classifier, repetition, and MinHash + components
+    text and dedup keys), re-rooted on the previous stage's survivors —
     so the COMPOSITION is hash-verified end-to-end.
 
     ``keep_best_rank`` (r18): restate the KEEP-BEST policy instead of
@@ -988,10 +961,4 @@ def _clean_filter_dedup_sql(
         ){final}"""
 
 
-# ------------------------------------------------------------------
-# the composed modern cleaning stack (VERDICT r11 item 1): every
-# stage the same individually-oracle-checked operator, restated as
-# ONE DuckDB chain so the composition — stage boundaries included —
-# is hash-verified end-to-end
-# ------------------------------------------------------------------
 _W_SQL = "[" + ", ".join(repr(x) for x in default_classifier_weights(_QC_DIM)) + "]"

@@ -448,6 +448,13 @@ def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ------------------------------------------------------------------
+# auto-sized text MinHash LSH — the round-6 embedding-lane fix
+# applied to the TEXT lane before it bites: fixed rows-per-band
+# makes background candidates grow bands*n^2*j_bg^r (measured 6.8x
+# candidates at 4x docs with the fixed 16/4 default); rows grow
+# log(n) so they stay linear, bands hold recall
+# ------------------------------------------------------------------
 _MNH = _MB * _MR
 
 
@@ -529,6 +536,12 @@ def q_simhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_pairs(sigs, max_hamming=3, blocks=4, bits=4 * w)
 
 
+# ------------------------------------------------------------------
+# exact substring-duplication spans (Lee et al. 2022): the
+# within-document dedup the whole-doc family can't see —
+# boilerplate/licence/quotation spans recurring across otherwise
+# unique documents, with token positions for span removal
+# ------------------------------------------------------------------
 @register(
     "dedup_substring_spans",
     oracle=f"""

@@ -87,7 +87,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ensure_pagerank_share(spark: SparkSession, sf_dir: str) -> None:
     """Write the bucketed+sorted PageRank share table once per
     (session, sf_dir) — same single-slot memo contract as
-    registry_extensions._ensure_bucketed_join_tables, so bench medians
+    registry_joins._ensure_bucketed_join_tables, so bench medians
     time the ITERATIONS (the amortized steady state), not the write."""
     if getattr(spark, "_graft_pr_share_key", None) == sf_dir:
         return

@@ -291,7 +291,7 @@ def q_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the category-bridge pattern: explode + dedup dim + surrogate
-    # key + broadcast join back (/root/reference/transformation.py:149-168).
+    # key + broadcast join back (reference transformation.py:149-168).
     from build_datawarehouse_demo_spark.operators.flatten import explode_delimited
     from build_datawarehouse_demo_spark.operators.joins import broadcast_dim_join
     from build_datawarehouse_demo_spark.operators.keys import surrogate_key_rownum
@@ -318,7 +318,7 @@ def q_join_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_join_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # two-key attribute-bridge join (/root/reference/transformation.py:191-196)
+    # two-key attribute-bridge join (reference transformation.py:191-196)
     from build_datawarehouse_demo_spark.operators.joins import broadcast_dim_join
     from build_datawarehouse_demo_spark.operators.keys import surrogate_key_rownum
 
@@ -342,7 +342,7 @@ def q_join_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left join keeping misses as nulls
-    # (/root/reference/transformation.py:396,406).
+    # (reference transformation.py:396,406).
     from build_datawarehouse_demo_spark.operators.joins import broadcast_dim_join
 
     orders = _t(spark, sf_dir, "orders", rebalance=False).select("o_orderkey", "o_custkey")
@@ -370,7 +370,7 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_date_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dict-lookup join, drop-miss mode — the checkin pattern
-    # (/root/reference/transformation.py:249,266-269), declared as a
+    # (reference transformation.py:249,266-269), declared as a
     # broadcast hash join.
     from build_datawarehouse_demo_spark.operators.joins import resolve_datetime_id
     from build_datawarehouse_demo_spark.sources.generators import gen_date_range
@@ -396,7 +396,7 @@ def q_date_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_date_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep-null mode — the review/tip/weather pattern
-    # (/root/reference/transformation.py:334-351,423-436,453-470).
+    # (reference transformation.py:334-351,423-436,453-470).
     from build_datawarehouse_demo_spark.operators.joins import resolve_datetime_id
     from build_datawarehouse_demo_spark.sources.generators import gen_date_range
 
@@ -636,7 +636,7 @@ def q_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------------
 # edit-distance (Levenshtein) band join — data-cleaning twin of the
 # token-set fuzzy join; the reference's entity-name domain
-# (/root/reference/transformation.py:143-168) is where users reach
+# (reference transformation.py:143-168) is where users reach
 # for edit distance rather than Jaccard
 # ------------------------------------------------------------------
 

@@ -9,6 +9,7 @@ through DECIMAL(18,2), row_number windows with a total order.
 
 from __future__ import annotations
 
+import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -235,7 +236,8 @@ def q_udf_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SCRATCH = "/root/repo/.scratch"
+#: fixture-writer scratch under the checkout (gitignored)
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
 
 @register(
@@ -255,7 +257,7 @@ SCRATCH = "/root/repo/.scratch"
     """,
 )
 def q_gen_date_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # calendar spine (/root/reference/transformation.py:89-137).
+    # calendar spine (reference transformation.py:89-137).
     # full_date surfaces as a string: pandas DATE handling differs
     # between Spark-Arrow (datetime.date) and DuckDB (datetime64),
     # which would break the value hash on identical data.
@@ -275,7 +277,7 @@ def q_gen_date_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_gen_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # hour dim (/root/reference/transformation.py:118-125)
+    # hour dim (reference transformation.py:118-125)
     from build_datawarehouse_demo_spark.sources.generators import gen_hour_dim
 
     return gen_hour_dim(spark)
@@ -284,7 +286,7 @@ def q_gen_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("src_json_scan", oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation")
 def q_src_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JSON-lines scan with explicit schema
-    # (/root/reference/transformation.py:53-75): round-trip the
+    # (reference transformation.py:53-75): round-trip the
     # nation table through newline-delimited JSON and scan it back.
     from build_datawarehouse_demo_spark.sources.readers import read_json_lines
 
@@ -303,7 +305,7 @@ def q_src_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("src_csv_scan", oracle="SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier")
 def q_src_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CSV scan with header + explicit schema
-    # (/root/reference/transformation.py:77-87).
+    # (reference transformation.py:77-87).
     from build_datawarehouse_demo_spark.sources.readers import read_csv
 
     path = f"{SCRATCH}/supplier_csv"
@@ -415,7 +417,7 @@ def q_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CREATE OR REPLACE TABLE ... AS SELECT with empty-skip
-    # (/root/reference/transformation.py:517-547): write the brand
+    # (reference transformation.py:517-547): write the brand
     # dim as a catalog table, then read it back from the catalog.
     from build_datawarehouse_demo_spark.operators.keys import surrogate_key_rownum
     from build_datawarehouse_demo_spark.sources.writers import save_table
@@ -437,7 +439,7 @@ def q_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_show_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # SHOW TABLES (/root/reference/test_sql.py:8) over the
+    # SHOW TABLES (reference test_sql.py:8) over the
     # registered star views, filtered to the known set so the
     # result is independent of other session state.
     from build_datawarehouse_demo_spark.sources.catalog import show_tables
@@ -464,7 +466,7 @@ def q_show_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_proj(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection + bulk rename + predicate
-    # (/root/reference/transformation.py:143-145,293-300); filter and
+    # (reference transformation.py:143-145,293-300); filter and
     # projection push to the parquet scan via Catalyst.
     return (
         _t(spark, sf_dir, "customer", rebalance=False)
@@ -482,7 +484,7 @@ def q_proj(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT doc_id, lang FROM documents WHERE text IS NOT NULL AND text <> ''",
 )
 def q_filter_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # (/root/reference/transformation.py:151,393,403)
+    # (reference transformation.py:151,393,403)
     from build_datawarehouse_demo_spark.operators.flatten import filter_not_null_not_empty
 
     return filter_not_null_not_empty(_t(spark, sf_dir, "documents", rebalance=False), "text").select("doc_id", "lang")
@@ -503,7 +505,7 @@ def q_filter_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dropna(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left-join then drop unresolved rows — the checkin date pattern
-    # (/root/reference/transformation.py:263-269).
+    # (reference transformation.py:263-269).
     from build_datawarehouse_demo_spark.operators.joins import resolve_datetime_id
     from build_datawarehouse_demo_spark.sources.generators import gen_date_range
 
@@ -526,7 +528,7 @@ def q_dropna(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT DISTINCT o_orderpriority, o_orderstatus FROM orders",
 )
 def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # drop_duplicates() dim builds (/root/reference/transformation.py:159,187,301)
+    # drop_duplicates() dim builds (reference transformation.py:159,187,301)
     return _t(spark, sf_dir, "orders", rebalance=False).select("o_orderpriority", "o_orderstatus").dropDuplicates()
 
 
@@ -542,7 +544,7 @@ def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_distinct_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drop_duplicates(subset=['date_id']) for dim_date
-    # (/root/reference/transformation.py:127-131). The non-key
+    # (reference transformation.py:127-131). The non-key
     # columns are functionally dependent on date_id, so Spark's
     # arbitrary-row-per-key semantics are deterministic here —
     # exactly the situation in the reference.
@@ -571,7 +573,7 @@ def q_distinct_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pd.concat chunk reassembly (/root/reference/transformation.py:71,364)
+    # pd.concat chunk reassembly (reference transformation.py:71,364)
     orders = _t(spark, sf_dir, "orders", rebalance=False)
     a = orders.filter(F.col("o_orderstatus") == "F").select("o_orderkey", "o_orderstatus")
     b = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
@@ -594,7 +596,7 @@ def q_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_explode_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delimited-string explode (categories/elite/friends,
-    # /root/reference/transformation.py:149-155,389-403).
+    # reference transformation.py:149-155,389-403).
     from build_datawarehouse_demo_spark.operators.flatten import explode_delimited
 
     return explode_delimited(
@@ -612,7 +614,7 @@ def q_explode_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_explode_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map explode (business attributes,
-    # /root/reference/transformation.py:174-182): parse the JSON
+    # reference transformation.py:174-182): parse the JSON
     # props into MapType then explode — no row loop.
     from build_datawarehouse_demo_spark.operators.flatten import explode_map
 
@@ -644,7 +646,7 @@ def q_explode_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_explode_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JSON-string array-of-objects explode (covid highlights,
-    # /root/reference/transformation.py:304-322): from_json +
+    # reference transformation.py:304-322): from_json +
     # explode_outer + struct-field access; malformed input → null
     # element, matching the reference's try/except.
     from build_datawarehouse_demo_spark.operators.flatten import explode_json_array
@@ -693,7 +695,7 @@ def q_explode_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     # {day: "H:M-H:M"} parse with the %24 wrap, emitting the
     # reference's exact column set incl. raw open_time/close_time
-    # (/root/reference/transformation.py:201-229). Hour-range map
+    # (reference transformation.py:201-229). Hour-range map
     # synthesized from event timestamps; parse path is the real op.
     from build_datawarehouse_demo_spark.operators.flatten import parse_hour_ranges
 
@@ -729,7 +731,7 @@ def q_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fn_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the §2.8 scalar inventory: strftime formats, day-name, quarter,
     # zero-pad, trim, cast, modulo
-    # (/root/reference/transformation.py:100-135,123,181,210,260).
+    # (reference transformation.py:100-135,123,181,210,260).
     return _t(spark, sf_dir, "orders", rebalance=False).select(
         "o_orderkey",
         F.date_format("o_orderdate", "yyyyMMdd").cast("int").alias("date_id"),
@@ -750,7 +752,7 @@ def q_fn_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     # json.loads + .get() field access
-    # (/root/reference/transformation.py:310,317-319).
+    # (reference transformation.py:310,317-319).
     return _t(spark, sf_dir, "events", rebalance=False).select(
         "event_id",
         F.get_json_object("props", "$.k").cast("int").alias("k_value"),
@@ -768,7 +770,7 @@ def q_fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_fn_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pd.to_datetime(errors='coerce') null-on-failure semantics
-    # (/root/reference/transformation.py:260): 1% of rows corrupted,
+    # (reference transformation.py:260): 1% of rows corrupted,
     # parse must yield null for them, values for the rest.
     ev = _t(spark, sf_dir, "events", rebalance=False).select(
         "event_id",
@@ -1505,7 +1507,7 @@ def q_regexp_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_fetch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fetch_df (sources/catalog.py:19; reference fetchdf(),
-    /root/reference/test_sql.py:8,14) exercised end-to-end: SQL
+    reference test_sql.py:8,14) exercised end-to-end: SQL
     over the registered star views, Arrow transfer to pandas at
     the driver, then re-ingested so the driver's value hash
     verifies the round-trip. The client boundary only — never an

@@ -267,8 +267,8 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines pick the identical docs. r9: quotas now come from the
     exact-integer temperature_quotas contract; the oracle pins
     them via the SAME function at the fixture counts (the r6
-    pinned-constant discipline), and the T=1 sibling in
-    registry_round9 keeps a fully-SQL-independent quota oracle."""
+    pinned-constant discipline), and the T=1 sibling
+    (sample_temperature_mix_t1) keeps a fully-SQL-independent quota oracle."""
     from build_datawarehouse_demo_spark.operators.sampling import (
         sample_temperature_mix,
     )
@@ -490,7 +490,7 @@ def _driver_source_token_sums(
 # (the 10^30 fixed-point scale cancels exactly under floor
 # division); T=2 pins quotas through temperature_quotas at
 # fixture-derived token totals — the same two-tier verification
-# the document-quota family uses (registry_round9).
+# the document-quota family uses (sample_temperature_mix_t*).
 # ------------------------------------------------------------------
 _TBUDGET = 5000
 _rank_hash = _HASH32.format(expr="'0:tokmix:' || CAST(doc_id AS VARCHAR)")

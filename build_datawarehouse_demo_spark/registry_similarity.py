@@ -430,6 +430,12 @@ def ivf_trained_search_sql() -> str:
     """
 
 
+# ------------------------------------------------------------------
+# auto-sized ANN search (VERDICT r6 item 2): the n_planes=None lane
+# of ann_rp_lsh_topk finally gets a correctness row — the exact gap
+# that let the dedup lane's fixed signature hide until sf4
+# ------------------------------------------------------------------
+
 # the SAME function the impl calls — no formula mirroring to drift
 _AUTO_PLANES = ann_auto_planes(_N_EMB)
 _ap = rp_planes(_AUTO_PLANES, 64)
@@ -490,7 +496,7 @@ def q_ann_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str, force: bool = False):
     """Write the trained-IVF index once per (session, sf_dir) — the
-    same single-slot memo contract as registry_extensions'
+    same single-slot memo contract as
     _ensure_ann_index: the build entry always writes (it times the
     ingest), the search entry reuses a current build."""
     import math

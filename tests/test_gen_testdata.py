@@ -64,6 +64,6 @@ def test_documents_text_is_ascii():
         for v in chunk.to_pylist():
             assert v is not None and v.isascii(), (
                 "documents.text contains non-ASCII content; the char-based "
-                "multimodal oracles (registry_round8.multimodal_audio_windows, "
-                "registry_round5 frame ops) no longer mirror the byte lanes"
+                "multimodal oracles (registry_similarity: multimodal_audio_windows "
+                "and the frame ops) no longer mirror the byte lanes"
             )
