@@ -306,182 +306,6 @@ def q_merge_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The whole fixture derivation + star-schema build restated in DuckDB
-# SQL, one summary row per warehouse table. Each CTE mirrors a build
-# step (file:line refs point at the Spark implementation being
-# replicated). dtid(x) = datediff from the spine start is
-# resolve_datetime_id's join outcome for in-spine dates.
-_STAR_ORACLE = """
-WITH
-spine AS (
-  SELECT d,
-         CAST(datediff('day', DATE '1948-09-06', CAST(d AS DATE)) AS BIGINT) AS dtid,
-         CAST(strftime(d, '%Y%m%d') AS BIGINT) AS date_id,
-         CAST(dayofmonth(d) AS BIGINT) AS day, CAST(month(d) AS BIGINT) AS month,
-         CAST(year(d) AS BIGINT) AS year, CAST(quarter(d) AS BIGINT) AS quarter,
-         length(dayname(d)) AS dowlen
-  FROM generate_series(DATE '1948-09-06', DATE '2025-12-31', INTERVAL 1 DAY) AS t(d)
-),
-pp AS (SELECT p_partkey AS p, p_name, p_brand, p_type, p_size FROM part),
-cc AS (SELECT c_custkey AS c, c_name FROM customer),
-oo AS (
-  SELECT o_orderkey AS ok, o_custkey AS ck, o_orderpriority AS prio,
-         CAST(datediff('day', DATE '1948-09-06', CAST(o_orderdate AS DATE)) AS BIGINT) AS dtid,
-         CAST(o_orderdate AS DATE) AS od
-  FROM orders
-),
-cats AS (
-  SELECT c AS name FROM (
-    SELECT DISTINCT p_type AS c FROM pp WHERE p % 10 NOT IN (0, 1)
-    UNION SELECT DISTINCT p_brand FROM pp WHERE p % 10 NOT IN (0, 1)
-  )
-),
-cat_ids AS (SELECT name, row_number() OVER (ORDER BY name) AS id FROM cats),
-cat_rows AS (
-  SELECT p, p_type AS name FROM pp WHERE p % 10 NOT IN (0, 1)
-  UNION ALL SELECT p, p_brand FROM pp WHERE p % 10 NOT IN (0, 1)
-),
-attr_rows AS (
-  SELECT p, 'Brand' AS an, p_brand AS av FROM pp WHERE p % 7 <> 0
-  UNION ALL SELECT p, 'Size', CAST(p_size AS VARCHAR) FROM pp WHERE p % 7 <> 0
-),
-attr_ids AS (
-  SELECT an, av, row_number() OVER (ORDER BY an, av) AS id
-  FROM (SELECT DISTINCT an, av FROM attr_rows)
-),
-hours_rows AS (  -- Monday fixed 9-17; Friday p%14 -> +12 with %24 wrap; Sunday 'garbage' dropped
-  SELECT p, 9 AS oh, 17 AS ch, 6 AS dlen, 3 AS otlen, 4 AS ctlen FROM pp WHERE p % 5 <> 0
-  UNION ALL
-  SELECT p, p % 14, (p % 14 + 12) % 24, 6,
-         length(CAST(p % 14 AS VARCHAR)) + 2, length(CAST(p % 14 + 12 AS VARCHAR)) + 2
-  FROM pp WHERE p % 5 <> 0
-),
-elite_rows AS (
-  SELECT c, '2015' AS yr FROM cc WHERE c % 4 = 1
-  UNION ALL SELECT c, y FROM cc, unnest(['2015', '2016']) AS u(y) WHERE c % 4 = 2
-  UNION ALL SELECT c, y FROM cc, unnest(['2016', '2017', '2018']) AS u(y) WHERE c % 4 = 3
-),
-elite_ids AS (
-  SELECT yr, row_number() OVER (ORDER BY yr) AS id
-  FROM (SELECT DISTINCT yr FROM elite_rows)
-),
-friend_rows AS (
-  SELECT c, 'u' || CAST(c % 50 AS VARCHAR) AS fn FROM cc WHERE c % 3 <> 0
-  UNION ALL SELECT c, 'u' || CAST(c % 97 AS VARCHAR) FROM cc WHERE c % 3 <> 0
-),
-friend_ids AS (
-  SELECT fn, row_number() OVER (ORDER BY fn) AS id
-  FROM (SELECT DISTINCT fn FROM friend_rows)
-),
-hl_rows AS (
-  SELECT p, 'h' || CAST(p % 7 AS VARCHAR) AS ident, 'p' AS par, 't1' AS typ
-  FROM pp WHERE p % 4 = 0 AND p % 3 = 0
-  UNION ALL
-  SELECT p, 'h' || CAST(p % 5 AS VARCHAR), 'q', 't2'
-  FROM pp WHERE p % 4 = 0 AND p % 3 = 0
-),
-hl_ids AS (
-  SELECT ident, par, typ, row_number() OVER (ORDER BY ident, par, typ) AS id
-  FROM (SELECT DISTINCT ident, par, typ FROM hl_rows)
-),
-tdays AS (
-  SELECT CAST(dayofmonth(od) AS BIGINT) AS day, CAST(month(od) AS BIGINT) AS mon,
-         CAST(datediff('day', DATE '1948-09-06', od) AS BIGINT) AS dtid
-  FROM (SELECT DISTINCT od FROM oo)
-),
-tips AS (
-  SELECT CAST(datediff('day', DATE '1948-09-06', CAST(l_shipdate AS DATE)) AS BIGINT) AS dtid,
-         CAST(l_quantity AS BIGINT) AS comp, l_partkey % 2000 AS bk, l_suppkey % 1500 AS uk
-  FROM lineitem WHERE l_linenumber = 1 AND l_orderkey % 4 = 0
-)
-SELECT * FROM (
-  SELECT 'dim_datetime' AS table_name, count(*) AS n_rows,
-         CAST(sum(dtid + date_id + day + month + year + quarter + 0 + dowlen) AS BIGINT) AS checksum
-  FROM spine
-  UNION ALL
-  SELECT 'dim_date', count(*),
-         CAST(sum(date_id + year + month + day + quarter + dowlen) AS BIGINT)
-  FROM spine
-  UNION ALL
-  SELECT 'dim_hour', 24, CAST(sum(r + 2) AS BIGINT) FROM range(24) AS t(r)
-  UNION ALL
-  SELECT 'dim_business', count(*),
-         CAST(sum(p + p_size + p % 2 + (p % 5 + 1) + length(p_name) + length(p_brand)
-                  + length(CAST(p_size AS VARCHAR))) AS BIGINT)
-  FROM pp
-  UNION ALL
-  SELECT 'dim_category', count(*), CAST(sum(id * length(name)) AS BIGINT) FROM cat_ids
-  UNION ALL
-  SELECT 'fact_business_categories', count(*), CAST(sum(i.id * (1 + r.p)) AS BIGINT)
-  FROM cat_rows r JOIN cat_ids i ON i.name = r.name
-  UNION ALL
-  SELECT 'dim_attribute', count(*),
-         CAST(sum(id * (length(an) + length(av))) AS BIGINT) FROM attr_ids
-  UNION ALL
-  SELECT 'fact_business_attributes', count(*), CAST(sum(i.id * (1 + r.p)) AS BIGINT)
-  FROM attr_rows r JOIN attr_ids i ON i.an = r.an AND i.av = r.av
-  UNION ALL
-  SELECT 'fact_business_hours', count(*),
-         CAST(sum(p + oh + ch + dlen + otlen + ctlen) AS BIGINT) FROM hours_rows
-  UNION ALL
-  SELECT 'dim_user', count(*),
-         CAST(sum(c + c % 100 + c % 7 + c % 5 + c % 3 + c % 11
-                  + round(((c % 40 + 10) / 10.0) * 10)
-                  + length(c_name)
-                  + year(DATE '2010-01-01' + CAST(c % 2000 AS INTEGER))) AS BIGINT)
-  FROM cc
-  UNION ALL
-  SELECT 'dim_elite', count(*), CAST(sum(id * CAST(yr AS BIGINT)) AS BIGINT) FROM elite_ids
-  UNION ALL
-  SELECT 'fact_user_elite', count(*), CAST(sum(i.id * (1 + r.c)) AS BIGINT)
-  FROM elite_rows r JOIN elite_ids i ON i.yr = r.yr
-  UNION ALL
-  SELECT 'dim_friend', count(*),
-         CAST(sum(id * (1 + CAST(substr(fn, 2) AS BIGINT))) AS BIGINT) FROM friend_ids
-  UNION ALL
-  SELECT 'fact_user_friend', count(*), CAST(sum(i.id * (1 + r.c)) AS BIGINT)
-  FROM friend_rows r JOIN friend_ids i ON i.fn = r.fn
-  UNION ALL
-  SELECT 'fact_reviews', count(*),
-         CAST(sum(ok + (ok % 5 + 1) + ok % 4 + ok % 3 + ok % 2 + length(prio)
-                  + ck + ok % 2000
-                  + CASE WHEN ok % 97 = 0 THEN -1 ELSE dtid END) AS BIGINT)
-  FROM oo
-  UNION ALL
-  SELECT 'fact_checkins', count(*),
-         CAST(sum(ck % 300 + dtid) + count(*) * (count(*) + 1) // 2 AS BIGINT)
-  FROM oo WHERE ok % 89 <> 0
-  UNION ALL
-  SELECT 'fact_tips', count(*),
-         CAST(sum(dtid + comp + 2 + bk + uk) AS BIGINT) FROM tips
-  UNION ALL
-  SELECT 'fact_covid_features', count(*),
-         CAST(sum(p
-                  + CASE WHEN p % 8 = 0 THEN 4 ELSE 5 END
-                  + CASE WHEN p % 3 = 0 THEN 4 ELSE 5 END
-                  + CASE WHEN p % 5 = 0 THEN 0 ELSE 5 END
-                  + 0
-                  + CASE WHEN p % 6 = 0 THEN 4 ELSE 5 END) AS BIGINT)
-  FROM pp WHERE p % 4 = 0
-  UNION ALL
-  SELECT 'dim_highlights', count(*),
-         CAST(sum(id * (length(ident) + length(par) + length(typ))) AS BIGINT) FROM hl_ids
-  UNION ALL
-  SELECT 'fact_business_highlights', count(*), CAST(sum(i.id * (1 + r.p)) AS BIGINT)
-  FROM hl_rows r JOIN hl_ids i ON i.ident = r.ident AND i.par = r.par AND i.typ = r.typ
-  UNION ALL
-  SELECT 'dim_temperature', count(*) + 1,
-         CAST(sum(dtid + day + (day + 20) + mon + (mon + 15)) + (-1 + 1 + 2 + 1 + 2) AS BIGINT)
-  FROM tdays
-  UNION ALL
-  SELECT 'dim_precipitation', count(*),
-         CAST(sum(dtid + CASE WHEN day % 10 = 0 THEN -7 ELSE day END + day * 2) AS BIGINT)
-  FROM tdays WHERE mon = 1
-)
-ORDER BY table_name
-"""
-
-
 def _yelp_fixture_from_driver_tables(
     spark: SparkSession, sf_dir: str
 ) -> dict[str, DataFrame]:
@@ -709,6 +533,182 @@ def _summarize_warehouse(wh: dict[str, DataFrame]) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.orderBy("table_name")
+
+
+# The whole fixture derivation + star-schema build restated in DuckDB
+# SQL, one summary row per warehouse table. Each CTE mirrors a build
+# step (file:line refs point at the Spark implementation being
+# replicated). dtid(x) = datediff from the spine start is
+# resolve_datetime_id's join outcome for in-spine dates.
+_STAR_ORACLE = """
+WITH
+spine AS (
+  SELECT d,
+         CAST(datediff('day', DATE '1948-09-06', CAST(d AS DATE)) AS BIGINT) AS dtid,
+         CAST(strftime(d, '%Y%m%d') AS BIGINT) AS date_id,
+         CAST(dayofmonth(d) AS BIGINT) AS day, CAST(month(d) AS BIGINT) AS month,
+         CAST(year(d) AS BIGINT) AS year, CAST(quarter(d) AS BIGINT) AS quarter,
+         length(dayname(d)) AS dowlen
+  FROM generate_series(DATE '1948-09-06', DATE '2025-12-31', INTERVAL 1 DAY) AS t(d)
+),
+pp AS (SELECT p_partkey AS p, p_name, p_brand, p_type, p_size FROM part),
+cc AS (SELECT c_custkey AS c, c_name FROM customer),
+oo AS (
+  SELECT o_orderkey AS ok, o_custkey AS ck, o_orderpriority AS prio,
+         CAST(datediff('day', DATE '1948-09-06', CAST(o_orderdate AS DATE)) AS BIGINT) AS dtid,
+         CAST(o_orderdate AS DATE) AS od
+  FROM orders
+),
+cats AS (
+  SELECT c AS name FROM (
+    SELECT DISTINCT p_type AS c FROM pp WHERE p % 10 NOT IN (0, 1)
+    UNION SELECT DISTINCT p_brand FROM pp WHERE p % 10 NOT IN (0, 1)
+  )
+),
+cat_ids AS (SELECT name, row_number() OVER (ORDER BY name) AS id FROM cats),
+cat_rows AS (
+  SELECT p, p_type AS name FROM pp WHERE p % 10 NOT IN (0, 1)
+  UNION ALL SELECT p, p_brand FROM pp WHERE p % 10 NOT IN (0, 1)
+),
+attr_rows AS (
+  SELECT p, 'Brand' AS an, p_brand AS av FROM pp WHERE p % 7 <> 0
+  UNION ALL SELECT p, 'Size', CAST(p_size AS VARCHAR) FROM pp WHERE p % 7 <> 0
+),
+attr_ids AS (
+  SELECT an, av, row_number() OVER (ORDER BY an, av) AS id
+  FROM (SELECT DISTINCT an, av FROM attr_rows)
+),
+hours_rows AS (  -- Monday fixed 9-17; Friday p%14 -> +12 with %24 wrap; Sunday 'garbage' dropped
+  SELECT p, 9 AS oh, 17 AS ch, 6 AS dlen, 3 AS otlen, 4 AS ctlen FROM pp WHERE p % 5 <> 0
+  UNION ALL
+  SELECT p, p % 14, (p % 14 + 12) % 24, 6,
+         length(CAST(p % 14 AS VARCHAR)) + 2, length(CAST(p % 14 + 12 AS VARCHAR)) + 2
+  FROM pp WHERE p % 5 <> 0
+),
+elite_rows AS (
+  SELECT c, '2015' AS yr FROM cc WHERE c % 4 = 1
+  UNION ALL SELECT c, y FROM cc, unnest(['2015', '2016']) AS u(y) WHERE c % 4 = 2
+  UNION ALL SELECT c, y FROM cc, unnest(['2016', '2017', '2018']) AS u(y) WHERE c % 4 = 3
+),
+elite_ids AS (
+  SELECT yr, row_number() OVER (ORDER BY yr) AS id
+  FROM (SELECT DISTINCT yr FROM elite_rows)
+),
+friend_rows AS (
+  SELECT c, 'u' || CAST(c % 50 AS VARCHAR) AS fn FROM cc WHERE c % 3 <> 0
+  UNION ALL SELECT c, 'u' || CAST(c % 97 AS VARCHAR) FROM cc WHERE c % 3 <> 0
+),
+friend_ids AS (
+  SELECT fn, row_number() OVER (ORDER BY fn) AS id
+  FROM (SELECT DISTINCT fn FROM friend_rows)
+),
+hl_rows AS (
+  SELECT p, 'h' || CAST(p % 7 AS VARCHAR) AS ident, 'p' AS par, 't1' AS typ
+  FROM pp WHERE p % 4 = 0 AND p % 3 = 0
+  UNION ALL
+  SELECT p, 'h' || CAST(p % 5 AS VARCHAR), 'q', 't2'
+  FROM pp WHERE p % 4 = 0 AND p % 3 = 0
+),
+hl_ids AS (
+  SELECT ident, par, typ, row_number() OVER (ORDER BY ident, par, typ) AS id
+  FROM (SELECT DISTINCT ident, par, typ FROM hl_rows)
+),
+tdays AS (
+  SELECT CAST(dayofmonth(od) AS BIGINT) AS day, CAST(month(od) AS BIGINT) AS mon,
+         CAST(datediff('day', DATE '1948-09-06', od) AS BIGINT) AS dtid
+  FROM (SELECT DISTINCT od FROM oo)
+),
+tips AS (
+  SELECT CAST(datediff('day', DATE '1948-09-06', CAST(l_shipdate AS DATE)) AS BIGINT) AS dtid,
+         CAST(l_quantity AS BIGINT) AS comp, l_partkey % 2000 AS bk, l_suppkey % 1500 AS uk
+  FROM lineitem WHERE l_linenumber = 1 AND l_orderkey % 4 = 0
+)
+SELECT * FROM (
+  SELECT 'dim_datetime' AS table_name, count(*) AS n_rows,
+         CAST(sum(dtid + date_id + day + month + year + quarter + 0 + dowlen) AS BIGINT) AS checksum
+  FROM spine
+  UNION ALL
+  SELECT 'dim_date', count(*),
+         CAST(sum(date_id + year + month + day + quarter + dowlen) AS BIGINT)
+  FROM spine
+  UNION ALL
+  SELECT 'dim_hour', 24, CAST(sum(r + 2) AS BIGINT) FROM range(24) AS t(r)
+  UNION ALL
+  SELECT 'dim_business', count(*),
+         CAST(sum(p + p_size + p % 2 + (p % 5 + 1) + length(p_name) + length(p_brand)
+                  + length(CAST(p_size AS VARCHAR))) AS BIGINT)
+  FROM pp
+  UNION ALL
+  SELECT 'dim_category', count(*), CAST(sum(id * length(name)) AS BIGINT) FROM cat_ids
+  UNION ALL
+  SELECT 'fact_business_categories', count(*), CAST(sum(i.id * (1 + r.p)) AS BIGINT)
+  FROM cat_rows r JOIN cat_ids i ON i.name = r.name
+  UNION ALL
+  SELECT 'dim_attribute', count(*),
+         CAST(sum(id * (length(an) + length(av))) AS BIGINT) FROM attr_ids
+  UNION ALL
+  SELECT 'fact_business_attributes', count(*), CAST(sum(i.id * (1 + r.p)) AS BIGINT)
+  FROM attr_rows r JOIN attr_ids i ON i.an = r.an AND i.av = r.av
+  UNION ALL
+  SELECT 'fact_business_hours', count(*),
+         CAST(sum(p + oh + ch + dlen + otlen + ctlen) AS BIGINT) FROM hours_rows
+  UNION ALL
+  SELECT 'dim_user', count(*),
+         CAST(sum(c + c % 100 + c % 7 + c % 5 + c % 3 + c % 11
+                  + round(((c % 40 + 10) / 10.0) * 10)
+                  + length(c_name)
+                  + year(DATE '2010-01-01' + CAST(c % 2000 AS INTEGER))) AS BIGINT)
+  FROM cc
+  UNION ALL
+  SELECT 'dim_elite', count(*), CAST(sum(id * CAST(yr AS BIGINT)) AS BIGINT) FROM elite_ids
+  UNION ALL
+  SELECT 'fact_user_elite', count(*), CAST(sum(i.id * (1 + r.c)) AS BIGINT)
+  FROM elite_rows r JOIN elite_ids i ON i.yr = r.yr
+  UNION ALL
+  SELECT 'dim_friend', count(*),
+         CAST(sum(id * (1 + CAST(substr(fn, 2) AS BIGINT))) AS BIGINT) FROM friend_ids
+  UNION ALL
+  SELECT 'fact_user_friend', count(*), CAST(sum(i.id * (1 + r.c)) AS BIGINT)
+  FROM friend_rows r JOIN friend_ids i ON i.fn = r.fn
+  UNION ALL
+  SELECT 'fact_reviews', count(*),
+         CAST(sum(ok + (ok % 5 + 1) + ok % 4 + ok % 3 + ok % 2 + length(prio)
+                  + ck + ok % 2000
+                  + CASE WHEN ok % 97 = 0 THEN -1 ELSE dtid END) AS BIGINT)
+  FROM oo
+  UNION ALL
+  SELECT 'fact_checkins', count(*),
+         CAST(sum(ck % 300 + dtid) + count(*) * (count(*) + 1) // 2 AS BIGINT)
+  FROM oo WHERE ok % 89 <> 0
+  UNION ALL
+  SELECT 'fact_tips', count(*),
+         CAST(sum(dtid + comp + 2 + bk + uk) AS BIGINT) FROM tips
+  UNION ALL
+  SELECT 'fact_covid_features', count(*),
+         CAST(sum(p
+                  + CASE WHEN p % 8 = 0 THEN 4 ELSE 5 END
+                  + CASE WHEN p % 3 = 0 THEN 4 ELSE 5 END
+                  + CASE WHEN p % 5 = 0 THEN 0 ELSE 5 END
+                  + 0
+                  + CASE WHEN p % 6 = 0 THEN 4 ELSE 5 END) AS BIGINT)
+  FROM pp WHERE p % 4 = 0
+  UNION ALL
+  SELECT 'dim_highlights', count(*),
+         CAST(sum(id * (length(ident) + length(par) + length(typ))) AS BIGINT) FROM hl_ids
+  UNION ALL
+  SELECT 'fact_business_highlights', count(*), CAST(sum(i.id * (1 + r.p)) AS BIGINT)
+  FROM hl_rows r JOIN hl_ids i ON i.ident = r.ident AND i.par = r.par AND i.typ = r.typ
+  UNION ALL
+  SELECT 'dim_temperature', count(*) + 1,
+         CAST(sum(dtid + day + (day + 20) + mon + (mon + 15)) + (-1 + 1 + 2 + 1 + 2) AS BIGINT)
+  FROM tdays
+  UNION ALL
+  SELECT 'dim_precipitation', count(*),
+         CAST(sum(dtid + CASE WHEN day % 10 = 0 THEN -7 ELSE day END + day * 2) AS BIGINT)
+  FROM tdays WHERE mon = 1
+)
+ORDER BY table_name
+"""
 
 
 # ------------------------------------------------------------------
