@@ -236,6 +236,29 @@ def _topk_sql(k: int = 5, col: str = "cos") -> str:
     FROM ranked WHERE rank <= {k}"""
 
 
+def _two_level_sql(src: str = "e", route: str = "route", lists: str = "lists") -> str:
+    """Two-level IVF assignment over ``src`` (vec_id, v): ``route`` sends
+    each vector to its IVF_GPROBE nearest super-centroids of ``s1``,
+    ``lists`` picks the nearest centroid of ``c2`` among the routed
+    groups (``grp``: cid -> gid), as ivf_assign_two_level does."""
+    return f"""{route} AS (
+      SELECT vec_id, gid, v FROM (
+        SELECT e.vec_id, s.cid AS gid, e.v,
+               row_number() OVER (PARTITION BY e.vec_id
+                   ORDER BY {_cos_sql("e.v", "s.cv")} DESC, s.cid) AS rn
+        FROM {src}, s1 s
+      ) WHERE rn <= {IVF_GPROBE}
+    ),
+    {lists} AS (
+      SELECT vec_id, cid, v FROM (
+        SELECT r.vec_id, g.cid, r.v,
+               row_number() OVER (PARTITION BY r.vec_id
+                   ORDER BY {_cos_sql("r.v", "c.cv")} DESC, g.cid) AS rn
+        FROM {route} r JOIN grp g ON g.gid = r.gid JOIN c2 c ON c.cid = g.cid
+      ) WHERE rn = 1
+    )"""
+
+
 #: the trained-IVF pins — derived from the SAME functions the impl
 #: calls at runtime, never re-derived formulas (r6 ADVICE discipline)
 IVF_NPROBE = 4
@@ -326,22 +349,7 @@ def ivf_trained_with_block(
         FROM c2 c, s1 s
       ) WHERE rn = 1
     ),
-    route AS (
-      SELECT vec_id, gid, v FROM (
-        SELECT e.vec_id, s.cid AS gid, e.v,
-               row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY {_cos_sql("e.v", "s.cv")} DESC, s.cid) AS rn
-        FROM e, s1 s
-      ) WHERE rn <= {IVF_GPROBE}
-    ),
-    lists AS (
-      SELECT vec_id, cid, v FROM (
-        SELECT r.vec_id, g.cid, r.v,
-               row_number() OVER (PARTITION BY r.vec_id
-                   ORDER BY {_cos_sql("r.v", "c.cv")} DESC, g.cid) AS rn
-        FROM route r JOIN grp g ON g.gid = r.gid JOIN c2 c ON c.cid = g.cid
-      ) WHERE rn = 1
-    )"""
+    {_two_level_sql()}"""
 
 
 _N_EMB = _driver_rows("embeddings", 500)
@@ -670,6 +678,14 @@ _MIN_WPL, _MIN_SENT = 5, 3
 _GQ_MINW, _GQ_STOP = 30, 1
 _TOPG = (0.09, 0.08, 0.16)
 _QC_DIM, _CLF_T = 64, 0.45
+#: the same knobs as the clean-filter plan functions' keyword arguments
+_CF_KNOBS = dict(
+    min_words=_GQ_MINW,
+    min_stopword_hits=_GQ_STOP,
+    max_top_gram_char_frac=_TOPG,
+    clf_dim=_QC_DIM,
+    clf_threshold=_CLF_T,
+)
 
 
 def _tok_of(col: str) -> str:

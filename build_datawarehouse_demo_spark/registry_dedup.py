@@ -40,6 +40,7 @@ from build_datawarehouse_demo_spark.registry_common import (
     _SW,
     _t,
     _TOK,
+    _two_level_sql,
 )
 
 
@@ -841,22 +842,7 @@ _N_EMB_OLD = _driver_old_subset_count(_EMB_SPLIT, "embeddings", "vec_id")
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
       WHERE vec_id >= {_EMB_SPLIT}
     ),
-    route_n AS (
-      SELECT vec_id, gid, v FROM (
-        SELECT e.vec_id, s.cid AS gid, e.v,
-               row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY {_cos_sql("e.v", "s.cv")} DESC, s.cid) AS rn
-        FROM en e, s1 s
-      ) WHERE rn <= {IVF_GPROBE}
-    ),
-    lists_n AS (
-      SELECT vec_id, cid, v FROM (
-        SELECT r.vec_id, g.cid, r.v,
-               row_number() OVER (PARTITION BY r.vec_id
-                   ORDER BY {_cos_sql("r.v", "c.cv")} DESC, g.cid) AS rn
-        FROM route_n r JOIN grp g ON g.gid = r.gid JOIN c2 c ON c.cid = g.cid
-      ) WHERE rn = 1
-    ),
+    {_two_level_sql("en e", "route_n", "lists_n")},
     rk AS (
       SELECT l.vec_id, l.cid, l.v,
              round({_cos_sql("l.v", "c.cv")}, 6) AS cent_sim,

@@ -17,16 +17,13 @@ from build_datawarehouse_demo_spark.plans.rag_index import CHUNK_UID_STRIDE
 from build_datawarehouse_demo_spark.registry import register
 from build_datawarehouse_demo_spark.registry_common import (
     _bucketed_scratch_dir,
+    _CF_KNOBS,
     _chunkvec_src,
     _clean_filter_dedup_sql,
-    _CLF_T,
     _cos_sql,
     _driver_chunk_count,
     _driver_old_subset_count,
-    _GQ_MINW,
-    _GQ_STOP,
     _HASH32,
-    IVF_GPROBE,
     IVF_NPROBE,
     ivf_trained_with_block,
     _MB,
@@ -38,7 +35,6 @@ from build_datawarehouse_demo_spark.registry_common import (
     neardup_full_chain_sql,
     _NL_OLD,
     pageify,
-    _QC_DIM,
     _RAG_CHUNK,
     _RAG_DIM,
     _RAG_OVL,
@@ -46,8 +42,8 @@ from build_datawarehouse_demo_spark.registry_common import (
     _SPLIT_VEC,
     _t,
     _TOK,
-    _TOPG,
     _topk_sql,
+    _two_level_sql,
     _W_SQL,
 )
 
@@ -302,22 +298,7 @@ def q_rag_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
       FROM {_chunkvec_src} WHERE vec_id >= {_SPLIT_VEC}
     ),
-    route_n AS (
-      SELECT vec_id, gid, v FROM (
-        SELECT e.vec_id, s.cid AS gid, e.v,
-               row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY {_cos_sql("e.v", "s.cv")} DESC, s.cid) AS rn
-        FROM en e, s1 s
-      ) WHERE rn <= {IVF_GPROBE}
-    ),
-    lists_n AS (
-      SELECT vec_id, cid, v FROM (
-        SELECT r.vec_id, g.cid, r.v,
-               row_number() OVER (PARTITION BY r.vec_id
-                   ORDER BY {_cos_sql("r.v", "c.cv")} DESC, g.cid) AS rn
-        FROM route_n r JOIN grp g ON g.gid = r.gid JOIN c2 c ON c.cid = g.cid
-      ) WHERE rn = 1
-    ),
+    {_two_level_sql("en e", "route_n", "lists_n")},
     alll AS (
       SELECT vec_id, cid, v FROM lists
       UNION ALL
@@ -401,12 +382,7 @@ def q_clean_filter_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return prepare_clean_filter_dedup(
-        pageify(docs),
-        min_words=_GQ_MINW,
-        min_stopword_hits=_GQ_STOP,
-        max_top_gram_char_frac=_TOPG,
-        clf_dim=_QC_DIM,
-        clf_threshold=_CLF_T,
+        pageify(docs), **_CF_KNOBS
     )
 
 
@@ -455,13 +431,7 @@ def q_clean_filter_dedup_incremental(
     old = docs.filter(F.col("doc_id") < split_at)
     b1 = docs.filter((F.col("doc_id") >= split_at) & (F.col("doc_id") < mid))
     b2 = docs.filter(F.col("doc_id") >= mid)
-    knobs = dict(
-        min_words=_GQ_MINW,
-        min_stopword_hits=_GQ_STOP,
-        max_top_gram_char_frac=_TOPG,
-        clf_dim=_QC_DIM,
-        clf_threshold=_CLF_T,
-    )
+    knobs = _CF_KNOBS
     state = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
     tag = uuid.uuid4().hex[:8]
     state = clean_filter_dedup_apply(
@@ -517,13 +487,7 @@ def q_clean_filter_dedup_migrated(
         (F.col("doc_id") >= build_at) & (F.col("doc_id") < migrate_at)
     )
     b2 = docs.filter(F.col("doc_id") >= migrate_at)
-    knobs = dict(
-        min_words=_GQ_MINW,
-        min_stopword_hits=_GQ_STOP,
-        max_top_gram_char_frac=_TOPG,
-        clf_dim=_QC_DIM,
-        clf_threshold=_CLF_T,
-    )
+    knobs = _CF_KNOBS
     state = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
     state = clean_filter_dedup_apply(b1, state, **knobs)
     state = migrate_clean_filter_banding(state, corpus_n=b1.count() + old.count())
@@ -612,14 +576,7 @@ def q_clean_filter_dedup_keep_best(
     split_at = (3 * n) // 4
     old = docs.filter(F.col("doc_id") < split_at)
     batch = docs.filter(F.col("doc_id") >= split_at)
-    knobs = dict(
-        min_words=_GQ_MINW,
-        min_stopword_hits=_GQ_STOP,
-        max_top_gram_char_frac=_TOPG,
-        clf_dim=_QC_DIM,
-        clf_threshold=_CLF_T,
-        rank_col="clf_score",
-    )
+    knobs = dict(_CF_KNOBS, rank_col="clf_score")
     state = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
     refreshed = clean_filter_dedup_apply(batch, state, **knobs)
     return refreshed["output"]
@@ -709,14 +666,7 @@ def q_clean_filter_dedup_soft(spark: SparkSession, sf_dir: str) -> DataFrame:
     split_at = (3 * n) // 4
     old = docs.filter(F.col("doc_id") < split_at)
     batch = docs.filter(F.col("doc_id") >= split_at)
-    knobs = dict(
-        min_words=_GQ_MINW,
-        min_stopword_hits=_GQ_STOP,
-        max_top_gram_char_frac=_TOPG,
-        clf_dim=_QC_DIM,
-        clf_threshold=_CLF_T,
-        soft_weights=True,
-    )
+    knobs = dict(_CF_KNOBS, soft_weights=True)
     state = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
     refreshed = clean_filter_dedup_apply(batch, state, **knobs)
     return refreshed["output"]

@@ -15,14 +15,12 @@ from build_datawarehouse_demo_spark.plans.rag_index import CHUNK_UID_STRIDE
 from build_datawarehouse_demo_spark.registry import register
 from build_datawarehouse_demo_spark.registry_common import (
     _bucketed_scratch_dir,
+    _CF_KNOBS,
     _chunkvec_src,
     _clean_filter_dedup_sql,
-    _CLF_T,
     _cos_sql,
     _CTOK,
     _driver_old_subset_count,
-    _GQ_MINW,
-    _GQ_STOP,
     IVF_GPROBE,
     ivf_trained_with_block,
     _MB_OLD,
@@ -33,7 +31,6 @@ from build_datawarehouse_demo_spark.registry_common import (
     neardup_full_chain_sql,
     _NL_OLD,
     pageify,
-    _QC_DIM,
     _RAG_DIM,
     _SBITS,
     _SHASH,
@@ -41,7 +38,6 @@ from build_datawarehouse_demo_spark.registry_common import (
     _simhash_sigs_sql,
     _SPLIT_VEC,
     _t,
-    _TOPG,
     _W_SQL,
 )
 
@@ -621,13 +617,7 @@ def q_streaming_clean_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = docs.filter(
         (F.col("doc_id") >= split_at) & (F.col("doc_id") < lim)
     )
-    knobs = dict(
-        min_words=_GQ_MINW,
-        min_stopword_hits=_GQ_STOP,
-        max_top_gram_char_frac=_TOPG,
-        clf_dim=_QC_DIM,
-        clf_threshold=_CLF_T,
-    )
+    knobs = _CF_KNOBS
     holder = {"state": clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)}
 
     tag = uuid.uuid4().hex[:8]
@@ -728,13 +718,7 @@ def q_streaming_clean_filter_migrated(
     old = docs.filter(F.col("doc_id") < build_at)
     b1 = docs.filter((F.col("doc_id") >= build_at) & (F.col("doc_id") < mid))
     b2 = docs.filter(F.col("doc_id") >= mid)
-    knobs = dict(
-        min_words=_GQ_MINW,
-        min_stopword_hits=_GQ_STOP,
-        max_top_gram_char_frac=_TOPG,
-        clf_dim=_QC_DIM,
-        clf_threshold=_CLF_T,
-    )
+    knobs = _CF_KNOBS
     state0 = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
     p_build = (state0["bands"], state0["rows"])
     holder = {"state": state0}
