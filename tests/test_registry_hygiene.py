@@ -83,16 +83,6 @@ def test_register_rejects_duplicate_key():
     assert probe not in registry.oracle_sql()
 
 
-def test_existing_key_cannot_be_registered_again():
-    from build_datawarehouse_demo_spark import registry
-
-    key = next(iter(registry.queries()))
-    before = registry.queries()[key]
-    with pytest.raises(ValueError, match=key):
-        registry.register(key)(lambda spark, sf_dir: None)
-    assert registry.queries()[key] is before
-
-
 def test_order_is_rotation_rank_then_key():
     """The driver truncates each run at 50 keys, so the order is a
     contract: last-green round ascending, ties by key name (not by
