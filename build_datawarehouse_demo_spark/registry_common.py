@@ -383,7 +383,8 @@ def neardup_front_sql() -> str:
     """The pipeline FRONT HALF (clean → langid → quality → filter) as a
     DuckDB CTE block ending with ``kept`` (doc_id, cleaned, n_tokens,
     quality, pred_lang) — shared by the full/incremental chain oracles
-    below and the r10 streaming front-half batch-twin oracle."""
+    below, pipeline_prepare_training_data and the streaming front-half
+    batch-twin oracle."""
 
     return rf"""base AS (
           SELECT doc_id,

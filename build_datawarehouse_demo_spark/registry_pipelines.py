@@ -32,6 +32,7 @@ from build_datawarehouse_demo_spark.registry_common import (
     _MR_OLD,
     _N_DOCS,
     _N_OLD_CHUNKS,
+    neardup_front_sql,
     neardup_full_chain_sql,
     _NL_OLD,
     pageify,
@@ -41,7 +42,6 @@ from build_datawarehouse_demo_spark.registry_common import (
     _RAG_STEP,
     _SPLIT_VEC,
     _t,
-    _TOK,
     _topk_sql,
     _two_level_sql,
     _W_SQL,
@@ -51,50 +51,7 @@ from build_datawarehouse_demo_spark.registry_common import (
 @register(
     "pipeline_prepare_training_data",
     oracle=rf"""
-    WITH base AS (
-      SELECT doc_id,
-             lower(trim(regexp_replace(
-               regexp_replace(text, '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-               '\s+', ' ', 'g'))) AS cleaned,
-             {_TOK} AS w,
-             CAST(len({_TOK}) AS DOUBLE) AS n_tok,
-             CAST(length(text) AS DOUBLE) AS n_chars,
-             CAST(len(list_filter({_TOK},
-                  x -> lower(x) IN ('the','a','and','of','to','is'))) AS DOUBLE) AS n_stop,
-             CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) AS DOUBLE) AS n_punct
-      FROM documents
-    ),
-    qual AS (
-      SELECT doc_id, cleaned, w, CAST(n_tok AS BIGINT) AS n_tokens,
-             least(1.0, greatest(0.0,
-               0.4 * (CASE WHEN (CASE WHEN n_tok > 0 THEN (n_chars - (n_tok - 1)) / n_tok ELSE 0.0 END) >= 3
-                           AND (CASE WHEN n_tok > 0 THEN (n_chars - (n_tok - 1)) / n_tok ELSE 0.0 END) <= 8
-                           THEN 1.0 ELSE 0.0 END)
-               + 0.4 * (CASE WHEN n_tok > 0 THEN n_stop / n_tok ELSE 0.0 END) * 4
-               + 0.2 * (1 - (CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END)))) AS quality
-      FROM base
-    ),
-    hits AS (
-      SELECT doc_id, 'de' AS lang, len(list_filter(w, x -> lower(x) IN ('der','die','das','und','ist','nicht'))) AS h FROM base
-      UNION ALL
-      SELECT doc_id, 'en', len(list_filter(w, x -> lower(x) IN ('the','a','and','of','to','is'))) FROM base
-      UNION ALL
-      SELECT doc_id, 'es', len(list_filter(w, x -> lower(x) IN ('el','la','y','es','los','que'))) FROM base
-      UNION ALL
-      SELECT doc_id, 'fr', len(list_filter(w, x -> lower(x) IN ('le','la','et','est','les','des'))) FROM base
-      UNION ALL
-      SELECT doc_id, 'zh', len(list_filter(w, x -> lower(x) IN ('de5','shi4','le5','zai4','he2','you3'))) FROM base
-    ),
-    lang AS (
-      SELECT doc_id, CASE WHEN h = 0 THEN 'und' ELSE lang END AS pred_lang
-      FROM hits
-      QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY h DESC, lang) = 1
-    ),
-    kept AS (
-      SELECT q.doc_id, q.cleaned, q.n_tokens, q.quality, l.pred_lang
-      FROM qual q JOIN lang l ON q.doc_id = l.doc_id
-      WHERE q.n_tokens >= 5 AND q.quality >= 0.3 AND l.pred_lang <> 'und'
-    ),
+    WITH {neardup_front_sql()},
     dedup AS (
       SELECT *, min(doc_id) OVER (PARTITION BY md5(cleaned)) AS keeper FROM kept
     )
