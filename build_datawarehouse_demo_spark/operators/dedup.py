@@ -260,19 +260,17 @@ def lsh_band_keys(
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
 
 
-def _banded_self_pairs(
-    signatures: DataFrame,
-    num_hashes: int,
-    bands: int,
-    id_col: str,
-) -> DataFrame:
-    """The raw banding self-join: candidate pairs colliding in >= 1
-    band. Quadratic in the size of an identical-signature group (k docs
-    sharing a signature collide in EVERY band -> ~bands*k^2/2 join
-    rows) — callers route through the signature-group pre-collapse
-    (lsh_candidate_pairs) so this only ever sees one representative per
-    distinct signature."""
-    banded = lsh_band_keys(signatures, num_hashes, bands, id_col)
+def lsh_band_self_pairs(band_keys: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The banding self-join over an (id, band, band_key) frame
+    (lsh_band_keys): candidate (id_a, id_b) pairs, id_a < id_b, that
+    collide in >= 1 band. Quadratic in the size of an identical-
+    signature group (k docs sharing a signature collide in EVERY band
+    -> ~bands*k^2/2 join rows) — the collapsed callers band one
+    representative per distinct shingle set (shingle_digest_groups).
+
+    The caller decides what the band-key frame is: a lazy banding of
+    signatures (lsh_candidate_pairs), or a checkpointed band-key table
+    an incremental state keeps."""
     # shuffle_hash, not broadcast: both children are the identical
     # banding subtree, so ReuseExchange computes shingles+signatures
     # ONCE (a broadcast build recomputes the whole pipeline per side —
@@ -280,8 +278,8 @@ def _banded_self_pairs(
     # that exists at 100 TB, where a corpus-derived signature table
     # cannot broadcast. Same pattern as
     # similarity.embedding_near_dup_pairs_bucketed.
-    a = banded.alias("a").hint("shuffle_hash")
-    b = banded.alias("b").hint("shuffle_hash")
+    a = band_keys.alias("a").hint("shuffle_hash")
+    b = band_keys.alias("b").hint("shuffle_hash")
     return (
         a.join(b, ["band", "band_key"])
         .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -290,155 +288,27 @@ def _banded_self_pairs(
     )
 
 
-def _signature_groups(
-    signatures: DataFrame, num_hashes: int, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """(members, reps) for the identical-signature pre-collapse.
-
-    members: (id, __rep, __gn) — every signature row mapped to the
-    min-id representative of its exact-signature group and the group
-    size; reps: one row (id + mh_*) per distinct signature. All-null
-    signatures (empty shingle sets on the narrow path) get a NULL group
-    key via concat's null-propagation and are DROPPED — they can never
-    be candidates anyway (null band keys never equi-join), so the
-    collapsed and uncollapsed pipelines agree on them. One exchange on
-    the 16-byte group digest, same cost class as exact_dedup."""
-    sig_cols = [f"mh_{h}" for h in range(num_hashes)]
-    parts: list[Column] = []
-    for i, c in enumerate(sig_cols):
-        if i:
-            parts.append(F.lit("_"))
-        parts.append(F.col(c).cast("string"))
-    # NO Filter may sit above this wide-alias projection: a Filter (or
-    # Join) node makes InferFiltersFromConstraints compute the child's
-    # constraint set, and constraint substitution through num_hashes
-    # interreferencing HOF aliases (each mh_* tree, plus __sk which
-    # references all of them) is effectively exponential — measured
-    # r13: 18 s of driver optimization at 16 hashes, driver heap OOM
-    # at 32+. The all-null case (empty shingle sets) therefore rides
-    # as a FLAG through the checkpoint and is filtered afterwards,
-    # where the truncated lineage makes constraints trivial. Nulls
-    # form their own window group meanwhile — harmless, dropped below.
-    keyed = signatures.withColumn("__sk", F.md5(F.concat(*parts)))
-    w = Window.partitionBy("__sk")
-    tagged = keyed.withColumn("__rep", F.min(id_col).over(w)).withColumn(
-        "__gn", F.count(F.lit(1)).over(w)
-    )
-    # localCheckpoint, NOT a lazy view: the grouping stage is consumed
-    # by five downstream subtrees (members ×3, reps ×2 through the
-    # banding self-join), and each logical-plan copy re-inlines every
-    # mh_* higher-order signature expression — the same plan-size
-    # blowup as above, multiplied by consumers. Truncating lineage
-    # keeps the plan O(1) in num_hashes for every consumer and
-    # computes the signature pipeline once; it is the in-operator
-    # analog of the documented 100 TB discipline (materialize the
-    # signature table once, then band/join against it) and the same
-    # pattern the incremental pipeline already uses for its persisted
-    # band keys (plans/training_data.py). The checkpoint is EAGER —
-    # r14 measured the lazy variant: it saves no wall time (the job
-    # moves, it doesn't shrink) and under AQE the banding join's two
-    # child stages are submitted as CONCURRENT jobs that BOTH compute
-    # the un-cached grouping partitions (observed "Block already
-    # exists; not re-adding" races) — a 2x tax on the heaviest scan at
-    # scale. Retained blocks are NARROW (r13 ADVICE): signature
-    # columns survive only on REP rows (members carry ids and
-    # counts), so duplicate-heavy corpora store one signature per
-    # distinct group; blocks live for the session (no unpersist hook;
-    # at 100 TB this is a parquet materialization instead).
-    is_rep = F.col(id_col) == F.col("__rep")
-    tagged = (
-        tagged.select(
-            F.col(id_col),
-            "__rep",
-            "__gn",
-            F.col("__sk").isNotNull().alias("__ok"),
-            *[F.when(is_rep, F.col(c)).alias(c) for c in sig_cols],
-        )
-        .localCheckpoint()
-        .where(F.col("__ok"))
-    )
-    members = tagged.select(F.col(id_col), "__rep", "__gn")
-    reps = tagged.where(F.col(id_col) == F.col("__rep")).select(id_col, *sig_cols)
-    return members, reps
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame,
     num_hashes: int = 16,
     bands: int = 4,
     id_col: str = "doc_id",
-    collapse: bool = True,
 ) -> DataFrame:
     """Band the signature (bands × rows) and emit candidate pairs that
-    collide in ≥1 band. The self-join runs per (band, band_key) bucket —
-    the only pairs materialized are within-bucket ones.
+    collide in ≥1 band: lsh_band_keys followed by lsh_band_self_pairs.
+    The self-join runs per (band, band_key) bucket — the only pairs
+    materialized are within-bucket ones. A pure plan: no job runs and
+    nothing is retained until the caller acts on it.
 
-    HOT-DUPLICATE-GROUP PRE-COLLAPSE (``collapse``, r13 — the r12
-    judge's one `weak` mark): a group of k identical signatures (true
-    duplicates — boilerplate makes k ~ 10^6 in a real crawl) collides
-    in EVERY band, so the raw self-join materializes ~bands*k^2/2 rows
-    through one skewed (band, band_key) shuffle key before dedup ever
-    contracts them. The auto-params bound BACKGROUND collisions, not
-    true-duplicate groups. Fix = the lossless-contraction discipline
-    simhash_rep_pairs already has: group identical signatures to one
-    min-id representative (one exchange on a 16-byte digest), band and
-    self-join REPRESENTATIVES only (intermediate volume ~ distinct
-    signatures, the skewed key disappears), then re-expand — cross
-    pairs via two member joins, within-group pairs directly (identical
-    signatures collide in every band, so every within-group pair is a
-    candidate by construction). The output pair set is IDENTICAL
-    either way — candidacy depends only on the signature, which is
-    constant within a group (pinned by test_skew_duplicate_groups).
-    Expansion output is still quadratic in group size — that IS the
-    pairs contract; what the collapse removes is the bands× amplified
-    intermediate and the hot shuffle key. ``collapse=False`` keeps the
-    raw shape for A/B measurement.
+    Hot duplicate groups (k identical signatures collide in every
+    band) are contracted upstream, at shingle-set level, by
+    minhash_dedup_pairs(collapse=True) and the incremental states
+    (shingle_digest_groups), so this stage bands representatives.
 
-    Precondition (both shapes): ``id_col`` values are unique — repeated
-    ids would collide in `<` ordering and dedup semantics.
-
-    Execution semantics of ``collapse=True`` (r13 ADVICE): the grouping
-    stage is localCheckpoint'ed EAGERLY — building this plan runs one
-    Spark job over (id, signature) rows, and the retained blocks live
-    for the session (no unpersist hook). Callers that only need a
-    pure, retention-free plan (explain/dump tooling, speculative
-    branches) should pass ``collapse=False``.
+    Precondition: ``id_col`` values are unique — repeated ids would
+    collide in `<` ordering and dedup semantics.
     """
-    if not collapse:
-        return _banded_self_pairs(signatures, num_hashes, bands, id_col)
-    members, reps = _signature_groups(signatures, num_hashes, id_col)
-    rp = _banded_self_pairs(reps, num_hashes, bands, id_col).select(
-        F.col("id_a").alias("__ra"), F.col("id_b").alias("__rb")
-    )
-    # within-group pairs ride the SAME expansion joins as cross-group
-    # pairs, as (rep, rep) self-pairs (r14 constant shave: the former
-    # separate within self-join + union cost two more exchange stages —
-    # pure fixed overhead at small scale). Identical signatures collide
-    # in every band, so every within-group pair is a candidate by
-    # construction. For a self-pair both expansion sides enumerate the
-    # same group, so each unordered pair appears as (i,j) AND (j,i) —
-    # the (__ra != __rb) | (__ia < __ib) filter keeps exactly one;
-    # cross groups are disjoint, so their pairs appear once. The
-    # expansion joins carry NO join hint: members/rep-pairs are
-    # checkpoint-backed (no subtree-recompute hazard), so the optimizer
-    # is free to broadcast the small side — at 100 TB that is the
-    # verified pair set, far smaller than the member map it probes.
-    self_rp = (
-        members.where((F.col("__gn") >= 2) & (F.col(id_col) == F.col("__rep")))
-        .select(F.col(id_col).alias("__ra"), F.col(id_col).alias("__rb"))
-    )
-    ma = members.select(F.col(id_col).alias("__ia"), F.col("__rep").alias("__ra"))
-    mb = members.select(F.col(id_col).alias("__ib"), F.col("__rep").alias("__rb"))
-    return (
-        rp.unionByName(self_rp)
-        .join(ma, "__ra")
-        .join(mb, "__rb")
-        .where((F.col("__ra") != F.col("__rb")) | (F.col("__ia") < F.col("__ib")))
-        .select(
-            F.least("__ia", "__ib").alias("id_a"),
-            F.greatest("__ia", "__ib").alias("id_b"),
-        )
-    )
+    return lsh_band_self_pairs(lsh_band_keys(signatures, num_hashes, bands, id_col), id_col)
 
 
 def minhash_auto_params(
@@ -523,8 +393,8 @@ def shingle_digest_groups(
     shingle arrays (and digests) survive only on REP rows — members
     carry ids and counts only, so a duplicate-heavy corpus retains one
     array per DISTINCT set, not per copy. The checkpoint is EAGER —
-    ONE construction-time job (callers that need a pure plan pass
-    collapse=False): r14 measured the lazy alternative as a no-op on
+    ONE construction-time job (minhash_dedup_pairs(collapse=False)
+    skips the grouping): r14 measured the lazy alternative as a no-op on
     wall time, while under AQE concurrent downstream stages both
     computed the un-cached grouping partitions ("Block already
     exists" races) — a 2x tax on the heaviest scan at scale.
@@ -550,6 +420,86 @@ def shingle_digest_groups(
     return members, reps
 
 
+def jaccard_verify_pairs(
+    cand: DataFrame, sh: DataFrame, threshold: float, id_col: str = "doc_id"
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate (id_a, id_b) pairs against an
+    (id, shingles) array table: both sides hash-join back to their
+    arrays and Jaccard = array_intersect size with inclusion-exclusion
+    union — per-pair array math, no shingle-row join + re-aggregate.
+    Returns (id_a, id_b, jaccard) for pairs at or above ``threshold``.
+    ``sh`` must cover every candidate id (incremental runs pass the
+    union of new-batch and stored-corpus arrays)."""
+    a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("__sa"))
+    b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("__sb"))
+    return (
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("__n_inter", F.size(F.array_intersect(F.col("__sa"), F.col("__sb"))))
+        .withColumn(
+            "jaccard",
+            F.col("__n_inter").cast("double")
+            / (F.size("__sa") + F.size("__sb") - F.col("__n_inter")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def expand_rep_pairs(
+    rep_pairs: DataFrame,
+    self_members: DataFrame,
+    exp_members: DataFrame,
+    threshold: float,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Re-expand verified digest-group REP pairs (id_a, id_b, jaccard)
+    to member-level pairs in one pass. Cross-group pairs inherit the
+    rep pair's jaccard (identical shingle sets => identical jaccard
+    against anything). Within-group pairs ride the same two joins as
+    (rep, rep, 1.0) self-pairs: identical non-empty sets are exactly
+    jaccard 1.0 and always candidates (identical signatures collide in
+    every band); the __nsh > 0 guard excludes empty-set groups, which
+    the uncollapsed shape never pairs either. For a self-pair both
+    sides enumerate the same group, so each unordered pair appears as
+    (i,j) and (j,i) — the (id_a != id_b) | (__ia < __ib) filter keeps
+    one; cross groups are disjoint, so their pairs appear once.
+
+    ``self_members``: the (id, __rep, __gn, __nsh) frame contributing
+    self-pairs — the whole corpus's groups for a build, the BATCH's
+    groups for a refresh apply (stored groups' within pairs are
+    already in the stored pair state). ``exp_members``: the (id,
+    __rep) map(s) to expand through. No join hints: the maps are
+    checkpoint-backed, so the optimizer may broadcast the (much
+    smaller) verified pair set into a narrow scan of the map."""
+    self_rp = (
+        self_members.where(
+            (F.col("__gn") >= 2) & (F.col("__nsh") > 0) & (F.col(id_col) == F.col("__rep"))
+        )
+        .select(
+            F.col(id_col).alias("id_a"),
+            F.col(id_col).alias("id_b"),
+            F.lit(1.0).alias("jaccard"),
+        )
+        # constant-folded; only a degenerate threshold > 1.0 drops
+        # them, as the uncollapsed verify would
+        .filter(F.lit(1.0) >= F.lit(float(threshold)))
+    )
+    ma = exp_members.select(F.col(id_col).alias("__ia"), F.col("__rep").alias("id_a"))
+    mb = exp_members.select(F.col(id_col).alias("__ib"), F.col("__rep").alias("id_b"))
+    return (
+        rep_pairs.unionByName(self_rp)
+        .join(ma, "id_a")
+        .join(mb, "id_b")
+        .where((F.col("id_a") != F.col("id_b")) | (F.col("__ia") < F.col("__ib")))
+        .select(
+            F.least("__ia", "__ib").alias("id_a"),
+            F.greatest("__ia", "__ib").alias("id_b"),
+            "jaccard",
+        )
+    )
+
+
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -566,28 +516,26 @@ def minhash_dedup_pairs(
     1. per-document shingle ARRAYS (shingle_arrays — no explode);
     2. signatures via array_min folds (zero-shuffle, vs the exploded
        groupBy form that shuffled every (doc, shingle, seed) row);
-    3. banding self-join shuffles only (id, band, band_key);
-    4. verify: candidate pairs hash-join back to the two shingle
-       arrays; Jaccard = array_intersect size with inclusion-exclusion
-       union — per-pair array math, no shingle-row join + re-aggregate.
+    3. banding self-join shuffles only (id, band, band_key)
+       (lsh_candidate_pairs);
+    4. verify on the shingle arrays (jaccard_verify_pairs).
     Docs with empty shingle sets never produce candidates: their null
-    minhashes null-propagate into the band key (see lsh_candidate_pairs)
+    minhashes null-propagate into the band key (see lsh_band_keys)
     and null keys don't equi-join.
 
     HOT-DUPLICATE-GROUP PRE-COLLAPSE (``collapse``, r13): documents
     with IDENTICAL shingle sets (k copies of the same boilerplate —
     the duplicate-heavy regime real crawls live in) are grouped by an
-    order-insensitive set digest (shingle_set_digest, one exchange of
-    16-byte digests — the exact_dedup discipline applied pre-banding);
-    signatures, banding AND the exact-Jaccard verify then run on one
-    min-id representative per distinct set, so the expensive stages
-    scale with distinct content, not copies. Re-expansion restores the
-    exact uncollapsed output: cross-group pairs inherit the rep pair's
-    jaccard (identical sets => identical jaccard against anything),
-    within-group pairs are jaccard 1.0 by definition (identical
-    non-empty sets; always candidates — identical signatures collide
-    in every band). Output is bit-identical either way (existing
-    oracles unchanged; pinned by test_skew_duplicate_groups).
+    order-insensitive set digest (shingle_digest_groups, one exchange
+    of 16-byte digests — the exact_dedup discipline applied
+    pre-banding); signatures, banding AND the exact-Jaccard verify
+    then run on one min-id representative per distinct set, so the
+    expensive stages scale with distinct content, not copies.
+    expand_rep_pairs restores the exact uncollapsed output. Output is
+    bit-identical either way (pinned by test_skew_duplicate_groups).
+    ``collapse=False`` skips the grouping for a corpus that is already
+    exact-deduplicated (prepare_training_data_neardup), where it could
+    only re-pay its exchange and checkpoint.
 
     Precondition: ``id_col`` values are unique (repeated ids break
     pair ordering and group membership in both shapes).
@@ -601,8 +549,7 @@ def minhash_dedup_pairs(
     grouping is localCheckpoint'ed EAGERLY (shingle_digest_groups) —
     building this plan runs one Spark job and retains session-lifetime
     blocks (narrow: one shingle array per DISTINCT set, members carry
-    ids/counts only). Pass ``collapse=False`` for a pure,
-    retention-free plan.
+    ids/counts only).
     """
     if (num_hashes is None) != (bands is None):
         # r7 ADVICE: a PARTIAL None mixed auto and manual params (e.g.
@@ -624,89 +571,17 @@ def minhash_dedup_pairs(
         bands, auto_r = minhash_auto_params(df.count(), threshold=threshold)
         num_hashes = bands * auto_r
     sh = shingle_arrays(df, id_col, text_col, k)
+    if collapse:
+        members, reps = shingle_digest_groups(sh, id_col)
+        sh = reps.select(id_col, "shingles")
+    sigs = minhash_signatures_from_arrays(sh, num_hashes, id_col)
+    # through the module global, so a tracer wrapping
+    # lsh_candidate_pairs sees this stage
+    cand = lsh_candidate_pairs(sigs, num_hashes, bands, id_col)
+    pairs = jaccard_verify_pairs(cand, sh, threshold, id_col)
     if not collapse:
-        sigs = minhash_signatures_from_arrays(sh, num_hashes, id_col)
-        cand = lsh_candidate_pairs(sigs, num_hashes, bands, id_col, collapse=False)
-        a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("__sa"))
-        b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("__sb"))
-        return (
-            cand.join(a, "id_a")
-            .join(b, "id_b")
-            .withColumn(
-                "__n_inter", F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-            )
-            .withColumn(
-                "jaccard",
-                F.col("__n_inter").cast("double")
-                / (F.size("__sa") + F.size("__sb") - F.col("__n_inter")).cast("double"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-    # digest grouping + narrow lazy checkpoint: shingle_digest_groups
-    # (the factored r13 pre-collapse — see its docstring for the
-    # retention/eagerness contract)
-    members, grp_reps = shingle_digest_groups(sh, id_col)
-    reps = grp_reps.select(id_col, "shingles")
-    sigs = minhash_signatures_from_arrays(reps, num_hashes, id_col)
-    # collapse=False here: the digest pre-collapse above already
-    # contracted every identical-content group, so the signature-level
-    # layer would almost always no-op while still paying its window
-    # exchange + checkpoint job — measured r13: the double layer put
-    # the sf0.1 lane at 2.7x its r12 constant, and dropping it keeps
-    # the hot-group defense (identical docs ARE identical digests)
-    # at roughly half the fixed cost. Distinct sets that share a full
-    # signature (possible for very-high-jaccard near-dups) fall back
-    # to the per-pair banding join — bounded by the near-dup group
-    # size, not the exact-duplicate group size.
-    cand = lsh_candidate_pairs(sigs, num_hashes, bands, id_col, collapse=False)
-    a = reps.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("__sa"))
-    b = reps.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("__sb"))
-    rep_pairs = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("__n_inter", F.size(F.array_intersect(F.col("__sa"), F.col("__sb"))))
-        .withColumn(
-            "jaccard",
-            F.col("__n_inter").cast("double")
-            / (F.size("__sa") + F.size("__sb") - F.col("__n_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("id_a").alias("__ra"), F.col("id_b").alias("__rb"), "jaccard")
-    )
-    # within-group pairs ride the SAME expansion joins as (rep, rep)
-    # self-pairs at jaccard exactly 1.0 (identical non-empty sets:
-    # s/(s+s-s); the threshold guard is constant-folded and only
-    # matters for a degenerate threshold > 1.0, where the uncollapsed
-    # filter would drop them too). The (__ra != __rb) | (__ia < __ib)
-    # filter keeps one orientation of each within pair; cross groups
-    # are disjoint so their pairs appear once. No join hints: members
-    # and rep pairs are checkpoint-backed, so the optimizer may
-    # broadcast the small side (see lsh_candidate_pairs).
-    self_rp = (
-        members.where(
-            (F.col("__gn") >= 2) & (F.col("__nsh") > 0) & (F.col(id_col) == F.col("__rep"))
-        )
-        .select(
-            F.col(id_col).alias("__ra"),
-            F.col(id_col).alias("__rb"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        .filter(F.lit(1.0) >= F.lit(float(threshold)))
-    )
-    ma = members.select(F.col(id_col).alias("__ia"), F.col("__rep").alias("__ra"))
-    mb = members.select(F.col(id_col).alias("__ib"), F.col("__rep").alias("__rb"))
-    return (
-        rep_pairs.unionByName(self_rp)
-        .join(ma, "__ra")
-        .join(mb, "__rb")
-        .where((F.col("__ra") != F.col("__rb")) | (F.col("__ia") < F.col("__ib")))
-        .select(
-            F.least("__ia", "__ib").alias("id_a"),
-            F.greatest("__ia", "__ib").alias("id_b"),
-            "jaccard",
-        )
-    )
+        return pairs
+    return expand_rep_pairs(pairs, members, members, threshold, id_col)
 
 
 def _window_gram_rows(
@@ -1619,37 +1494,6 @@ def dedup_keep_best_soft(
         .withColumn("is_kept", F.col(id_col) == F.col("__keep_id"))
         .withColumn("weight", F.round(F.lit(1.0) / F.col("n_members"), 6))
         .drop("__keep_id")
-    )
-
-
-def exact_dedup_keep_best(
-    df: DataFrame,
-    rank_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact dedup keeping the PREFERRED copy per identical-text group
-    — (digest, keep_id, n_copies) where keep_id maximizes
-    (``rank_col``, then smallest id). The exact-duplicate form of
-    dedup_keep_best: identical text can still differ in metadata
-    (source priority, crawl recency), and a curation policy keeps the
-    best-provenance copy, not the smallest id. Shuffles 16-byte
-    digests + (rank, id) only — the exact_dedup discipline.
-    ``rank_col`` must be numeric; the id may be any orderable type
-    (min_by over keep_best_key — r17 ADVICE)."""
-    return (
-        df.select(
-            F.md5(F.col(text_col)).alias("digest"),
-            F.col(id_col),
-            F.col(rank_col),
-        )
-        .groupBy("digest")
-        .agg(
-            F.min_by(F.col(id_col), keep_best_key(rank_col, id_col)).alias(
-                "keep_id"
-            ),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
     )
 
 

@@ -1019,27 +1019,6 @@ def ivf_index_search_topk(
     )
 
 
-def embedding_near_dup_pairs_exact(
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All-pairs embedding-cosine near-dup pairs — the EXACT small-N
-    verifier for embedding_near_dup_pairs_bucketed (recall ground
-    truth in tests/test_similarity.py). O(n²) in corpus size: never
-    the registered scale path; see the bucketed variant below."""
-    n = corpus.sparkSession.sparkContext.defaultParallelism
-    a = corpus.repartition(n).select(F.col(id_col).alias("id_a"), _as_double(vec_col).alias("__a"))
-    b = corpus.select(F.col(id_col).alias("id_b"), _as_double(vec_col).alias("__b"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine(F.col("__a"), F.col("__b")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
-
-
 def lsh_auto_params(
     n: int,
     target_similarity: float = 0.9,

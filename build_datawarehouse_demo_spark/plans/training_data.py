@@ -306,6 +306,7 @@ def training_data_neardup_state(
         minhash_auto_params,
         remove_spans_given_owners,
         shingle_arrays,
+        shingle_digest_groups,
         _window_gram_rows,
     )
     from build_datawarehouse_demo_spark.operators.sampling import train_val_test_split
@@ -316,12 +317,13 @@ def training_data_neardup_state(
     survivors = _featured_survivors(
         df, id_col, text_col, min_tokens, min_quality
     ).localCheckpoint()
-    sh = shingle_arrays(survivors, id_col, "cleaned", shingle_k)
-    collapsed = _collapsed_pair_state(
-        sh, id_col, bands * rows, bands, jaccard_threshold
+    members, dg_reps = shingle_digest_groups(
+        shingle_arrays(survivors, id_col, "cleaned", shingle_k), id_col
     )
-    band_keys = collapsed["band_keys"]
-    pairs = collapsed["pairs"]
+    band_keys, pairs = _collapsed_pair_state(
+        dg_reps.select(id_col, "shingles"), members, members, bands, rows,
+        jaccard_threshold, id_col,
+    )
     comp = connected_components_star(pairs)
     memb = survivors.join(
         comp.withColumnRenamed("node", id_col), id_col, "left"
@@ -399,10 +401,8 @@ def training_data_neardup_state(
         "rows": rows,
         "survivors": survivors,
         "band_keys": band_keys,
-        "dg_members": collapsed["members"]
-        .select(F.col(id_col), "__rep")
-        .localCheckpoint(),
-        "rep_digests": collapsed["reps"].select(id_col, "__dg").localCheckpoint(),
+        "dg_members": members.select(F.col(id_col), "__rep").localCheckpoint(),
+        "rep_digests": dg_reps.select(id_col, "__dg").localCheckpoint(),
         "text_digests": survivors.select(
             F.md5(F.col("cleaned")).alias("__digest")
         ).localCheckpoint(),
@@ -418,111 +418,48 @@ def training_data_neardup_state(
     return state
 
 
-def _rep_band_self_candidates(band_keys: DataFrame, id_col: str) -> DataFrame:
-    """Banding self-join over a (REP-level) band-key table: candidate
-    (id_a, id_b) pairs colliding in >= 1 band. shuffle_hash so both
-    children reuse one exchange of the same subtree (the
-    _banded_self_pairs rationale), and the only shape that exists at
-    100 TB where the table cannot broadcast."""
-    a = band_keys.alias("a").hint("shuffle_hash")
-    b = band_keys.alias("b").hint("shuffle_hash")
-    return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .dropDuplicates()
-    )
-
-
-def _expand_rep_pairs(
-    rep_pairs: DataFrame,
+def _collapsed_pair_state(
+    rep_sh: DataFrame,
     self_members: DataFrame,
     exp_members: DataFrame,
-    id_col: str,
+    bands: int,
+    rows: int,
     threshold: float,
-) -> DataFrame:
-    """Re-expand verified REP-level pairs (id_a, id_b, jaccard) to
-    member-level pairs in ONE pass (the r14 merged shape, see
-    minhash_dedup_pairs): jaccard is inherited for cross-group pairs
-    (identical shingle sets => identical jaccard against anything),
-    and within-group pairs ride the same two joins as (rep, rep,
-    1.0) self-pairs — identical non-empty sets are exactly jaccard
-    1.0, and always candidates (identical signatures collide in
-    every band; the __nsh > 0 guard excludes empty-set groups, which
-    the uncollapsed shape also never pairs).
+    id_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(band_keys, pairs) of the digest-collapsed near-dup computation
+    an incremental state persists: the REPS' shingle arrays ``rep_sh``
+    are signed and banded, the rep-level candidates verified, and the
+    verified rep pairs re-expanded to members (operators/dedup:
+    lsh_band_self_pairs, jaccard_verify_pairs, expand_rep_pairs; the
+    member frames as there). Shared by both state builders and the
+    banding migration.
 
-    ``self_members``: the member frame contributing self-pairs — the
-    full frame for a corpus build, the BATCH's frame for an apply
-    (stored groups' within pairs are already in the stored pair
-    state). ``exp_members``: the (id, __rep) map(s) to expand
-    through. No join hints: the maps are checkpoint-backed state, so
-    the optimizer may broadcast the (much smaller) verified pair set
-    into a narrow scan of the map instead of shuffling it."""
-    self_rp = (
-        self_members.where(
-            (F.col("__gn") >= 2)
-            & (F.col("__nsh") > 0)
-            & (F.col(id_col) == F.col("__rep"))
-        )
-        .select(
-            F.col(id_col).alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        .filter(F.lit(1.0) >= F.lit(float(threshold)))
-    )
-    ma = exp_members.select(F.col(id_col).alias("__ia"), F.col("__rep").alias("id_a"))
-    mb = exp_members.select(F.col(id_col).alias("__ib"), F.col("__rep").alias("id_b"))
-    return (
-        rep_pairs.unionByName(self_rp)
-        .join(ma, "id_a")
-        .join(mb, "id_b")
-        .where((F.col("id_a") != F.col("id_b")) | (F.col("__ia") < F.col("__ib")))
-        .select(
-            F.least("__ia", "__ib").alias("id_a"),
-            F.greatest("__ia", "__ib").alias("id_b"),
-            "jaccard",
-        )
-    )
-
-
-def _collapsed_pair_state(
-    sh: DataFrame, id_col: str, num_hashes: int, bands: int, threshold: float
-) -> dict:
-    """The digest-collapsed near-dup pair computation with every
-    intermediate an incremental state needs to persist (r14 — the r13
-    judge's `weak` mark: the stored band-key table must keep one row
-    per DISTINCT shingle set, not per member, or a duplicate-heavy
-    stored corpus × a re-crawl batch materializes ~bands·k_old·k_new
-    rows on one hot (band, band_key) key in the refresh join).
-
-    Returns dict:
-      members      (id, __rep, __gn, __nsh) — digest-group map, lazy-
-                   checkpoint-backed (shingle_digest_groups)
-      reps         (id, shingles, __dg) — one row per distinct set
-      band_keys    (id, band, band_key) for REPS ONLY, checkpointed —
-                   the persisted, recall-bearing artifact
-      pairs        member-level verified edges (id_a, id_b, jaccard),
-                   checkpointed — identical to the uncollapsed
-                   computation (the r13 lossless-contraction argument:
-                   candidacy and jaccard depend only on the set)
-    """
+    The stored band-key table keeps one row per DISTINCT shingle set,
+    not per member (r14: per-member keys made a duplicate-heavy stored
+    corpus × a re-crawl batch materialize ~bands·k_old·k_new rows on
+    one hot (band, band_key) key in the refresh join). Both frames are checkpointed: band_keys
+    is the persisted, recall-bearing artifact; pairs are the
+    member-level verified edges (id_a, id_b, jaccard), identical to
+    the uncollapsed computation (candidacy and jaccard depend only on
+    the set)."""
     from build_datawarehouse_demo_spark.operators.dedup import (
+        expand_rep_pairs,
+        jaccard_verify_pairs,
         lsh_band_keys,
+        lsh_band_self_pairs,
         minhash_signatures_from_arrays,
-        shingle_digest_groups,
     )
 
-    members, reps = shingle_digest_groups(sh, id_col)
-    rep_sh = reps.select(id_col, "shingles")
-    sigs = minhash_signatures_from_arrays(rep_sh, num_hashes, id_col)
-    band_keys = lsh_band_keys(sigs, num_hashes, bands, id_col).localCheckpoint()
-    rep_cand = _rep_band_self_candidates(band_keys, id_col)
-    rep_pairs = _verify_jaccard_pairs(rep_cand, rep_sh, rep_sh, threshold, id_col)
-    pairs = _expand_rep_pairs(
-        rep_pairs, members, members, id_col, threshold
+    sigs = minhash_signatures_from_arrays(rep_sh, bands * rows, id_col)
+    band_keys = lsh_band_keys(sigs, bands * rows, bands, id_col).localCheckpoint()
+    rep_pairs = jaccard_verify_pairs(
+        lsh_band_self_pairs(band_keys, id_col), rep_sh, threshold, id_col
+    )
+    pairs = expand_rep_pairs(
+        rep_pairs, self_members, exp_members, threshold, id_col
     ).localCheckpoint()
-    return {"members": members, "reps": reps, "band_keys": band_keys, "pairs": pairs}
+    return band_keys, pairs
 
 
 def _apply_rep_candidates(
@@ -548,7 +485,10 @@ def _apply_rep_candidates(
     (checkpointed), new_pairs (member-level verified delta edges,
     checkpointed)."""
     from build_datawarehouse_demo_spark.operators.dedup import (
+        expand_rep_pairs,
+        jaccard_verify_pairs,
         lsh_band_keys,
+        lsh_band_self_pairs,
         minhash_signatures_from_arrays,
         shingle_arrays,
         shingle_digest_groups,
@@ -561,7 +501,7 @@ def _apply_rep_candidates(
     new_rep_sh = r_new.select(id_col, "shingles")
     new_sigs = minhash_signatures_from_arrays(new_rep_sh, num_hashes, id_col)
     new_rep_keys = lsh_band_keys(new_sigs, num_hashes, bands, id_col).localCheckpoint()
-    nn_rep = _rep_band_self_candidates(new_rep_keys, id_col)
+    nn_rep = lsh_band_self_pairs(new_rep_keys, id_col)
     # new-old: batch reps vs STORED reps. shuffle_hash is the 100 TB
     # shape (state band_keys bucketed by (band, band_key); the batch
     # side rebalances into it); a hot boilerplate bucket now holds one
@@ -596,7 +536,7 @@ def _apply_rep_candidates(
         shingle_k,
     )
     arrays = new_rep_sh.union(old_cand_sh)
-    rep_pairs = _verify_jaccard_pairs(rep_cand, arrays, arrays, threshold, id_col)
+    rep_pairs = jaccard_verify_pairs(rep_cand, arrays, threshold, id_col)
     # expansion map: stored members ∪ batch members; self-pairs from
     # the BATCH's groups only (stored groups' within pairs are already
     # in the stored pair state). The optimizer can broadcast the
@@ -604,8 +544,8 @@ def _apply_rep_candidates(
     exp_members = state["dg_members"].unionByName(
         m_new.select(F.col(id_col), "__rep")
     )
-    new_pairs = _expand_rep_pairs(
-        rep_pairs, m_new, exp_members, id_col, threshold
+    new_pairs = expand_rep_pairs(
+        rep_pairs, m_new, exp_members, threshold, id_col
     ).localCheckpoint()
     return {
         "m_new": m_new,
@@ -665,35 +605,6 @@ def _refreshed_collapse_state(
             unmatched.select(id_col, "__dg").localCheckpoint()
         ),
     }
-
-
-def _verify_jaccard_pairs(
-    cand: DataFrame,
-    sh_a: DataFrame,
-    sh_b: DataFrame,
-    threshold: float,
-    id_col: str,
-) -> DataFrame:
-    """Exact-Jaccard verify of candidate (id_a, id_b) pairs against two
-    shingle-array tables (the minhash_dedup_pairs verify stage, with
-    the sides supplied so incremental runs can mix new-batch and
-    persisted-corpus arrays)."""
-    a = sh_a.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("__sa"))
-    b = sh_b.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("__sb"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "__n_inter", F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-        )
-        .withColumn(
-            "jaccard",
-            F.col("__n_inter").cast("double")
-            / (F.size("__sa") + F.size("__sb") - F.col("__n_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
 def _check_keep_policy(
@@ -1295,6 +1206,42 @@ def _clean_soft_rows(
     )
 
 
+def _clean_out_cols(id_col: str, soft_weights: bool) -> tuple[str, ...]:
+    """The clean pipeline's output columns; the soft policy adds
+    (n_members, weight)."""
+    soft = ("n_members", "weight") if soft_weights else ()
+    return (id_col, "n_ws_tokens", "clf_score", "component_id", *soft, "split")
+
+
+def _clean_output(
+    survivors: DataFrame,
+    comp: DataFrame,
+    id_col: str,
+    rank_col: str | None,
+    soft_weights: bool,
+    val_frac: float,
+    test_frac: float,
+) -> DataFrame:
+    """The clean pipeline's output rows from its near-dup components
+    under the keep policy — min-id or keep-best (_clean_reps), or
+    drop-free (_clean_soft_rows) — through the hash split. Shared by
+    the one-shot build, the state builder and the banding migration;
+    the caller decides whether to checkpoint."""
+    from build_datawarehouse_demo_spark.operators.sampling import (
+        train_val_test_split,
+    )
+
+    if soft_weights:
+        if rank_col is not None:
+            raise ValueError("rank_col and soft_weights are mutually exclusive")
+        rows_out = _clean_soft_rows(survivors, comp, id_col)
+    else:
+        rows_out = _clean_reps(survivors, comp, id_col, rank_col)
+    return train_val_test_split(
+        rows_out, id_col, val_frac=val_frac, test_frac=test_frac
+    ).select(*_clean_out_cols(id_col, soft_weights))
+
+
 def clean_filter_survivors(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1436,9 +1383,6 @@ def prepare_clean_filter_dedup(
         minhash_auto_params,
         minhash_dedup_pairs,
     )
-    from build_datawarehouse_demo_spark.operators.sampling import (
-        train_val_test_split,
-    )
 
     if corpus_n is None:
         corpus_n = df.count()
@@ -1471,21 +1415,10 @@ def prepare_clean_filter_dedup(
         bands=bands,
         threshold=jaccard_threshold,
     ).localCheckpoint()
-    comp = connected_components_star(pairs)
-    if soft_weights:
-        if rank_col is not None:
-            raise ValueError("rank_col and soft_weights are mutually exclusive")
-        rows_out = _clean_soft_rows(survivors, comp, id_col)
-        out_cols = (
-            id_col, "n_ws_tokens", "clf_score", "component_id",
-            "n_members", "weight", "split",
-        )
-    else:
-        rows_out = _clean_reps(survivors, comp, id_col, rank_col)
-        out_cols = (id_col, "n_ws_tokens", "clf_score", "component_id", "split")
-    return train_val_test_split(
-        rows_out, id_col, val_frac=val_frac, test_frac=test_frac
-    ).select(*out_cols)
+    return _clean_output(
+        survivors, connected_components_star(pairs), id_col, rank_col,
+        soft_weights, val_frac, test_frac,
+    )
 
 
 def clean_filter_dedup_state(
@@ -1552,9 +1485,7 @@ def clean_filter_dedup_state(
         connected_components_star,
         minhash_auto_params,
         shingle_arrays,
-    )
-    from build_datawarehouse_demo_spark.operators.sampling import (
-        train_val_test_split,
+        shingle_digest_groups,
     )
 
     if corpus_n is None:
@@ -1573,43 +1504,24 @@ def clean_filter_dedup_state(
         clf_weights=clf_weights,
         clf_threshold=clf_threshold,
     ).localCheckpoint()
-    sh = shingle_arrays(survivors, id_col, "cleaned", shingle_k)
-    collapsed = _collapsed_pair_state(
-        sh, id_col, bands * rows, bands, jaccard_threshold
+    members, dg_reps = shingle_digest_groups(
+        shingle_arrays(survivors, id_col, "cleaned", shingle_k), id_col
     )
-    band_keys = collapsed["band_keys"]
-    pairs = collapsed["pairs"]
-    comp = connected_components_star(pairs)
-    if soft_weights:
-        # third keep policy (r18): DROP-FREE — every survivor kept at
-        # weight 1/|component| (see _clean_soft_rows); mutually
-        # exclusive with rank_col
-        if rank_col is not None:
-            raise ValueError("rank_col and soft_weights are mutually exclusive")
-        rows_out = _clean_soft_rows(survivors, comp, id_col)
-        out_cols = (
-            id_col, "n_ws_tokens", "clf_score", "component_id",
-            "n_members", "weight", "split",
-        )
-    else:
-        rows_out = _clean_reps(survivors, comp, id_col, rank_col)
-        out_cols = (id_col, "n_ws_tokens", "clf_score", "component_id", "split")
-    output = (
-        train_val_test_split(
-            rows_out, id_col, val_frac=val_frac, test_frac=test_frac
-        )
-        .select(*out_cols)
-        .localCheckpoint()
+    band_keys, pairs = _collapsed_pair_state(
+        dg_reps.select(id_col, "shingles"), members, members, bands, rows,
+        jaccard_threshold, id_col,
     )
+    output = _clean_output(
+        survivors, connected_components_star(pairs), id_col, rank_col,
+        soft_weights, val_frac, test_frac,
+    ).localCheckpoint()
     state = {
         "bands": bands,
         "rows": rows,
         "survivors": survivors,
         "band_keys": band_keys,
-        "dg_members": collapsed["members"]
-        .select(F.col(id_col), "__rep")
-        .localCheckpoint(),
-        "rep_digests": collapsed["reps"].select(id_col, "__dg").localCheckpoint(),
+        "dg_members": members.select(F.col(id_col), "__rep").localCheckpoint(),
+        "rep_digests": dg_reps.select(id_col, "__dg").localCheckpoint(),
         "pairs": pairs,
         "output": output,
     }
@@ -1796,6 +1708,7 @@ def clean_filter_dedup_apply(
     pairs_all = state["pairs"].union(delta["new_pairs"])
 
     compR = connected_components_star(pairs_all).withColumnRenamed("node", id_col)
+    out_cols = _clean_out_cols(id_col, soft_weights)
     if soft_weights:
         # DROP-FREE refresh (r18): every survivor stays in the output;
         # what a fold can change is the component SIZE (weight) and
@@ -1834,10 +1747,7 @@ def clean_filter_dedup_apply(
             train_val_test_split(
                 rows_new, id_col, val_frac=val_frac, test_frac=test_frac
             )
-            .select(
-                id_col, "n_ws_tokens", "clf_score", "component_id",
-                "n_members", "weight", "split",
-            )
+            .select(*out_cols)
             .localCheckpoint()  # the touched-component member rows
         )
         dropped_old = touched_map.select(id_col).localCheckpoint()
@@ -1858,7 +1768,7 @@ def clean_filter_dedup_apply(
             train_val_test_split(
                 new_reps, id_col, val_frac=val_frac, test_frac=test_frac
             )
-            .select(id_col, "n_ws_tokens", "clf_score", "component_id", "split")
+            .select(*out_cols)
             .localCheckpoint()  # the batch's output DELTA
         )
     else:
@@ -1891,7 +1801,7 @@ def clean_filter_dedup_apply(
             train_val_test_split(
                 new_rows, id_col, val_frac=val_frac, test_frac=test_frac
             )
-            .select(id_col, "n_ws_tokens", "clf_score", "component_id", "split")
+            .select(*out_cols)
             .localCheckpoint()  # the touched-component winner rows
         )
         # stored rows whose CURRENT component is touched are replaced
@@ -1969,11 +1879,11 @@ def _rebanded_collapse_frames(
 ) -> dict | None:
     """Re-sign the state's digest-group REPS at
     ``minhash_auto_params(corpus_n)`` and recompute the rep-level pair
-    set — the shared core of a banding migration. Reps-only cost: ONE distinct-content scan (survivors
-    semi-joined to the rep ids, re-shingled), one signature pass over
-    reps, one banded self-join, one verify, one expansion through the
-    stored member map. The member map, digests and survivors are
-    untouched — no member is ever re-shingled.
+    set — the shared core of a banding migration. Reps-only cost: ONE
+    distinct-content scan (survivors semi-joined to the rep ids,
+    re-shingled), then _collapsed_pair_state over the reps, expanding
+    through the stored member map. The member map, digests and
+    survivors are untouched — no member is ever re-shingled.
 
     Returns None when the auto params are unchanged (the migration
     is a no-op), else {bands, rows, band_keys, pairs}, both frames
@@ -1984,9 +1894,7 @@ def _rebanded_collapse_frames(
     at jaccard 1.0 regardless of banding (identical signatures collide
     in every band)."""
     from build_datawarehouse_demo_spark.operators.dedup import (
-        lsh_band_keys,
         minhash_auto_params,
-        minhash_signatures_from_arrays,
         shingle_arrays,
     )
 
@@ -2000,13 +1908,7 @@ def _rebanded_collapse_frames(
         "cleaned",
         shingle_k,
     ).select(id_col, "shingles")
-    sigs = minhash_signatures_from_arrays(rep_sh, new_bands * new_rows, id_col)
-    band_keys = lsh_band_keys(
-        sigs, new_bands * new_rows, new_bands, id_col
-    ).localCheckpoint()
-    rep_cand = _rep_band_self_candidates(band_keys, id_col)
-    rep_pairs = _verify_jaccard_pairs(rep_cand, rep_sh, rep_sh, threshold, id_col)
-    # rep-level self rows for _expand_rep_pairs' within-group pass:
+    # rep-level self rows for expand_rep_pairs' within-group pass:
     # (id == __rep, group size, shingle count) — derived from the
     # stored member map + the rep arrays, never from member text
     gn = state["dg_members"].groupBy("__rep").agg(F.count("*").alias("__gn"))
@@ -2015,9 +1917,9 @@ def _rebanded_collapse_frames(
         .join(gn, F.col(id_col) == F.col("__rep"))
         .select(F.col(id_col), "__rep", "__gn", "__nsh")
     )
-    pairs = _expand_rep_pairs(
-        rep_pairs, self_reps, state["dg_members"], id_col, threshold
-    ).localCheckpoint()
+    band_keys, pairs = _collapsed_pair_state(
+        rep_sh, self_reps, state["dg_members"], new_bands, new_rows, threshold, id_col
+    )
     return {
         "bands": new_bands,
         "rows": new_rows,
@@ -2072,9 +1974,6 @@ def migrate_clean_filter_banding(
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
     )
-    from build_datawarehouse_demo_spark.operators.sampling import (
-        train_val_test_split,
-    )
 
     _check_keep_policy(state, rank_col, soft_weights, "migration")
     rebanded = _rebanded_collapse_frames(
@@ -2082,23 +1981,10 @@ def migrate_clean_filter_banding(
     )
     if rebanded is None:
         return state
-    comp = connected_components_star(rebanded["pairs"])
-    if soft_weights:
-        rows_out = _clean_soft_rows(state["survivors"], comp, id_col)
-        out_cols = (
-            id_col, "n_ws_tokens", "clf_score", "component_id",
-            "n_members", "weight", "split",
-        )
-    else:
-        rows_out = _clean_reps(state["survivors"], comp, id_col, rank_col)
-        out_cols = (id_col, "n_ws_tokens", "clf_score", "component_id", "split")
-    output = (
-        train_val_test_split(
-            rows_out, id_col, val_frac=val_frac, test_frac=test_frac
-        )
-        .select(*out_cols)
-        .localCheckpoint()
-    )
+    output = _clean_output(
+        state["survivors"], connected_components_star(rebanded["pairs"]), id_col,
+        rank_col, soft_weights, val_frac, test_frac,
+    ).localCheckpoint()
     # survivors, member maps, digests, the counter and the keep policy
     # pass through untouched
     return {**state, **rebanded, "output": output}

@@ -164,9 +164,9 @@ def test_new_near_dup_of_singleton_rep_keeps_old_rep(spark):
 
 def test_duplicate_heavy_refresh_batch(spark):
     """The re-crawl shape: a refresh batch where 90% of rows are exact
-    copies of ONE new document. The apply's new-new candidates route
-    through the defended lsh_candidate_pairs (r13 pre-collapse), so the
-    batch's banding intermediate contracts to one representative while
+    copies of ONE new document. The apply bands the batch's digest-group
+    representatives (shingle_digest_groups), so the batch's banding
+    intermediate contracts to one representative while
     the OUTPUT still equals the full rebuild — one rep for the whole
     hot group, every copy absorbed into its component."""
     k = 90

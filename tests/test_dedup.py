@@ -589,40 +589,6 @@ def test_dedup_keep_best_prefers_rank_then_min_id(spark):
     }
 
 
-def test_exact_dedup_keep_best_vs_min_id(spark):
-    """Exact variant: identical text, different metadata — the keeper
-    maximizes the rank column (source priority), tiebreak smaller id;
-    exact_dedup would have kept the min id regardless."""
-    from build_datawarehouse_demo_spark.operators.dedup import (
-        exact_dedup,
-        exact_dedup_keep_best,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "same text here", 1),
-            (2, "same text here", 9),   # highest priority -> keeper
-            (3, "same text here", 9),   # tie with 2 -> 2 keeps (smaller id)
-            (4, "unique text", 0),
-        ],
-        "doc_id long, text string, prio long",
-    )
-    best = {
-        r["digest"]: (r["keep_id"], r["n_copies"])
-        for r in exact_dedup_keep_best(docs, rank_col="prio").collect()
-    }
-    base = {
-        r["digest"]: r["keep_id"] for r in exact_dedup(docs).collect()
-    }
-    import hashlib as _h
-
-    dg = _h.md5(b"same text here").hexdigest()
-    assert best[dg] == (2, 3)
-    assert base[dg] == 1  # the policy difference this operator exists for
-    dg_u = _h.md5(b"unique text").hexdigest()
-    assert best[dg_u] == (4, 1)
-
-
 def test_dedup_soft_weights_one_unit_per_class(spark):
     """Soft dedup (r17): every member kept, weight 1/|component| — a
     duplicate class contributes exactly one unit of loss mass;
@@ -647,10 +613,7 @@ def test_keep_best_supports_string_ids(spark):
     the ID (min_by over (rank IS NULL, -rank, id)), so string ids work
     — rank preference, rank-tie -> lexicographically smaller id, and a
     NULL rank loses to any non-null rank."""
-    from build_datawarehouse_demo_spark.operators.dedup import (
-        dedup_keep_best,
-        exact_dedup_keep_best,
-    )
+    from build_datawarehouse_demo_spark.operators.dedup import dedup_keep_best
 
     docs = spark.createDataFrame(
         [
@@ -674,13 +637,6 @@ def test_keep_best_supports_string_ids(spark):
         "url/x": True, "url/y": False,                  # tie -> smaller id
         "url/z": True,
     }
-
-    texts = spark.createDataFrame(
-        [("id9", "dup text", 1.0), ("id1", "dup text", None)],
-        "doc_id string, text string, prio double",
-    )
-    row = exact_dedup_keep_best(texts, rank_col="prio").collect()
-    assert len(row) == 1 and row[0]["keep_id"] == "id9"  # NULL rank loses
 
 
 def test_minhash_kernel_identical(spark):

@@ -7,7 +7,9 @@ tests/jvm_reference.py, not behind a user-facing switch. Every parquet
 write goes through `sources.writers.parquet_writer`, the one place the
 on-disk layout is set. The incremental corpus pipelines share one
 keep-policy guard, one apply epilogue and one streaming state sink.
-Every package import in the repo's scripts resolves.
+The MinHash near-dup pair pieces (Jaccard verify, rep -> member
+re-expansion) are written once, in operators/dedup.py. Every package
+import in the repo's scripts resolves.
 """
 
 from __future__ import annotations
@@ -159,19 +161,23 @@ def _calls_attr(fn, attr: str) -> bool:
     )
 
 
-def _lifecycle_functions():
+def _functions_under(scope):
     """(relative module path, name, def node) for every top-level
-    function under the lifecycle scope."""
+    function in ``scope``: package subtrees or single module files."""
     root = os.path.dirname(pkg.__file__)
-    for sub in _LIFECYCLE_SCOPE:
-        for dirpath, _, files in os.walk(os.path.join(root, sub)):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    path = os.path.join(dirpath, f)
-                    with open(path) as fh:
-                        fns = _top_level_functions(fh.read())
-                    for name, fn in fns.items():
-                        yield os.path.relpath(path, root), name, fn
+    for sub in scope:
+        top = os.path.join(root, sub)
+        paths = [top] if os.path.isfile(top) else [
+            os.path.join(dirpath, f)
+            for dirpath, _, files in os.walk(top)
+            for f in sorted(files)
+            if f.endswith(".py")
+        ]
+        for path in paths:
+            with open(path) as fh:
+                fns = _top_level_functions(fh.read())
+            for name, fn in fns.items():
+                yield os.path.relpath(path, root), name, fn
 
 
 def test_written_once_detector_sees_fstrings_and_nested_defs():
@@ -196,10 +202,58 @@ def test_written_once_detector_sees_fstrings_and_nested_defs():
 def test_fold_lifecycle_step_written_once(literal):
     owners = [
         f"{rel}:{name}"
-        for rel, name, fn in _lifecycle_functions()
+        for rel, name, fn in _functions_under(_LIFECYCLE_SCOPE)
         if _contains_literal(fn, literal)
     ]
     assert len(owners) == 1, owners
+
+
+#: where the MinHash near-dup pair algorithm lives, and where its
+#: member re-expansion was once copied
+_PAIR_SCOPE = ("operators", "plans")
+_EXPANSION_SCOPE = ("operators/dedup.py", "plans/training_data.py")
+
+
+def _call_sites(scope, match):
+    """``module:function`` once per call node in ``scope`` for which
+    ``match(call)`` holds."""
+    return [
+        f"{rel}:{name}"
+        for rel, name, fn in _functions_under(scope)
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call) and match(n)
+    ]
+
+
+def _call_named(call, name: str) -> bool:
+    f = call.func
+    return (isinstance(f, ast.Attribute) and f.attr == name) or (
+        isinstance(f, ast.Name) and f.id == name
+    )
+
+
+def _mentions(node, *texts: str) -> bool:
+    found = {n.value for n in ast.walk(node) if isinstance(n, ast.Constant)}
+    return all(t in found for t in texts)
+
+
+def test_minhash_pair_pieces_written_once():
+    """One shingle-array Jaccard verify, one rep -> member re-expansion,
+    and no signature-level collapse switch on the candidate stage."""
+    from build_datawarehouse_demo_spark.operators.dedup import lsh_candidate_pairs
+
+    verify = _call_sites(
+        _PAIR_SCOPE,
+        lambda c: _call_named(c, "array_intersect") and _mentions(c, "__sa", "__sb"),
+    )
+    assert verify == ["operators/dedup.py:jaccard_verify_pairs"], verify
+    expansion = _call_sites(
+        _EXPANSION_SCOPE,
+        lambda c: _call_named(c, "alias")
+        and any(isinstance(a, ast.Constant) and a.value == "__ia" for a in c.args),
+    )
+    assert expansion == ["operators/dedup.py:expand_rep_pairs"], expansion
+    assert "collapse" not in inspect.signature(lsh_candidate_pairs).parameters
 
 
 def test_state_sinks_share_one_foreach_batch():

@@ -6,17 +6,38 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from build_datawarehouse_demo_spark.operators.similarity import (
+    _as_double,
     brute_force_topk,
     cosine,
     embedding_near_dup_pairs_bucketed,
-    embedding_near_dup_pairs_exact,
     ivf_topk,
 )
 from tests import jvm_reference
+
+
+def embedding_near_dup_pairs_exact(
+    corpus: DataFrame,
+    threshold: float = 0.4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """All-pairs embedding-cosine near-dup pairs — the EXACT small-N
+    verifier for embedding_near_dup_pairs_bucketed (its recall ground
+    truth here). O(n²) in corpus size."""
+    n = corpus.sparkSession.sparkContext.defaultParallelism
+    a = corpus.repartition(n).select(F.col(id_col).alias("id_a"), _as_double(vec_col).alias("__a"))
+    b = corpus.select(F.col(id_col).alias("id_b"), _as_double(vec_col).alias("__b"))
+    return (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .withColumn("cosine", cosine(F.col("__a"), F.col("__b")))
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+    )
 
 
 def _vec_df(spark, mat, id_col="vec_id"):

@@ -32,26 +32,29 @@ def _dup_docs(spark, n=300, dup=0.9, seed=7):
 
 def test_minhash_skew_duplicate_groups(spark):
     from build_datawarehouse_demo_spark.operators.dedup import (
-        _banded_self_pairs,
-        _signature_groups,
+        lsh_band_keys,
+        lsh_band_self_pairs,
         minhash_dedup_pairs,
         minhash_signatures_from_arrays,
         shingle_arrays,
+        shingle_digest_groups,
     )
 
     df, k = _dup_docs(spark)
     n = df.count()
 
-    # (a) intermediate linearity: the banding self-join sees ONE row
-    # per distinct signature — the k-copy group contributes 1, so the
-    # rep-level candidate volume is bounded by distinct-content pairs,
-    # not bands*k^2/2 (uncollapsed truth for this corpus: the group
-    # alone would put k*(k-1)/2 = 32k+ pairs through the hot band key)
-    sigs = minhash_signatures_from_arrays(shingle_arrays(df), 16)
-    members, reps = _signature_groups(sigs, 16, "doc_id")
+    # (a) intermediate linearity on the collapse minhash_dedup_pairs
+    # and the incremental states run: the banding self-join sees ONE
+    # row per distinct shingle set — the k-copy group contributes 1, so
+    # the rep-level candidate volume is bounded by distinct-content
+    # pairs, not bands*k^2/2 (uncollapsed truth for this corpus: the
+    # group alone would put k*(k-1)/2 = 32k+ pairs through the hot band
+    # key)
+    members, reps = shingle_digest_groups(shingle_arrays(df))
     n_reps = reps.count()
     assert n_reps <= n - k + 1
-    rep_cand = _banded_self_pairs(reps, 16, 4, "doc_id").count()
+    sigs = minhash_signatures_from_arrays(reps.select("doc_id", "shingles"), 16)
+    rep_cand = lsh_band_self_pairs(lsh_band_keys(sigs, 16, 4)).count()
     assert rep_cand <= n_reps * (n_reps - 1) // 2
     assert rep_cand < k * (k - 1) // 2 / 10  # nowhere near the quadratic blob
 
@@ -71,9 +74,10 @@ def test_minhash_skew_duplicate_groups(spark):
 
 
 def test_lsh_candidate_pairs_skew_equivalence(spark):
-    """Candidate-pair parity on the skew corpus, including the empty-
-    signature guard: all-null signatures (empty shingle sets) must
-    produce no pairs in either shape."""
+    """Candidates on the skew corpus, including the empty-signature
+    guard: the k-copy group's k(k-1)/2 pairs are all candidates (equal
+    signatures collide in every band), and all-null signatures (empty
+    shingle sets) produce no pairs."""
     from build_datawarehouse_demo_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signatures_from_arrays,
@@ -87,15 +91,9 @@ def test_lsh_candidate_pairs_skew_equivalence(spark):
     )
     df = df.unionByName(extra)
     sigs = minhash_signatures_from_arrays(shingle_arrays(df), 16)
-    c1 = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs, 16, 4).collect()}
-    c0 = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(sigs, 16, 4, collapse=False).collect()
-    }
-    assert c1 == c0
-    assert not any(a >= 5000 or b >= 5000 for a, b in c1)
-    # the k-copy group's quadratic truth is present in the OUTPUT
-    assert sum(1 for a, b in c1 if a < k and b < k) == k * (k - 1) // 2
+    cand = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs, 16, 4).collect()}
+    assert not any(a >= 5000 or b >= 5000 for a, b in cand)
+    assert sum(1 for a, b in cand if a < k and b < k) == k * (k - 1) // 2
 
 
 def test_embedding_skew_duplicate_groups(spark):

@@ -12,11 +12,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from build_datawarehouse_demo_spark.sources.readers import read_parquet
-from build_datawarehouse_demo_spark.streaming.windows import (
-    read_event_stream,
-    run_stream_to_memory,
-    tumbling_event_counts,
-)
+from build_datawarehouse_demo_spark.streaming.windows import tumbling_event_counts
+from tests.stream_harness import read_event_stream, run_stream_to_memory
 
 SF_DIR = "/root/testdata/sf0.001"
 

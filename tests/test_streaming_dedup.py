@@ -8,10 +8,7 @@ import tempfile
 
 from build_datawarehouse_demo_spark.sources.readers import read_parquet
 from build_datawarehouse_demo_spark.streaming.dedup import dedup_event_stream
-from build_datawarehouse_demo_spark.streaming.windows import (
-    read_event_stream,
-    run_stream_to_memory,
-)
+from tests.stream_harness import read_event_stream, run_stream_to_memory
 
 SF_DIR = "/root/testdata/sf0.001"
 
