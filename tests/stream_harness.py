@@ -1,7 +1,7 @@
-"""Structured Streaming test harness: a file-source event stream and a
-memory-sink driver. The streaming tests run the package's stream
-transforms through these; production streams come from the caller's
-own source and sink.
+"""Structured Streaming test harness: a file-source event stream, and a
+runner that drains a stream into a memory sink. The streaming tests run
+the package's stream transforms through these; production streams come
+from the caller's own source and sink.
 """
 
 from __future__ import annotations

@@ -208,8 +208,9 @@ def test_fold_lifecycle_step_written_once(literal):
     assert len(owners) == 1, owners
 
 
-#: where the MinHash near-dup pair algorithm lives, and where its
-#: member re-expansion was once copied
+#: the MinHash near-dup pair algorithm and its callers; the member
+#: re-expansion scan leaves out operators/similarity.py, whose cosine
+#: re-expansion is a different algorithm
 _PAIR_SCOPE = ("operators", "plans")
 _EXPANSION_SCOPE = ("operators/dedup.py", "plans/training_data.py")
 
