@@ -19,7 +19,6 @@ scan, one digest-keyed exchange, done.
 
 from __future__ import annotations
 
-import functools
 import logging
 
 from pyspark.sql import DataFrame
@@ -242,6 +241,27 @@ def prepare_training_data_neardup(
     return train_val_test_split(out, id_col, val_frac=val_frac, test_frac=test_frac)
 
 
+def _pipeline_params(kwargs: dict, rank_features: tuple[str, str]) -> dict:
+    """A corpus pipeline's build parameters: every keyword of the call
+    ``kwargs`` except the input frame and its count, with the keep
+    policy validated before any Spark job runs. A builder passes its
+    ``locals()`` as its first statement, before it binds any other
+    name. The state builders keep the result as ``state["params"]``;
+    applies, migrations, compaction and the streaming sinks read every
+    knob from there, so a fold always runs at the parameters its state
+    was built with. The one-shot clean build runs the same check."""
+    params = {k: v for k, v in kwargs.items() if k not in ("df", "corpus_n")}
+    rank_col = params["rank_col"]
+    if rank_col is not None and params.get("soft_weights"):
+        raise ValueError("rank_col and soft_weights are mutually exclusive")
+    if rank_col is not None and rank_col not in rank_features:
+        raise ValueError(
+            f"rank_col must be a numeric survivor feature column "
+            f"({' or '.join(rank_features)}), got {rank_col!r}"
+        )
+    return params
+
+
 def training_data_neardup_state(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -263,6 +283,9 @@ def training_data_neardup_state(
     same parameters, same values as prepare_training_data_neardup; the
     difference is purely which intermediates survive the run:
 
+      params          every keyword of this call but df/corpus_n (the
+                      front, shingle, threshold, span, split and keep-
+                      policy knobs) — the one place folds read them
       bands, rows     frozen banding parameters (sized from THIS run's
                       raw corpus count — the incremental quantizer)
       survivors       exact-dedup survivors (id, cleaned, pred_lang,
@@ -301,6 +324,7 @@ def training_data_neardup_state(
     survivors/output by id) and a refresh appends partitions — same
     plan, durable blocks; see sources/writers.save_table.
     """
+    params = _pipeline_params(locals(), ("n_tokens", "quality"))
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
         minhash_auto_params,
@@ -343,11 +367,6 @@ def training_data_neardup_state(
             keep_best_key,
         )
 
-        if rank_col not in ("n_tokens", "quality"):
-            raise ValueError(
-                f"rank_col must be a numeric survivor feature column "
-                f"(n_tokens or quality), got {rank_col!r}"
-            )
         win = memb.groupBy("component_id").agg(
             F.min_by(F.col(id_col), keep_best_key(rank_col, id_col)).alias(
                 "__keep"
@@ -396,7 +415,8 @@ def training_data_neardup_state(
     output = train_val_test_split(
         out, id_col, val_frac=val_frac, test_frac=test_frac
     ).localCheckpoint()
-    state = {
+    return {
+        "params": params,
         "bands": bands,
         "rows": rows,
         "survivors": survivors,
@@ -411,11 +431,6 @@ def training_data_neardup_state(
         "rep_grams": rep_grams,
         "output": output,
     }
-    if rank_col is not None:
-        # the keep policy is part of the state's identity (see
-        # clean_filter_dedup_state)
-        state["rank_col"] = rank_col
-    return state
 
 
 def _collapsed_pair_state(
@@ -462,13 +477,7 @@ def _collapsed_pair_state(
     return band_keys, pairs
 
 
-def _apply_rep_candidates(
-    new_surv: DataFrame,
-    state: dict,
-    id_col: str,
-    shingle_k: int,
-    threshold: float,
-) -> dict:
+def _apply_rep_candidates(new_surv: DataFrame, state: dict) -> dict:
     """The refresh batch's near-dup delta against a collapsed state —
     shared by both incremental applies (r14). Shingles the batch's
     survivors ``new_surv``, computes their digest groups, signs/bands
@@ -481,6 +490,7 @@ def _apply_rep_candidates(
     member pairs appear only in the verified OUTPUT expansion, which
     is the pairs contract.
 
+    Shingle size, threshold and id column come from ``state["params"]``.
     Returns dict: m_new/r_new (batch digest groups), new_rep_keys
     (checkpointed), new_pairs (member-level verified delta edges,
     checkpointed)."""
@@ -494,6 +504,8 @@ def _apply_rep_candidates(
         shingle_digest_groups,
     )
 
+    p = state["params"]
+    id_col, shingle_k, threshold = p["id_col"], p["shingle_k"], p["jaccard_threshold"]
     bands = state["bands"]
     num_hashes = bands * state["rows"]
     new_sh = shingle_arrays(new_surv, id_col, "cleaned", shingle_k)
@@ -555,9 +567,7 @@ def _apply_rep_candidates(
     }
 
 
-def _refreshed_collapse_state(
-    state: dict, delta: dict, id_col: str
-) -> dict:
+def _refreshed_collapse_state(state: dict, delta: dict) -> dict:
     """Fold a batch's digest groups into the stored collapse state,
     keeping it rep-level FOREVER (so refresh cost never grows with
     copies folded in past batches): a batch rep whose digest matches a
@@ -574,6 +584,7 @@ def _refreshed_collapse_state(
     table. Consumers re-read already-materialized blocks; plan depth
     grows one thin union per fold (a production run compacts to
     parquet instead — sources/writers.save_table)."""
+    id_col = state["params"]["id_col"]
     r_new, m_new = delta["r_new"], delta["m_new"]
     matched = (
         r_new.select(F.col(id_col).alias("__nrep"), "__dg")
@@ -607,24 +618,6 @@ def _refreshed_collapse_state(
     }
 
 
-def _check_keep_policy(
-    state: dict, rank_col: str | None, soft_weights: bool, op: str
-) -> None:
-    """Refuse an apply or migration (``op``) whose keep policy differs
-    from the one ``state`` was built with — the policy is part of the
-    state's identity. Shared by both incremental pipelines."""
-    for key, built, called in (
-        ("rank_col", state.get("rank_col"), rank_col),
-        ("soft_weights", bool(state.get("soft_weights")), bool(soft_weights)),
-    ):
-        if built != called:
-            raise ValueError(
-                f"keep-policy mismatch: state was built with {key}={built!r}, "
-                f"{op} called with {called!r} — the policy is part of the "
-                f"state's identity"
-            )
-
-
 def _labeled(
     frame: DataFrame, comp: DataFrame, id_col: str, name: str = "__cid"
 ) -> DataFrame:
@@ -645,13 +638,6 @@ def _refresh_spans(
     added_ids: DataFrame,
     dropped_ids: DataFrame,
     comp: DataFrame,
-    rank_col: str | None,
-    *,
-    id_col: str,
-    span_window: int,
-    span_min_docs: int,
-    val_frac: float,
-    test_frac: float,
 ) -> tuple[DataFrame, DataFrame]:
     """The near-dup pipeline's span stage after its representative set
     changed — the one delta refresh both training_data_neardup_apply
@@ -680,6 +666,7 @@ def _refresh_spans(
     with the refreshed label — a projection over the changed rows,
     never a span rebuild.
 
+    Span, split and keep-policy knobs come from ``state["params"]``.
     Returns (output, rep_grams)."""
     from build_datawarehouse_demo_spark.operators.dedup import (
         remove_spans_given_owners,
@@ -687,6 +674,8 @@ def _refresh_spans(
     )
     from build_datawarehouse_demo_spark.operators.sampling import train_val_test_split
 
+    p = state["params"]
+    id_col, rank_col, span_window = p["id_col"], p["rank_col"], p["span_window"]
     added_grams = _window_gram_rows(
         added_docs.select(id_col, "cleaned"), id_col, "cleaned", span_window
     ).localCheckpoint()
@@ -717,7 +706,7 @@ def _refresh_spans(
         grams_union.join(digests_needed, "gram_md5")
         .groupBy("gram_md5")
         .agg(F.countDistinct(id_col).alias("__nd"), F.min(id_col).alias("__owner"))
-        .filter(F.col("__nd") >= span_min_docs)
+        .filter(F.col("__nd") >= p["span_min_docs"])
         .select("gram_md5", "__owner")
     )
     affected_docs = rep_feats.join(affected_ids, id_col).localCheckpoint()
@@ -741,7 +730,7 @@ def _refresh_spans(
         "n_tokens_removed",
     )
     recomputed_out = train_val_test_split(
-        recomputed, id_col, val_frac=val_frac, test_frac=test_frac
+        recomputed, id_col, val_frac=p["val_frac"], test_frac=p["test_frac"]
     ).localCheckpoint()  # the span-rebuild DELTA — the only heavy subtree here
     reused = (
         state["output"]
@@ -783,7 +772,6 @@ def _finish_fold(
     compact_path: str | None,
     compact_keep_superseded: bool,
     compact_retire_fold_rdds: bool,
-    id_col: str,
 ) -> dict:
     """The apply epilogue both incremental pipelines share, after the
     fold built ``result`` from ``state`` and the batch's checkpointed
@@ -793,10 +781,10 @@ def _finish_fold(
       (new_surv is checkpoint-backed, so this counts cached blocks, not
       the corpus — r16 ADVICE); seed it once with
       ``state["n_survivors"] = state["survivors"].count()``;
-    - ``migrate_banding``: the frozen-banding migration ``migrate``
-      (the pipeline's migration with its parameters bound) runs at the
-      grown corpus size — a no-op between minhash_auto_params
-      boundaries; at a boundary the replaced frames' checkpoint blocks
+    - ``migrate_banding``: the pipeline's frozen-banding migration
+      ``migrate`` runs at the grown corpus size (it reads its knobs
+      from the state's ``params``, like the apply) — a no-op between
+      minhash_auto_params boundaries; at a boundary the replaced frames' checkpoint blocks
       are retired unless ``compact_keep_superseded``;
     - ``compact_to``: compact, retire the superseded blocks (inside
       compact_state), then sweep every RDD persisted since
@@ -830,7 +818,6 @@ def _finish_fold(
         result,
         compact_to,
         base_path=compact_path,
-        id_col=id_col,
         unpersist_superseded=not compact_keep_superseded,
     )
     # hidden fold intermediates (not leaves of any result frame)
@@ -842,17 +829,6 @@ def _finish_fold(
 def training_data_neardup_apply(
     new_df: DataFrame,
     state: dict,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 5,
-    min_quality: float = 0.3,
-    shingle_k: int = 3,
-    jaccard_threshold: float = 0.8,
-    span_window: int = 5,
-    span_min_docs: int = 2,
-    val_frac: float = 0.1,
-    test_frac: float = 0.1,
-    rank_col: str | None = None,
     migrate_banding: bool = False,
     compact_to: str | None = None,
     compact_path: str | None = None,
@@ -870,7 +846,11 @@ def training_data_neardup_apply(
     tests/test_training_data_incremental.py): with the state's FROZEN
     banding parameters, the refreshed output is IDENTICAL to running
     prepare_training_data_neardup over old ∪ new with those same
-    parameters. The argument, stage by stage:
+    parameters. Every pipeline knob — front thresholds, shingle size,
+    Jaccard threshold, span window, split fractions, keep policy — is
+    read from ``state["params"]``, recorded once by
+    training_data_neardup_state, so a fold cannot run at other values
+    than its state was built with. The argument, stage by stage:
 
     - exact dedup: a new doc whose cleaned digest matches any stored
       survivor digest is dropped (the union run would keep the
@@ -948,11 +928,10 @@ def training_data_neardup_apply(
     share (_finish_fold); the span refresh is the one the banding
     migration also runs (_refresh_spans).
 
-    ``rank_col`` (r18, VERDICT r17 item 1): the KEEP-BEST policy, run
-    incrementally — the state must have been built with the SAME
-    rank_col (guarded; a numeric survivor feature: ``quality`` or
-    ``n_tokens``). Representative selection changes from min-id to
-    per-component argmax (rank, then smallest id): only components
+    ``rank_col`` in the state's params (r18, VERDICT r17 item 1): the
+    KEEP-BEST policy, run incrementally (a numeric survivor feature:
+    ``quality`` or ``n_tokens``). Representative selection changes
+    from min-id to per-component argmax (rank, then smallest id): only components
     TOUCHED by the batch can change their keep (new edges always
     involve new documents, and an old non-keep member can never
     out-rank its component's stored keep — the argmax over a merged
@@ -974,7 +953,8 @@ def training_data_neardup_apply(
         connected_components_star,
     )
 
-    _check_keep_policy(state, rank_col, False, "apply")
+    p = state["params"]
+    id_col, rank_col = p["id_col"], p["rank_col"]
     retire_scope = (
         _persistent_rdd_ids(new_df.sparkSession) if compact_to is not None else None
     )
@@ -984,7 +964,9 @@ def training_data_neardup_apply(
     # -- exact stage: batch-internal dedup, then digest anti-join
     #    against the STORED survivor digest table (16-byte keys only —
     #    r14: formerly re-derived from the full stored text per apply)
-    batch = _featured_survivors(new_df, id_col, text_col, min_tokens, min_quality)
+    batch = _featured_survivors(
+        new_df, id_col, p["text_col"], p["min_tokens"], p["min_quality"]
+    )
     new_surv = (
         batch.withColumn("__digest", F.md5(F.col("cleaned")))
         .join(state["text_digests"], "__digest", "left_anti")
@@ -1000,9 +982,7 @@ def training_data_neardup_apply(
     #    times meeting m re-crawled copies; both sides now contract to
     #    one rep per distinct shingle set and candidate pairs re-expand
     #    through the member maps only in the verified OUTPUT).
-    delta = _apply_rep_candidates(
-        new_surv, state, id_col, shingle_k, jaccard_threshold
-    )
+    delta = _apply_rep_candidates(new_surv, state)
     # append-only state discipline (r14): every `old ∪ delta` below is
     # a LAZY union — the delta is checkpoint-backed, the old side is
     # the stored state's already-materialized blocks, so a refresh
@@ -1075,19 +1055,13 @@ def training_data_neardup_apply(
         new_rep_ids,
         dropped_old,
         compR,
-        rank_col,
-        id_col=id_col,
-        span_window=span_window,
-        span_min_docs=span_min_docs,
-        val_frac=val_frac,
-        test_frac=test_frac,
     )
-    refreshed = _refreshed_collapse_state(state, delta, id_col)
     result = {
+        "params": p,
         "bands": state["bands"],
         "rows": state["rows"],
         "survivors": old_surv.unionByName(new_surv),
-        **refreshed,
+        **_refreshed_collapse_state(state, delta),
         "text_digests": state["text_digests"].union(
             new_surv.select(F.md5(F.col("cleaned")).alias("__digest"))
         ),
@@ -1096,44 +1070,18 @@ def training_data_neardup_apply(
         "rep_grams": rep_grams,
         "output": output,
     }
-    if rank_col is not None:
-        result["rank_col"] = rank_col
-    migrate = functools.partial(
-        migrate_training_data_neardup_banding,
-        id_col=id_col,
-        shingle_k=shingle_k,
-        jaccard_threshold=jaccard_threshold,
-        span_window=span_window,
-        span_min_docs=span_min_docs,
-        val_frac=val_frac,
-        test_frac=test_frac,
-        rank_col=rank_col,
-    )
     return _finish_fold(
         result,
         state,
         new_surv,
         retire_scope,
-        migrate,
+        migrate_training_data_neardup_banding,
         migrate_banding=migrate_banding,
         compact_to=compact_to,
         compact_path=compact_path,
         compact_keep_superseded=compact_keep_superseded,
         compact_retire_fold_rdds=compact_retire_fold_rdds,
-        id_col=id_col,
     )
-
-
-def prepare_training_data_neardup_incremental(
-    new_df: DataFrame,
-    state: dict,
-    **params,
-) -> DataFrame:
-    """The refreshed pipeline OUTPUT after folding ``new_df`` into an
-    existing state (training_data_neardup_apply's dict, output frame
-    only) — identical rows to a full prepare_training_data_neardup
-    rebuild over old ∪ new at the state's frozen banding parameters."""
-    return training_data_neardup_apply(new_df, state, **params)["output"]
 
 
 def _clean_reps(
@@ -1149,8 +1097,9 @@ def _clean_reps(
     star label, so the filter is free); ``rank_col`` set keeps the
     member MAXIMIZING (rank, then smallest id) — the Dolma/FineWeb
     keep-the-best policy (operators/dedup.dedup_keep_best), as ONE
-    map-side-combining min_by over slim scalar rows. ``rank_col`` must
-    be a numeric survivor feature column (n_ws_tokens or clf_score)."""
+    map-side-combining min_by over slim scalar rows. ``rank_col`` is a
+    numeric survivor feature column (n_ws_tokens or clf_score; checked
+    by _pipeline_params)."""
     from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
     memb = _labeled(
@@ -1159,11 +1108,6 @@ def _clean_reps(
     if rank_col is None:
         return memb.filter(F.col("component_id") == F.col(id_col)).select(
             id_col, "n_ws_tokens", "clf_score", "component_id"
-        )
-    if rank_col not in ("n_ws_tokens", "clf_score"):
-        raise ValueError(
-            f"rank_col must be a numeric survivor feature column "
-            f"(n_ws_tokens or clf_score), got {rank_col!r}"
         )
     win = memb.groupBy("component_id").agg(
         F.min_by(
@@ -1213,33 +1157,33 @@ def _clean_out_cols(id_col: str, soft_weights: bool) -> tuple[str, ...]:
     return (id_col, "n_ws_tokens", "clf_score", "component_id", *soft, "split")
 
 
-def _clean_output(
-    survivors: DataFrame,
-    comp: DataFrame,
-    id_col: str,
-    rank_col: str | None,
-    soft_weights: bool,
-    val_frac: float,
-    test_frac: float,
-) -> DataFrame:
+def _clean_output(survivors: DataFrame, comp: DataFrame, params: dict) -> DataFrame:
     """The clean pipeline's output rows from its near-dup components
-    under the keep policy — min-id or keep-best (_clean_reps), or
-    drop-free (_clean_soft_rows) — through the hash split. Shared by
-    the one-shot build, the state builder and the banding migration;
-    the caller decides whether to checkpoint."""
+    under the keep policy of ``params`` (_pipeline_params) — min-id or
+    keep-best (_clean_reps), or drop-free (_clean_soft_rows) — through
+    the hash split. Shared by the one-shot build, the state builder
+    and the banding migration; the caller decides whether to
+    checkpoint."""
     from build_datawarehouse_demo_spark.operators.sampling import (
         train_val_test_split,
     )
 
-    if soft_weights:
-        if rank_col is not None:
-            raise ValueError("rank_col and soft_weights are mutually exclusive")
+    id_col = params["id_col"]
+    if params["soft_weights"]:
         rows_out = _clean_soft_rows(survivors, comp, id_col)
     else:
-        rows_out = _clean_reps(survivors, comp, id_col, rank_col)
+        rows_out = _clean_reps(survivors, comp, id_col, params["rank_col"])
     return train_val_test_split(
-        rows_out, id_col, val_frac=val_frac, test_frac=test_frac
-    ).select(*_clean_out_cols(id_col, soft_weights))
+        rows_out, id_col, val_frac=params["val_frac"], test_frac=params["test_frac"]
+    ).select(*_clean_out_cols(id_col, params["soft_weights"]))
+
+
+#: clean_filter_survivors' knobs: the clean pipeline's filter front
+_CLEAN_FRONT = (
+    "id_col", "text_col", "min_words_per_line", "min_sentences", "min_words",
+    "min_stopword_hits", "max_top_gram_char_frac", "clf_dim", "clf_weights",
+    "clf_threshold",
+)
 
 
 def clean_filter_survivors(
@@ -1378,6 +1322,7 @@ def prepare_clean_filter_dedup(
     (id, n_ws_tokens, clf_score, component_id, split)
     [+ (n_members, weight) under soft_weights].
     """
+    params = _pipeline_params(locals(), ("n_ws_tokens", "clf_score"))
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
         minhash_auto_params,
@@ -1388,22 +1333,12 @@ def prepare_clean_filter_dedup(
         corpus_n = df.count()
     bands, rows = minhash_auto_params(corpus_n, threshold=jaccard_threshold)
 
+    # the near-dup stage derives signatures AND both verify sides from
+    # this frame — same materialization contract as
+    # prepare_training_data_neardup's `survivors` (parquet boundary on
+    # a real cluster)
     survivors = clean_filter_survivors(
-        df,
-        id_col=id_col,
-        text_col=text_col,
-        min_words_per_line=min_words_per_line,
-        min_sentences=min_sentences,
-        min_words=min_words,
-        min_stopword_hits=min_stopword_hits,
-        max_top_gram_char_frac=max_top_gram_char_frac,
-        clf_dim=clf_dim,
-        clf_weights=clf_weights,
-        clf_threshold=clf_threshold,
-        # the near-dup stage derives signatures AND both verify sides
-        # from this frame — same materialization contract as
-        # prepare_training_data_neardup's `survivors` (parquet
-        # boundary on a real cluster)
+        df, **{k: params[k] for k in _CLEAN_FRONT}
     ).localCheckpoint()
 
     pairs = minhash_dedup_pairs(
@@ -1415,10 +1350,7 @@ def prepare_clean_filter_dedup(
         bands=bands,
         threshold=jaccard_threshold,
     ).localCheckpoint()
-    return _clean_output(
-        survivors, connected_components_star(pairs), id_col, rank_col,
-        soft_weights, val_frac, test_frac,
-    )
+    return _clean_output(survivors, connected_components_star(pairs), params)
 
 
 def clean_filter_dedup_state(
@@ -1448,6 +1380,9 @@ def clean_filter_dedup_state(
     corpus. Same stages, same parameters, same values as the batch
     pipeline; the difference is which intermediates survive:
 
+      params        every keyword of this call but df/corpus_n (the
+                    filter front, shingle, threshold, split and keep-
+                    policy knobs) — the one place folds read them
       bands, rows   frozen banding (sized from THIS run's raw corpus
                     count — the incremental quantizer)
       survivors     filter-front survivors (id, cleaned, n_ws_tokens,
@@ -1481,6 +1416,7 @@ def clean_filter_dedup_state(
     table (band_keys by (band, band_key), survivors/output by id) and
     a refresh appends partitions.
     """
+    params = _pipeline_params(locals(), ("n_ws_tokens", "clf_score"))
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
         minhash_auto_params,
@@ -1492,17 +1428,7 @@ def clean_filter_dedup_state(
         corpus_n = df.count()
     bands, rows = minhash_auto_params(corpus_n, threshold=jaccard_threshold)
     survivors = clean_filter_survivors(
-        df,
-        id_col=id_col,
-        text_col=text_col,
-        min_words_per_line=min_words_per_line,
-        min_sentences=min_sentences,
-        min_words=min_words,
-        min_stopword_hits=min_stopword_hits,
-        max_top_gram_char_frac=max_top_gram_char_frac,
-        clf_dim=clf_dim,
-        clf_weights=clf_weights,
-        clf_threshold=clf_threshold,
+        df, **{k: params[k] for k in _CLEAN_FRONT}
     ).localCheckpoint()
     members, dg_reps = shingle_digest_groups(
         shingle_arrays(survivors, id_col, "cleaned", shingle_k), id_col
@@ -1512,10 +1438,10 @@ def clean_filter_dedup_state(
         jaccard_threshold, id_col,
     )
     output = _clean_output(
-        survivors, connected_components_star(pairs), id_col, rank_col,
-        soft_weights, val_frac, test_frac,
+        survivors, connected_components_star(pairs), params
     ).localCheckpoint()
-    state = {
+    return {
+        "params": params,
         "bands": bands,
         "rows": rows,
         "survivors": survivors,
@@ -1525,34 +1451,11 @@ def clean_filter_dedup_state(
         "pairs": pairs,
         "output": output,
     }
-    if rank_col is not None:
-        # the keep policy is part of the state's identity: applies and
-        # migrations must run the SAME policy (guarded there)
-        state["rank_col"] = rank_col
-    if soft_weights:
-        state["soft_weights"] = True
-    return state
 
 
 def clean_filter_dedup_apply(
     new_df: DataFrame,
     state: dict,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words_per_line: int = 5,
-    min_sentences: int = 3,
-    min_words: int = 50,
-    min_stopword_hits: int = 2,
-    max_top_gram_char_frac: tuple[float, float, float] = (0.20, 0.18, 0.16),
-    clf_dim: int = 64,
-    clf_weights: list[float] | None = None,
-    clf_threshold: float = 0.5,
-    shingle_k: int = 3,
-    jaccard_threshold: float = 0.8,
-    val_frac: float = 0.1,
-    test_frac: float = 0.1,
-    rank_col: str | None = None,
-    soft_weights: bool = False,
     migrate_banding: bool = False,
     compact_to: str | None = None,
     compact_path: str | None = None,
@@ -1565,7 +1468,10 @@ def clean_filter_dedup_apply(
     rebuild-parity contract as training_data_neardup_apply and
     ivf_index_append: with the state's FROZEN banding, the refreshed
     output is IDENTICAL to prepare_clean_filter_dedup over old ∪ new
-    at those parameters. Stage by stage:
+    at those parameters. Every pipeline knob — filter front, shingle
+    size, Jaccard threshold, split fractions, keep policy — is read
+    from ``state["params"]``, recorded once by clean_filter_dedup_state.
+    Stage by stage:
 
     - filter front: per-document, batch-only scan — a document's C4/
       Gopher/classifier verdict depends on nothing but its own text.
@@ -1594,33 +1500,32 @@ def clean_filter_dedup_apply(
       changed); dropped old reps are anti-joined away; new reps build
       rows through the same split hash — identical either way.
 
-    ``rank_col`` (r18, VERDICT r17 item 1) runs the KEEP-BEST policy
-    incrementally — the state must have been built with the SAME
-    rank_col (guarded). Only components TOUCHED by the batch can
-    change their keep: new edges always involve new documents, and an
-    old NON-keep member can never out-rank its component's stored keep
-    (the argmax over a merged component is the max of the merged
-    parts' argmaxes and the new members). So the fold recomputes the
-    winner row for exactly the touched components — candidates = the
-    stored keeps of those components plus the batch's survivors, ONE
-    slim min_by per component — and reuses every untouched stored row
-    verbatim. A later higher-rank re-crawl therefore DISPLACES the
-    stored representative (the keep-best displacement contract); a
-    same-rank re-crawl ties and loses to the smaller stored id, so
-    exact redelivery stays idempotent in output.
+    ``rank_col`` in the state's params (r18, VERDICT r17 item 1) runs the
+    KEEP-BEST policy incrementally. Only components TOUCHED by the
+    batch can change their keep: new edges always involve new
+    documents, and an old NON-keep member can never out-rank its
+    component's stored keep (the argmax over a merged component is the
+    max of the merged parts' argmaxes and the new members). So the
+    fold recomputes the winner row for exactly the touched components
+    — candidates = the stored keeps of those components plus the
+    batch's survivors, ONE slim min_by per component — and reuses
+    every untouched stored row verbatim. A later higher-rank re-crawl
+    therefore DISPLACES the stored representative (the keep-best
+    displacement contract); a same-rank re-crawl ties and loses to the
+    smaller stored id, so exact redelivery stays idempotent in output.
 
-    ``soft_weights`` (r18): the DROP-FREE third policy — the output
-    keeps EVERY survivor at weight 1/|component| (dedup_soft_weights'
+    ``soft_weights`` (r18): the DROP-FREE third policy — the output keeps
+    EVERY survivor at weight 1/|component| (dedup_soft_weights'
     one-unit-of-mass-per-class contract; rows gain n_members and
     weight columns), ready for the weight-aware mixers. Mutually
-    exclusive with rank_col; the state must have been built with
-    ``soft_weights=True`` (guarded). Incremental shape: a fold can
-    change only the batch-TOUCHED components' sizes and labels, so
-    exactly their member rows are recomputed (old members of a touched
-    component are pair-graph nodes — the stored-survivor scan is
-    pruned to those ids) and every other row is reused verbatim. A
-    re-crawl never drops anything here — it ADDS a member and
-    re-weights its class down, which is the policy's point.
+    exclusive with rank_col (rejected at the state build). Incremental
+    shape: a fold can change only the batch-TOUCHED components' sizes
+    and labels, so exactly their member rows are recomputed (old
+    members of a touched component are pair-graph nodes — the
+    stored-survivor scan is pruned to those ids) and every other row
+    is reused verbatim. A re-crawl never drops anything here — it ADDS
+    a member and re-weights its class down, which is the policy's
+    point.
 
     Returns the same dict shape as clean_filter_dedup_state.
     Redelivery is idempotent IN OUTPUT: a redelivered copy gets a new
@@ -1658,10 +1563,10 @@ def clean_filter_dedup_apply(
     delta count — r16 ADVICE), else from one survivors count. The
     streaming sinks run this same hook (streaming/sinks.py).
 
-    The keep-policy guard (_check_keep_policy) and the epilogue —
-    counter, migration hook, compaction (_finish_fold) — are shared
-    with training_data_neardup_apply; this function holds only what
-    differs: the filter front and the representative/output rules.
+    The epilogue — counter, migration hook, compaction (_finish_fold)
+    — is shared with training_data_neardup_apply; this function holds
+    only what differs: the filter front and the representative/output
+    rules.
     """
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
@@ -1670,7 +1575,8 @@ def clean_filter_dedup_apply(
         train_val_test_split,
     )
 
-    _check_keep_policy(state, rank_col, soft_weights, "apply")
+    p = state["params"]
+    id_col, val_frac, test_frac = p["id_col"], p["val_frac"], p["test_frac"]
     retire_scope = (
         _persistent_rdd_ids(new_df.sparkSession) if compact_to is not None else None
     )
@@ -1678,17 +1584,7 @@ def clean_filter_dedup_apply(
     old_output = state["output"]
 
     new_surv = clean_filter_survivors(
-        new_df,
-        id_col=id_col,
-        text_col=text_col,
-        min_words_per_line=min_words_per_line,
-        min_sentences=min_sentences,
-        min_words=min_words,
-        min_stopword_hits=min_stopword_hits,
-        max_top_gram_char_frac=max_top_gram_char_frac,
-        clf_dim=clf_dim,
-        clf_weights=clf_weights,
-        clf_threshold=clf_threshold,
+        new_df, **{k: p[k] for k in _CLEAN_FRONT}
     ).localCheckpoint()
 
     # near-dup delta at digest-REP level (r14, _apply_rep_candidates —
@@ -1699,17 +1595,15 @@ def clean_filter_dedup_apply(
     # (formerly ~bands·k_old·m join rows on one hot key), and the
     # k_old·m member pairs appear only in the verified output
     # expansion — the pairs contract.
-    delta = _apply_rep_candidates(
-        new_surv, state, id_col, shingle_k, jaccard_threshold
-    )
+    delta = _apply_rep_candidates(new_surv, state)
     # append-only state discipline (r14, see training_data_neardup_
     # apply): lazy `old ∪ checkpointed-delta` unions — a refresh never
     # copies corpus-scale state frames.
     pairs_all = state["pairs"].union(delta["new_pairs"])
 
     compR = connected_components_star(pairs_all).withColumnRenamed("node", id_col)
-    out_cols = _clean_out_cols(id_col, soft_weights)
-    if soft_weights:
+    out_cols = _clean_out_cols(id_col, p["soft_weights"])
+    if p["soft_weights"]:
         # DROP-FREE refresh (r18): every survivor stays in the output;
         # what a fold can change is the component SIZE (weight) and
         # LABEL of the batch-TOUCHED components only — membership of
@@ -1751,7 +1645,7 @@ def clean_filter_dedup_apply(
             .localCheckpoint()  # the touched-component member rows
         )
         dropped_old = touched_map.select(id_col).localCheckpoint()
-    elif rank_col is None:
+    elif p["rank_col"] is None:
         dropped_old = (
             old_output.select(id_col)
             .join(compR, id_col)
@@ -1791,7 +1685,7 @@ def clean_filter_dedup_apply(
         winners = cand.groupBy("component_id").agg(
             F.min_by(
                 F.struct(*[F.col(c) for c in feats]),
-                keep_best_key(rank_col, id_col),
+                keep_best_key(p["rank_col"], id_col),
             ).alias("__w")
         )
         new_rows = winners.select(
@@ -1814,54 +1708,27 @@ def clean_filter_dedup_apply(
             .localCheckpoint()
         )
     output = old_output.join(dropped_old, id_col, "left_anti").unionByName(new_out)
-    refreshed = _refreshed_collapse_state(state, delta, id_col)
     result = {
+        "params": p,
         "bands": state["bands"],
         "rows": state["rows"],
         "survivors": old_surv.unionByName(new_surv),
-        **refreshed,
+        **_refreshed_collapse_state(state, delta),
         "pairs": pairs_all,
         "output": output,
     }
-    if rank_col is not None:
-        result["rank_col"] = rank_col
-    if soft_weights:
-        result["soft_weights"] = True
-    migrate = functools.partial(
-        migrate_clean_filter_banding,
-        id_col=id_col,
-        shingle_k=shingle_k,
-        jaccard_threshold=jaccard_threshold,
-        val_frac=val_frac,
-        test_frac=test_frac,
-        rank_col=rank_col,
-        soft_weights=soft_weights,
-    )
     return _finish_fold(
         result,
         state,
         new_surv,
         retire_scope,
-        migrate,
+        migrate_clean_filter_banding,
         migrate_banding=migrate_banding,
         compact_to=compact_to,
         compact_path=compact_path,
         compact_keep_superseded=compact_keep_superseded,
         compact_retire_fold_rdds=compact_retire_fold_rdds,
-        id_col=id_col,
     )
-
-
-def prepare_clean_filter_dedup_incremental(
-    new_df: DataFrame,
-    state: dict,
-    **params,
-) -> DataFrame:
-    """The refreshed cleaning-stack OUTPUT after folding ``new_df``
-    into an existing state (clean_filter_dedup_apply's dict, output
-    frame only) — identical rows to a full prepare_clean_filter_dedup
-    rebuild over old ∪ new at the state's frozen banding."""
-    return clean_filter_dedup_apply(new_df, state, **params)["output"]
 
 
 # ---------------------------------------------------------------------------
@@ -1870,20 +1737,15 @@ def prepare_clean_filter_dedup_incremental(
 # ---------------------------------------------------------------------------
 
 
-def _rebanded_collapse_frames(
-    state: dict,
-    corpus_n: int,
-    id_col: str,
-    shingle_k: int,
-    threshold: float,
-) -> dict | None:
+def _rebanded_collapse_frames(state: dict, corpus_n: int) -> dict | None:
     """Re-sign the state's digest-group REPS at
     ``minhash_auto_params(corpus_n)`` and recompute the rep-level pair
     set — the shared core of a banding migration. Reps-only cost: ONE
     distinct-content scan (survivors semi-joined to the rep ids,
     re-shingled), then _collapsed_pair_state over the reps, expanding
     through the stored member map. The member map, digests and
-    survivors are untouched — no member is ever re-shingled.
+    survivors are untouched — no member is ever re-shingled. Shingle
+    size, threshold and id column come from ``state["params"]``.
 
     Returns None when the auto params are unchanged (the migration
     is a no-op), else {bands, rows, band_keys, pairs}, both frames
@@ -1898,6 +1760,8 @@ def _rebanded_collapse_frames(
         shingle_arrays,
     )
 
+    p = state["params"]
+    id_col, threshold = p["id_col"], p["jaccard_threshold"]
     new_bands, new_rows = minhash_auto_params(corpus_n, threshold=threshold)
     if (new_bands, new_rows) == (state["bands"], state["rows"]):
         return None
@@ -1906,7 +1770,7 @@ def _rebanded_collapse_frames(
         state["survivors"].join(rep_ids, id_col, "left_semi"),
         id_col,
         "cleaned",
-        shingle_k,
+        p["shingle_k"],
     ).select(id_col, "shingles")
     # rep-level self rows for expand_rep_pairs' within-group pass:
     # (id == __rep, group size, shingle count) — derived from the
@@ -1928,17 +1792,7 @@ def _rebanded_collapse_frames(
     }
 
 
-def migrate_clean_filter_banding(
-    state: dict,
-    corpus_n: int,
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-    jaccard_threshold: float = 0.8,
-    val_frac: float = 0.1,
-    test_frac: float = 0.1,
-    rank_col: str | None = None,
-    soft_weights: bool = False,
-) -> dict:
+def migrate_clean_filter_banding(state: dict, corpus_n: int) -> dict:
     """Re-train a clean_filter_dedup_state's FROZEN banding for the
     corpus size it has grown to (VERDICT r14 item 2). The frozen
     banding is correct forever — per-pair recall is n-independent —
@@ -1951,7 +1805,9 @@ def migrate_clean_filter_banding(
     ``minhash_auto_params(corpus_n)`` and swaps the state's band keys
     and pair set — reps-only cost, one distinct-content scan — then
     rebuilds components and output from the new pairs (rep-scale; the
-    filter front and member shingling are never re-run).
+    filter front and member shingling are never re-run). Shingle size,
+    threshold, split and keep policy are the build's, read from
+    ``state["params"]``.
 
     No-op when the auto params are unchanged, so callers can invoke it
     on a corpus-size ratio trigger (e.g. every fold with
@@ -1975,33 +1831,19 @@ def migrate_clean_filter_banding(
         connected_components_star,
     )
 
-    _check_keep_policy(state, rank_col, soft_weights, "migration")
-    rebanded = _rebanded_collapse_frames(
-        state, corpus_n, id_col, shingle_k, jaccard_threshold
-    )
+    rebanded = _rebanded_collapse_frames(state, corpus_n)
     if rebanded is None:
         return state
     output = _clean_output(
-        state["survivors"], connected_components_star(rebanded["pairs"]), id_col,
-        rank_col, soft_weights, val_frac, test_frac,
+        state["survivors"], connected_components_star(rebanded["pairs"]),
+        state["params"],
     ).localCheckpoint()
-    # survivors, member maps, digests, the counter and the keep policy
-    # pass through untouched
+    # survivors, member maps, digests, the counter and the params pass
+    # through untouched
     return {**state, **rebanded, "output": output}
 
 
-def migrate_training_data_neardup_banding(
-    state: dict,
-    corpus_n: int,
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-    jaccard_threshold: float = 0.8,
-    span_window: int = 5,
-    span_min_docs: int = 2,
-    val_frac: float = 0.1,
-    test_frac: float = 0.1,
-    rank_col: str | None = None,
-) -> dict:
+def migrate_training_data_neardup_banding(state: dict, corpus_n: int) -> dict:
     """Re-train a training_data_neardup_state's FROZEN banding — the
     neardup-pipeline twin of migrate_clean_filter_banding, sharing the
     same rep-resign core (_rebanded_collapse_frames: one distinct-
@@ -2015,7 +1857,8 @@ def migrate_training_data_neardup_banding(
     dropped reps (component min fell below them under new pairs) and
     ADDED reps (their component lost its bridging pair) mark their
     grams' digests changed, affected docs rebuild, untouched reps
-    reuse their stored output rows verbatim.
+    reuse their stored output rows verbatim. Every knob is the build's,
+    read from ``state["params"]``.
 
     No-op when the auto params are unchanged. Returns the same dict
     shape; survivors / dg_members / rep_digests / text_digests pass
@@ -2029,12 +1872,10 @@ def migrate_training_data_neardup_banding(
         connected_components_star,
     )
 
-    _check_keep_policy(state, rank_col, False, "migration")
-    rebanded = _rebanded_collapse_frames(
-        state, corpus_n, id_col, shingle_k, jaccard_threshold
-    )
+    rebanded = _rebanded_collapse_frames(state, corpus_n)
     if rebanded is None:
         return state
+    id_col, rank_col = state["params"]["id_col"], state["params"]["rank_col"]
     surv = state["survivors"]
     old_rep_ids = state["rep_ids"]
     compR = connected_components_star(rebanded["pairs"]).withColumnRenamed(
@@ -2074,12 +1915,6 @@ def migrate_training_data_neardup_banding(
         added,
         dropped,
         compR,
-        rank_col,
-        id_col=id_col,
-        span_window=span_window,
-        span_min_docs=span_min_docs,
-        val_frac=val_frac,
-        test_frac=test_frac,
     )
     return {
         **state,
@@ -2334,7 +2169,6 @@ def compact_state(
     state: dict,
     prefix: str,
     base_path: str | None = None,
-    id_col: str = "doc_id",
     n_buckets: int = 8,
     unpersist_superseded: bool = True,
     gc_superseded: bool = True,
@@ -2363,8 +2197,9 @@ def compact_state(
     new-old candidate join, dg_members by __rep for pair
     re-expansion, rep_grams by gram_md5 for the span-stat joins — so
     post-compaction applies probe co-located buckets, the durable
-    twin of the in-memory layout. Non-DataFrame entries (bands, rows)
-    pass through unchanged.
+    twin of the in-memory layout; id-keyed frames are bucketed on the
+    id column of the state's ``params``. Non-DataFrame entries
+    (params, bands, rows) pass through unchanged.
 
     Tables are named ``{prefix}_g{generation}_{frame}`` with the
     generation seeded from the CATALOG (max existing generation for
@@ -2412,7 +2247,7 @@ def compact_state(
             continue
         cols = _STATE_BUCKET_COLS.get(frame)
         if cols is None:
-            cols = (id_col,)
+            cols = (state["params"]["id_col"],)
         name = f"{prefix}_g{gen}_{frame}"
         save_table(
             val,

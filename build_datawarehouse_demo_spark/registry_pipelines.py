@@ -132,7 +132,6 @@ def q_training_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     import uuid
 
     from build_datawarehouse_demo_spark.plans.training_data import (
-        prepare_training_data_neardup_incremental,
         training_data_neardup_apply,
         training_data_neardup_state,
     )
@@ -152,7 +151,7 @@ def q_training_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFram
         compact_to=f"ndinc_{tag}",
         compact_path=f"{_bucketed_scratch_dir()}/ndinc_{tag}",
     )
-    return prepare_training_data_neardup_incremental(b2, state)
+    return training_data_neardup_apply(b2, state)["output"]
 
 
 _RAG_PROBE_DOCS, _RAG_K = 5, 5
@@ -378,7 +377,6 @@ def q_clean_filter_dedup_incremental(
     from build_datawarehouse_demo_spark.plans.training_data import (
         clean_filter_dedup_apply,
         clean_filter_dedup_state,
-        prepare_clean_filter_dedup_incremental,
     )
 
     docs = pageify(_t(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -388,17 +386,15 @@ def q_clean_filter_dedup_incremental(
     old = docs.filter(F.col("doc_id") < split_at)
     b1 = docs.filter((F.col("doc_id") >= split_at) & (F.col("doc_id") < mid))
     b2 = docs.filter(F.col("doc_id") >= mid)
-    knobs = _CF_KNOBS
-    state = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
+    state = clean_filter_dedup_state(old, corpus_n=old.count(), **_CF_KNOBS)
     tag = uuid.uuid4().hex[:8]
     state = clean_filter_dedup_apply(
         b1,
         state,
         compact_to=f"cfinc_{tag}",
         compact_path=f"{_bucketed_scratch_dir()}/cfinc_{tag}",
-        **knobs,
     )
-    return prepare_clean_filter_dedup_incremental(b2, state, **knobs)
+    return clean_filter_dedup_apply(b2, state)["output"]
 
 
 _MIGRATE_AT = (3 * _N_DOCS) // 4
@@ -432,7 +428,6 @@ def q_clean_filter_dedup_migrated(
         clean_filter_dedup_apply,
         clean_filter_dedup_state,
         migrate_clean_filter_banding,
-        prepare_clean_filter_dedup_incremental,
     )
 
     docs = pageify(_t(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -444,15 +439,14 @@ def q_clean_filter_dedup_migrated(
         (F.col("doc_id") >= build_at) & (F.col("doc_id") < migrate_at)
     )
     b2 = docs.filter(F.col("doc_id") >= migrate_at)
-    knobs = _CF_KNOBS
-    state = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
-    state = clean_filter_dedup_apply(b1, state, **knobs)
+    state = clean_filter_dedup_state(old, corpus_n=old.count(), **_CF_KNOBS)
+    state = clean_filter_dedup_apply(b1, state)
     state = migrate_clean_filter_banding(state, corpus_n=b1.count() + old.count())
     if n == _N_DOCS:
         # the pinned-fixture honesty check (see docstring); at other
         # SFs the banding derives from the runtime count instead
         assert (state["bands"], state["rows"]) == (_MB1, _MR1)
-    return prepare_clean_filter_dedup_incremental(b2, state, **knobs)
+    return clean_filter_dedup_apply(b2, state)["output"]
 
 
 @register(
@@ -473,7 +467,6 @@ def q_training_neardup_migrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the MIGRATED params."""
     from build_datawarehouse_demo_spark.plans.training_data import (
         migrate_training_data_neardup_banding,
-        prepare_training_data_neardup_incremental,
         training_data_neardup_apply,
         training_data_neardup_state,
     )
@@ -494,7 +487,7 @@ def q_training_neardup_migrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if n == _N_DOCS:
         assert (state["bands"], state["rows"]) == (_MB1, _MR1)
-    return prepare_training_data_neardup_incremental(b2, state)
+    return training_data_neardup_apply(b2, state)["output"]
 
 
 @register(
@@ -533,10 +526,10 @@ def q_clean_filter_dedup_keep_best(
     split_at = (3 * n) // 4
     old = docs.filter(F.col("doc_id") < split_at)
     batch = docs.filter(F.col("doc_id") >= split_at)
-    knobs = dict(_CF_KNOBS, rank_col="clf_score")
-    state = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
-    refreshed = clean_filter_dedup_apply(batch, state, **knobs)
-    return refreshed["output"]
+    state = clean_filter_dedup_state(
+        old, corpus_n=old.count(), rank_col="clf_score", **_CF_KNOBS
+    )
+    return clean_filter_dedup_apply(batch, state)["output"]
 
 
 # ------------------------------------------------------------------
@@ -567,7 +560,7 @@ def q_training_neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash match is the refresh ≡ rebuild proof for the policy
     through the span stage."""
     from build_datawarehouse_demo_spark.plans.training_data import (
-        prepare_training_data_neardup_incremental,
+        training_data_neardup_apply,
         training_data_neardup_state,
     )
 
@@ -579,9 +572,7 @@ def q_training_neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = training_data_neardup_state(
         old, corpus_n=old.count(), rank_col="quality"
     )
-    return prepare_training_data_neardup_incremental(
-        batch, state, rank_col="quality"
-    )
+    return training_data_neardup_apply(batch, state)["output"]
 
 
 # ------------------------------------------------------------------
@@ -623,7 +614,7 @@ def q_clean_filter_dedup_soft(spark: SparkSession, sf_dir: str) -> DataFrame:
     split_at = (3 * n) // 4
     old = docs.filter(F.col("doc_id") < split_at)
     batch = docs.filter(F.col("doc_id") >= split_at)
-    knobs = dict(_CF_KNOBS, soft_weights=True)
-    state = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
-    refreshed = clean_filter_dedup_apply(batch, state, **knobs)
-    return refreshed["output"]
+    state = clean_filter_dedup_state(
+        old, corpus_n=old.count(), soft_weights=True, **_CF_KNOBS
+    )
+    return clean_filter_dedup_apply(batch, state)["output"]

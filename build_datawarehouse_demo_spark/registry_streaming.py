@@ -617,8 +617,9 @@ def q_streaming_clean_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = docs.filter(
         (F.col("doc_id") >= split_at) & (F.col("doc_id") < lim)
     )
-    knobs = _CF_KNOBS
-    holder = {"state": clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)}
+    holder = {
+        "state": clean_filter_dedup_state(old, corpus_n=old.count(), **_CF_KNOBS)
+    }
 
     tag = uuid.uuid4().hex[:8]
     scratch = _bucketed_scratch_dir()
@@ -646,7 +647,6 @@ def q_streaming_clean_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load(feed),
             holder,
             checkpoint_dir=ckpt,
-            **knobs,
         )
         if not q.awaitTermination(300):
             q.stop()
@@ -718,8 +718,7 @@ def q_streaming_clean_filter_migrated(
     old = docs.filter(F.col("doc_id") < build_at)
     b1 = docs.filter((F.col("doc_id") >= build_at) & (F.col("doc_id") < mid))
     b2 = docs.filter(F.col("doc_id") >= mid)
-    knobs = _CF_KNOBS
-    state0 = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
+    state0 = clean_filter_dedup_state(old, corpus_n=old.count(), **_CF_KNOBS)
     p_build = (state0["bands"], state0["rows"])
     holder = {"state": state0}
 
@@ -744,7 +743,6 @@ def q_streaming_clean_filter_migrated(
             holder,
             checkpoint_dir=ckpt,
             migrate_banding=True,
-            **knobs,
         )
         if not q.awaitTermination(300):
             q.stop()

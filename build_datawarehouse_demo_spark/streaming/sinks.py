@@ -146,22 +146,20 @@ def _stream_state_append(
     checkpoint_dir: str,
     fold,
     *,
-    id_col: str,
     compact_every: int,
     compact_to: str | None,
     compact_path: str | None,
     migrate_banding: bool,
-    knobs: dict,
 ):
     """The incremental-state streaming sink both corpus pipelines
     share: every micro-batch is folded into ``holder["state"]`` by
-    ``fold`` (clean_filter_dedup_apply or training_data_neardup_apply,
-    called with ``knobs``). The contract is documented on
-    stream_clean_filter_state_append.
+    ``fold`` (clean_filter_dedup_apply or training_data_neardup_apply),
+    which reads every pipeline knob from the state's ``params``. The
+    contract is documented on stream_clean_filter_state_append.
 
     The per-fold banding migration is the apply's own
     ``migrate_banding=True`` epilogue (plans/training_data._finish_fold:
-    counter, migration bound to the apply's own parameters, retire the
+    counter, the pipeline's migration at the state's params, retire the
     superseded frames). Compaction is NOT delegated: the sink keeps its
     retry-safe order (write without GC, swap the holder, then retire,
     sweep and GC), which differs from the apply's on purpose.
@@ -197,15 +195,10 @@ def _stream_state_append(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        id_col = holder["state"]["params"]["id_col"]
         seen = holder["state"]["survivors"].select(id_col)
         fresh = batch_df.join(seen, id_col, "left_anti")
-        st = fold(
-            fresh,
-            holder["state"],
-            id_col=id_col,
-            migrate_banding=migrate_banding,
-            **knobs,
-        )
+        st = fold(fresh, holder["state"], migrate_banding=migrate_banding)
         if compact_every and batch_id % compact_every == compact_every - 1:
             # retry safety (r16 ADVICE): write the new generation and
             # SWAP the live state before retiring anything — a
@@ -229,7 +222,6 @@ def _stream_state_append(
                 old,
                 compact_to,
                 base_path=compact_path,
-                id_col=id_col,
                 unpersist_superseded=False,
                 gc_superseded=False,
             )
@@ -251,12 +243,10 @@ def stream_clean_filter_state_append(
     docs: DataFrame,
     holder: dict,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
     compact_every: int = 0,
     compact_to: str | None = None,
     compact_path: str | None = None,
     migrate_banding: bool = False,
-    **knobs,
 ):
     """Streaming corpus-curation maintenance (r14): each micro-batch
     of documents is folded into the modern cleaning stack's
@@ -270,9 +260,9 @@ def stream_clean_filter_state_append(
 
     ``holder`` is ``{"state": <clean_filter_dedup_state dict>}``; the
     refreshed state replaces it after every batch (micro-batches run
-    sequentially, so the mutation is race-free), and ``knobs`` are the
-    clean_filter_dedup_apply filter parameters (they must match the
-    state build).
+    sequentially, so the mutation is race-free). Every fold runs at the
+    filter, banding and keep-policy knobs the state was built with
+    (its ``params``), so the sink takes none of them.
 
     Effectively exactly-once: checkpointing pins batch ids, and a
     SAME-ID redelivery (at-least-once replay) is dropped by the
@@ -283,9 +273,9 @@ def stream_clean_filter_state_append(
     (A NEW-id redelivery of the same text is the normal re-crawl case:
     it joins its original's digest group and loses the rep race —
     output unchanged, the batch contract. Under the keep-best policy —
-    pass ``rank_col=...`` in ``knobs``, matching the state build — a
-    HIGHER-RANK near-dup re-crawl instead DISPLACES the stored
-    representative; see clean_filter_dedup_apply.)
+    a state built with ``rank_col=...`` — a HIGHER-RANK near-dup
+    re-crawl instead DISPLACES the stored representative; see
+    clean_filter_dedup_apply.)
 
     Durability matches the in-memory state contract (localCheckpoint-
     backed frames): a restarted driver rebuilds or reloads state; the
@@ -330,7 +320,7 @@ def stream_clean_filter_state_append(
     Checkpoint leaves the migrated state no longer references are
     retired immediately (retire_superseded_state). The migration is the
     apply's own ``migrate_banding=True`` epilogue, so it always runs
-    with the apply's parameters; the sink body is _stream_state_append,
+    at the state's params; the sink body is _stream_state_append,
     shared with stream_training_data_state_append.
     """
     from build_datawarehouse_demo_spark.plans.training_data import (
@@ -342,12 +332,10 @@ def stream_clean_filter_state_append(
         holder,
         checkpoint_dir,
         clean_filter_dedup_apply,
-        id_col=id_col,
         compact_every=compact_every,
         compact_to=compact_to,
         compact_path=compact_path,
         migrate_banding=migrate_banding,
-        knobs=knobs,
     )
 
 
@@ -355,12 +343,10 @@ def stream_training_data_state_append(
     docs: DataFrame,
     holder: dict,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
     compact_every: int = 0,
     compact_to: str | None = None,
     compact_path: str | None = None,
     migrate_banding: bool = False,
-    **knobs,
 ):
     """Streaming maintenance for the NEARDUP corpus pipeline's
     incremental state (r17) — the span-removal-bearing twin of
@@ -378,14 +364,15 @@ def stream_training_data_state_append(
     the one shared sink, _stream_state_append (read the clean sink's
     docstring for the details):
     - ``holder`` = {"state": <training_data_neardup_state dict>},
-      refreshed after every batch; ``knobs`` are the apply's filter /
-      banding / span parameters and must match the state build.
+      refreshed after every batch; every fold runs at the filter /
+      banding / span / keep-policy knobs recorded in the state's
+      ``params``.
     - effectively exactly-once: checkpoint-pinned batch ids + the
       survivor-id anti-join drop same-id redeliveries; a new-id
       re-crawl joins its original's digest group and loses the rep
       race (output unchanged — the batch contract). Under keep-best
-      (``rank_col=...`` in ``knobs``, matching the state build) a
-      higher-rank NEAR-dup re-crawl displaces the stored rep — see
+      (a state built with ``rank_col=...``) a higher-rank NEAR-dup
+      re-crawl displaces the stored rep — see
       training_data_neardup_apply.
     - ``compact_every=N`` / ``compact_to`` / ``compact_path``: every
       N batches (batch_id-derived cadence, retry/restart-stable) the
@@ -409,12 +396,10 @@ def stream_training_data_state_append(
         holder,
         checkpoint_dir,
         training_data_neardup_apply,
-        id_col=id_col,
         compact_every=compact_every,
         compact_to=compact_to,
         compact_path=compact_path,
         migrate_banding=migrate_banding,
-        knobs=knobs,
     )
 
 

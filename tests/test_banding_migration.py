@@ -44,7 +44,7 @@ def test_migration_matches_full_rebuild_at_new_params(spark):
     old = _corpus(spark, old_rows)
     state = clean_filter_dedup_state(old, corpus_n=50, **LOOSE)
     assert (state["bands"], state["rows"]) == minhash_auto_params(50)
-    state = clean_filter_dedup_apply(_corpus(spark, b1), state, **LOOSE)
+    state = clean_filter_dedup_apply(_corpus(spark, b1), state)
 
     migrated = migrate_clean_filter_banding(state, corpus_n=2000)
     assert (migrated["bands"], migrated["rows"]) == minhash_auto_params(2000)
@@ -62,7 +62,7 @@ def test_migration_matches_full_rebuild_at_new_params(spark):
     assert _rows(migrated["output"]) == _rows(full_mid)
 
     # ... and after the next apply (the oracle contract)
-    state2 = clean_filter_dedup_apply(_corpus(spark, b2), migrated, **LOOSE)
+    state2 = clean_filter_dedup_apply(_corpus(spark, b2), migrated)
     full = prepare_clean_filter_dedup(
         _corpus(spark, old_rows + b1 + b2), corpus_n=2000, **LOOSE
     )
@@ -102,7 +102,7 @@ def test_migration_composes_with_compaction(spark, tmp_path):
     state = clean_filter_dedup_state(_corpus(spark, old_rows), corpus_n=50, **LOOSE)
     state = migrate_clean_filter_banding(state, corpus_n=2000)
     state = compact_state(state, "mig_cmp_test", base_path=str(tmp_path))
-    state = clean_filter_dedup_apply(_corpus(spark, b1), state, **LOOSE)
+    state = clean_filter_dedup_apply(_corpus(spark, b1), state)
     full = prepare_clean_filter_dedup(
         _corpus(spark, old_rows + b1), corpus_n=2000, **LOOSE
     )
@@ -146,14 +146,14 @@ def test_apply_migrate_banding_flag_rebands_at_boundary(spark):
     p0 = (state["bands"], state["rows"])
 
     st1 = clean_filter_dedup_apply(
-        _corpus(spark, b1), state, migrate_banding=True, **LOOSE
+        _corpus(spark, b1), state, migrate_banding=True
     )
     # 95 survivors: below the boundary, the hook is a no-op
     assert st1["n_survivors"] == 95
     assert (st1["bands"], st1["rows"]) == p0
 
     st2 = clean_filter_dedup_apply(
-        _corpus(spark, b2), st1, migrate_banding=True, **LOOSE
+        _corpus(spark, b2), st1, migrate_banding=True
     )
     n_final = st2["survivors"].count()
     assert st2["n_survivors"] == n_final == 110

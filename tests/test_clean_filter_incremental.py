@@ -47,15 +47,15 @@ def _full(df, corpus_n):
 
 def _state_apply(spark, old_rows, new_rows):
     from build_datawarehouse_demo_spark.plans.training_data import (
+        clean_filter_dedup_apply,
         clean_filter_dedup_state,
-        prepare_clean_filter_dedup_incremental,
     )
 
     old = _corpus(spark, old_rows)
     new = _corpus(spark, new_rows)
     n_old = old.count()
     state = clean_filter_dedup_state(old, corpus_n=n_old, **LOOSE)
-    inc = prepare_clean_filter_dedup_incremental(new, state, **LOOSE)
+    inc = clean_filter_dedup_apply(new, state)["output"]
     return state, inc, n_old
 
 
@@ -64,9 +64,9 @@ def test_incremental_equals_full_rebuild_on_fixture(spark):
     the pageified driver fixture, apply the last 1/4, compare to the
     full batch chain over the union at the frozen banding."""
     from build_datawarehouse_demo_spark.plans.training_data import (
+        clean_filter_dedup_apply,
         clean_filter_dedup_state,
         prepare_clean_filter_dedup,
-        prepare_clean_filter_dedup_incremental,
     )
     from build_datawarehouse_demo_spark.registry_common import (
         _CLF_T,
@@ -93,7 +93,7 @@ def test_incremental_equals_full_rebuild_on_fixture(spark):
     new = docs.filter(F.col("doc_id") >= split_at)
     n_old = old.count()
     state = clean_filter_dedup_state(old, corpus_n=n_old, **knobs)
-    inc = prepare_clean_filter_dedup_incremental(new, state, **knobs)
+    inc = clean_filter_dedup_apply(new, state)["output"]
     full = prepare_clean_filter_dedup(docs, corpus_n=n_old, **knobs)
     assert _sorted_rows(inc) == _sorted_rows(full)
     assert inc.count() > 0

@@ -131,7 +131,7 @@ def test_clean_stack_state_is_rep_level_under_copy_skew(spark):
     # (c) refresh ≡ rebuild, and the refreshed state stays rep-level
     # FOREVER: the hot batch rep folds into the stored group (no
     # redundant rep, no added band keys for known content)
-    state2 = clean_filter_dedup_apply(new, state, **LOOSE)
+    state2 = clean_filter_dedup_apply(new, state)
     assert state2["rep_digests"].count() == n_old_distinct + 1
     assert state2["band_keys"].count() == (n_old_distinct + 1) * bands
     assert state2["dg_members"].count() == k + n_uniq + m + 1
@@ -157,7 +157,7 @@ def test_clean_stack_state_is_rep_level_under_copy_skew(spark):
 
     # (d) a SECOND duplicate-heavy batch still meets a rep-level state
     new2 = _corpus(spark, [(2000 + j, hot) for j in range(10)])
-    state3 = clean_filter_dedup_apply(new2, state2, **LOOSE)
+    state3 = clean_filter_dedup_apply(new2, state2)
     assert state3["band_keys"].count() == (n_old_distinct + 1) * bands
     assert state3["rep_digests"].count() == n_old_distinct + 1
     full3 = prepare_clean_filter_dedup(
@@ -185,7 +185,7 @@ def test_refreshed_state_is_append_only(spark):
     new_rows = [(100, " ".join(f"ntok{j}" for j in range(20)) + ".")]
     old = _corpus(spark, old_rows)
     state = clean_filter_dedup_state(old, corpus_n=6, **LOOSE)
-    state2 = clean_filter_dedup_apply(_corpus(spark, new_rows), state, **LOOSE)
+    state2 = clean_filter_dedup_apply(_corpus(spark, new_rows), state)
 
     def plan(df):
         return df._jdf.queryExecution().analyzed().toString()

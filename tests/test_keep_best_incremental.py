@@ -13,8 +13,6 @@ contract the min-id oracles pin.
 
 from __future__ import annotations
 
-import pytest
-
 from tests.test_incremental_state_skew import LOOSE, _corpus, _rows
 
 # generous candidate recall for the tiny fixtures: displacement needs
@@ -59,7 +57,7 @@ def test_clean_keep_best_displacement_and_parity(spark):
     state = clean_filter_dedup_state(old, corpus_n=n_old, **knobs)
     # pre-fold: the stored rep of the (still singleton) class is doc 1
     assert 1 in {r[0] for r in state["output"].collect()}
-    refreshed = clean_filter_dedup_apply(_corpus(spark, new_rows), state, **knobs)
+    refreshed = clean_filter_dedup_apply(_corpus(spark, new_rows), state)
     out = {r["doc_id"]: r for r in refreshed["output"].collect()}
     assert 100 in out and 1 not in out  # displaced
     assert out[100]["component_id"] == 1  # label = component min, not keeper
@@ -83,33 +81,8 @@ def test_clean_keep_best_tie_keeps_stored_rep(spark):
     knobs = dict(rank_col="n_ws_tokens", **LOOSE, **_J)
     state = clean_filter_dedup_state(old, corpus_n=old.count(), **knobs)
     want = _rows(state["output"])
-    refreshed = clean_filter_dedup_apply(
-        _corpus(spark, [(100, T1)]), state, **knobs
-    )
+    refreshed = clean_filter_dedup_apply(_corpus(spark, [(100, T1)]), state)
     assert _rows(refreshed["output"]) == want
-
-
-def test_clean_keep_best_policy_mismatch_raises(spark):
-    """The keep policy is part of the state's identity: folding with a
-    different rank_col than the build must fail loudly, in the apply
-    AND in the banding migration."""
-    from build_datawarehouse_demo_spark.plans.training_data import (
-        clean_filter_dedup_apply,
-        clean_filter_dedup_state,
-        migrate_clean_filter_banding,
-    )
-
-    old = _corpus(spark, FILLERS)
-    state = clean_filter_dedup_state(old, corpus_n=old.count(), **LOOSE, **_J)
-    batch = _corpus(spark, [(100, T1)])
-    with pytest.raises(ValueError, match="keep-policy mismatch"):
-        clean_filter_dedup_apply(
-            batch, state, rank_col="n_ws_tokens", **LOOSE, **_J
-        )
-    with pytest.raises(ValueError, match="keep-policy mismatch"):
-        migrate_clean_filter_banding(
-            state, corpus_n=10_000, rank_col="n_ws_tokens"
-        )
 
 
 def test_clean_keep_best_multi_fold_with_compaction_parity(spark, tmp_path):
@@ -134,10 +107,9 @@ def test_clean_keep_best_multi_fold_with_compaction_parity(spark, tmp_path):
         state,
         compact_to="kb_cmp",
         compact_path=str(tmp_path / "kb"),
-        **knobs,
     )
-    assert state.get("rank_col") == "n_ws_tokens"  # survived compaction
-    state = clean_filter_dedup_apply(_corpus(spark, b2), state, **knobs)
+    assert state["params"]["rank_col"] == "n_ws_tokens"  # survived compaction
+    state = clean_filter_dedup_apply(_corpus(spark, b2), state)
     out_ids = {r[0] for r in state["output"].collect()}
     # the longest copy (b2's 28-token variant) holds the class
     assert 200 in out_ids and 100 not in out_ids and 1 not in out_ids
@@ -180,7 +152,6 @@ def test_neardup_keep_best_displacement_and_parity(spark):
     refreshed = training_data_neardup_apply(
         spark.createDataFrame(new_rows, "doc_id long, text string"),
         state,
-        rank_col="n_tokens",
     )
     out = {r["doc_id"]: r for r in refreshed["output"].collect()}
     assert 1000 in out and 2 not in out  # displaced by the longer copy
@@ -221,7 +192,6 @@ def test_neardup_keep_best_merge_parity_and_winner_relabel(spark):
     refreshed = training_data_neardup_apply(
         spark.createDataFrame(new_rows, "doc_id long, text string"),
         state,
-        rank_col="n_tokens",
     )
     out = {r["doc_id"]: r for r in refreshed["output"].collect()}
     assert 3 in out and 2 not in out and 1000 not in out
@@ -276,7 +246,6 @@ def test_stream_keep_best_displacement_equals_batch(spark, tmp_path):
         holder,
         checkpoint_dir=str(tmp_path / "ckpt"),
         migrate_banding=True,
-        **knobs,
     )
     assert q.awaitTermination(180)
     out = {r["doc_id"]: r for r in holder["state"]["output"].collect()}
@@ -314,12 +283,10 @@ def test_clean_keep_best_banding_migration_matches_rebuild(spark):
     b1 = [(100, " ".join(base + ["xtra1", "xtra2", "xtra3", "xtra4"]) + ".")]
     knobs = dict(rank_col="n_ws_tokens", **LOOSE)
     state = clean_filter_dedup_state(_corpus(spark, old_rows), corpus_n=50, **knobs)
-    state = clean_filter_dedup_apply(_corpus(spark, b1), state, **knobs)
-    migrated = migrate_clean_filter_banding(
-        state, corpus_n=2000, rank_col="n_ws_tokens"
-    )
+    state = clean_filter_dedup_apply(_corpus(spark, b1), state)
+    migrated = migrate_clean_filter_banding(state, corpus_n=2000)
     assert (migrated["bands"], migrated["rows"]) == minhash_auto_params(2000)
-    assert migrated.get("rank_col") == "n_ws_tokens"
+    assert migrated["params"]["rank_col"] == "n_ws_tokens"
     full = clean_filter_dedup_state(
         _corpus(spark, old_rows + b1), corpus_n=2000, **knobs
     )
@@ -349,11 +316,8 @@ def test_neardup_keep_best_banding_migration_matches_rebuild(spark):
     state = training_data_neardup_apply(
         spark.createDataFrame(b1, "doc_id long, text string"),
         state,
-        rank_col="n_tokens",
     )
-    migrated = migrate_training_data_neardup_banding(
-        state, corpus_n=2000, rank_col="n_tokens"
-    )
+    migrated = migrate_training_data_neardup_banding(state, corpus_n=2000)
     assert (migrated["bands"], migrated["rows"]) == minhash_auto_params(2000)
     full = training_data_neardup_state(
         spark.createDataFrame(old_rows + b1, "doc_id long, text string"),
@@ -393,7 +357,7 @@ def test_clean_soft_weights_incremental_parity_and_reweighting(spark):
     w0 = {r["doc_id"]: r["weight"] for r in state["output"].collect()}
     assert w0[1] == 1.0 and all(w0[i] == 1.0 for i in (2, 3, 4))
 
-    state = clean_filter_dedup_apply(_corpus(spark, b1), state, **knobs)
+    state = clean_filter_dedup_apply(_corpus(spark, b1), state)
     full1 = clean_filter_dedup_state(
         _corpus(spark, old_rows + b1), corpus_n=n_old, **knobs
     )
@@ -403,7 +367,7 @@ def test_clean_soft_weights_incremental_parity_and_reweighting(spark):
     assert w1[1]["component_id"] == 1 and w1[100]["component_id"] == 1
     assert w1[2]["weight"] == 1.0  # untouched class reused verbatim
 
-    state = clean_filter_dedup_apply(_corpus(spark, b2), state, **knobs)
+    state = clean_filter_dedup_apply(_corpus(spark, b2), state)
     full2 = clean_filter_dedup_state(
         _corpus(spark, old_rows + b1 + b2), corpus_n=n_old, **knobs
     )
@@ -416,15 +380,11 @@ def test_clean_soft_weights_incremental_parity_and_reweighting(spark):
 
 
 def test_clean_soft_weights_policy_guards(spark):
-    """soft_weights is part of the state identity (mismatched folds
-    and migrations fail loudly) and is mutually exclusive with
-    rank_col."""
+    """soft_weights is mutually exclusive with rank_col."""
     import pytest as _pytest
 
     from build_datawarehouse_demo_spark.plans.training_data import (
-        clean_filter_dedup_apply,
         clean_filter_dedup_state,
-        migrate_clean_filter_banding,
     )
 
     with _pytest.raises(ValueError, match="mutually exclusive"):
@@ -432,13 +392,6 @@ def test_clean_soft_weights_policy_guards(spark):
             _corpus(spark, FILLERS), corpus_n=3,
             rank_col="clf_score", soft_weights=True, **LOOSE,
         )
-    state = clean_filter_dedup_state(
-        _corpus(spark, FILLERS), corpus_n=3, soft_weights=True, **LOOSE, **_J
-    )
-    with _pytest.raises(ValueError, match="keep-policy mismatch"):
-        clean_filter_dedup_apply(_corpus(spark, [(100, T1)]), state, **LOOSE, **_J)
-    with _pytest.raises(ValueError, match="keep-policy mismatch"):
-        migrate_clean_filter_banding(state, corpus_n=10_000)
 
 
 def test_clean_soft_weights_feed_weighted_mixer(spark):
@@ -460,7 +413,7 @@ def test_clean_soft_weights_feed_weighted_mixer(spark):
     state = clean_filter_dedup_state(
         _corpus(spark, old_rows), corpus_n=len(old_rows), **knobs
     )
-    state = clean_filter_dedup_apply(_corpus(spark, [(100, T1)]), state, **knobs)
+    state = clean_filter_dedup_apply(_corpus(spark, [(100, T1)]), state)
     out = state["output"].withColumn("src", F.lit("web"))
     # weighted token mass: class {1,100} = one doc of 20 tokens + the
     # three 12-token fillers = 56; a 56-token budget keeps EVERYTHING
@@ -512,7 +465,6 @@ def test_stream_soft_weights_with_migration_hook_equals_batch(spark, tmp_path):
         holder,
         checkpoint_dir=str(tmp_path / "ckpt"),
         migrate_banding=True,
-        **knobs,
     )
     assert q.awaitTermination(180)
     out = {r["doc_id"]: r for r in holder["state"]["output"].collect()}
@@ -570,7 +522,6 @@ def test_stream_neardup_keep_best_displacement_equals_batch(spark, tmp_path):
         holder,
         checkpoint_dir=str(tmp_path / "ckpt"),
         migrate_banding=True,
-        rank_col="n_tokens",
     )
     assert q.awaitTermination(180)
     out = {r["doc_id"]: r for r in holder["state"]["output"].collect()}

@@ -5,8 +5,10 @@ Every operator ships exactly one implementation; the JVM expression
 chains the fused kernels are pinned against live in
 tests/jvm_reference.py, not behind a user-facing switch. Every parquet
 write goes through `sources.writers.parquet_writer`, the one place the
-on-disk layout is set. The incremental corpus pipelines share one
-keep-policy guard, one apply epilogue and one streaming state sink.
+on-disk layout is set. The incremental corpus pipelines record their
+build parameters once, in the state, and share one keep-policy check,
+one apply epilogue and one streaming state sink; no fold-side function
+takes a build knob.
 The MinHash near-dup pair pieces (Jaccard verify, rep -> member
 re-expansion) are written once, in operators/dedup.py. Every package
 import in the repo's scripts resolves.
@@ -133,7 +135,7 @@ def test_parquet_writes_go_through_the_writer_seam():
 _LIFECYCLE_SCOPE = ("plans", "streaming")
 #: lifecycle steps both corpus pipelines share: each literal may appear
 #: in exactly one function
-_WRITTEN_ONCE = ("keep-policy mismatch", "without a seeded n_survivors")
+_WRITTEN_ONCE = ("rank_col must be", "without a seeded n_survivors")
 _STATE_SINKS = ("stream_clean_filter_state_append", "stream_training_data_state_append")
 
 
@@ -184,7 +186,7 @@ def test_written_once_detector_sees_fstrings_and_nested_defs():
     src = "\n".join(
         [
             "def a():",
-            "    raise ValueError(f'keep-policy mismatch: {x}')",
+            "    raise ValueError(f'rank_col must be one of {x}')",
             "def b():",
             "    def inner():",
             "        log.warning('x without a seeded n_survivors y')",
@@ -206,6 +208,55 @@ def test_fold_lifecycle_step_written_once(literal):
         if _contains_literal(fn, literal)
     ]
     assert len(owners) == 1, owners
+
+
+#: module -> the functions that fold into, migrate, compact or stream an
+#: incremental state; every pipeline knob reaches them through the
+#: state's ``params``
+_FOLD_SIDE = {
+    "plans/training_data.py": (
+        "training_data_neardup_apply",
+        "clean_filter_dedup_apply",
+        "migrate_training_data_neardup_banding",
+        "migrate_clean_filter_banding",
+        "_apply_rep_candidates",
+        "_rebanded_collapse_frames",
+        "_refresh_spans",
+        "_finish_fold",
+        "compact_state",
+    ),
+    "streaming/sinks.py": ("_stream_state_append", *_STATE_SINKS),
+}
+_STATE_BUILDERS = ("training_data_neardup_state", "clean_filter_dedup_state")
+
+
+def _arg_names(fn) -> set:
+    a = fn.args
+    return {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+
+
+def test_fold_side_functions_take_no_build_knob():
+    """The knobs a state is built with (every state-builder keyword but
+    the input frame and its count: id/text columns, front filters,
+    shingle size, Jaccard threshold, span, split and keep policy) are
+    recorded in the state; no function that folds, migrates, compacts
+    or streams it takes one again, or an open ``**knobs``."""
+    fns = {
+        (rel, name): fn
+        for rel, name, fn in _functions_under(tuple(_FOLD_SIDE))
+    }
+    knobs = set().union(
+        *(_arg_names(fns["plans/training_data.py", b]) for b in _STATE_BUILDERS)
+    ) - {"df", "corpus_n"}
+    assert {"id_col", "text_col", "shingle_k", "jaccard_threshold", "span_window",
+            "val_frac", "rank_col", "soft_weights", "min_words"} <= knobs
+    taken = {
+        f"{rel}:{name}": sorted(_arg_names(fns[rel, name]) & knobs)
+        + (["**" + fns[rel, name].args.kwarg.arg] if fns[rel, name].args.kwarg else [])
+        for rel, names in _FOLD_SIDE.items()
+        for name in names
+    }
+    assert {k: v for k, v in taken.items() if v} == {}
 
 
 #: the MinHash near-dup pair algorithm and its callers; the member

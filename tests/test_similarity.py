@@ -711,13 +711,6 @@ def test_staged_projections_match_fold_bit_for_bit(spark):
     FMA) must reproduce the zip_with+aggregate fold's ((0+t1)+t2)+...
     values BIT-identically — signatures, oracles and recall pins all
     ride on it. Also pins the null/wrong-dimension -> NULL contract."""
-    from build_datawarehouse_demo_spark.operators.similarity import (
-        _as_double,
-        dot,
-        rp_planes,
-        staged_projections,
-    )
-
     return _assert_projections_match_fold(spark, n_planes=40)
 
 

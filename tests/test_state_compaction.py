@@ -57,7 +57,6 @@ def test_compacted_folds_keep_plan_depth_constant_and_rebuild_parity(
             state,
             compact_to=f"cmp_test_f{fold}",
             compact_path=str(tmp_path / f"f{fold}"),
-            **LOOSE,
         )
         # every frame is now a table scan: no Union, no checkpoint leaf
         for key in frames:
@@ -79,7 +78,7 @@ def test_compacted_folds_keep_plan_depth_constant_and_rebuild_parity(
     # a fold WITHOUT compaction grows exactly the documented one thin
     # union on the collapse frames — compaction is what resets it
     state_nc = clean_filter_dedup_apply(
-        _corpus(spark, _batch(900)), state, **LOOSE
+        _corpus(spark, _batch(900)), state
     )
     for key in ("band_keys", "dg_members", "rep_digests", "pairs"):
         assert _union_depth(state_nc[key]) >= 1, key
@@ -174,7 +173,6 @@ def test_compaction_gc_drops_superseded_generations(spark, tmp_path):
             state,
             compact_to="cmp_gcgen",
             compact_path=str(tmp_path / f"p{fold}"),
-            **LOOSE,
         )
         tables = _prefix_tables(spark, "cmp_gcgen")
         counts.append(len(tables))
@@ -247,7 +245,6 @@ def test_apply_compact_keep_superseded_keeps_prefold_state_readable(
         compact_to="cmp_keepdict",
         compact_path=str(tmp_path / "k"),
         compact_keep_superseded=True,
-        **LOOSE,
     )
     # the PRE-FOLD dict is still readable (blocks kept)
     assert _rows(state["output"]) == pre_fold_rows
@@ -291,7 +288,6 @@ def test_apply_compact_retire_fold_rdds_opt_out(spark, tmp_path):
         compact_to="cmp_nosweep",
         compact_path=str(tmp_path / "n"),
         compact_retire_fold_rdds=False,
-        **LOOSE,
     )
     # fold-window RDDs retained: the sweep did not run (phase 2 still
     # retired the superseded frames' LEAVES, but the hidden
@@ -379,7 +375,6 @@ def test_compaction_retires_superseded_checkpoint_blocks(spark, tmp_path):
             state,
             compact_to=f"cmp_gc_f{fold}",
             compact_path=str(tmp_path / f"g{fold}"),
-            **LOOSE,
         )
         counts.append(n_persistent())
     state["output"].count()
@@ -416,7 +411,7 @@ def test_compaction_mixed_case_prefix_seeds_and_gcs(spark, tmp_path):
     assert _prefix_generations(spark, "mixedcase_state", str(tmp_path)) == [1]
 
     rows2 = _batch(300)
-    state = clean_filter_dedup_apply(_corpus(spark, rows2), state, **LOOSE)
+    state = clean_filter_dedup_apply(_corpus(spark, rows2), state)
     state = compact_state(state, "MixedCase_STATE", base_path=str(tmp_path))
     # seeded past generation 1, which the GC then dropped
     assert _prefix_generations(spark, "MixedCase_STATE", str(tmp_path)) == [2]
@@ -451,7 +446,7 @@ def test_compaction_gc_with_scheme_qualified_base_path(spark, tmp_path):
     assert _prefix_generations(spark, "uri_state", root) == [1]
 
     rows2 = _batch(400)
-    state = clean_filter_dedup_apply(_corpus(spark, rows2), state, **LOOSE)
+    state = clean_filter_dedup_apply(_corpus(spark, rows2), state)
     state = compact_state(state, "uri_state", base_path=root)
     assert _prefix_generations(spark, "uri_state", root) == [2]
 
@@ -527,13 +522,13 @@ def test_migrate_banding_warns_exactly_when_counter_unseeded(spark, caplog):
     logger = "build_datawarehouse_demo_spark.plans.training_data"
     with caplog.at_level(logging.WARNING, logger=logger):
         state = clean_filter_dedup_apply(
-            _corpus(spark, _batch(100)), state, migrate_banding=True, **LOOSE
+            _corpus(spark, _batch(100)), state, migrate_banding=True
         )
     assert any("n_survivors" in r.message for r in caplog.records)
     caplog.clear()
     state["n_survivors"] = state["survivors"].count()
     with caplog.at_level(logging.WARNING, logger=logger):
         clean_filter_dedup_apply(
-            _corpus(spark, _batch(200)), state, migrate_banding=True, **LOOSE
+            _corpus(spark, _batch(200)), state, migrate_banding=True
         )
     assert not [r for r in caplog.records if "n_survivors" in r.message]

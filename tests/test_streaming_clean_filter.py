@@ -48,7 +48,6 @@ def _run_stream(spark, tmp_path, old_rows, batches, **sink_opts):
         holder,
         checkpoint_dir=str(tmp_path / "ckpt"),
         **sink_opts,
-        **LOOSE,
     )
     assert q.awaitTermination(180)
     return holder["state"]
@@ -293,7 +292,6 @@ def test_stream_soak_compaction_gc_and_cadence_across_restarts(spark, tmp_path):
             compact_to="soak_cmp",
             compact_path=str(tmp_path / f"cmp{session}"),
             migrate_banding=True,
-            **LOOSE,
         )
         assert q.awaitTermination(300), session
         state = holder["state"]

@@ -44,7 +44,7 @@ def _run_full(docs, corpus_n):
 
 def _build_and_apply(spark, old_rows, new_rows):
     from build_datawarehouse_demo_spark.plans.training_data import (
-        prepare_training_data_neardup_incremental,
+        training_data_neardup_apply,
         training_data_neardup_state,
     )
 
@@ -52,7 +52,7 @@ def _build_and_apply(spark, old_rows, new_rows):
     new = _corpus_df(spark, new_rows)
     n_old = old.count()
     state = training_data_neardup_state(old, corpus_n=n_old)
-    inc = prepare_training_data_neardup_incremental(new, state)
+    inc = training_data_neardup_apply(new, state)["output"]
     return state, inc, n_old
 
 
@@ -62,7 +62,7 @@ def test_incremental_equals_full_rebuild_on_fixture(spark):
     refreshed output == full rebuild over the union at the frozen
     banding."""
     from build_datawarehouse_demo_spark.plans.training_data import (
-        prepare_training_data_neardup_incremental,
+        training_data_neardup_apply,
         training_data_neardup_state,
     )
     from build_datawarehouse_demo_spark.sources.readers import read_parquet
@@ -74,7 +74,7 @@ def test_incremental_equals_full_rebuild_on_fixture(spark):
     new = docs.filter(F.col("doc_id") >= split_at)
     n_old = old.count()
     state = training_data_neardup_state(old, corpus_n=n_old)
-    inc = prepare_training_data_neardup_incremental(new, state)
+    inc = training_data_neardup_apply(new, state)["output"]
     full = _run_full(docs, corpus_n=n_old)
     got, want = _collect_sorted(inc), _collect_sorted(full)
     assert len(want) > 0

@@ -122,11 +122,11 @@ def leg(sf_dir: str, runs: int) -> None:
     for name, build, apply_fn, adapt in (
         (f"clean_filter_dedup_apply{suffix}",
          functools.partial(clean_filter_dedup_state, **clean_knobs),
-         functools.partial(clean_filter_dedup_apply, **clean_knobs),
+         clean_filter_dedup_apply,
          pageify),
         (f"training_data_neardup_apply{suffix}",
          functools.partial(training_data_neardup_state, **nd_knobs),
-         functools.partial(training_data_neardup_apply, **nd_knobs),
+         training_data_neardup_apply,
          lambda d: d),
     ):
         stored = adapt(docs)
