@@ -1533,7 +1533,7 @@ def kmeans_train(
 ) -> DataFrame:
     """n_iter Lloyd iterations (driver-side loop over lazy steps; each
     step's centroids are localCheckpoint'ed so lineage stays O(1) —
-    the same iterative-plan discipline as dedup.connected_components).
+    the same iterative-plan discipline as dedup.connected_components_star).
 
     ``round_to`` rounds each iteration's mean coordinates (pass 6 for
     cross-engine determinism: both engines then feed IDENTICAL

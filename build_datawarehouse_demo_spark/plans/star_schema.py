@@ -10,8 +10,13 @@ their tables, matching the reference's empty-input early returns
 (/root/reference/transformation.py:242,284,328,368,418,448,485).
 
 Output: the ~20-table star schema of SURVEY.md §1.1 as lazy
-DataFrames — the whole build is ONE Catalyst DAG; nothing executes
-until the caller materializes (writers.save_tables) or queries.
+DataFrames over one Catalyst DAG, with ONE eager step: fact_checkins'
+contiguous surrogate ids (operators/keys.surrogate_key_scalable) need
+every partition's row count before the first id can be assigned, so
+build_warehouse persists the resolved check-ins and collects those
+counts inside the call when a checkin dataset is present. Everything
+else executes only when the caller materializes (writers.save_tables)
+or queries.
 
 Where the reference fanned out a thread pool over eager pandas
 transforms (/root/reference/transformation.py:615-637), here each
@@ -66,6 +71,13 @@ def build_warehouse(
     start_date: str = "1948-09-06",
     end_date: str = "2025-12-31",
 ) -> dict[str, DataFrame]:
+    """The star schema's tables, keyed by table name, from the ``raw``
+    datasets present, over a calendar spine from ``start_date`` to
+    ``end_date``. Lazy except for one step: with a ``checkin`` dataset,
+    fact_checkins' contiguous ids (surrogate_key_scalable) persist the
+    resolved check-ins and collect their per-partition counts here,
+    because each partition's id offset is the sum of the counts before
+    it."""
     out: dict[str, DataFrame] = {}
 
     # conformed dims (/root/reference/transformation.py:610-612)

@@ -128,8 +128,8 @@ def prepare_training_data_neardup(
     MinHash-LSH near-dup pairs (auto-banded) -> connected components
     (large-star/small-star) -> keep one representative per component ->
     duplicated-span removal (Lee et al. 2022) -> train/val/test split.
-    Every stage is the SAME individually-registered operator
-    (operators/dedup.py:270,925,1022,439) — this plan only wires them.
+    Every stage is the SAME individually-registered operator — this
+    plan only wires them.
 
     Returns one row per surviving document:
     (id, pred_lang, n_tokens, quality, component_id, cleaned_text,
@@ -148,97 +148,31 @@ def prepare_training_data_neardup(
     threshold tweaks — which also lets an oracle pin (bands, rows)
     from the fixture's row count alone.
 
-    Scale shape (the 100 TB posture, stage by stage):
+    This is training_data_neardup_state's chain (_neardup_build), run
+    without the checkpoints only state retention needs; the output is
+    the same rows, lazy. Scale shape (the 100 TB posture, stage by
+    stage):
     - features are ONE fused scan (_featured_survivors); exact dedup
       is one 16-byte-digest exchange;
-    - survivors are localCheckpoint'ed ONCE: five downstream consumers
-      (signature build, two verify sides, span grams, final join)
-      would otherwise each re-run the feature scan. On a production
-      cluster replace with a parquet materialization boundary
-      (sources/writers.save_table) — same plan, durable blocks;
-    - near-dup: banded signature self-join (candidates pinned linear
-      by the auto-sizing law), verify on shingle arrays, components in
-      O(log n) star rounds over the PAIR graph (pair-volume nodes, not
-      corpus nodes); only ids/digests/signatures shuffle;
-    - span removal: two digest-keyed exchanges + the per-doc rebuild —
-      the one place surviving documents cross the wire, as any
-      rewriting pass must;
+    - survivors are localCheckpoint'ed ONCE: the downstream consumers
+      (shingling, span grams, final join) would otherwise each re-run
+      the feature scan. On a production cluster replace with a parquet
+      materialization boundary (sources/writers.save_table) — same
+      plan, durable blocks;
+    - near-dup: identical shingle sets grouped on a 16-byte digest,
+      the groups' reps signed and banded (candidates pinned linear by
+      the auto-sizing law), verified on shingle arrays and re-expanded
+      to members; components in O(log n) star rounds over the PAIR
+      graph (pair-volume nodes, not corpus nodes); only
+      ids/digests/signatures shuffle;
+    - span removal: the reps' window grams checkpointed once, one
+      digest-keyed owner aggregate + the per-doc rebuild — the one
+      place surviving documents cross the wire, as any rewriting pass
+      must;
     - split: a narrow hash projection.
     """
-    from build_datawarehouse_demo_spark.operators.dedup import (
-        connected_components_star,
-        minhash_auto_params,
-        minhash_dedup_pairs,
-        remove_duplicate_spans,
-    )
-    from build_datawarehouse_demo_spark.operators.sampling import train_val_test_split
-
-    if corpus_n is None:
-        corpus_n = df.count()
-    bands, rows = minhash_auto_params(corpus_n, threshold=jaccard_threshold)
-    survivors = _featured_survivors(
-        df, id_col, text_col, min_tokens, min_quality
-    ).localCheckpoint()
-
-    pairs = minhash_dedup_pairs(
-        survivors,
-        id_col=id_col,
-        text_col="cleaned",
-        k=shingle_k,
-        num_hashes=bands * rows,
-        bands=bands,
-        threshold=jaccard_threshold,
-        # collapse=False: _featured_survivors already ran EXACT dedup
-        # (min id per cleaned-text digest), so identical-content groups
-        # cannot reach this stage — the r13 digest pre-collapse would
-        # re-pay its window + checkpoint for a guaranteed-unique corpus
-        # (measured: +1.6s fixed at sf0.1, pure overhead here). The
-        # clean-stack pipeline keeps collapse=True because it
-        # deliberately has NO exact stage.
-        collapse=False,
-        # the components step derives BOTH its node set and its edge
-        # set from this frame (two materializations of the signature
-        # join + verify plan without a boundary) — checkpoint once;
-        # pair volume is the near-dup count, tiny relative to corpus
-    ).localCheckpoint()
-    comp = connected_components_star(pairs)
-    reps = (
-        survivors.join(
-            comp.withColumnRenamed("node", id_col), id_col, "left"
-        )
-        .withColumn("component_id", F.coalesce(F.col("component"), F.col(id_col)))
-        .filter(F.col("component_id") == F.col(id_col))
-        .drop("component")
-        # five downstream references (span removal's gram/stream/base
-        # derivations + the final join) would each re-run the
-        # survivors⋈components join — the r9 plan audit measured the
-        # un-checkpointed tail at ~40 SortMergeJoins of repeated
-        # subtrees. Same production note as `survivors`: replace with
-        # a parquet boundary on a real cluster.
-        .localCheckpoint()
-    )
-    cleaned = remove_duplicate_spans(
-        reps.select(id_col, "cleaned"),
-        id_col=id_col,
-        text_col="cleaned",
-        window=span_window,
-        min_docs=span_min_docs,
-    ).select(
-        id_col,
-        "cleaned_text",
-        F.col("n_tokens").alias("__span_n_tokens"),
-        "n_tokens_removed",
-    )
-    out = reps.join(cleaned, id_col).select(
-        id_col,
-        "pred_lang",
-        F.col("__span_n_tokens").alias("n_tokens"),
-        "quality",
-        "component_id",
-        "cleaned_text",
-        "n_tokens_removed",
-    )
-    return train_val_test_split(out, id_col, val_frac=val_frac, test_frac=test_frac)
+    params = _pipeline_params({**locals(), "rank_col": None}, ("n_tokens", "quality"))
+    return _neardup_build(df, corpus_n, params)["output"]
 
 
 def _pipeline_params(kwargs: dict, rank_features: tuple[str, str]) -> dict:
@@ -249,7 +183,7 @@ def _pipeline_params(kwargs: dict, rank_features: tuple[str, str]) -> dict:
     name. The state builders keep the result as ``state["params"]``;
     applies, migrations, compaction and the streaming sinks read every
     knob from there, so a fold always runs at the parameters its state
-    was built with. The one-shot clean build runs the same check."""
+    was built with. The one-shot builds run the same check."""
     params = {k: v for k, v in kwargs.items() if k not in ("df", "corpus_n")}
     rank_col = params["rank_col"]
     if rank_col is not None and params.get("soft_weights"):
@@ -279,9 +213,10 @@ def training_data_neardup_state(
 ) -> dict:
     """Run the full near-dup pipeline AND keep the incremental state a
     corpus-refresh run needs (VERDICT r9 item 3) — the pipeline twin of
-    build_ivf_index's build-once/append-many contract. Same stages,
-    same parameters, same values as prepare_training_data_neardup; the
-    difference is purely which intermediates survive the run:
+    build_ivf_index's build-once/append-many contract. Same chain
+    (_neardup_build), same parameters, same values as
+    prepare_training_data_neardup; the difference is purely which
+    intermediates survive the run:
 
       params          every keyword of this call but df/corpus_n (the
                       front, shingle, threshold, span, split and keep-
@@ -325,72 +260,111 @@ def training_data_neardup_state(
     plan, durable blocks; see sources/writers.save_table.
     """
     params = _pipeline_params(locals(), ("n_tokens", "quality"))
+    return _retained(
+        _neardup_build(df, corpus_n, params),
+        ("output", "dg_members", "rep_digests", "text_digests", "rep_ids"),
+    )
+
+
+def _retained(state: dict, keys: tuple[str, ...]) -> dict:
+    """A build's ``state`` with the lazy frames under ``keys``
+    localCheckpoint'ed, in that order — the frames only an incremental
+    state keeps (the build chain checkpoints the rest itself)."""
+    return {**state, **{k: state[k].localCheckpoint() for k in keys}}
+
+
+def _pair_state(
+    df: DataFrame, corpus_n: int | None, front: DataFrame, params: dict
+) -> dict:
+    """The build prefix both corpus pipelines share: banding sized from
+    the raw corpus count (``df.count()`` unless ``corpus_n`` is given),
+    the front's survivors ``front`` checkpointed, identical shingle
+    sets grouped (shingle_digest_groups) and the reps run through
+    _collapsed_pair_state. Returns the state frames this makes
+    (params, bands, rows, survivors, band_keys, dg_members,
+    rep_digests, pairs); the two member maps are lazy projections of
+    the grouping's checkpoint."""
     from build_datawarehouse_demo_spark.operators.dedup import (
-        connected_components_star,
         minhash_auto_params,
-        remove_spans_given_owners,
         shingle_arrays,
         shingle_digest_groups,
+    )
+
+    id_col, threshold = params["id_col"], params["jaccard_threshold"]
+    if corpus_n is None:
+        corpus_n = df.count()
+    bands, rows = minhash_auto_params(corpus_n, threshold=threshold)
+    survivors = front.localCheckpoint()
+    members, dg_reps = shingle_digest_groups(
+        shingle_arrays(survivors, id_col, "cleaned", params["shingle_k"]), id_col
+    )
+    band_keys, pairs = _collapsed_pair_state(
+        dg_reps.select(id_col, "shingles"), members, members, bands, rows,
+        threshold, id_col,
+    )
+    return {
+        "params": params,
+        "bands": bands,
+        "rows": rows,
+        "survivors": survivors,
+        "band_keys": band_keys,
+        "dg_members": members.select(F.col(id_col), "__rep"),
+        "rep_digests": dg_reps.select(id_col, "__dg"),
+        "pairs": pairs,
+    }
+
+
+def _neardup_build(df: DataFrame, corpus_n: int | None, params: dict) -> dict:
+    """The near-dup pipeline's one build chain, run by
+    prepare_training_data_neardup (which returns its lazy ``output``)
+    and training_data_neardup_state (which checkpoints the frames
+    retention needs): the featured front → _pair_state → star
+    components → reps (min-id, or keep-best under ``rank_col``) →
+    checkpointed rep window grams → span owners →
+    remove_spans_given_owners → split. Returns the state's frames
+    (training_data_neardup_state); dg_members, rep_digests,
+    text_digests, rep_ids and output are lazy."""
+    from build_datawarehouse_demo_spark.operators.dedup import (
+        connected_components_star,
+        remove_spans_given_owners,
+        span_owners,
         _window_gram_rows,
     )
     from build_datawarehouse_demo_spark.operators.sampling import train_val_test_split
 
-    if corpus_n is None:
-        corpus_n = df.count()
-    bands, rows = minhash_auto_params(corpus_n, threshold=jaccard_threshold)
-    survivors = _featured_survivors(
-        df, id_col, text_col, min_tokens, min_quality
-    ).localCheckpoint()
-    members, dg_reps = shingle_digest_groups(
-        shingle_arrays(survivors, id_col, "cleaned", shingle_k), id_col
+    p = params
+    id_col, rank_col, span_window = p["id_col"], p["rank_col"], p["span_window"]
+    front = _featured_survivors(df, id_col, p["text_col"], p["min_tokens"], p["min_quality"])
+    state = _pair_state(df, corpus_n, front, p)
+    survivors = state["survivors"]
+    memb = _labeled(
+        survivors,
+        connected_components_star(state["pairs"]).withColumnRenamed("node", id_col),
+        id_col,
+        "component_id",
     )
-    band_keys, pairs = _collapsed_pair_state(
-        dg_reps.select(id_col, "shingles"), members, members, bands, rows,
-        jaccard_threshold, id_col,
-    )
-    comp = connected_components_star(pairs)
-    memb = survivors.join(
-        comp.withColumnRenamed("node", id_col), id_col, "left"
-    ).withColumn("component_id", F.coalesce(F.col("component"), F.col(id_col)))
     if rank_col is None:
-        reps = (
-            memb.filter(F.col("component_id") == F.col(id_col))
-            .drop("component")
-            .localCheckpoint()
-        )
+        reps = memb.filter(F.col("component_id") == F.col(id_col))
     else:
         # keep-best policy (r18, VERDICT r17 item 1): the survivor of
         # each component maximizes (rank_col, then smallest id) — the
         # winner id from ONE slim min_by, the heavy survivor columns
         # semi-joined back (documents never enter the aggregate)
-        from build_datawarehouse_demo_spark.operators.dedup import (
-            keep_best_key,
-        )
+        from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
         win = memb.groupBy("component_id").agg(
-            F.min_by(F.col(id_col), keep_best_key(rank_col, id_col)).alias(
-                "__keep"
-            )
+            F.min_by(F.col(id_col), keep_best_key(rank_col, id_col)).alias("__keep")
         )
-        reps = (
-            memb.join(
-                win.select(F.col("__keep").alias(id_col)), id_col, "left_semi"
-            )
-            .drop("component")
-            .localCheckpoint()
-        )
+        reps = memb.join(win.select(F.col("__keep").alias(id_col)), id_col, "left_semi")
+    # the span stage and the final join both re-read the reps, and
+    # without a boundary each would re-run survivors ⋈ components
+    reps = reps.localCheckpoint()
     rep_grams = _window_gram_rows(
         reps.select(id_col, "cleaned"), id_col, "cleaned", span_window
     ).localCheckpoint()
-    owners = (
-        rep_grams.groupBy("gram_md5")
-        .agg(F.countDistinct(id_col).alias("__nd"), F.min(id_col).alias("__owner"))
-        .filter(F.col("__nd") >= span_min_docs)
-        .select("gram_md5", "__owner")
-    )
     cleaned = remove_spans_given_owners(
         reps.select(id_col, "cleaned"),
-        owners,
+        span_owners(rep_grams, id_col, p["span_min_docs"]),
         id_col,
         "cleaned",
         span_window,
@@ -412,24 +386,14 @@ def training_data_neardup_state(
         "cleaned_text",
         "n_tokens_removed",
     )
-    output = train_val_test_split(
-        out, id_col, val_frac=val_frac, test_frac=test_frac
-    ).localCheckpoint()
     return {
-        "params": params,
-        "bands": bands,
-        "rows": rows,
-        "survivors": survivors,
-        "band_keys": band_keys,
-        "dg_members": members.select(F.col(id_col), "__rep").localCheckpoint(),
-        "rep_digests": dg_reps.select(id_col, "__dg").localCheckpoint(),
-        "text_digests": survivors.select(
-            F.md5(F.col("cleaned")).alias("__digest")
-        ).localCheckpoint(),
-        "pairs": pairs,
-        "rep_ids": reps.select(id_col).localCheckpoint(),
+        **state,
+        "text_digests": survivors.select(F.md5(F.col("cleaned")).alias("__digest")),
+        "rep_ids": reps.select(id_col),
         "rep_grams": rep_grams,
-        "output": output,
+        "output": train_val_test_split(
+            out, id_col, val_frac=p["val_frac"], test_frac=p["test_frac"]
+        ),
     }
 
 
@@ -447,8 +411,8 @@ def _collapsed_pair_state(
     are signed and banded, the rep-level candidates verified, and the
     verified rep pairs re-expanded to members (operators/dedup:
     lsh_band_self_pairs, jaccard_verify_pairs, expand_rep_pairs; the
-    member frames as there). Shared by both state builders and the
-    banding migration.
+    member frames as there). Shared by both build chains (_pair_state)
+    and the banding migration.
 
     The stored band-key table keeps one row per DISTINCT shingle set,
     not per member (r14: per-member keys made a duplicate-heavy stored
@@ -670,6 +634,7 @@ def _refresh_spans(
     Returns (output, rep_grams)."""
     from build_datawarehouse_demo_spark.operators.dedup import (
         remove_spans_given_owners,
+        span_owners,
         _window_gram_rows,
     )
     from build_datawarehouse_demo_spark.operators.sampling import train_val_test_split
@@ -702,12 +667,8 @@ def _refresh_spans(
     digests_needed = (
         grams_union.join(affected_ids, id_col).select("gram_md5").distinct()
     )
-    owners = (
-        grams_union.join(digests_needed, "gram_md5")
-        .groupBy("gram_md5")
-        .agg(F.countDistinct(id_col).alias("__nd"), F.min(id_col).alias("__owner"))
-        .filter(F.col("__nd") >= p["span_min_docs"])
-        .select("gram_md5", "__owner")
+    owners = span_owners(
+        grams_union.join(digests_needed, "gram_md5"), id_col, p["span_min_docs"]
     )
     affected_docs = rep_feats.join(affected_ids, id_col).localCheckpoint()
     rebuilt = remove_spans_given_owners(
@@ -1092,8 +1053,8 @@ def _clean_reps(
 ) -> DataFrame:
     """Representative rows (id, n_ws_tokens, clf_score, component_id)
     of every near-dup component of the CLEAN pipeline — the keep-policy
-    seam shared by the one-shot build, the state builder and the
-    banding migration. ``rank_col=None`` keeps the min-id member (the
+    seam shared by the build chain (_clean_build) and the banding
+    migration. ``rank_col=None`` keeps the min-id member (the
     star label, so the filter is free); ``rank_col`` set keeps the
     member MAXIMIZING (rank, then smallest id) — the Dolma/FineWeb
     keep-the-best policy (operators/dedup.dedup_keep_best), as ONE
@@ -1161,9 +1122,8 @@ def _clean_output(survivors: DataFrame, comp: DataFrame, params: dict) -> DataFr
     """The clean pipeline's output rows from its near-dup components
     under the keep policy of ``params`` (_pipeline_params) — min-id or
     keep-best (_clean_reps), or drop-free (_clean_soft_rows) — through
-    the hash split. Shared by the one-shot build, the state builder
-    and the banding migration; the caller decides whether to
-    checkpoint."""
+    the hash split. Shared by the build chain (_clean_build) and the
+    banding migration; the caller decides whether to checkpoint."""
     from build_datawarehouse_demo_spark.operators.sampling import (
         train_val_test_split,
     )
@@ -1298,11 +1258,15 @@ def prepare_clean_filter_dedup(
     component step keeps the min-id representative of every duplicate
     class, exact or fuzzy, in one pass.
 
-    Scale shape (the 100 TB posture): the four filter batteries run as
-    ONE fused pass over the scan (clean_filter_survivors). The first
-    exchange is the MinHash banding groupBy; candidates stay
-    linear by the auto-sizing law; components run in O(log n) star
-    rounds over the PAIR graph; the split is a narrow hash projection.
+    This is clean_filter_dedup_state's chain (_clean_build), run
+    without the checkpoints only state retention needs; the output is
+    the same rows, lazy. Scale shape (the 100 TB posture): the four
+    filter batteries run as ONE fused pass over the scan
+    (clean_filter_survivors). The first exchange groups identical
+    shingle sets on a 16-byte digest (exact copies contract to one
+    rep before banding); candidates stay linear by the auto-sizing
+    law; components run in O(log n) star rounds over the PAIR graph;
+    the split is a narrow hash projection.
 
     Banding is sized from the RAW corpus count (pass ``corpus_n`` to
     skip the count()) — the same over-provisioning contract, and the
@@ -1323,34 +1287,23 @@ def prepare_clean_filter_dedup(
     [+ (n_members, weight) under soft_weights].
     """
     params = _pipeline_params(locals(), ("n_ws_tokens", "clf_score"))
-    from build_datawarehouse_demo_spark.operators.dedup import (
-        connected_components_star,
-        minhash_auto_params,
-        minhash_dedup_pairs,
-    )
+    return _clean_build(df, corpus_n, params)["output"]
 
-    if corpus_n is None:
-        corpus_n = df.count()
-    bands, rows = minhash_auto_params(corpus_n, threshold=jaccard_threshold)
 
-    # the near-dup stage derives signatures AND both verify sides from
-    # this frame — same materialization contract as
-    # prepare_training_data_neardup's `survivors` (parquet boundary on
-    # a real cluster)
-    survivors = clean_filter_survivors(
-        df, **{k: params[k] for k in _CLEAN_FRONT}
-    ).localCheckpoint()
+def _clean_build(df: DataFrame, corpus_n: int | None, params: dict) -> dict:
+    """The clean pipeline's one build chain, run by
+    prepare_clean_filter_dedup (which returns its lazy ``output``) and
+    clean_filter_dedup_state (which checkpoints the frames retention
+    needs): clean_filter_survivors → _pair_state → star components →
+    _clean_output. Returns the state's frames
+    (clean_filter_dedup_state); dg_members, rep_digests and output are
+    lazy."""
+    from build_datawarehouse_demo_spark.operators.dedup import connected_components_star
 
-    pairs = minhash_dedup_pairs(
-        survivors,
-        id_col=id_col,
-        text_col="cleaned",
-        k=shingle_k,
-        num_hashes=bands * rows,
-        bands=bands,
-        threshold=jaccard_threshold,
-    ).localCheckpoint()
-    return _clean_output(survivors, connected_components_star(pairs), params)
+    front = clean_filter_survivors(df, **{k: params[k] for k in _CLEAN_FRONT})
+    state = _pair_state(df, corpus_n, front, params)
+    comp = connected_components_star(state["pairs"])
+    return {**state, "output": _clean_output(state["survivors"], comp, params)}
 
 
 def clean_filter_dedup_state(
@@ -1377,8 +1330,8 @@ def clean_filter_dedup_state(
     (VERDICT r12 item 3) — the modern cleaning stack's twin of
     training_data_neardup_state, so a continuously-ingesting curation
     run can fold new batches in without re-filtering or re-banding the
-    corpus. Same stages, same parameters, same values as the batch
-    pipeline; the difference is which intermediates survive:
+    corpus. Same chain (_clean_build), same parameters, same values as
+    the batch pipeline; the difference is which intermediates survive:
 
       params        every keyword of this call but df/corpus_n (the
                     filter front, shingle, threshold, split and keep-
@@ -1417,40 +1370,9 @@ def clean_filter_dedup_state(
     a refresh appends partitions.
     """
     params = _pipeline_params(locals(), ("n_ws_tokens", "clf_score"))
-    from build_datawarehouse_demo_spark.operators.dedup import (
-        connected_components_star,
-        minhash_auto_params,
-        shingle_arrays,
-        shingle_digest_groups,
+    return _retained(
+        _clean_build(df, corpus_n, params), ("output", "dg_members", "rep_digests")
     )
-
-    if corpus_n is None:
-        corpus_n = df.count()
-    bands, rows = minhash_auto_params(corpus_n, threshold=jaccard_threshold)
-    survivors = clean_filter_survivors(
-        df, **{k: params[k] for k in _CLEAN_FRONT}
-    ).localCheckpoint()
-    members, dg_reps = shingle_digest_groups(
-        shingle_arrays(survivors, id_col, "cleaned", shingle_k), id_col
-    )
-    band_keys, pairs = _collapsed_pair_state(
-        dg_reps.select(id_col, "shingles"), members, members, bands, rows,
-        jaccard_threshold, id_col,
-    )
-    output = _clean_output(
-        survivors, connected_components_star(pairs), params
-    ).localCheckpoint()
-    return {
-        "params": params,
-        "bands": bands,
-        "rows": rows,
-        "survivors": survivors,
-        "band_keys": band_keys,
-        "dg_members": members.select(F.col(id_col), "__rep").localCheckpoint(),
-        "rep_digests": dg_reps.select(id_col, "__dg").localCheckpoint(),
-        "pairs": pairs,
-        "output": output,
-    }
 
 
 def clean_filter_dedup_apply(

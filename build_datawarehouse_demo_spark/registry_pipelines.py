@@ -329,7 +329,7 @@ def q_clean_filter_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetition → linear classifier → auto-banded MinHash-LSH
     near-dup removal (subsumes exact dedup) → hash split. The four
     filter batteries fuse into ONE Arrow pass over the scan; the
-    first exchange is the MinHash banding groupBy;
+    first exchange groups identical shingle sets on their digest;
     banding auto-sizes from the raw corpus count and the oracle
     pins it through the same minhash_auto_params."""
     from build_datawarehouse_demo_spark.plans.training_data import (

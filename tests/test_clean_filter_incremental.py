@@ -11,18 +11,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.test_incremental_state_skew import LOOSE
 
-#: filter knobs opened wide so every crafted doc survives the front and
-#: the test controls the near-dup graph purely through shingle overlap
-LOOSE = dict(
-    min_words_per_line=1,
-    min_sentences=1,
-    min_words=1,
-    min_stopword_hits=0,
-    max_top_gram_char_frac=(1.0, 1.0, 1.0),
-    clf_threshold=-1.0,
-)
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def _sorted_rows(df):
@@ -68,24 +59,11 @@ def test_incremental_equals_full_rebuild_on_fixture(spark):
         clean_filter_dedup_state,
         prepare_clean_filter_dedup,
     )
-    from build_datawarehouse_demo_spark.registry_common import (
-        _CLF_T,
-        _GQ_MINW,
-        _GQ_STOP,
-        _QC_DIM,
-        _TOPG,
-        pageify,
-    )
+    from build_datawarehouse_demo_spark.registry_common import _CF_KNOBS as knobs
+    from build_datawarehouse_demo_spark.registry_common import pageify
 
     docs = pageify(
         spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    )
-    knobs = dict(
-        min_words=_GQ_MINW,
-        min_stopword_hits=_GQ_STOP,
-        max_top_gram_char_frac=_TOPG,
-        clf_dim=_QC_DIM,
-        clf_threshold=_CLF_T,
     )
     n = docs.count()
     split_at = (3 * n) // 4

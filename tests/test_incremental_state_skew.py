@@ -22,8 +22,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-#: clean-stack filter knobs opened wide so the crafted docs survive
-#: the front (the test_clean_filter_incremental discipline)
+#: clean-stack filter knobs opened wide so every crafted doc survives
+#: the front and a test controls the near-dup graph purely through
+#: shingle overlap; the clean-filter test modules import it from here
 LOOSE = dict(
     min_words_per_line=1,
     min_sentences=1,

@@ -10,8 +10,9 @@ build parameters once, in the state, and share one keep-policy check,
 one apply epilogue and one streaming state sink; no fold-side function
 takes a build knob.
 The MinHash near-dup pair pieces (Jaccard verify, rep -> member
-re-expansion) are written once, in operators/dedup.py. Every package
-import in the repo's scripts resolves.
+re-expansion) are written once, in operators/dedup.py, and each corpus
+pipeline has one build chain, shared by its one-shot build and its
+state builder. Every package import in the repo's scripts resolves.
 """
 
 from __future__ import annotations
@@ -306,6 +307,59 @@ def test_minhash_pair_pieces_written_once():
     )
     assert expansion == ["operators/dedup.py:expand_rep_pairs"], expansion
     assert "collapse" not in inspect.signature(lsh_candidate_pairs).parameters
+
+
+#: one-shot build -> the state builder of the same pipeline
+_ONE_SHOTS = {
+    "prepare_training_data_neardup": "training_data_neardup_state",
+    "prepare_clean_filter_dedup": "clean_filter_dedup_state",
+}
+
+
+def _called_names(fn) -> set:
+    return {
+        n.func.id
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+    }
+
+
+def test_one_build_chain_per_corpus_pipeline():
+    """Each corpus pipeline's one-shot build calls no operators/dedup.py
+    function itself and delegates to the one private body its state
+    builder runs, and that body reaches the digest grouping and the
+    components step; nothing in plans/training_data.py runs the
+    stand-alone pair or span-removal operators, and
+    minhash_dedup_pairs has no collapse switch."""
+    from build_datawarehouse_demo_spark.operators import dedup
+    from build_datawarehouse_demo_spark.plans import training_data
+
+    fns = _top_level_functions(inspect.getsource(training_data))
+    calls = {name: _called_names(fn) for name, fn in fns.items()}
+    assert not set().union(*calls.values()) & {"minhash_dedup_pairs", "remove_duplicate_spans"}
+
+    def reaches(name: str, target: str, seen: set) -> bool:
+        seen.add(name)
+        return target in calls[name] or any(
+            reaches(c, target, seen) for c in calls[name] & set(fns) - seen
+        )
+
+    dedup_fns = {
+        name
+        for name, obj in inspect.getmembers(dedup, inspect.isfunction)
+        if obj.__module__ == dedup.__name__
+    }
+    for one_shot, builder in _ONE_SHOTS.items():
+        fn = fns[one_shot]
+        assert not calls[one_shot] & dedup_fns, one_shot
+        assert not any(
+            isinstance(n, ast.ImportFrom) and (n.module or "").endswith("operators.dedup")
+            for n in ast.walk(fn)
+        ), one_shot
+        (body,) = calls[one_shot] & calls[builder] & set(fns) - {"_pipeline_params"}
+        for target in ("shingle_digest_groups", "connected_components_star"):
+            assert reaches(body, target, set()), (body, target)
+    assert "collapse" not in inspect.signature(dedup.minhash_dedup_pairs).parameters
 
 
 def test_state_sinks_share_one_foreach_batch():

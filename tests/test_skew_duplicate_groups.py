@@ -32,8 +32,10 @@ def _dup_docs(spark, n=300, dup=0.9, seed=7):
 
 def test_minhash_skew_duplicate_groups(spark):
     from build_datawarehouse_demo_spark.operators.dedup import (
+        jaccard_verify_pairs,
         lsh_band_keys,
         lsh_band_self_pairs,
+        lsh_candidate_pairs,
         minhash_dedup_pairs,
         minhash_signatures_from_arrays,
         shingle_arrays,
@@ -44,7 +46,7 @@ def test_minhash_skew_duplicate_groups(spark):
     n = df.count()
 
     # (a) intermediate linearity on the collapse minhash_dedup_pairs
-    # and the incremental states run: the banding self-join sees ONE
+    # and the corpus pipelines run: the banding self-join sees ONE
     # row per distinct shingle set — the k-copy group contributes 1, so
     # the rep-level candidate volume is bounded by distinct-content
     # pairs, not bands*k^2/2 (uncollapsed truth for this corpus: the
@@ -58,14 +60,17 @@ def test_minhash_skew_duplicate_groups(spark):
     assert rep_cand <= n_reps * (n_reps - 1) // 2
     assert rep_cand < k * (k - 1) // 2 / 10  # nowhere near the quadratic blob
 
-    # (b) output = exact quadratic truth, identical to the raw shape
+    # (b) output = exact quadratic truth, identical to the raw shape:
+    # every document signed, banded and verified, no digest grouping
     got = {
         (r.id_a, r.id_b, round(r.jaccard, 9))
         for r in minhash_dedup_pairs(df, threshold=0.8).collect()
     }
+    sh = shingle_arrays(df)
+    raw_cand = lsh_candidate_pairs(minhash_signatures_from_arrays(sh, 16), 16, 4)
     raw = {
         (r.id_a, r.id_b, round(r.jaccard, 9))
-        for r in minhash_dedup_pairs(df, threshold=0.8, collapse=False).collect()
+        for r in jaccard_verify_pairs(raw_cand, sh, 0.8).collect()
     }
     assert got == raw
     within = {(a, b, j) for a, b, j in got if a < k and b < k}

@@ -10,14 +10,8 @@ from __future__ import annotations
 import pyspark.sql.types as T
 from pyspark.sql import functions as F
 
-LOOSE = dict(
-    min_words_per_line=1,
-    min_sentences=1,
-    min_words=1,
-    min_stopword_hits=0,
-    max_top_gram_char_frac=(1.0, 1.0, 1.0),
-    clf_threshold=-1.0,
-)
+from tests.test_incremental_state_skew import LOOSE
+
 
 SCHEMA = T.StructType(
     [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]

@@ -86,25 +86,12 @@ def leg(sf_dir: str, runs: int) -> None:
         training_data_neardup_apply,
         training_data_neardup_state,
     )
-    from build_datawarehouse_demo_spark.registry_common import (
-        _CLF_T,
-        _GQ_MINW,
-        _GQ_STOP,
-        _QC_DIM,
-        _TOPG,
-        pageify,
-    )
-
     # the registered incremental key's knobs — the default clean-stack
     # thresholds are tuned for web text and would filter the synthetic
     # fixture to near-nothing, measuring an empty pipeline
-    knobs = dict(
-        min_words=_GQ_MINW,
-        min_stopword_hits=_GQ_STOP,
-        max_top_gram_char_frac=_TOPG,
-        clf_dim=_QC_DIM,
-        clf_threshold=_CLF_T,
-    )
+    from build_datawarehouse_demo_spark.registry_common import _CF_KNOBS as knobs
+    from build_datawarehouse_demo_spark.registry_common import pageify
+
     # keep-best arm (r18): SPARK_GRAFT_INCR_KEEP_BEST=1 measures the
     # same fold under the quality-rank policy — the apply additionally
     # recomputes winners for the batch-touched components (a slim
