@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from build_datawarehouse_demo_spark.operators.text import tokens
+from build_datawarehouse_demo_spark.session import materialize
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -68,26 +69,11 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3) -> DataFrame:
-    """Distinct word k-gram shingles per document: (id, shingle) —
-    the EXPLODED row form (used where per-shingle rows are the point,
-    e.g. inverted indexes); the minhash pipeline uses the array form
-    (shingle_arrays) instead. Shared n-gram build: text.ngram_array.
-    """
-    from build_datawarehouse_demo_spark.operators.text import ngram_array
-
-    staged = spread(df, id_col).withColumn("__toks", tokens(text_col))
-    grams = ngram_array(F.col("__toks"), k)
-    return staged.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle")
-    ).filter(F.col("shingle") != "")
-
-
 def shingle_arrays(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
     """Distinct word k-gram shingles per document as ONE array column —
-    the narrow form of word_shingles: no explode, no row
+    the narrow form of a shingle table: no explode, no row
     amplification, so everything derived from it (signatures, verify)
     stays a per-document computation instead of a per-shingle one.
 
@@ -385,11 +371,12 @@ def shingle_digest_groups(
     Cost/retention (r13 ADVICE): one exchange on the 16-byte digest
     (the exact_dedup cost class). The grouped frame feeds multiple
     downstream subtrees (members ×2, reps ×3 through signatures and
-    both verify sides), so it is localCheckpoint'ed — lineage
+    both verify sides), so it is materialized — lineage
     truncation keeps every consumer's plan O(1) in the HOF tree and
-    computes the shingle scan once; the retained blocks live for the
-    SESSION (localCheckpoint has no unpersist hook — at 100 TB this is
-    a parquet materialization instead). The checkpoint is NARROW: the
+    computes the shingle scan once; the retained blocks live until the
+    enclosing block_scope (session.py) frees them, or for the SESSION
+    outside one (at 100 TB this is a parquet materialization
+    instead). The checkpoint is NARROW: the
     shingle arrays (and digests) survive only on REP rows — members
     carry ids and counts only, so a duplicate-heavy corpus retains one
     array per DISTINCT set, not per copy. The checkpoint is EAGER —
@@ -404,14 +391,14 @@ def shingle_digest_groups(
         "__gn", F.count(F.lit(1)).over(w)
     )
     is_rep = F.col(id_col) == F.col("__rep")
-    ck = tagged.select(
+    ck = materialize(tagged.select(
         F.col(id_col),
         "__rep",
         "__gn",
         F.size("shingles").alias("__nsh"),
         F.when(is_rep, F.col("shingles")).alias("__rsh"),
         F.when(is_rep, F.col("__dg")).alias("__rdg"),
-    ).localCheckpoint()
+    ))
     members = ck.select(F.col(id_col), "__rep", "__gn", "__nsh")
     reps = ck.where(F.col(id_col) == F.col("__rep")).select(
         F.col(id_col), F.col("__rsh").alias("shingles"), F.col("__rdg").alias("__dg")
@@ -1207,13 +1194,12 @@ def connected_components_star(
     # every node mentioned in ANY pair (self-pairs included) must
     # appear in the output as its own singleton if contraction drops
     # its edges
-    nodes = (
+    nodes = materialize(
         raw.select(F.col("u").alias("node"))
         .unionAll(raw.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
-    edges = raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
+    edges = materialize(raw.filter(F.col("u") != F.col("v")).distinct())
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1243,7 +1229,7 @@ def connected_components_star(
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
-        edges = large.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
+        edges = materialize(large.filter(F.col("u") != F.col("v")).distinct())
         # small-star on larger->smaller oriented edges: (v, m) for all
         # not-larger neighbors v, plus (u, m) re-attaching u itself
         oriented = _sym(edges).filter(F.col("v") < F.col("u"))
@@ -1253,7 +1239,7 @@ def connected_components_star(
         small = with_min.select(F.col("v").alias("u"), F.col("m").alias("v")).unionAll(
             with_min.select("u", F.col("m").alias("v"))
         )
-        edges = small.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
+        edges = materialize(small.filter(F.col("u") != F.col("v")).distinct())
         new_fp = _fingerprint(edges)
         if new_fp == fp:
             # fixpoint: every edge points a node at its component min;

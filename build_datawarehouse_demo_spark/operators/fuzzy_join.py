@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from build_datawarehouse_demo_spark.session import materialize
+
 
 def _qgrams(col, q: int):
     """Distinct character q-grams of a string column (empty array for
@@ -150,19 +152,19 @@ def levenshtein_band_join(
     # The frames are the DISTINCT value domains (bounded, exactly what
     # the join is declared over), the same class the qgram path's
     # prefix checkpoints already materialize.
-    lv = (
+    lv = materialize(
         left.select(F.col(left_col).alias("lval"))
         .where(F.col("lval").isNotNull())
         .distinct()
-        .localCheckpoint()
     )
     rv = (
         lv.select(F.col("lval").alias("rval"))
         if self_join
-        else right.select(F.col(right_col).alias("rval"))
-        .where(F.col("rval").isNotNull())
-        .distinct()
-        .localCheckpoint()
+        else materialize(
+            right.select(F.col(right_col).alias("rval"))
+            .where(F.col("rval").isNotNull())
+            .distinct()
+        )
     )
 
     p99: int | None = None
@@ -246,7 +248,7 @@ def _candidates_deletion(
         # materialize ONCE (r19): without the checkpoint the whole
         # variant explode + distinct subtree executes twice, once per
         # side of the self-join
-        lvar = lvar.localCheckpoint()
+        lvar = materialize(lvar)
         rvar = lvar.select(F.col("lval").alias("rval"), "vh")
     else:
         rvar = _deletion_variants(rv, "rval", k).select(
@@ -302,8 +304,8 @@ def _candidates_qgram(
         # prefix computation (freq join + per-value sort/slice) is the
         # expensive half of candidate generation. n_values * (k*q+1)
         # rows — small
-        pl = pl.localCheckpoint(eager=True)
-        pr = pr.localCheckpoint(eager=True)
+        pl = materialize(pl)
+        pr = materialize(pr)
         # HOT-GRAM GATE (measured cost model, round-7): the prefix join
         # enumerates Σ_gram |L_gram|·|R_gram| rows BEFORE any filter —
         # on low-entropy domains (strings sharing a long common

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from build_datawarehouse_demo_spark.session import materialize
 from build_datawarehouse_demo_spark.sources.writers import save_table
 
 
@@ -102,13 +103,12 @@ def pagerank(
         share = write_bucketed_share(share, bucketed_table, buckets)
         force_merge = not broadcast_ranks
     else:
-        share = share.localCheckpoint()
+        share = materialize(share)
         force_merge = False
-    nodes = (
+    nodes = materialize(
         share.select(F.col("e_src").alias("node"))
         .union(share.select(F.col("e_dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     return _pagerank_iterate(nodes, share, damping, iterations, broadcast_ranks, force_merge)
 
@@ -179,11 +179,10 @@ def pagerank_from_bucketed_share(
     the bucketing paid them at write time. Per-iteration network cost
     is O(|nodes|), not O(|edges|)."""
     share = spark.table(table)
-    nodes = (
+    nodes = materialize(
         share.select(F.col("e_src").alias("node"))
         .union(share.select(F.col("e_dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     # checkpoint_ranks: one composite 5-iteration plan defeats the
     # bucketed scan (Catalyst's auto-bucketed-scan keeps only 2-5 of
@@ -236,12 +235,12 @@ def _pagerank_iterate(
     # in-edge nodes, contribs carries exactly one row per distinct
     # e_dst (groupBy), and every e_dst is a node — the union emits the
     # same |nodes| rows with bit-identical ranks as the former join.
-    no_in = (
+    no_in = materialize(
         nodes.join(
             share.select(F.col("e_dst").alias("node")).distinct(),
             "node",
             "left_anti",
-        ).localCheckpoint()
+        )
     )
     no_in_ranks = no_in.select("node", F.lit(teleport).alias("rank"))
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
@@ -256,7 +255,7 @@ def _pagerank_iterate(
             (F.lit(teleport) + F.lit(damping) * F.col("c")).alias("rank"),
         ).unionAll(no_in_ranks)
         if checkpoint_ranks:
-            ranks = ranks.localCheckpoint()
+            ranks = materialize(ranks)
     return ranks
 
 
@@ -289,20 +288,19 @@ def triangle_count(
     Every step is an equi-join or hash agg; vectors/payloads never
     move; the only data in flight are (int, int) pairs.
     """
-    e = (
+    # the canonical edge list is read FOUR+ times (degrees twice,
+    # orientation join, closing side); without materializing it the
+    # whole upstream derivation (often itself a join) re-executes per
+    # reference — measured 166 Exchanges in the composite plan vs single
+    # digits with the checkpoint (same discipline as pagerank's edge
+    # checkpoint)
+    e = materialize(
         edges.select(
             F.least(F.col(a), F.col(b)).alias("lo"),
             F.greatest(F.col(a), F.col(b)).alias("hi"),
         )
         .where(F.col("lo") != F.col("hi"))
         .dropDuplicates(["lo", "hi"])
-        # the canonical edge list is read FOUR+ times (degrees twice,
-        # orientation join, closing side); without materializing it the
-        # whole upstream derivation (often itself a join) re-executes
-        # per reference — measured 166 Exchanges in the composite plan
-        # vs single digits with the checkpoint (same discipline as
-        # pagerank's edge checkpoint)
-        .localCheckpoint()
     )
     deg = (
         e.select(F.col("lo").alias("v"))
@@ -316,15 +314,14 @@ def triangle_count(
     lo_first = (F.col("d_lo") < F.col("d_hi")) | (
         (F.col("d_lo") == F.col("d_hi")) & (F.col("lo") < F.col("hi"))
     )
-    oriented = (
+    # read twice by the wedge self-join — same reuse argument
+    oriented = materialize(
         e.join(dl, "lo")
         .join(dh, "hi")
         .select(
             F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("src"),
             F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("dst"),
         )
-        # read twice by the wedge self-join — same reuse argument
-        .localCheckpoint()
     )
     w1 = oriented.select(F.col("src"), F.col("dst").alias("x"))
     w2 = oriented.select(F.col("src"), F.col("dst").alias("y"))

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from build_datawarehouse_demo_spark.operators.scd import apply_cdc_changes
+from build_datawarehouse_demo_spark.session import materialize
 from build_datawarehouse_demo_spark.sources.writers import parquet_writer
 
 
@@ -310,7 +311,7 @@ def merge_into_partitioned_parquet(
             keep_tombstones=keep_tomb,
         )
         if keep_tomb:
-            winners = winners.localCheckpoint(eager=True)
+            winners = materialize(winners)
             is_del = F.col(op_col) == delete_op
             parquet_writer(
                 _retain(winners.where(is_del).select(*tomb_cols), winners)
@@ -373,7 +374,7 @@ def merge_into_partitioned_parquet(
         if keep_tomb:
             # materialize before overwriting the paths being read;
             # both the data write and the tombstone write feed from it
-            winners = winners.localCheckpoint(eager=True)
+            winners = materialize(winners)
             is_del = F.col(op_col) == delete_op
             new_tombs = _retain(winners.where(is_del).select(*tomb_cols), winners)
             _dynamic_overwrite(spark, new_tombs, tomb_path, partition_col)
@@ -392,7 +393,7 @@ def merge_into_partitioned_parquet(
             # winners is already materialized — safe to overwrite
             new_state = winners.where(~is_del).select(*data_cols)
         else:
-            new_state = winners.select(*data_cols).localCheckpoint(eager=True)
+            new_state = materialize(winners.select(*data_cols))
     else:
         # collapse the feed: last change per key wins, tombstones drop
         collapsed = apply_cdc_changes(
@@ -404,7 +405,7 @@ def merge_into_partitioned_parquet(
         feed_keys = changes.select(*key_cols).distinct()
 
         kept = touched.join(feed_keys, on=key_cols, how="left_anti")
-        new_state = kept.unionByName(collapsed).localCheckpoint(eager=True)
+        new_state = materialize(kept.unionByName(collapsed))
 
     _dynamic_overwrite(spark, new_state, target_path, partition_col)
 

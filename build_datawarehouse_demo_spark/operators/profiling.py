@@ -78,32 +78,6 @@ def profile_columns(
     return one.select(F.explode(structs).alias("p")).select("p.*")
 
 
-def with_quality_metrics(df: DataFrame, observation, id_col: str, *metric_cols: str):
-    """Attach zero-cost data-quality telemetry to a plan via
-    ``df.observe``: row count, null-id count, and per-column null
-    counts are accumulated ON THE EXECUTORS while the query runs its
-    normal action — no second pass over the data, which at 100 TB is
-    the difference between "monitored" and "doubled cost".
-
-    `observation` is either a metric-group name (read the values from a
-    QueryExecutionListener) or a pyspark ``Observation`` — with the
-    latter, ``observation.get`` returns the metric dict after the
-    first action:
-
-        from pyspark.sql import Observation
-        obs = Observation("quality")
-        df = with_quality_metrics(df, obs, "doc_id", "text")
-        df.write...; obs.get  # {'n_rows': ..., 'n_null_doc_id': ...}
-    """
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col(id_col).isNull(), 1).otherwise(0)).alias(f"n_null_{id_col}"),
-    ]
-    for c in metric_cols:
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"n_null_{c}"))
-    return df.observe(observation, *aggs)
-
-
 def constraint_violations(
     df: DataFrame,
     not_null: list[str] = (),

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from build_datawarehouse_demo_spark.operators.dedup import hash32
+from build_datawarehouse_demo_spark.session import materialize
 
 # hash32 yields 32-bit values; bucket to per-mille for rate precision
 _BUCKETS = 1000
@@ -386,10 +387,9 @@ def _per_source_running_fill(
         measure.cast("bigint").alias("__fm"),
     )
     p = spark.sparkContext.defaultParallelism
-    ranged = (
+    ranged = materialize(
         slim.repartitionByRange(p, F.col("__fsrc"), F.col("__fkey"), F.col("__fid"))
         .withColumn("__fpid", F.spark_partition_id())
-        .localCheckpoint()
     )
     part_totals = (
         ranged.groupBy("__fpid", "__fsrc")
@@ -1008,10 +1008,9 @@ def shard_token_balanced(
         )
     )
     p = spark.sparkContext.defaultParallelism
-    ranged = (
+    ranged = materialize(
         staged.repartitionByRange(p, F.col("__hkey"), F.col(id_col))
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     totals = {
         row[0]: row[1]

@@ -72,8 +72,9 @@ def scd2_apply(
     NULL effective time are dropped: a versioning event without a time
     cannot close the open row, and letting it through would append a
     second is_current row per key (corrupting the one-current-row
-    invariant) while valid_from=null makes it invisible to
-    scd2_as_of — silent history corruption.
+    invariant) while valid_from=null makes it invisible to any
+    point-in-time (valid_from <= t < valid_to) read — silent history
+    corruption.
     """
     updates = updates.filter(F.col(effective_ts_col).isNotNull())
     if tracked_cols:
@@ -128,12 +129,6 @@ def scd2_bootstrap(snapshot: DataFrame, effective_ts_col: str = "effective_ts") 
         .withColumn("is_current", F.lit(True))
         .drop(effective_ts_col)
     )
-
-
-def scd2_as_of(history: DataFrame, ts: str) -> DataFrame:
-    """Point-in-time view: the version of every key valid at `ts`."""
-    t = F.lit(ts).cast("timestamp")
-    return history.filter((F.col("valid_from") <= t) & (F.col("valid_to") > t))
 
 
 def apply_cdc_changes(

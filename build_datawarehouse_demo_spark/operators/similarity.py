@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from build_datawarehouse_demo_spark.session import materialize
 from build_datawarehouse_demo_spark.sources.writers import save_table
 
 
@@ -482,32 +483,6 @@ def rp_planes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def rp_lsh_signature(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection signature: bit i = [vec · plane_i >= 0].
-
-    Projections are ordered zip_with/aggregate folds (NOT an
-    explode+groupBy sum): float addition order is fixed left-to-right,
-    so the signature is bit-stable across engines — an unordered
-    aggregation could flip a near-zero projection's sign.
-
-    Dimension mismatch (vector length != plane length) makes zip_with
-    pad with nulls → null projection → NULL signature, and null keys
-    never equi-join. The failure mode is therefore an EMPTY result
-    (loud, debuggable) — not the silent everything-matches-bucket-0
-    collapse that would turn LSH into a full cartesian.
-    """
-    bits = []
-    for i, plane in enumerate(planes):
-        proj = dot(vec_col, F.array([F.lit(x) for x in plane]).cast("array<double>"))
-        bits.append(
-            F.when(proj >= 0, F.lit(1 << i)).when(proj < 0, F.lit(0)).otherwise(F.lit(None))
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("int")
-
-
 def staged_projections(
     df: DataFrame, vec_col: str, planes: list[list[float]], out_col: str = "__rp_projs"
 ) -> DataFrame:
@@ -601,9 +576,13 @@ def sign_bit(proj: Column, weight: int) -> Column:
 def rp_signature_staged(
     df: DataFrame, vec_col: str, planes: list[list[float]], out_col: str = "__sig"
 ) -> DataFrame:
-    """rp_lsh_signature with staged projections — bit-identical (same
-    ordered folds, same when-chains, same left-to-right bit sum) but
-    ~an order of magnitude cheaper; see staged_projections."""
+    """Sign-random-projection signature in ``out_col``: bit i =
+    [vec · plane_i >= 0], from staged projections (staged_projections:
+    ordered left-to-right folds, so the signature is bit-stable across
+    engines — an unordered aggregation could flip a near-zero
+    projection's sign). A dimension mismatch gives a NULL projection
+    and so a NULL signature, which never equi-joins: an EMPTY result,
+    not everything in bucket 0."""
     staged = staged_projections(df, vec_col, planes)
     sig = None
     for i in range(len(planes)):
@@ -983,9 +962,9 @@ def ivf_index_append(
     # materialize the batch BEFORE the append: the dedup anti-join
     # reads the lists table, so a lazy plan re-evaluated after the
     # write would see its own rows and filter the whole batch out
-    lists = assigned.select(
+    lists = materialize(assigned.select(
         F.col(id_col), "centroid_id", F.col("__v").alias("vec")
-    ).localCheckpoint()
+    ))
     save_table(
         lists,
         table_name,
@@ -1541,14 +1520,14 @@ def kmeans_train(
     whole training run, not just one step)."""
     cents = centroids
     for _ in range(n_iter):
-        cents = kmeans_lloyd_step(
+        cents = materialize(kmeans_lloyd_step(
             corpus,
             cents,
             id_col=id_col,
             vec_col=vec_col,
             centroid_id_col=centroid_id_col,
             round_to=round_to,
-        ).localCheckpoint()
+        ))
     return cents
 
 
@@ -1627,7 +1606,7 @@ def ivf_train_sampled(
     # one deliberately iterates over). Row partitioning changes partial
     # float-sum order only below the round_to guard (see
     # kmeans_lloyd_step's round_to note).
-    sample = spread(sample).localCheckpoint()
+    sample = materialize(spread(sample))
     return kmeans_train(
         sample, seeds, n_iter=n_iter, id_col=id_col, vec_col=vec_col, round_to=round_to
     )

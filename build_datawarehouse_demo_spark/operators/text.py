@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from build_datawarehouse_demo_spark.session import materialize
+
 # marker stopwords per language for the n-gram/stopword-hit heuristic.
 # English-heavy by design: the heuristic's job is to rank, not to be a
 # real langid model (those need external corpora this container lacks).
@@ -729,12 +731,12 @@ def perplexity_buckets(
     # corpus tokenize+explode — executed twice (before-plan: 14 scans
     # of the documents table; after: 7). |docs| slim rows, far cheaper
     # than a second LM pass at any scale.
-    ppl = lm.select(
+    ppl = materialize(lm.select(
         F.col(id_col),
         F.col("n_bigrams"),
         F.col("avg_logprob"),
         F.round(F.exp(-F.col("avg_logprob")), 6).alias("perplexity"),
-    ).localCheckpoint()
+    ))
     # cutoffs rounded 6dp: the two engines' linear interpolation can
     # differ in the last ulp (agg_percentile_exact's precedent), and an
     # unrounded cutoff would make the <= comparisons engine-dependent
@@ -907,7 +909,7 @@ def quality_classifier_train(
         F.sequence(F.lit(0), F.lit(dim - 1)),
         lambda i: F.size(F.filter(F.col("__cb"), lambda b: b == i)).cast("double"),
     )
-    base = (
+    base = materialize(
         df.withColumn("__toks", toks)
         .withColumn("__n", F.size("__toks").cast("double"))
         .filter(F.col("__n") > 0)
@@ -920,8 +922,7 @@ def quality_classifier_train(
             counts.alias("__feat"),
             F.col("__n"),
             F.col(label_col).cast("double").alias("__y"),
-        )
-        .localCheckpoint()  # n_iter consumers re-scan the slim features
+        )  # n_iter consumers re-scan the slim features
     )
     n_docs = base.count()
     if n_docs == 0:

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from build_datawarehouse_demo_spark.operators.dedup import hash32
 from build_datawarehouse_demo_spark.operators.text import chunk_documents, tokens
+from build_datawarehouse_demo_spark.session import materialize
 
 #: chunk-uid stride: uid = doc_id * STRIDE + chunk_id. Collision-free
 #: while every document chunks to < STRIDE windows — at the default
@@ -178,9 +179,9 @@ def rag_index_build_persisted(
     # amplification ran in that one task (measured 0.8s -> 0.3s warm at
     # sf0.1, identical rows). The checkpoint inherits the same 32-way
     # layout either way.
-    vecs = hash_embed_chunks(
+    vecs = materialize(hash_embed_chunks(
         spread(docs), chunk_size=chunk_size, overlap=overlap, dim=dim
-    ).localCheckpoint()
+    ))
     n = vecs.count()
     nlist = max(2, math.ceil(math.sqrt(n)))
     seeds = vecs.filter(
@@ -286,9 +287,9 @@ def rag_index_search(
     # for a parquet write at scale — the training_data.py discipline).
     # r20: spread the input docs so the embed amplification runs at
     # full parallelism (see rag_index_build_persisted note)
-    chunk_vecs = hash_embed_chunks(
+    chunk_vecs = materialize(hash_embed_chunks(
         spread(docs), chunk_size=chunk_size, overlap=overlap, dim=dim
-    ).localCheckpoint()
+    ))
     n_chunks = chunk_vecs.count()
     assigned, cents = build_rag_index(chunk_vecs, n_chunks)
     probes = chunk_vecs.filter(

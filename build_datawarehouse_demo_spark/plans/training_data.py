@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from build_datawarehouse_demo_spark.session import block_scope, checkpoint_leaves, materialize
+
 log = logging.getLogger(__name__)
 
 
@@ -154,7 +156,7 @@ def prepare_training_data_neardup(
     stage):
     - features are ONE fused scan (_featured_survivors); exact dedup
       is one 16-byte-digest exchange;
-    - survivors are localCheckpoint'ed ONCE: the downstream consumers
+    - survivors are materialized ONCE: the downstream consumers
       (shingling, span grams, final join) would otherwise each re-run
       the feature scan. On a production cluster replace with a parquet
       materialization boundary (sources/writers.save_table) — same
@@ -196,6 +198,7 @@ def _pipeline_params(kwargs: dict, rank_features: tuple[str, str]) -> dict:
     return params
 
 
+@block_scope
 def training_data_neardup_state(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -250,8 +253,10 @@ def training_data_neardup_state(
       output          the pipeline's final rows (reused verbatim for
                       documents a refresh leaves untouched)
 
-    Every frame this BUILDER returns is localCheckpoint'ed (state —
-    multiple consumers, refresh runs re-read it); refresh runs return
+    Every frame this BUILDER returns is checkpoint-backed (state —
+    multiple consumers, refresh runs re-read it), and the build's other
+    blocks (component rounds, reps) are freed when it returns (its
+    block_scope); refresh runs return
     lazy `stored ∪ checkpointed-delta` unions instead (the r14
     append-only discipline — a refresh never copies corpus-scale
     frames). On a production cluster each frame is a bucketed parquet
@@ -268,9 +273,9 @@ def training_data_neardup_state(
 
 def _retained(state: dict, keys: tuple[str, ...]) -> dict:
     """A build's ``state`` with the lazy frames under ``keys``
-    localCheckpoint'ed, in that order — the frames only an incremental
+    materialized, in that order — the frames only an incremental
     state keeps (the build chain checkpoints the rest itself)."""
-    return {**state, **{k: state[k].localCheckpoint() for k in keys}}
+    return {**state, **{k: materialize(state[k]) for k in keys}}
 
 
 def _pair_state(
@@ -294,7 +299,7 @@ def _pair_state(
     if corpus_n is None:
         corpus_n = df.count()
     bands, rows = minhash_auto_params(corpus_n, threshold=threshold)
-    survivors = front.localCheckpoint()
+    survivors = materialize(front)
     members, dg_reps = shingle_digest_groups(
         shingle_arrays(survivors, id_col, "cleaned", params["shingle_k"]), id_col
     )
@@ -358,10 +363,10 @@ def _neardup_build(df: DataFrame, corpus_n: int | None, params: dict) -> dict:
         reps = memb.join(win.select(F.col("__keep").alias(id_col)), id_col, "left_semi")
     # the span stage and the final join both re-read the reps, and
     # without a boundary each would re-run survivors ⋈ components
-    reps = reps.localCheckpoint()
-    rep_grams = _window_gram_rows(
+    reps = materialize(reps)
+    rep_grams = materialize(_window_gram_rows(
         reps.select(id_col, "cleaned"), id_col, "cleaned", span_window
-    ).localCheckpoint()
+    ))
     cleaned = remove_spans_given_owners(
         reps.select(id_col, "cleaned"),
         span_owners(rep_grams, id_col, p["span_min_docs"]),
@@ -431,13 +436,13 @@ def _collapsed_pair_state(
     )
 
     sigs = minhash_signatures_from_arrays(rep_sh, bands * rows, id_col)
-    band_keys = lsh_band_keys(sigs, bands * rows, bands, id_col).localCheckpoint()
+    band_keys = materialize(lsh_band_keys(sigs, bands * rows, bands, id_col))
     rep_pairs = jaccard_verify_pairs(
         lsh_band_self_pairs(band_keys, id_col), rep_sh, threshold, id_col
     )
-    pairs = expand_rep_pairs(
+    pairs = materialize(expand_rep_pairs(
         rep_pairs, self_members, exp_members, threshold, id_col
-    ).localCheckpoint()
+    ))
     return band_keys, pairs
 
 
@@ -476,7 +481,7 @@ def _apply_rep_candidates(new_surv: DataFrame, state: dict) -> dict:
     m_new, r_new = shingle_digest_groups(new_sh, id_col)
     new_rep_sh = r_new.select(id_col, "shingles")
     new_sigs = minhash_signatures_from_arrays(new_rep_sh, num_hashes, id_col)
-    new_rep_keys = lsh_band_keys(new_sigs, num_hashes, bands, id_col).localCheckpoint()
+    new_rep_keys = materialize(lsh_band_keys(new_sigs, num_hashes, bands, id_col))
     nn_rep = lsh_band_self_pairs(new_rep_keys, id_col)
     # new-old: batch reps vs STORED reps. shuffle_hash is the 100 TB
     # shape (state band_keys bucketed by (band, band_key); the batch
@@ -495,7 +500,7 @@ def _apply_rep_candidates(new_surv: DataFrame, state: dict) -> dict:
     )
     # nn_rep (both ids new) and no_rep (one old, one new) are disjoint,
     # each internally deduped — no cross-set dedup needed.
-    rep_cand = nn_rep.union(no_rep).localCheckpoint()
+    rep_cand = materialize(nn_rep.union(no_rep))
     # verify sides: batch reps' arrays are already built; old CANDIDATE
     # reps re-shingle through a semi-join-pruned scan of the stored
     # survivor text (at scale: survivors bucketed by id, the candidate
@@ -520,9 +525,9 @@ def _apply_rep_candidates(new_surv: DataFrame, state: dict) -> dict:
     exp_members = state["dg_members"].unionByName(
         m_new.select(F.col(id_col), "__rep")
     )
-    new_pairs = expand_rep_pairs(
+    new_pairs = materialize(expand_rep_pairs(
         rep_pairs, m_new, exp_members, threshold, id_col
-    ).localCheckpoint()
+    ))
     return {
         "m_new": m_new,
         "r_new": r_new,
@@ -550,21 +555,19 @@ def _refreshed_collapse_state(state: dict, delta: dict) -> dict:
     parquet instead — sources/writers.save_table)."""
     id_col = state["params"]["id_col"]
     r_new, m_new = delta["r_new"], delta["m_new"]
-    matched = (
+    matched = materialize(
         r_new.select(F.col(id_col).alias("__nrep"), "__dg")
         .join(
             state["rep_digests"].select(F.col(id_col).alias("__orep"), "__dg"),
             "__dg",
         )
         .select("__nrep", "__orep")
-        .localCheckpoint()
     )
     remap = matched.select(F.col("__nrep").alias("__rep"), "__orep")
-    dg_members_new = (
+    dg_members_new = materialize(
         m_new.select(F.col(id_col), "__rep")
         .join(remap, "__rep", "left")
         .select(F.col(id_col), F.coalesce("__orep", "__rep").alias("__rep"))
-        .localCheckpoint()
     )
     unmatched = r_new.join(
         matched.select(F.col("__nrep").alias(id_col)), id_col, "left_anti"
@@ -572,12 +575,12 @@ def _refreshed_collapse_state(state: dict, delta: dict) -> dict:
     return {
         "dg_members": state["dg_members"].unionByName(dg_members_new),
         "band_keys": state["band_keys"].union(
-            delta["new_rep_keys"]
-            .join(unmatched.select(id_col), id_col, "left_semi")
-            .localCheckpoint()
+            materialize(
+                delta["new_rep_keys"].join(unmatched.select(id_col), id_col, "left_semi")
+            )
         ),
         "rep_digests": state["rep_digests"].union(
-            unmatched.select(id_col, "__dg").localCheckpoint()
+            materialize(unmatched.select(id_col, "__dg"))
         ),
     }
 
@@ -641,9 +644,9 @@ def _refresh_spans(
 
     p = state["params"]
     id_col, rank_col, span_window = p["id_col"], p["rank_col"], p["span_window"]
-    added_grams = _window_gram_rows(
+    added_grams = materialize(_window_gram_rows(
         added_docs.select(id_col, "cleaned"), id_col, "cleaned", span_window
-    ).localCheckpoint()
+    ))
     old_grams = state["rep_grams"]
     dropped_grams = old_grams.join(dropped_ids, id_col)
     # lazy: three consumers below each re-scan the stored gram blocks
@@ -655,12 +658,11 @@ def _refresh_spans(
         .union(dropped_grams.select("gram_md5"))
         .distinct()
     )
-    affected_ids = (
+    affected_ids = materialize(
         grams_union.join(changed_digests, "gram_md5")
         .select(id_col)
         .union(added_ids)
         .distinct()
-        .localCheckpoint()
     )
     # stats for every digest an affected doc contains, over the
     # REFRESHED global gram table (two digest-keyed semi-joins)
@@ -670,7 +672,7 @@ def _refresh_spans(
     owners = span_owners(
         grams_union.join(digests_needed, "gram_md5"), id_col, p["span_min_docs"]
     )
-    affected_docs = rep_feats.join(affected_ids, id_col).localCheckpoint()
+    affected_docs = materialize(rep_feats.join(affected_ids, id_col))
     rebuilt = remove_spans_given_owners(
         affected_docs.select(id_col, "cleaned"), owners, id_col, "cleaned", span_window
     )
@@ -690,20 +692,19 @@ def _refresh_spans(
         "cleaned_text",
         "n_tokens_removed",
     )
-    recomputed_out = train_val_test_split(
+    recomputed_out = materialize(train_val_test_split(
         recomputed, id_col, val_frac=p["val_frac"], test_frac=p["test_frac"]
-    ).localCheckpoint()  # the span-rebuild DELTA — the only heavy subtree here
+    ))  # the span-rebuild DELTA — the only heavy subtree here
     reused = (
         state["output"]
         .join(dropped_ids, id_col, "left_anti")
         .join(affected_ids, id_col, "left_anti")
     )
     if rank_col is not None:
-        ru_lab = (
+        ru_lab = materialize(
             _labeled(reused.select(id_col, "component_id"), comp, id_col)
             .filter(F.col("__cid") != F.col("component_id"))
             .select(id_col, "__cid")
-            .localCheckpoint()
         )
         relabeled = reused.drop("component_id").join(ru_lab, id_col).select(
             id_col,
@@ -725,14 +726,11 @@ def _finish_fold(
     result: dict,
     state: dict,
     new_surv: DataFrame,
-    retire_scope: set | None,
     migrate,
     *,
     migrate_banding: bool,
     compact_to: str | None,
     compact_path: str | None,
-    compact_keep_superseded: bool,
-    compact_retire_fold_rdds: bool,
 ) -> dict:
     """The apply epilogue both incremental pipelines share, after the
     fold built ``result`` from ``state`` and the batch's checkpointed
@@ -745,12 +743,15 @@ def _finish_fold(
     - ``migrate_banding``: the pipeline's frozen-banding migration
       ``migrate`` runs at the grown corpus size (it reads its knobs
       from the state's ``params``, like the apply) — a no-op between
-      minhash_auto_params boundaries; at a boundary the replaced frames' checkpoint blocks
-      are retired unless ``compact_keep_superseded``;
-    - ``compact_to``: compact, retire the superseded blocks (inside
-      compact_state), then sweep every RDD persisted since
-      ``retire_scope`` — the batch order. The streaming sinks keep
-      their own retry-safe order (streaming/sinks._stream_state_append).
+      minhash_auto_params boundaries; at a boundary the replaced
+      frames' checkpoint blocks are retired;
+    - ``compact_to``: compact_state — write the new generation, retire
+      the superseded blocks, GC the older generations. The streaming
+      sinks run the same halves with their holder swap in between
+      (streaming/sinks._stream_state_append).
+
+    Blocks the fold made that no returned frame reads are freed when
+    the apply's block_scope exits.
     """
     if state.get("n_survivors") is not None:
         result["n_survivors"] = state["n_survivors"] + new_surv.count()
@@ -770,31 +771,20 @@ def _finish_fold(
             n = result["survivors"].count()
         migrated = migrate(result, corpus_n=n)
         if migrated is not result:
-            if not compact_keep_superseded:
-                retire_superseded_state(result, migrated)
+            retire_superseded_state(result, migrated)
             result = migrated
     if compact_to is None:
         return result
-    compacted = compact_state(
-        result,
-        compact_to,
-        base_path=compact_path,
-        unpersist_superseded=not compact_keep_superseded,
-    )
-    # hidden fold intermediates (not leaves of any result frame)
-    if compact_retire_fold_rdds:
-        _retire_persistent_rdds_since(new_surv.sparkSession, retire_scope)
-    return compacted
+    return compact_state(result, compact_to, base_path=compact_path)
 
 
+@block_scope
 def training_data_neardup_apply(
     new_df: DataFrame,
     state: dict,
     migrate_banding: bool = False,
     compact_to: str | None = None,
     compact_path: str | None = None,
-    compact_keep_superseded: bool = False,
-    compact_retire_fold_rdds: bool = True,
 ) -> dict:
     """Corpus refresh WITHOUT recompute (VERDICT r9 item 3): fold a new
     document batch into an existing training_data_neardup_state and
@@ -862,23 +852,19 @@ def training_data_neardup_apply(
     refreshed state exact-drops every document (digests now stored)
     and changes nothing.
 
+    Block lifetime: the apply runs in a block_scope (session.py), so
+    every checkpoint block the fold makes that the returned state does
+    not read is unpersisted when it returns or raises; the returned
+    state's blocks become the caller's.
+
     ``compact_to`` (r15): when set, the refreshed state is compacted
     to bucketed parquet tables named from that prefix before being
     returned (see compact_state) — plan depth and retained checkpoint
-    blocks reset instead of growing one union per fold. CAUTION
-    (default behavior, r15 ADVICE): compaction INVALIDATES the
-    pre-fold ``state`` dict — its checkpoint blocks are retired as
-    phase 2 of the swap, so reading the old dict afterwards fails
-    with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; pass
-    ``compact_keep_superseded=True`` to keep it readable (its backing
-    table generation is then also kept, see compact_state).
-    ``compact_retire_fold_rdds`` additionally unpersists every RDD
-    persisted DURING the fold (hidden intermediates that are not
-    leaves of any result frame); it diffs the session-global
-    persistent-RDD set, so pass False when a CONCURRENT job in the
-    same session persists RDDs it wants to keep while this fold runs
-    — the ContextCleaner then releases the intermediates on driver GC
-    instead.
+    blocks reset instead of growing one union per fold. Compaction
+    INVALIDATES the pre-fold ``state`` dict (r15 ADVICE): its
+    checkpoint blocks are retired once the new generation is written
+    and its table generation is dropped, so reading the old dict
+    afterwards fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
 
     ``migrate_banding=True`` (r17): post-fold frozen-banding
     migration — see clean_filter_dedup_apply; here it routes through
@@ -916,9 +902,6 @@ def training_data_neardup_apply(
 
     p = state["params"]
     id_col, rank_col = p["id_col"], p["rank_col"]
-    retire_scope = (
-        _persistent_rdd_ids(new_df.sparkSession) if compact_to is not None else None
-    )
     old_surv = state["survivors"]
     old_rep_ids = state["rep_ids"]
 
@@ -928,11 +911,10 @@ def training_data_neardup_apply(
     batch = _featured_survivors(
         new_df, id_col, p["text_col"], p["min_tokens"], p["min_quality"]
     )
-    new_surv = (
+    new_surv = materialize(
         batch.withColumn("__digest", F.md5(F.col("cleaned")))
         .join(state["text_digests"], "__digest", "left_anti")
         .drop("__digest")
-        .localCheckpoint()
     )
 
     # -- near-dup: FROZEN banding; new signatures only, computed at
@@ -955,17 +937,15 @@ def training_data_neardup_apply(
     # -- components over the refreshed edge set (pair-graph volume)
     compR = connected_components_star(pairs_all).withColumnRenamed("node", id_col)
     if rank_col is None:
-        dropped_old = (
+        dropped_old = materialize(
             old_rep_ids.join(compR, id_col)
             .filter(F.col("component") != F.col(id_col))
             .select(id_col)
-            .localCheckpoint()
         )
-        new_rep_ids = (
+        new_rep_ids = materialize(
             _labeled(new_surv.select(id_col), compR, id_col)
             .filter(F.col("__cid") == F.col(id_col))
             .select(id_col)
-            .localCheckpoint()
         )
     else:
         # keep-best rep selection over the TOUCHED components only
@@ -974,7 +954,7 @@ def training_data_neardup_apply(
         from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
         new_lab = _labeled(new_surv.select(id_col, rank_col), compR, id_col)
-        touched_labels = new_lab.select("__cid").distinct().localCheckpoint()
+        touched_labels = materialize(new_lab.select("__cid").distinct())
         old_keep_lab = _labeled(
             old_surv.join(old_rep_ids, id_col, "left_semi").select(
                 id_col, rank_col
@@ -985,7 +965,7 @@ def training_data_neardup_apply(
         cand = old_keep_lab.unionByName(
             new_lab.join(touched_labels, "__cid", "left_semi")
         )
-        win_ids = (
+        win_ids = materialize(
             cand.groupBy("__cid")
             .agg(
                 F.min_by(F.col(id_col), keep_best_key(rank_col, id_col)).alias(
@@ -993,17 +973,14 @@ def training_data_neardup_apply(
                 )
             )
             .select(F.col("__keep").alias(id_col))
-            .localCheckpoint()
         )
-        dropped_old = (
+        dropped_old = materialize(
             old_keep_lab.select(id_col)
             .join(win_ids, id_col, "left_anti")
-            .localCheckpoint()
         )
-        new_rep_ids = (
+        new_rep_ids = materialize(
             new_surv.select(id_col)
             .join(win_ids, id_col, "left_semi")
-            .localCheckpoint()
         )
     kept_old_rep_ids = old_rep_ids.join(dropped_old, id_col, "left_anti")
     added_docs = new_surv.join(new_rep_ids, id_col)
@@ -1035,13 +1012,10 @@ def training_data_neardup_apply(
         result,
         state,
         new_surv,
-        retire_scope,
         migrate_training_data_neardup_banding,
         migrate_banding=migrate_banding,
         compact_to=compact_to,
         compact_path=compact_path,
-        compact_keep_superseded=compact_keep_superseded,
-        compact_retire_fold_rdds=compact_retire_fold_rdds,
     )
 
 
@@ -1306,6 +1280,7 @@ def _clean_build(df: DataFrame, corpus_n: int | None, params: dict) -> dict:
     return {**state, "output": _clean_output(state["survivors"], comp, params)}
 
 
+@block_scope
 def clean_filter_dedup_state(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1362,8 +1337,10 @@ def clean_filter_dedup_state(
     documents are jaccard-1.0 near-dup pairs, so the pair graph IS the
     duplicate state (a refresh batch copy of a stored document shares
     its digest group — or collides in every band — and pairs at 1.0).
-    Every frame this BUILDER returns is localCheckpoint'ed (state —
-    multiple consumers, refresh runs re-read it); refresh runs return
+    Every frame this BUILDER returns is checkpoint-backed (state —
+    multiple consumers, refresh runs re-read it), and the build's other
+    blocks (component rounds, reps) are freed when it returns (its
+    block_scope); refresh runs return
     lazy `stored ∪ checkpointed-delta` unions instead (the r14
     append-only discipline). On a cluster each is a bucketed parquet
     table (band_keys by (band, band_key), survivors/output by id) and
@@ -1375,14 +1352,13 @@ def clean_filter_dedup_state(
     )
 
 
+@block_scope
 def clean_filter_dedup_apply(
     new_df: DataFrame,
     state: dict,
     migrate_banding: bool = False,
     compact_to: str | None = None,
     compact_path: str | None = None,
-    compact_keep_superseded: bool = False,
-    compact_retire_fold_rdds: bool = True,
 ) -> dict:
     """Fold a new document batch into a clean_filter_dedup_state and
     return the refreshed state — the continuously-ingesting form of the
@@ -1459,17 +1435,10 @@ def clean_filter_dedup_apply(
     redelivery is a real new member by design — same-id redeliveries
     are dropped by the streaming sink's anti-join as always.)
 
-    ``compact_to`` (r15): when set, the refreshed state is compacted
-    to bucketed parquet tables named from that prefix before being
-    returned (see compact_state). CAUTION (default behavior, r15
-    ADVICE): compaction INVALIDATES the pre-fold ``state`` dict —
-    phase 2 retires its checkpoint blocks, so reading it afterwards
-    fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; pass
-    ``compact_keep_superseded=True`` to keep it readable.
-    ``compact_retire_fold_rdds`` unpersists every RDD persisted
-    DURING the fold via a session-global diff — pass False when a
-    concurrent job persists RDDs it wants to keep while this runs
-    (see training_data_neardup_apply).
+    Block lifetime and ``compact_to`` (r15) are as in
+    training_data_neardup_apply: blocks the fold made that the
+    returned state does not read are unpersisted on return, and
+    compaction invalidates the pre-fold ``state`` dict.
 
     ``migrate_banding=True`` (r17): after the fold, re-train the
     frozen banding for the corpus size the state has grown to
@@ -1477,8 +1446,8 @@ def clean_filter_dedup_apply(
     sink's per-fold hook, so a batch caller looping applies no longer
     has to remember the migration itself. A no-op between
     minhash_auto_params boundaries; at a boundary the replaced
-    frames' checkpoint blocks are retired (retire_superseded_state)
-    unless ``compact_keep_superseded=True``. The corpus size comes
+    frames' checkpoint blocks are retired (retire_superseded_state).
+    The corpus size comes
     from the state's optional ``n_survivors`` counter when present
     (seed it once with ``state["n_survivors"] =
     state["survivors"].count()``; every fold then adds the O(batch)
@@ -1499,15 +1468,12 @@ def clean_filter_dedup_apply(
 
     p = state["params"]
     id_col, val_frac, test_frac = p["id_col"], p["val_frac"], p["test_frac"]
-    retire_scope = (
-        _persistent_rdd_ids(new_df.sparkSession) if compact_to is not None else None
-    )
     old_surv = state["survivors"]
     old_output = state["output"]
 
-    new_surv = clean_filter_survivors(
+    new_surv = materialize(clean_filter_survivors(
         new_df, **{k: p[k] for k in _CLEAN_FRONT}
-    ).localCheckpoint()
+    ))
 
     # near-dup delta at digest-REP level (r14, _apply_rep_candidates —
     # the r13 judge's `weak` mark): the batch's digest reps are signed
@@ -1540,7 +1506,7 @@ def clean_filter_dedup_apply(
             id_col,
             "component_id",
         )
-        touched = new_lab.select("component_id").distinct().localCheckpoint()
+        touched = materialize(new_lab.select("component_id").distinct())
         # old members of touched components: every one is IN the pair
         # graph (an old doc only joins a touched component through an
         # edge), so compR enumerates them exactly
@@ -1559,33 +1525,30 @@ def clean_filter_dedup_apply(
         rows_new = memb.join(sizes, "component_id").withColumn(
             "weight", F.round(F.lit(1.0) / F.col("n_members"), 6)
         )
-        new_out = (
+        new_out = materialize(
             train_val_test_split(
                 rows_new, id_col, val_frac=val_frac, test_frac=test_frac
             )
-            .select(*out_cols)
-            .localCheckpoint()  # the touched-component member rows
+            .select(*out_cols)  # the touched-component member rows
         )
-        dropped_old = touched_map.select(id_col).localCheckpoint()
+        dropped_old = materialize(touched_map.select(id_col))
     elif p["rank_col"] is None:
-        dropped_old = (
+        dropped_old = materialize(
             old_output.select(id_col)
             .join(compR, id_col)
             .filter(F.col("component") != F.col(id_col))
             .select(id_col)
-            .localCheckpoint()
         )
         new_reps = (
             _labeled(new_surv, compR, id_col, "component_id")
             .filter(F.col("component_id") == F.col(id_col))
             .select(id_col, "n_ws_tokens", "clf_score", "component_id")
         )
-        new_out = (
+        new_out = materialize(
             train_val_test_split(
                 new_reps, id_col, val_frac=val_frac, test_frac=test_frac
             )
-            .select(*out_cols)
-            .localCheckpoint()  # the batch's output DELTA
+            .select(*out_cols)  # the batch's output DELTA
         )
     else:
         # keep-best refresh (r18): recompute the winner row for exactly
@@ -1597,7 +1560,7 @@ def clean_filter_dedup_apply(
 
         feats = (id_col, "n_ws_tokens", "clf_score")
         new_lab = _labeled(new_surv.select(*feats), compR, id_col, "component_id")
-        touched = new_lab.select("component_id").distinct().localCheckpoint()
+        touched = materialize(new_lab.select("component_id").distinct())
         old_keep_lab = _labeled(
             old_output.select(*feats), compR, id_col, "component_id"
         )
@@ -1613,21 +1576,19 @@ def clean_filter_dedup_apply(
         new_rows = winners.select(
             *[F.col(f"__w.{c}").alias(c) for c in feats], "component_id"
         )
-        new_out = (
+        new_out = materialize(
             train_val_test_split(
                 new_rows, id_col, val_frac=val_frac, test_frac=test_frac
             )
-            .select(*out_cols)
-            .localCheckpoint()  # the touched-component winner rows
+            .select(*out_cols)  # the touched-component winner rows
         )
         # stored rows whose CURRENT component is touched are replaced
         # (their label may have merged downward, their keep may have
         # been displaced); everything else is reused verbatim
-        dropped_old = (
+        dropped_old = materialize(
             old_keep_lab.select(id_col, "component_id")
             .join(touched, "component_id", "left_semi")
             .select(id_col)
-            .localCheckpoint()
         )
     output = old_output.join(dropped_old, id_col, "left_anti").unionByName(new_out)
     result = {
@@ -1643,13 +1604,10 @@ def clean_filter_dedup_apply(
         result,
         state,
         new_surv,
-        retire_scope,
         migrate_clean_filter_banding,
         migrate_banding=migrate_banding,
         compact_to=compact_to,
         compact_path=compact_path,
-        compact_keep_superseded=compact_keep_superseded,
-        compact_retire_fold_rdds=compact_retire_fold_rdds,
     )
 
 
@@ -1714,6 +1672,7 @@ def _rebanded_collapse_frames(state: dict, corpus_n: int) -> dict | None:
     }
 
 
+@block_scope
 def migrate_clean_filter_banding(state: dict, corpus_n: int) -> dict:
     """Re-train a clean_filter_dedup_state's FROZEN banding for the
     corpus size it has grown to (VERDICT r14 item 2). The frozen
@@ -1756,15 +1715,16 @@ def migrate_clean_filter_banding(state: dict, corpus_n: int) -> dict:
     rebanded = _rebanded_collapse_frames(state, corpus_n)
     if rebanded is None:
         return state
-    output = _clean_output(
+    output = materialize(_clean_output(
         state["survivors"], connected_components_star(rebanded["pairs"]),
         state["params"],
-    ).localCheckpoint()
+    ))
     # survivors, member maps, digests, the counter and the params pass
     # through untouched
     return {**state, **rebanded, "output": output}
 
 
+@block_scope
 def migrate_training_data_neardup_banding(state: dict, corpus_n: int) -> dict:
     """Re-train a training_data_neardup_state's FROZEN banding — the
     neardup-pipeline twin of migrate_clean_filter_banding, sharing the
@@ -1804,11 +1764,10 @@ def migrate_training_data_neardup_banding(state: dict, corpus_n: int) -> dict:
         "node", id_col
     )
     if rank_col is None:
-        rep_ids = (
+        rep_ids = materialize(
             _labeled(surv.select(id_col), compR, id_col)
             .filter(F.col("__cid") == F.col(id_col))
             .select(id_col)
-            .localCheckpoint()
         )
     else:
         # keep-best: re-banding changes the component set, so the
@@ -1817,7 +1776,7 @@ def migrate_training_data_neardup_banding(state: dict, corpus_n: int) -> dict:
         # already runs at
         from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
-        rep_ids = (
+        rep_ids = materialize(
             _labeled(surv.select(id_col, rank_col), compR, id_col)
             .groupBy("__cid")
             .agg(
@@ -1826,10 +1785,9 @@ def migrate_training_data_neardup_banding(state: dict, corpus_n: int) -> dict:
                 )
             )
             .select(F.col("__keep").alias(id_col))
-            .localCheckpoint()
         )
-    dropped = old_rep_ids.join(rep_ids, id_col, "left_anti").localCheckpoint()
-    added = rep_ids.join(old_rep_ids, id_col, "left_anti").localCheckpoint()
+    dropped = materialize(old_rep_ids.join(rep_ids, id_col, "left_anti"))
+    added = materialize(rep_ids.join(old_rep_ids, id_col, "left_anti"))
     output, rep_grams = _refresh_spans(
         state,
         surv.join(rep_ids, id_col, "left_semi"),
@@ -1869,6 +1827,8 @@ _STATE_BUCKET_COLS = {
     "pairs": ("id_a",),  # component expansion
     "output": None,  # id_col (reuse anti-join)
 }
+#: buckets per compacted state table
+_STATE_BUCKETS = 8
 
 def _hadoop_fs(spark, dir_uri: str):
     """(FileSystem, Path) for any URI or bare path the session has a
@@ -1984,117 +1944,82 @@ def _drop_generation(
                 fs.delete(st.getPath(), True)
 
 
-def gc_generations(
-    spark,
-    prefix: str,
-    base_path: str | None = None,
-    keep_generations: int = 1,
-) -> None:
-    """Drop every ``{prefix}_g{N}_*`` state-table generation older than
-    the newest ``keep_generations`` — tables AND files. The GC half of
-    compact_state, exposed for callers that must defer GC past a swap
-    point: the streaming sinks compact with ``gc_superseded=False``
-    (no GC at all through the write — r17 ADVICE: a pre-swap GC could
-    strand a twice-retried, still-unswapped holder), swap the live
-    state, THEN call this with keep=1, so a foreachBatch retry at any
-    point before the swap still finds every generation the holder may
-    read (r16/r17 ADVICE retry-safety fixes)."""
+def gc_generations(spark, prefix: str, base_path: str | None = None) -> None:
+    """Drop every ``{prefix}_g{N}_*`` state-table generation but the
+    newest — tables AND files. The GC step of compaction's
+    write → swap → retire → GC order (_retire_generation); the
+    streaming sinks reach it only after their holder swap, so a
+    foreachBatch retry at any point before the swap still finds every
+    generation the holder may read (r16/r17 ADVICE retry-safety
+    fixes)."""
     prefix = prefix.lower()
-    keep = max(keep_generations, 1)
-    for old_gen in _prefix_generations(spark, prefix, base_path)[:-keep]:
+    for old_gen in _prefix_generations(spark, prefix, base_path)[:-1]:
         _drop_generation(spark, prefix, old_gen, base_path)
 
 
-def _persistent_rdd_ids(spark) -> set:
-    """Snapshot the ids of currently-persisted RDDs (checkpoint blocks
-    included) — the 'before' side of a retire scope."""
-    lst = spark.sparkContext._jsc.sc().getPersistentRDDs().toList()
-    return {lst.apply(i)._1() for i in range(lst.size())}
+def retire_superseded_state(old_state: dict, new_state: dict) -> None:
+    """Unpersist every checkpoint-backed leaf of ``old_state``'s frames
+    that NO frame of ``new_state`` still references — the explicit
+    retire step of a state transition that REPLACES some frames and
+    passes others through (banding migration swaps band_keys / pairs /
+    output but keeps survivors / member maps, so a blanket unpersist of
+    the old dict would kill blocks the new dict still reads; after a
+    compaction the new frames are table scans, so every old leaf goes).
+    Deterministic, unlike waiting for the ContextCleaner: the driver
+    measurably does not GC the old plans within a folding session.
+    Unpersisting an already-freed RDD is a no-op."""
+    keep = {r.id() for r in checkpoint_leaves(new_state)}
+    for r in checkpoint_leaves(old_state):
+        if r.id() not in keep:
+            r.unpersist(False)
 
 
-def _retire_persistent_rdds_since(spark, before_ids: set) -> int:
-    """Unpersist every RDD persisted AFTER ``before_ids`` was
-    snapshotted — the retire scope the compacting applies wrap their
-    fold in. A fold's plan-walk retirement (see
-    _unpersist_checkpoint_leaves) misses checkpoints hidden BEHIND a
-    later checkpoint (rep_cand / matched / new_rep_keys, the
-    connected-components round labels): they are not leaves of any
-    returned frame. They are, however, exactly the RDDs persisted
-    during the fold, and once the refreshed state is durably compacted
-    to tables, every one of them is garbage. Caveat: assumes no
-    CONCURRENT job in the same session persists RDDs it wants to keep
-    while a compacting fold runs (the applies are single jobs; the
-    FAIR-scheduler concurrent-writer path never persists)."""
-    lst = spark.sparkContext._jsc.sc().getPersistentRDDs().toList()
-    n = 0
-    for i in range(lst.size()):
-        t = lst.apply(i)
-        if t._1() not in before_ids:
-            t._2().unpersist(False)
-            n += 1
-    return n
+def _write_generation(state: dict, prefix: str, base_path: str | None = None) -> dict:
+    """The write half of compact_state: write every frame of ``state``
+    as the next generation's bucketed table and return the state
+    reloaded from those tables. Retires nothing and drops no
+    generation, so the superseded state stays readable until
+    _retire_generation runs."""
+    from build_datawarehouse_demo_spark.sources.writers import save_table
 
-
-def _checkpoint_leaf_rdds(df: DataFrame) -> list:
-    """The checkpoint-backed leaves (LogicalRDD nodes' JVM RDDs) of a
-    DataFrame's analyzed plan."""
-    out = []
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    for i in range(leaves.size()):
-        node = leaves.apply(i)
-        if node.getClass().getSimpleName() == "LogicalRDD":
-            out.append(node.rdd())
+    # Spark lowercases catalog identifiers; normalize the prefix here
+    # so the table names we write, the generation discovery regex, and
+    # GC all agree on one casing (r16 ADVICE: a mixed-case prefix
+    # formerly never matched its own tables, so seeding returned 1
+    # forever and GC never fired)
+    prefix = prefix.lower()
+    spark = next(v.sparkSession for v in state.values() if isinstance(v, DataFrame))
+    gen = _next_generation(spark, prefix, base_path)
+    out: dict = {}
+    for frame, val in state.items():
+        if not isinstance(val, DataFrame):
+            out[frame] = val
+            continue
+        cols = _STATE_BUCKET_COLS.get(frame) or (state["params"]["id_col"],)
+        name = f"{prefix}_g{gen}_{frame}"
+        save_table(
+            val,
+            name,
+            bucket_by=(_STATE_BUCKETS, cols),
+            skip_empty=False,
+            path=f"{base_path}/{name}" if base_path else None,
+        )
+        out[frame] = spark.table(name)
     return out
 
 
-def _unpersist_checkpoint_leaves(df: DataFrame) -> int:
-    """Unpersist every checkpoint-backed leaf (LogicalRDD) in a
-    DataFrame's analyzed plan — the explicit retire step of the
-    compaction two-phase swap. Deterministic, unlike waiting for the
-    ContextCleaner: a localCheckpoint's blocks otherwise live until
-    the driver GCs the last plan referencing them, which measurably
-    does not happen within a session that keeps folding. Returns the
-    number of leaves unpersisted (shared leaves across frames are
-    idempotent — unpersist on an already-freed RDD is a no-op)."""
-    rdds = _checkpoint_leaf_rdds(df)
-    for r in rdds:
-        r.unpersist(False)
-    return len(rdds)
+def _retire_generation(
+    old: dict, new: dict, prefix: str, base_path: str | None = None
+) -> None:
+    """The retire-and-GC half of compact_state, run once ``new`` (the
+    written generation) has replaced ``old``: unpersist ``old``'s
+    checkpoint blocks, then drop every generation but the newest."""
+    retire_superseded_state(old, new)
+    spark = next(v.sparkSession for v in new.values() if isinstance(v, DataFrame))
+    gc_generations(spark, prefix, base_path)
 
 
-def retire_superseded_state(old_state: dict, new_state: dict) -> int:
-    """Unpersist every checkpoint-backed leaf of ``old_state``'s frames
-    that NO frame of ``new_state`` still references — the precise
-    retire step for a state transition that REPLACES some frames and
-    passes others through (banding migration swaps band_keys / pairs /
-    output but keeps survivors / member maps, so a blanket
-    leaf-unpersist of the old dict would kill blocks the new dict still
-    reads). Returns the number of leaves unpersisted. Used by the
-    streaming sink's per-fold migration hook; batch callers that
-    migrate then keep folding should call it too, or let the next
-    compaction's retire scope absorb the residue."""
-    keep = set()
-    for v in new_state.values():
-        if isinstance(v, DataFrame):
-            keep.update(r.id() for r in _checkpoint_leaf_rdds(v))
-    n = 0
-    for v in old_state.values():
-        if isinstance(v, DataFrame):
-            for r in _checkpoint_leaf_rdds(v):
-                if r.id() not in keep:
-                    r.unpersist(False)
-                    n += 1
-    return n
-
-
-def compact_state(
-    state: dict,
-    prefix: str,
-    base_path: str | None = None,
-    n_buckets: int = 8,
-    unpersist_superseded: bool = True,
-    gc_superseded: bool = True,
-) -> dict:
+def compact_state(state: dict, prefix: str, base_path: str | None = None) -> dict:
     """Materialize an incremental curation state (the dict of
     training_data_neardup_state / clean_filter_dedup_state, or of any
     number of apply folds over one) as BUCKETED parquet tables and
@@ -2102,21 +2027,18 @@ def compact_state(
     append-only discipline defers to (VERDICT r14 item 1): a refresh
     returns lazy `stored ∪ checkpointed-delta` unions, so a long-lived
     state (365 daily folds) would otherwise carry a 365-deep union
-    plan and session-lifetime localCheckpoint blocks. Compacting
-    resets every frame to a 1-deep table scan and (by default) RETIRES
-    the superseded state: after the new generation is fully written,
-    every checkpoint-backed leaf in the old frames is unpersisted —
-    the explicit second phase of the two-phase table swap, and the
-    only deterministic release (measured: the driver does not GC the
-    old plans within a folding session, so the ContextCleaner never
-    fires). ``unpersist_superseded=False`` keeps the old state's
-    blocks alive for callers that still hold and read the
-    pre-compaction dict — with it retired, reading the OLD dict's
-    frames fails on the missing checkpoint blocks.
+    plan and session-lifetime checkpoint blocks. Compacting resets
+    every frame to a 1-deep table scan in one order — write the new
+    generation (_write_generation), then retire the superseded state
+    and GC (_retire_generation): every checkpoint-backed leaf of the
+    old frames is unpersisted, so reading the OLD dict afterwards fails
+    on the missing blocks, and every generation but the newest is
+    dropped. The streaming sinks run the two halves themselves, with
+    their holder swap in between.
 
-    Each frame is bucketed (and sorted) on the key its refresh
-    consumer joins it on — band_keys by (band, band_key) for the
-    new-old candidate join, dg_members by __rep for pair
+    Each frame is bucketed (and sorted) into 8 buckets on the key its
+    refresh consumer joins it on — band_keys by (band, band_key) for
+    the new-old candidate join, dg_members by __rep for pair
     re-expansion, rep_grams by gram_md5 for the span-stat joins — so
     post-compaction applies probe co-located buckets, the durable
     twin of the in-memory layout; id-keyed frames are bucketed on the
@@ -2131,71 +2053,22 @@ def compact_state(
     compaction's tables (fold output unions the stored scan), and
     Spark refuses to overwrite a table it is reading from — fresh
     generation names make repeated compaction safe. Superseded
-    generations are GARBAGE-COLLECTED once the new one is committed
-    (r15 VERDICT item 3): after phase 2, every generation but the
-    newest is dropped — tables AND files (external locations are read
-    back from the catalog) — so a daily-fold production run holds a
-    constant table count instead of leaking one state copy per
-    compaction. With ``unpersist_superseded=False`` the newest TWO are
-    kept, so the generation a still-held pre-compaction dict may scan
-    survives alongside its checkpoint blocks. Discovery and GC work
-    over file://, hdfs:// and s3a:// alike (Hadoop FileSystem API,
-    r16); restart contract: keep the SAME ``base_path`` for a prefix
-    across restarts — a previous process's generations under a
-    different root are invisible to in-memory-catalog discovery (a
-    persistent metastore lifts that, the catalog scan sees them).
+    generations are garbage-collected once the new one is committed
+    (r15 VERDICT item 3) — tables AND files (external locations are
+    read back from the catalog) — so a daily-fold production run
+    holds a constant table count instead of leaking one state copy
+    per compaction. Discovery and GC work over file://, hdfs:// and
+    s3a:// alike (Hadoop FileSystem API, r16); restart contract: keep
+    the SAME ``base_path`` for a prefix across restarts — a previous
+    process's generations under a different root are invisible to
+    in-memory-catalog discovery (a persistent metastore lifts that,
+    the catalog scan sees them).
 
     Rebuild parity is exact: writing and re-reading parquet changes
     bytes' location, not values (pinned by tests/test_state_compaction
     and the pipeline_*_incremental oracles, which compact
     mid-sequence).
     """
-    from build_datawarehouse_demo_spark.sources.writers import save_table
-
-    # Spark lowercases catalog identifiers; normalize the prefix here
-    # so the table names we write, the generation discovery regex, and
-    # GC all agree on one casing (r16 ADVICE: a mixed-case prefix
-    # formerly never matched its own tables, so seeding returned 1
-    # forever and GC never fired)
-    prefix = prefix.lower()
-    spark = next(
-        v.sparkSession for v in state.values() if isinstance(v, DataFrame)
-    )
-    gen = _next_generation(spark, prefix, base_path)
-    out: dict = {}
-    for frame, val in state.items():
-        if not isinstance(val, DataFrame):
-            out[frame] = val
-            continue
-        cols = _STATE_BUCKET_COLS.get(frame)
-        if cols is None:
-            cols = (state["params"]["id_col"],)
-        name = f"{prefix}_g{gen}_{frame}"
-        save_table(
-            val,
-            name,
-            bucket_by=(n_buckets, cols),
-            skip_empty=False,
-            path=f"{base_path}/{name}" if base_path else None,
-        )
-        out[frame] = val.sparkSession.table(name)
-    if unpersist_superseded:
-        # phase 2 of the swap — everything is durably in the new
-        # generation's tables, so the old frames' checkpoint blocks
-        # are garbage; free them now rather than never
-        for frame, val in state.items():
-            if isinstance(val, DataFrame):
-                _unpersist_checkpoint_leaves(val)
-    # generation GC: the new generation is committed and the old
-    # blocks retired — drop everything but the newest generation (a
-    # kept pre-compaction dict keeps one extra).
-    # ``gc_superseded=False`` suppresses this entirely for callers
-    # that must defer ALL GC past an external swap point (r17 ADVICE:
-    # the streaming sinks' pre-swap internal GC could, under two
-    # consecutive crash-before-swap retries, drop the generation the
-    # still-unswapped holder reads — the sinks now GC only after the
-    # swap commits, via gc_generations).
-    if gc_superseded:
-        keep = 1 if unpersist_superseded else 2
-        gc_generations(spark, prefix, base_path, keep_generations=keep)
+    out = _write_generation(state, prefix, base_path)
+    _retire_generation(state, out, prefix, base_path)
     return out

@@ -1,15 +1,17 @@
 """Shared registry helpers: the driver-fixture pins and the DuckDB
 oracle fragments that more than one family module uses.
 
-Pins are derived from the driver fixture's parquet metadata at import
-(``_driver_rows`` and friends), never hard-coded row counts, so an
-oracle constant cannot drift from the data it is checked against. The
+Pins are derived from the driver fixture's parquet data on first use
+(``_driver_rows`` and friends, through ``_PINS``), never hard-coded row
+counts, so an oracle constant cannot drift from the data it is checked
+against, and importing this module reads no fixture file. The
 fragment builders return CTE text for f-string oracles; each has one
 definition here, so an oracle-contract change is made once.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import DataFrame, SparkSession
@@ -352,22 +354,6 @@ def ivf_trained_with_block(
     {_two_level_sql()}"""
 
 
-_N_EMB = _driver_rows("embeddings", 500)
-
-
-_N_DOCS = _driver_rows("documents", 500)
-_MB, _MR = minhash_auto_params(_N_DOCS)
-#: auto-width SimHash at the driver fixture: per-block bits, signature
-#: bits, and an md5-prefix hash wide enough for them
-_SW = simhash_auto_width(_N_DOCS)
-_SBITS = 4 * _SW
-_SHASH = (
-    _HASH32
-    if _SBITS <= 32
-    else "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-)
-
-
 #: span length in tokens of the exact-substring span keys
 _SPAN_W = 5
 
@@ -376,7 +362,7 @@ def _simhash_sig_sql() -> str:
     """The auto-width SimHash signature CTEs (tok/hashed/votes/sigs,
     ending with ``sigs`` (doc_id, simhash)) at the driver fixture's
     pinned width, shared by every auto-width simhash oracle."""
-    return _simhash_sigs_sql(bits=_SBITS, shash=_SHASH)
+    return _simhash_sigs_sql(bits=_pin("_SBITS"), shash=_pin("_SHASH"))
 
 
 def neardup_front_sql() -> str:
@@ -574,11 +560,6 @@ def _driver_old_subset_count(
         return split_at
 
 
-_SPLIT_AT = (3 * _N_DOCS) // 4
-_N_OLD = _driver_old_subset_count(_SPLIT_AT)
-_MB_OLD, _MR_OLD = minhash_auto_params(_N_OLD)
-
-
 def _driver_chunk_count(step: int, max_doc_id: int | None = None) -> int:
     """Chunks of the driver documents fixture at the given window
     step: a document with n > 0 whitespace tokens yields
@@ -647,10 +628,44 @@ def _rag_chunkvec_src() -> str:
 _chunkvec_src = _rag_chunkvec_src()
 
 
-_SPLIT_DOCS = (3 * _N_DOCS) // 4
-_SPLIT_VEC = _SPLIT_DOCS * CHUNK_UID_STRIDE
-_N_OLD_CHUNKS = _driver_chunk_count(_RAG_STEP, max_doc_id=_SPLIT_DOCS)
-_NL_OLD = max(2, math.ceil(math.sqrt(max(1, _N_OLD_CHUNKS))))
+#: name -> the driver-fixture pin it computes. Read as module attributes
+#: (``from registry_common import _N_DOCS``): ``__getattr__`` computes each
+#: on first use and caches it, so the fixture is read only when a family
+#: module or an oracle needs a pin.
+_PINS = {
+    "_N_EMB": lambda: _driver_rows("embeddings", 500),
+    "_N_DOCS": lambda: _driver_rows("documents", 500),
+    "_MB": lambda: minhash_auto_params(_pin("_N_DOCS"))[0],
+    "_MR": lambda: minhash_auto_params(_pin("_N_DOCS"))[1],
+    # auto-width SimHash at the driver fixture: per-block bits, signature
+    # bits, and an md5-prefix hash wide enough for them
+    "_SW": lambda: simhash_auto_width(_pin("_N_DOCS")),
+    "_SBITS": lambda: 4 * _pin("_SW"),
+    "_SHASH": lambda: (
+        _HASH32
+        if _pin("_SBITS") <= 32
+        else "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
+    ),
+    # the incremental entries' OLD subset: doc_id < 3/4 of the fixture
+    "_SPLIT_DOCS": lambda: (3 * _pin("_N_DOCS")) // 4,
+    "_N_OLD": lambda: _driver_old_subset_count(_pin("_SPLIT_DOCS")),
+    "_MB_OLD": lambda: minhash_auto_params(_pin("_N_OLD"))[0],
+    "_MR_OLD": lambda: minhash_auto_params(_pin("_N_OLD"))[1],
+    "_SPLIT_VEC": lambda: _pin("_SPLIT_DOCS") * CHUNK_UID_STRIDE,
+    "_N_OLD_CHUNKS": lambda: _driver_chunk_count(_RAG_STEP, max_doc_id=_pin("_SPLIT_DOCS")),
+    "_NL_OLD": lambda: max(2, math.ceil(math.sqrt(max(1, _pin("_N_OLD_CHUNKS"))))),
+}
+
+
+@functools.cache
+def _pin(name: str):
+    return _PINS[name]()
+
+
+def __getattr__(name: str):
+    if name in _PINS:
+        return _pin(name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 # ------------------------------------------------------------------

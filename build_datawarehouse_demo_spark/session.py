@@ -15,13 +15,20 @@ Scale notes (100 TB design):
 - Arrow on for every pandas boundary (toPandas / pandas UDFs).
 - UTC session timezone so timestamp semantics match UTC-naive engines
   (DuckDB oracle, parquet at rest).
+
+Stage boundaries: every eager materialization in plans/, operators/ and
+streaming/ goes through ``materialize``, and the functions that build
+or fold an incremental state own the blocks they make (``block_scope``).
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -62,7 +69,7 @@ def get_spark(
         # timestamps with integer µs division (no double round-trip).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory())
     )
     if master or not _in_active_session():
         builder = builder.master(master or f"local[{cpus}]")
@@ -85,3 +92,78 @@ def get_spark(
 
 def _in_active_session() -> bool:
     return SparkSession.getActiveSession() is not None
+
+
+def _driver_memory() -> str:
+    """Default driver heap: half the host's physical memory, capped at
+    16g. In local mode the driver heap is the whole engine's heap, and
+    a default of all the RAM leaves no room for a second session (a
+    test run beside an oracle sweep) or the Python workers."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 16 * 1024)}m"
+
+
+_scopes = threading.local()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly checkpoint ``df`` into executor storage and return the
+    frame backed by that block — the one stage boundary of plans/,
+    operators/ and streaming/. When the calling thread runs inside a
+    ``block_scope`` function, the block's RDD id is recorded for that
+    scope (an id, not a py4j proxy: a held proxy keeps its RDD alive)."""
+    out = df.localCheckpoint()
+    stack = getattr(_scopes, "stack", None)
+    if stack:
+        # the checkpointed frame's plan is the one LogicalRDD leaf
+        stack[-1].add(out._jdf.queryExecution().analyzed().rdd().id())
+    return out
+
+
+def checkpoint_leaves(frames: dict) -> list:
+    """The JVM RDDs behind the checkpoint-backed leaves (LogicalRDD) of
+    the analyzed plan of every DataFrame among ``frames``' values."""
+    out = []
+    for df in frames.values():
+        if not isinstance(df, DataFrame):
+            continue
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            node = leaves.apply(i)
+            if node.getClass().getSimpleName() == "LogicalRDD":
+                out.append(node.rdd())
+    return out
+
+
+def block_scope(fn):
+    """Make ``fn`` (which returns a dict of frames, or raises) the owner
+    of every block materialized on this thread while it runs, by it or
+    by anything it calls. When it returns or raises, each of those
+    blocks that no DataFrame in the returned dict reads is unpersisted;
+    the rest pass to the enclosing scope, if there is one, or to the
+    caller. The scope frees nothing made on another thread or before
+    it opened (retiring a superseded input state is the caller's
+    explicit step, e.g. compaction's)."""
+
+    @functools.wraps(fn)
+    def scoped(*args, **kwargs):
+        stack = _scopes.__dict__.setdefault("stack", [])
+        made: set = set()
+        stack.append(made)
+        out = None
+        try:
+            out = fn(*args, **kwargs)
+            return out
+        finally:
+            stack.pop()
+            if made:
+                kept = made & {r.id() for r in checkpoint_leaves(out or {})}
+                rdds = SparkContext._active_spark_context._jsc.getPersistentRDDs()
+                for rid in made - kept:
+                    rdd = rdds.get(rid)
+                    if rdd is not None:
+                        rdd.unpersist(False)
+                if stack:
+                    stack[-1].update(kept)
+
+    return scoped

@@ -1,80 +1,21 @@
-"""Streaming sinks: foreachBatch upsert — the effectively-exactly-once
+"""Streaming sinks: foreachBatch applies — the effectively-exactly-once
 ingest pattern.
 
 Structured Streaming's file/kafka sources give at-least-once delivery
 into foreachBatch; making the BATCH APPLY idempotent (replaying the
 same micro-batch converges to the same table state) upgrades the
 pipeline to effectively exactly-once without any sink-side
-transaction support. The apply here is: collapse the batch to
-last-change-wins per key, then key-upsert into the target table —
-both pure functions of (table state, batch contents), so a
-checkpoint-replayed batch is a no-op.
-
-Scale notes: the overwrite-the-whole-table step is the plain-parquet
-stand-in for a real MERGE target (Delta/Iceberg, capability-gated in
-sources/formats.py) — at 100 TB the upsert output would go through a
-partitioned MERGE touching only affected partitions. The collapse +
-anti-join shapes are exactly what that MERGE executes underneath.
+transaction support. Each sink here folds a micro-batch through such
+an apply: the partitioned MERGE (collapse the batch to
+last-change-wins per key, then rewrite only the touched partitions),
+the frozen-quantizer RAG index append, and the incremental corpus
+states' folds — all pure functions of (stored state, batch contents),
+so a checkpoint-replayed batch is a no-op.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-from build_datawarehouse_demo_spark.operators.scd import apply_cdc_changes, upsert
-from build_datawarehouse_demo_spark.sources.writers import save_table
-
-
-def apply_batch_upsert(
-    spark,
-    batch_df: DataFrame,
-    table_name: str,
-    key_cols: list[str],
-    order_cols: list[str],
-) -> None:
-    """Idempotently fold one micro-batch into `table_name`.
-
-    Collapse the batch to its last change per key (order_cols must end
-    in a unique tiebreak), then upsert into the current table state.
-    localCheckpoint breaks the read-from/write-to-same-table cycle
-    that a parquet overwrite cannot express (a lakehouse MERGE target
-    needs no such step).
-    """
-    collapsed = apply_cdc_changes(
-        batch_df, key_cols=key_cols, order_cols=order_cols, op_col=None
-    )
-    if not spark.catalog.tableExists(table_name):
-        save_table(collapsed, table_name, skip_empty=False)
-        return
-    current = spark.table(table_name)
-    merged = upsert(current, collapsed, key=key_cols).localCheckpoint()
-    save_table(merged, table_name, skip_empty=False)
-
-
-def stream_upsert_to_table(
-    events: DataFrame,
-    table_name: str,
-    key_cols: list[str],
-    order_cols: list[str],
-    checkpoint_dir: str,
-):
-    """foreachBatch writer: returns the started StreamingQuery.
-
-    Checkpointing pins batch ids; apply_batch_upsert makes replays
-    converge — together: effectively exactly-once.
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_batch_upsert(
-            batch_df.sparkSession, batch_df, table_name, key_cols, order_cols
-        )
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_rag_index_append(
@@ -160,30 +101,18 @@ def _stream_state_append(
     The per-fold banding migration is the apply's own
     ``migrate_banding=True`` epilogue (plans/training_data._finish_fold:
     counter, the pipeline's migration at the state's params, retire the
-    superseded frames). Compaction is NOT delegated: the sink keeps its
-    retry-safe order (write without GC, swap the holder, then retire,
-    sweep and GC), which differs from the apply's on purpose.
+    superseded frames), and each apply frees the blocks its fold made
+    that the refreshed state does not read. Compaction runs the
+    apply's order — write, swap, retire, GC — with the swap being the
+    holder's, between the write half and the retire-and-GC half.
     """
     from build_datawarehouse_demo_spark.plans.training_data import (
-        _persistent_rdd_ids,
-        _retire_persistent_rdds_since,
-        compact_state,
-        gc_generations,
-        retire_superseded_state,
+        _retire_generation,
+        _write_generation,
     )
 
     if compact_every and not compact_to:
         raise ValueError("compact_every requires compact_to (table-name prefix)")
-    # retire scope for compaction, snapshotted at WIRING time: after a
-    # compacting fold, every frame is a table scan, so every RDD
-    # persisted since the stream started (hidden fold intermediates
-    # from ALL folds in the window, not just the compacting one) is
-    # garbage and is retired in one sweep — the bounded-blocks
-    # lifetime contract. Same concurrency caveat as the applies'
-    # compact_retire_fold_rdds: the sweep diffs the session-global
-    # persistent-RDD set, so do not run this stream alongside another
-    # job that persists RDDs it wants to keep.
-    scope0 = _persistent_rdd_ids(docs.sparkSession) if compact_every else None
     if migrate_banding and holder["state"].get("n_survivors") is None:
         # seed the incremental survivor counter ONCE at wiring (r16
         # ADVICE: the hook formerly recounted the full survivor frame
@@ -194,7 +123,6 @@ def _stream_state_append(
         holder["state"]["n_survivors"] = holder["state"]["survivors"].count()
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         id_col = holder["state"]["params"]["id_col"]
         seen = holder["state"]["survivors"].select(id_col)
         fresh = batch_df.join(seen, id_col, "left_anti")
@@ -202,33 +130,23 @@ def _stream_state_append(
         if compact_every and batch_id % compact_every == compact_every - 1:
             # retry safety (r16 ADVICE): write the new generation and
             # SWAP the live state before retiring anything — a
-            # foreachBatch retry between compaction and the swap must
+            # foreachBatch retry between the write and the swap must
             # still find the pre-swap blocks and generation files
             # readable (the former order unpersisted and GC'd first,
             # so a retry failed permanently on missing checkpoint
-            # blocks). NO GC through the write (r17 ADVICE closed the
-            # consecutive-retry hole: the former pre-swap internal GC
-            # kept only 2 generations counting the one just written,
-            # so a second crash-before-swap retry could drop the
-            # generation the still-unswapped holder reads); after the
-            # swap commits, retire the superseded leaves (the new
-            # frames are pure table scans, so this frees every old
-            # leaf), sweep hidden fold intermediates, and GC down to
-            # one generation. A crash mid-retire replays against the
-            # compacted holder state — the fold is then empty and the
-            # re-compaction supersedes this generation normally.
+            # blocks). The write half drops no generation (r17 ADVICE
+            # closed the consecutive-retry hole: a pre-swap GC could
+            # drop the generation the still-unswapped holder reads);
+            # after the swap commits, retire the superseded leaves
+            # (the new frames are pure table scans, so this frees
+            # every old leaf) and GC down to one generation. A crash
+            # mid-retire replays against the compacted holder state —
+            # the fold is then empty and the re-compaction supersedes
+            # this generation normally.
             old = st
-            st = compact_state(
-                old,
-                compact_to,
-                base_path=compact_path,
-                unpersist_superseded=False,
-                gc_superseded=False,
-            )
+            st = _write_generation(old, compact_to, compact_path)
             holder["state"] = st
-            retire_superseded_state(old, st)
-            _retire_persistent_rdds_since(spark, scope0)
-            gc_generations(spark, compact_to, base_path=compact_path)
+            _retire_generation(old, st, compact_to, compact_path)
         holder["state"] = st
 
     return (
@@ -378,8 +296,7 @@ def stream_training_data_state_append(
       N batches (batch_id-derived cadence, retry/restart-stable) the
       state compacts to bucketed parquet generations with the
       retry-safe order — write without GC, SWAP the holder, then
-      retire superseded blocks + hidden fold RDDs and GC to one
-      generation.
+      retire superseded blocks and GC to one generation.
     - ``migrate_banding=True``: per-fold frozen-banding migration at
       the incremental survivor count (seeded once at wiring, += each
       fold's O(batch) delta), run by the apply's own
@@ -421,7 +338,7 @@ def stream_merge_to_partitioned_parquet(
     batch touches are read or rewritten, tombstones delete, the first
     batch bootstraps the target from the collapsed feed.
 
-    Same effectively-exactly-once contract as stream_upsert_to_table:
+    Same effectively-exactly-once contract as every sink here:
     checkpointing pins batch ids and the merge apply is idempotent
     (replaying a batch converges — pinned by the merge tests), so
     at-least-once delivery upgrades to exactly-once table state.

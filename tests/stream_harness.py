@@ -1,13 +1,19 @@
-"""Structured Streaming test harness: a file-source event stream, and a
-runner that drains a stream into a memory sink. The streaming tests run
-the package's stream transforms through these; production streams come
-from the caller's own source and sink.
+"""Structured Streaming test harness: a file-source event stream, a
+runner that drains a stream into a memory sink, and a foreachBatch
+key-upsert sink over a whole table. The streaming tests run the
+package's stream transforms and operators through these; production
+streams come from the caller's own source and sink (the package's
+upsert sink is streaming/sinks.stream_merge_to_partitioned_parquet).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from build_datawarehouse_demo_spark.operators.scd import apply_cdc_changes, upsert
+from build_datawarehouse_demo_spark.session import materialize
+from build_datawarehouse_demo_spark.sources.writers import save_table
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -49,3 +55,50 @@ def run_stream_to_memory(result: DataFrame, query_name: str, output_mode: str = 
     )
     q.awaitTermination()
     return q
+
+
+def apply_batch_upsert(
+    spark,
+    batch_df: DataFrame,
+    table_name: str,
+    key_cols: list[str],
+    order_cols: list[str],
+) -> None:
+    """Idempotently fold one micro-batch into `table_name`: collapse
+    the batch to its last change per key (order_cols must end in a
+    unique tiebreak), then upsert into the current table state. The
+    materialization breaks the read-from/write-to-same-table cycle a
+    parquet overwrite cannot express."""
+    collapsed = apply_cdc_changes(
+        batch_df, key_cols=key_cols, order_cols=order_cols, op_col=None
+    )
+    if not spark.catalog.tableExists(table_name):
+        save_table(collapsed, table_name, skip_empty=False)
+        return
+    current = spark.table(table_name)
+    merged = materialize(upsert(current, collapsed, key=key_cols))
+    save_table(merged, table_name, skip_empty=False)
+
+
+def stream_upsert_to_table(
+    events: DataFrame,
+    table_name: str,
+    key_cols: list[str],
+    order_cols: list[str],
+    checkpoint_dir: str,
+):
+    """foreachBatch writer over apply_batch_upsert; returns the started
+    StreamingQuery. Checkpointing pins batch ids and the apply makes
+    replays converge — together: effectively exactly-once."""
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        apply_batch_upsert(
+            batch_df.sparkSession, batch_df, table_name, key_cols, order_cols
+        )
+
+    return (
+        events.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )

@@ -9,8 +9,8 @@ import numpy as np
 from build_datawarehouse_demo_spark.operators.multimodal import attach_binary, sample_frames
 from build_datawarehouse_demo_spark.operators.similarity import (
     ann_rp_lsh_topk,
-    rp_lsh_signature,
     rp_planes,
+    rp_signature_staged,
 )
 
 from pyspark.sql import functions as F
@@ -30,8 +30,11 @@ def test_rp_signature_colinear_vectors_same_bucket(spark):
     planes = rp_planes(6, 16)
     sigs = {
         r.vec_id: r.s
-        for r in df.select(
-            "vec_id", rp_lsh_signature(F.col("embedding").cast("array<double>"), planes).alias("s")
+        for r in rp_signature_staged(
+            df.withColumn("embedding", F.col("embedding").cast("array<double>")),
+            "embedding",
+            planes,
+            "s",
         ).collect()
     }
     assert sigs[0] == sigs[1]  # scaling never crosses a hyperplane

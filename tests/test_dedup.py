@@ -11,9 +11,9 @@ from build_datawarehouse_demo_spark.operators.dedup import (
     hash32,
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
+    shingle_arrays,
     simhash,
     simhash_near_pairs,
-    word_shingles,
 )
 from tests import jvm_reference
 
@@ -35,9 +35,9 @@ def test_exact_dedup_groups_identical_texts(spark):
     assert out == {(1, 2), (3, 1)}
 
 
-def test_word_shingles_short_doc_empty(spark):
+def test_shingle_arrays_short_doc_empty(spark):
     df = spark.createDataFrame([(1, "only two")], "doc_id long, text string")
-    assert word_shingles(df, k=3).count() == 0
+    assert shingle_arrays(df, k=3).collect()[0].shingles == []
 
 
 def test_minhash_finds_near_duplicate(spark):

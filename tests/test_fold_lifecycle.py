@@ -96,6 +96,39 @@ def test_migrate_banding_warns_without_seeded_counter(built, pipeline, caplog):
     assert st["n_survivors"] == st["survivors"].count() == len(_OLD) + 1
 
 
+def _persistent_rdd_ids(spark) -> set:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _checkpoint_leaf_ids(state: dict) -> set:
+    """RDD ids of the checkpoint-backed leaves (LogicalRDD) of every
+    frame in ``state``."""
+    ids = set()
+    for v in state.values():
+        if hasattr(v, "_jdf"):
+            leaves = v._jdf.queryExecution().analyzed().collectLeaves()
+            for i in range(leaves.size()):
+                if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD":
+                    ids.add(leaves.apply(i).rdd().id())
+    return ids
+
+
+@pytest.mark.parametrize("pipeline", ["neardup", "clean"])
+def test_fold_keeps_only_the_blocks_its_state_reads(built, spark, pipeline):
+    """A fold owns the checkpoint blocks it makes: after a
+    non-compacting apply, every RDD newly persisted is a checkpoint
+    leaf of the returned state. The stage boundaries no state frame
+    reads (component rounds, candidate pairs, the digest match, batch
+    band keys) are freed when the apply returns."""
+    state, _ = built[pipeline]
+    apply = _pipeline(pipeline)[1]
+    before = _persistent_rdd_ids(spark)
+    refreshed = apply(_corpus(spark, _BATCH), state)
+    new = _persistent_rdd_ids(spark) - before
+    leaves = _checkpoint_leaf_ids(refreshed)
+    assert new and new <= leaves, sorted(new - leaves)
+
+
 @pytest.mark.parametrize("pipeline", ["neardup", "clean"])
 def test_folds_run_at_the_build_knobs(spark, pipeline):
     """A state built at non-default knobs (Jaccard threshold, span

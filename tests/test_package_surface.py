@@ -12,7 +12,10 @@ takes a build knob.
 The MinHash near-dup pair pieces (Jaccard verify, rep -> member
 re-expansion) are written once, in operators/dedup.py, and each corpus
 pipeline has one build chain, shared by its one-shot build and its
-state builder. Every package import in the repo's scripts resolves.
+state builder. Every eager materialization goes through one seam
+(session.materialize), and nothing reads the session-wide persistent-RDD
+set. Every public package function has a caller outside tests/. Every
+package import in the repo's scripts resolves.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ import importlib.util
 import inspect
 import os
 import pkgutil
+import re
 
 import pytest
 
@@ -129,6 +133,50 @@ def test_parquet_writes_go_through_the_writer_seam():
                     continue
                 with open(path) as fh:
                     offenders += [f"{rel}:{n}" for n in _direct_parquet_writes(fh.read())]
+    assert offenders == []
+
+
+#: package subtrees whose stage boundaries must go through session.materialize
+_STAGE_SCOPE = ("operators", "plans", "streaming")
+
+
+def _bypasses_stage_seam(src: str) -> list[int]:
+    """Line numbers where ``src`` calls ``.localCheckpoint(`` itself or
+    reads the session-wide persistent-RDD set (``getPersistentRDDs``)."""
+    return sorted(
+        n.lineno
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.Attribute) and n.attr in ("localCheckpoint", "getPersistentRDDs")
+    )
+
+
+def test_stage_seam_detector_flags_bypasses():
+    src = "\n".join(
+        [
+            "df.localCheckpoint()",
+            "x = (df.select('a')\n .localCheckpoint(eager=True))",
+            "ids = sc._jsc.sc().getPersistentRDDs().toList()",
+            "materialize(df)",
+            "df.checkpoint()",
+            "'localCheckpoint() in a string'",
+        ]
+    )
+    assert _bypasses_stage_seam(src) == [1, 2, 4]
+
+
+def test_stage_boundaries_go_through_the_materialize_seam():
+    root = os.path.dirname(pkg.__file__)
+    offenders = []
+    for sub in _STAGE_SCOPE:
+        for dirpath, _, files in os.walk(os.path.join(root, sub)):
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    path = os.path.join(dirpath, f)
+                    with open(path) as fh:
+                        offenders += [
+                            f"{os.path.relpath(path, root)}:{n}"
+                            for n in _bypasses_stage_seam(fh.read())
+                        ]
     assert offenders == []
 
 
@@ -417,3 +465,86 @@ def test_script_imports_resolve():
             imports = _package_imports(fh.read())
         missing += [f"{script}: {m}.{n}" for m, n in imports if not _resolves(m, n)]
     assert missing == []
+
+
+#: public package functions whose only callers are the users the docs
+#: address: the S3-compatible object-store (MinIO) read path
+#: (S3A_CHECKLIST.md, COVERAGE.md) and the optional-PIL image decoder
+_ENTRY_POINTS = ("sources/readers.py:s3a_options", "operators/multimodal.py:decode_image")
+#: a string naming code, as perfbench names the functions it traces
+_DOTTED = re.compile(r"^[A-Za-z_][\w.]*$")
+
+
+def _referenced_names(src: str) -> set:
+    """Every name ``src`` uses: identifiers, attributes, imported names,
+    and the parts of dotted-name strings that are not docstrings."""
+    tree = ast.parse(src)
+    docs = {
+        id(n.value)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+    }
+    names = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            names.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            names.add(n.attr)
+        elif isinstance(n, ast.alias):
+            names.add(n.name.rsplit(".", 1)[-1])
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and id(n) not in docs
+            and _DOTTED.match(n.value)
+        ):
+            names.update(n.value.split("."))
+    return names
+
+
+def _py_files(top: str) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for d, _, files in os.walk(top)
+        for f in sorted(files)
+        if f.endswith(".py")
+    ]
+
+
+def test_reference_detector_skips_docstrings_and_sees_dotted_strings():
+    src = "\n".join(
+        [
+            "def f():",
+            "    'calls unused_in_doc'",
+            "    return g(x.attr_ref)",
+            "TARGETS = ['dedup.traced_fn', 'a sentence naming spoken_fn']",
+            "from m import imported_fn",
+        ]
+    )
+    names = _referenced_names(src)
+    assert {"g", "attr_ref", "traced_fn", "dedup", "imported_fn"} <= names
+    assert not {"unused_in_doc", "spoken_fn", "f"} & names
+
+
+def test_every_public_package_function_has_a_non_test_caller():
+    """A public package function is called (or imported, or traced by
+    name) somewhere outside tests/ — the package, tools/, perfbench/,
+    bench.py or the driver entry — or is a documented entry point.
+    Registry keys (functions registered by a decorator call) are
+    reached through the registry."""
+    root = os.path.dirname(pkg.__file__)
+    outside = _py_files(root) + _py_files(os.path.join(_REPO, "tools")) + [
+        p for p in _py_files(os.path.join(_REPO, "perfbench")) if os.sep + "tests" + os.sep not in p
+    ] + [os.path.join(_REPO, f) for f in ("bench.py", "__spark_entry__.py")]
+    names = set()
+    for path in outside:
+        with open(path) as fh:
+            names |= _referenced_names(fh.read())
+    unreferenced = [
+        f"{rel}:{name}"
+        for rel, name, fn in _functions_under(("",))
+        if not name.startswith("_")
+        and not any(isinstance(d, ast.Call) for d in fn.decorator_list)
+        and name not in names
+    ]
+    assert sorted(unreferenced) == sorted(_ENTRY_POINTS)

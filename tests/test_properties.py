@@ -14,7 +14,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from build_datawarehouse_demo_spark.operators.dedup import hash32, word_shingles
+from build_datawarehouse_demo_spark.operators.dedup import hash32, shingle_arrays
 from build_datawarehouse_demo_spark.operators.flatten import explode_delimited
 
 SET = settings(
@@ -57,10 +57,10 @@ def test_hash32_matches_python_model(spark, strings, seed):
 
 @given(docs=st.lists(texts, min_size=1, max_size=10), k=st.integers(2, 4))
 @SET
-def test_word_shingles_matches_python_model(spark, docs, k):
+def test_shingle_arrays_matches_python_model(spark, docs, k):
     rows = [(i, " ".join(words)) for i, words in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.doc_id, r.shingle) for r in word_shingles(df, k=k).collect()}
+    got = {(r.doc_id, sh) for r in shingle_arrays(df, k=k).collect() for sh in r.shingles}
     expect = set()
     for i, words in enumerate(docs):
         toks = [w for w in " ".join(words).strip().split() if w]

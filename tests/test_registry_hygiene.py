@@ -122,3 +122,65 @@ def test_family_layout():
             ):
                 private = [a.name for a in n.names if a.name.startswith("_")]
                 assert not private, (name, n.module, private)
+
+
+_IMPORT_PROBE = r"""
+import json, sys
+
+import pyarrow.dataset as pds
+import pyarrow.parquet as pq
+
+read = []
+
+
+def spy(fn):
+    def wrapped(source, *args, **kwargs):
+        read.append(str(source))
+        return fn(source, *args, **kwargs)
+
+    return wrapped
+
+
+pds.dataset = spy(pds.dataset)
+pq.read_table = spy(pq.read_table)
+sys.addaudithook(
+    lambda event, args: read.append(str(args[0])) if event == "open" else None
+)
+import build_datawarehouse_demo_spark.registry_round7  # noqa: E402,F401
+from build_datawarehouse_demo_spark import registry_common  # noqa: E402
+
+at_import = list(read)
+n_docs = registry_common._N_DOCS
+print(json.dumps({
+    "fixture": registry_common._DRIVER_SF_DIR,
+    "at_import": at_import,
+    "on_first_use": read[len(at_import):],
+    "n_docs": n_docs,
+}))
+"""
+
+
+def test_registry_import_reads_no_driver_fixture():
+    """Importing a registry module (perfbench imports registry_round7 in
+    its set-up) computes no driver-fixture pin: each is read from the
+    fixture on first use, with the value it had when computed at
+    import."""
+    import json
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORT_PROBE],
+        cwd=ROOT,
+        env={**os.environ, "PYTHONPATH": ROOT},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip().splitlines()[-1]
+    probe = json.loads(out)
+    fixture = probe["fixture"]
+    assert not [p for p in probe["at_import"] if fixture in p], probe["at_import"]
+    assert any(fixture in p for p in probe["on_first_use"]), probe["on_first_use"]
+    assert probe["n_docs"] == pq.ParquetFile(f"{fixture}/documents.parquet").metadata.num_rows

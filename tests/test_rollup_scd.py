@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from build_datawarehouse_demo_spark.operators.scd import (
     scd2_apply,
-    scd2_as_of,
     scd2_bootstrap,
     upsert,
 )
@@ -23,6 +22,12 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _ts(s):
     return dt.datetime.fromisoformat(s)
+
+
+def scd2_as_of(history, ts: str):
+    """Point-in-time view: the version of every key valid at ``ts``."""
+    t = F.lit(ts).cast("timestamp")
+    return history.filter((F.col("valid_from") <= t) & (F.col("valid_to") > t))
 
 
 def test_upsert_overwrites_and_keeps(spark):

@@ -308,21 +308,6 @@ def test_histogram_fixed_bins(spark):
     assert set(rows) == {0, 1}
 
 
-def test_observe_quality_metrics_without_second_pass(spark):
-    from pyspark.sql import Observation
-
-    from build_datawarehouse_demo_spark.operators.profiling import with_quality_metrics
-
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (None, "c"), (4, None)], "k long, s string"
-    )
-    obs = Observation("quality")
-    out = with_quality_metrics(df, obs, "k", "s")
-    out.write.format("noop").mode("overwrite").save()  # the ONLY pass
-    m = obs.get
-    assert m["n_rows"] == 4 and m["n_null_k"] == 1 and m["n_null_s"] == 2
-
-
 def test_python_datasource_partitioned_read(spark):
     from build_datawarehouse_demo_spark.sources.python_datasource import (
         SyntheticDocsDataSource,

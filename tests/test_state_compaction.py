@@ -85,10 +85,10 @@ def test_compacted_folds_keep_plan_depth_constant_and_rebuild_parity(
 
 
 def test_compaction_buckets_frames_on_their_join_keys(spark, tmp_path):
-    """The compacted tables are BUCKETED on the key each frame's
-    refresh consumer joins on (band_keys by (band, band_key),
-    dg_members by __rep) — the durable layout the state docstrings
-    promise for the 100 TB run."""
+    """The compacted tables are BUCKETED, 8 buckets each, on the key
+    each frame's refresh consumer joins on (band_keys by (band,
+    band_key), dg_members by __rep) — the durable layout the state
+    docstrings promise for the 100 TB run."""
     from build_datawarehouse_demo_spark.plans.training_data import (
         clean_filter_dedup_state,
         compact_state,
@@ -98,9 +98,7 @@ def test_compaction_buckets_frames_on_their_join_keys(spark, tmp_path):
     state = clean_filter_dedup_state(old, corpus_n=old.count(), **LOOSE)
     frames = ("band_keys", "dg_members", "rep_digests", "pairs", "output")
     expected = {key: _rows(state[key]) for key in frames}
-    compacted = compact_state(
-        state, "cmp_bucket_test", base_path=str(tmp_path), n_buckets=4
-    )
+    compacted = compact_state(state, "cmp_bucket_test", base_path=str(tmp_path))
     # find the generation-stamped table names back from the catalog
     tables = {
         t.name
@@ -120,17 +118,16 @@ def test_compaction_buckets_frames_on_their_join_keys(spark, tmp_path):
     assert "Bucket Columns" in bk and "band" in bk["Bucket Columns"]
     dg = bucket_line(table_for("dg_members"))
     assert "__rep" in dg["Bucket Columns"]
+    assert {bucket_line(table_for(f))["Num Buckets"] for f in frames} == {"8"}
     # values identical to the source frames
     for key in frames:
         assert _rows(compacted[key]) == expected[key], key
     # scalars pass through
     assert compacted["bands"] == state["bands"]
     assert compacted["rows"] == state["rows"]
-    # the retire contract: compaction's phase 2 unpersisted the
-    # superseded state's checkpoint blocks, so reading the OLD dict's
-    # frames now fails on the missing blocks (the documented
-    # two-phase-swap semantic; pass unpersist_superseded=False to
-    # keep the old generation readable)
+    # the retire contract: once the new generation is written,
+    # compaction unpersists the superseded state's checkpoint blocks,
+    # so reading the OLD dict's frames now fails on the missing blocks
     import pytest
     from py4j.protocol import Py4JJavaError
 
@@ -188,118 +185,6 @@ def test_compaction_gc_drops_superseded_generations(spark, tmp_path):
         _corpus(spark, all_rows), corpus_n=n_old, **LOOSE
     )
     assert _rows(state["output"]) == _rows(full)
-
-
-def test_compaction_keep_superseded_retains_previous_generation(spark, tmp_path):
-    """unpersist_superseded=False keeps the pre-compaction dict
-    READABLE end-to-end: its checkpoint blocks stay persisted AND its
-    backing table generation survives the GC (effective keep >= 2);
-    a later default compaction retires both older generations."""
-    from build_datawarehouse_demo_spark.plans.training_data import (
-        clean_filter_dedup_state,
-        compact_state,
-    )
-
-    old = _corpus(spark, _batch(0, 6))
-    state = clean_filter_dedup_state(old, corpus_n=old.count(), **LOOSE)
-    c1 = compact_state(state, "cmp_keepgen", base_path=str(tmp_path / "a"))
-    want = _rows(c1["output"])
-    c2 = compact_state(
-        c1,
-        "cmp_keepgen",
-        base_path=str(tmp_path / "b"),
-        unpersist_superseded=False,
-    )
-    tables = _prefix_tables(spark, "cmp_keepgen")
-    assert any("_g1_" in t for t in tables) and any("_g2_" in t for t in tables)
-    # the superseded dict still reads (its generation survived the GC)
-    assert _rows(c1["output"]) == want
-    assert _rows(c2["output"]) == want
-    # default compaction then drops BOTH older generations
-    c3 = compact_state(c2, "cmp_keepgen", base_path=str(tmp_path / "c"))
-    tables = _prefix_tables(spark, "cmp_keepgen")
-    assert tables and all("_g3_" in t for t in tables), tables
-    assert _rows(c3["output"]) == want
-
-
-def test_apply_compact_keep_superseded_keeps_prefold_state_readable(
-    spark, tmp_path
-):
-    """The r15 ADVICE path: a compacting APPLY invalidates the caller's
-    pre-fold dict by default (phase 2 retires its blocks);
-    compact_keep_superseded=True threads unpersist_superseded=False
-    through, so a library caller that retains the old dict (e.g. for a
-    diff or rollback) can still read it, while the returned state is
-    fully compacted."""
-    from build_datawarehouse_demo_spark.plans.training_data import (
-        clean_filter_dedup_apply,
-        clean_filter_dedup_state,
-    )
-
-    old = _corpus(spark, _batch(0, 6))
-    state = clean_filter_dedup_state(old, corpus_n=old.count(), **LOOSE)
-    pre_fold_rows = _rows(state["output"])
-    refreshed = clean_filter_dedup_apply(
-        _corpus(spark, _batch(300)),
-        state,
-        compact_to="cmp_keepdict",
-        compact_path=str(tmp_path / "k"),
-        compact_keep_superseded=True,
-    )
-    # the PRE-FOLD dict is still readable (blocks kept)
-    assert _rows(state["output"]) == pre_fold_rows
-    # the returned state is compacted all the same
-    for key in ("survivors", "band_keys", "pairs", "output"):
-        p = refreshed[key]._jdf.queryExecution().analyzed().toString()
-        assert "Union" not in p and "LogicalRDD" not in p, key
-    # the fold folded something: the batch's copyme doc survives the
-    # front and joins the stored duplicate group (output unchanged —
-    # it loses the rep race; the other batch docs fail the digit-heavy
-    # hard filters by fixture design)
-    assert _rows(refreshed["survivors"]) != _rows(state["survivors"])
-    assert _rows(refreshed["output"]) == pre_fold_rows
-
-
-def test_apply_compact_retire_fold_rdds_opt_out(spark, tmp_path):
-    """compact_retire_fold_rdds=False (r15 ADVICE): the session-global
-    sweep of RDDs persisted during the fold is skipped — the opt-out
-    for callers whose CONCURRENT jobs persist RDDs in that window.
-    Observable single-threaded: after a compacting fold with the
-    sweep OFF, the fold's hidden intermediates stay persisted
-    (count > baseline); an identical fold with the default sweep
-    returns the count to <= baseline (the existing retire test)."""
-    from build_datawarehouse_demo_spark.plans.training_data import (
-        clean_filter_dedup_apply,
-        clean_filter_dedup_state,
-    )
-
-    from build_datawarehouse_demo_spark.plans.training_data import (
-        _persistent_rdd_ids,
-        _retire_persistent_rdds_since,
-    )
-
-    old = _corpus(spark, _batch(0, 6))
-    state = clean_filter_dedup_state(old, corpus_n=old.count(), **LOOSE)
-    state["output"].count()
-    scope = _persistent_rdd_ids(spark)
-    refreshed = clean_filter_dedup_apply(
-        _corpus(spark, _batch(400)),
-        state,
-        compact_to="cmp_nosweep",
-        compact_path=str(tmp_path / "n"),
-        compact_retire_fold_rdds=False,
-    )
-    # fold-window RDDs retained: the sweep did not run (phase 2 still
-    # retired the superseded frames' LEAVES, but the hidden
-    # intermediates — components round labels etc. — are not leaves)
-    leftover = _persistent_rdd_ids(spark) - scope
-    assert leftover, "opted-out fold retained no fold-window RDDs"
-    # the manual sweep (what the default flag runs) clears exactly them
-    n = _retire_persistent_rdds_since(spark, scope)
-    assert n == len(leftover), (n, len(leftover))
-    assert not (_persistent_rdd_ids(spark) - scope)
-    # the compacted state is table-backed and unaffected by the sweep
-    assert refreshed["output"].count() > 0
 
 
 def test_compaction_seeds_generation_past_orphaned_directories(spark):
@@ -387,6 +272,47 @@ def test_compaction_retires_superseded_checkpoint_blocks(spark, tmp_path):
     assert counts[-1] <= baseline, (baseline, counts)
 
 
+def test_compacting_apply_leaves_other_threads_blocks_alone(
+    spark, tmp_path, monkeypatch
+):
+    """A compacting apply frees only the blocks its own fold made: an
+    RDD another thread checkpoints while the fold runs (the thread is
+    started and joined mid-fold, so the windows overlap) is still
+    persisted and readable after the apply returns."""
+    import threading
+
+    from build_datawarehouse_demo_spark.plans import training_data as td
+
+    state = td.clean_filter_dedup_state(
+        _corpus(spark, _batch(0, 6)), corpus_n=7, **LOOSE
+    )
+    other = {}
+
+    def checkpoint_elsewhere():
+        other["df"] = spark.range(50).localCheckpoint()
+
+    fold_candidates = td._apply_rep_candidates
+
+    def mid_fold(*args):
+        t = threading.Thread(target=checkpoint_elsewhere)
+        t.start()
+        t.join()
+        return fold_candidates(*args)
+
+    monkeypatch.setattr(td, "_apply_rep_candidates", mid_fold)
+    refreshed = td.clean_filter_dedup_apply(
+        _corpus(spark, _batch(500)),
+        state,
+        compact_to="cmp_other_thread",
+        compact_path=str(tmp_path / "o"),
+    )
+    leaf = other["df"]._jdf.queryExecution().analyzed().collectLeaves().apply(0)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().keySet()
+    assert leaf.rdd().id() in {int(i) for i in persisted}
+    assert other["df"].count() == 50
+    assert refreshed["output"].count() > 0
+
+
 def test_compaction_mixed_case_prefix_seeds_and_gcs(spark, tmp_path):
     """Mixed-case compact_to (r16 ADVICE): Spark lowercases catalog
     identifiers, so generation discovery must match case-insensitively
@@ -463,40 +389,32 @@ def test_compaction_gc_with_scheme_qualified_base_path(spark, tmp_path):
 
 
 def test_compaction_gc_superseded_false_defers_all_gc(spark, tmp_path):
-    """The streaming sinks' retry-safety contract (r17 ADVICE): with
-    ``gc_superseded=False`` a compaction performs NO generation GC at
-    all — every prior generation's tables and files survive the write
-    (so a foreachBatch retry chain that crashes before the holder swap
-    any number of times always finds the generation the unswapped
-    holder reads) — and a later explicit gc_generations(keep=1) trims
-    to exactly the newest."""
+    """The streaming sinks' retry-safety contract (r17 ADVICE): the
+    write half of compaction the sinks run before their holder swap
+    (_write_generation) performs NO generation GC and retires no block
+    — every prior generation's tables and files survive the write (so
+    a foreachBatch retry chain that crashes before the holder swap any
+    number of times always finds the generation the unswapped holder
+    reads) — and a later gc_generations trims to exactly the newest."""
     from build_datawarehouse_demo_spark.plans.training_data import (
-        clean_filter_dedup_state,
-        compact_state,
-        gc_generations,
         _prefix_generations,
+        _write_generation,
+        clean_filter_dedup_state,
+        gc_generations,
     )
 
     root = str(tmp_path / "nogc")
     state = clean_filter_dedup_state(
         _corpus(spark, _batch(0, 5)), corpus_n=6, **LOOSE
     )
-    c1 = compact_state(
-        state, "cmp_nogc", base_path=root,
-        unpersist_superseded=False, gc_superseded=False,
-    )
-    c2 = compact_state(
-        c1, "cmp_nogc", base_path=root,
-        unpersist_superseded=False, gc_superseded=False,
-    )
-    c3 = compact_state(
-        c2, "cmp_nogc", base_path=root,
-        unpersist_superseded=False, gc_superseded=False,
-    )
+    c1 = _write_generation(state, "cmp_nogc", root)
+    c2 = _write_generation(c1, "cmp_nogc", root)
+    c3 = _write_generation(c2, "cmp_nogc", root)
     # all three generations retained — the consecutive-retry window is
     # covered no matter how many re-compactions precede the swap
     assert _prefix_generations(spark, "cmp_nogc", root) == [1, 2, 3]
-    want = _rows(c1["output"])
+    want = _rows(state["output"])
+    assert _rows(c1["output"]) == want
     assert _rows(c2["output"]) == want and _rows(c3["output"]) == want
     # the post-swap GC half then trims to the newest generation only
     gc_generations(spark, "cmp_nogc", base_path=root)

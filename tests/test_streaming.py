@@ -13,7 +13,12 @@ from pyspark.sql import types as T
 
 from build_datawarehouse_demo_spark.sources.readers import read_parquet
 from build_datawarehouse_demo_spark.streaming.windows import tumbling_event_counts
-from tests.stream_harness import read_event_stream, run_stream_to_memory
+from tests.stream_harness import (
+    apply_batch_upsert,
+    read_event_stream,
+    run_stream_to_memory,
+    stream_upsert_to_table,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -286,10 +291,6 @@ def test_foreachbatch_upsert_exactly_once_convergence(spark):
     delivery) must not change the result — the idempotence that makes
     checkpoint + foreachBatch effectively exactly-once."""
     from build_datawarehouse_demo_spark.operators.scd import apply_cdc_changes
-    from build_datawarehouse_demo_spark.streaming.sinks import (
-        apply_batch_upsert,
-        stream_upsert_to_table,
-    )
 
     table = "fbu_user_latest"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
