@@ -25,7 +25,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from build_datawarehouse_demo_spark.session import block_scope, checkpoint_leaves, materialize
+from build_datawarehouse_demo_spark.session import (
+    block_scope,
+    checkpoint_leaves,
+    free_blocks,
+    materialize,
+)
 
 log = logging.getLogger(__name__)
 
@@ -174,7 +179,8 @@ def prepare_training_data_neardup(
     - split: a narrow hash projection.
     """
     params = _pipeline_params({**locals(), "rank_col": None}, ("n_tokens", "quality"))
-    return _neardup_build(df, corpus_n, params)["output"]
+    front = _featured_survivors(df, id_col, text_col, min_tokens, min_quality)
+    return _neardup_build(*_checkpointed_front(df, corpus_n, front), params)["output"]
 
 
 def _pipeline_params(kwargs: dict, rank_features: tuple[str, str]) -> dict:
@@ -265,8 +271,9 @@ def training_data_neardup_state(
     plan, durable blocks; see sources/writers.save_table.
     """
     params = _pipeline_params(locals(), ("n_tokens", "quality"))
+    front = _featured_survivors(df, id_col, text_col, min_tokens, min_quality)
     return _retained(
-        _neardup_build(df, corpus_n, params),
+        _neardup_build(*_checkpointed_front(df, corpus_n, front), params),
         ("output", "dg_members", "rep_digests", "text_digests", "rep_ids"),
     )
 
@@ -278,34 +285,59 @@ def _retained(state: dict, keys: tuple[str, ...]) -> dict:
     return {**state, **{k: materialize(state[k]) for k in keys}}
 
 
-def _pair_state(
-    df: DataFrame, corpus_n: int | None, front: DataFrame, params: dict
-) -> dict:
-    """The build prefix both corpus pipelines share: banding sized from
-    the raw corpus count (``df.count()`` unless ``corpus_n`` is given),
-    the front's survivors ``front`` checkpointed, identical shingle
-    sets grouped (shingle_digest_groups) and the reps run through
-    _collapsed_pair_state. Returns the state frames this makes
-    (params, bands, rows, survivors, band_keys, dg_members,
-    rep_digests, pairs); the two member maps are lazy projections of
-    the grouping's checkpoint."""
+def _checkpointed_front(
+    df: DataFrame, corpus_n: int | None, front: DataFrame
+) -> tuple[DataFrame, int]:
+    """A build's input from its raw corpus ``df``: the front's lazy
+    survivors ``front`` checkpointed, and the corpus count the banding
+    is sized from (``df.count()`` unless ``corpus_n`` is given — the
+    one-shots' docstrings say why the raw count)."""
+    if corpus_n is None:
+        corpus_n = df.count()
+    return materialize(front), corpus_n
+
+
+def _pair_state(survivors: DataFrame, corpus_n: int, params: dict) -> dict:
+    """The pair half both corpus pipelines' build bodies share, over
+    the checkpointed ``survivors``: banding sized by
+    ``minhash_auto_params(corpus_n)``, identical shingle sets grouped
+    (shingle_digest_groups), the groups' REPS signed and banded, the
+    rep candidates verified and re-expanded to members
+    (operators/dedup: lsh_band_self_pairs, jaccard_verify_pairs,
+    expand_rep_pairs). Returns the state frames this makes (params,
+    bands, rows, survivors, band_keys, dg_members, rep_digests,
+    pairs); the two member maps are lazy projections of the
+    grouping's checkpoint.
+
+    The band-key table keeps one row per DISTINCT shingle set, not per
+    member (r14: per-member keys made a duplicate-heavy stored corpus ×
+    a re-crawl batch materialize ~bands·k_old·k_new rows on one hot
+    (band, band_key) key in the refresh join). band_keys and pairs are
+    checkpointed: band_keys is the persisted, recall-bearing artifact;
+    pairs are the member-level verified edges (id_a, id_b, jaccard),
+    identical to the uncollapsed computation (candidacy and jaccard
+    depend only on the set)."""
     from build_datawarehouse_demo_spark.operators.dedup import (
+        expand_rep_pairs,
+        jaccard_verify_pairs,
+        lsh_band_keys,
+        lsh_band_self_pairs,
         minhash_auto_params,
+        minhash_signatures_from_arrays,
         shingle_arrays,
         shingle_digest_groups,
     )
 
     id_col, threshold = params["id_col"], params["jaccard_threshold"]
-    if corpus_n is None:
-        corpus_n = df.count()
     bands, rows = minhash_auto_params(corpus_n, threshold=threshold)
-    survivors = materialize(front)
     members, dg_reps = shingle_digest_groups(
         shingle_arrays(survivors, id_col, "cleaned", params["shingle_k"]), id_col
     )
-    band_keys, pairs = _collapsed_pair_state(
-        dg_reps.select(id_col, "shingles"), members, members, bands, rows,
-        threshold, id_col,
+    rep_sh = dg_reps.select(id_col, "shingles")
+    sigs = minhash_signatures_from_arrays(rep_sh, bands * rows, id_col)
+    band_keys = materialize(lsh_band_keys(sigs, bands * rows, bands, id_col))
+    rep_pairs = jaccard_verify_pairs(
+        lsh_band_self_pairs(band_keys, id_col), rep_sh, threshold, id_col
     )
     return {
         "params": params,
@@ -315,20 +347,22 @@ def _pair_state(
         "band_keys": band_keys,
         "dg_members": members.select(F.col(id_col), "__rep"),
         "rep_digests": dg_reps.select(id_col, "__dg"),
-        "pairs": pairs,
+        "pairs": materialize(expand_rep_pairs(rep_pairs, members, members, threshold, id_col)),
     }
 
 
-def _neardup_build(df: DataFrame, corpus_n: int | None, params: dict) -> dict:
-    """The near-dup pipeline's one build chain, run by
-    prepare_training_data_neardup (which returns its lazy ``output``)
-    and training_data_neardup_state (which checkpoints the frames
-    retention needs): the featured front → _pair_state → star
-    components → reps (min-id, or keep-best under ``rank_col``) →
-    checkpointed rep window grams → span owners →
-    remove_spans_given_owners → split. Returns the state's frames
-    (training_data_neardup_state); dg_members, rep_digests,
-    text_digests, rep_ids and output are lazy."""
+def _neardup_build(survivors: DataFrame, corpus_n: int, params: dict) -> dict:
+    """The near-dup pipeline's one build body, over the checkpointed
+    front ``survivors`` at the banding ``corpus_n`` sizes. Run by
+    prepare_training_data_neardup (which returns its lazy ``output``),
+    training_data_neardup_state (which checkpoints the frames
+    retention needs) and migrate_training_data_neardup_banding (over
+    the state's stored survivors): _pair_state → star components →
+    reps (min-id, or keep-best under ``rank_col``) → checkpointed rep
+    window grams → span owners → remove_spans_given_owners → split.
+    Returns the state's frames (training_data_neardup_state);
+    dg_members, rep_digests, text_digests, rep_ids and output are
+    lazy."""
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
         remove_spans_given_owners,
@@ -339,9 +373,7 @@ def _neardup_build(df: DataFrame, corpus_n: int | None, params: dict) -> dict:
 
     p = params
     id_col, rank_col, span_window = p["id_col"], p["rank_col"], p["span_window"]
-    front = _featured_survivors(df, id_col, p["text_col"], p["min_tokens"], p["min_quality"])
-    state = _pair_state(df, corpus_n, front, p)
-    survivors = state["survivors"]
+    state = _pair_state(survivors, corpus_n, p)
     memb = _labeled(
         survivors,
         connected_components_star(state["pairs"]).withColumnRenamed("node", id_col),
@@ -400,50 +432,6 @@ def _neardup_build(df: DataFrame, corpus_n: int | None, params: dict) -> dict:
             out, id_col, val_frac=p["val_frac"], test_frac=p["test_frac"]
         ),
     }
-
-
-def _collapsed_pair_state(
-    rep_sh: DataFrame,
-    self_members: DataFrame,
-    exp_members: DataFrame,
-    bands: int,
-    rows: int,
-    threshold: float,
-    id_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """(band_keys, pairs) of the digest-collapsed near-dup computation
-    an incremental state persists: the REPS' shingle arrays ``rep_sh``
-    are signed and banded, the rep-level candidates verified, and the
-    verified rep pairs re-expanded to members (operators/dedup:
-    lsh_band_self_pairs, jaccard_verify_pairs, expand_rep_pairs; the
-    member frames as there). Shared by both build chains (_pair_state)
-    and the banding migration.
-
-    The stored band-key table keeps one row per DISTINCT shingle set,
-    not per member (r14: per-member keys made a duplicate-heavy stored
-    corpus × a re-crawl batch materialize ~bands·k_old·k_new rows on
-    one hot (band, band_key) key in the refresh join). Both frames are checkpointed: band_keys
-    is the persisted, recall-bearing artifact; pairs are the
-    member-level verified edges (id_a, id_b, jaccard), identical to
-    the uncollapsed computation (candidacy and jaccard depend only on
-    the set)."""
-    from build_datawarehouse_demo_spark.operators.dedup import (
-        expand_rep_pairs,
-        jaccard_verify_pairs,
-        lsh_band_keys,
-        lsh_band_self_pairs,
-        minhash_signatures_from_arrays,
-    )
-
-    sigs = minhash_signatures_from_arrays(rep_sh, bands * rows, id_col)
-    band_keys = materialize(lsh_band_keys(sigs, bands * rows, bands, id_col))
-    rep_pairs = jaccard_verify_pairs(
-        lsh_band_self_pairs(band_keys, id_col), rep_sh, threshold, id_col
-    )
-    pairs = materialize(expand_rep_pairs(
-        rep_pairs, self_members, exp_members, threshold, id_col
-    ))
-    return band_keys, pairs
 
 
 def _apply_rep_candidates(new_surv: DataFrame, state: dict) -> dict:
@@ -606,11 +594,9 @@ def _refresh_spans(
     dropped_ids: DataFrame,
     comp: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
-    """The near-dup pipeline's span stage after its representative set
-    changed — the one delta refresh both training_data_neardup_apply
-    (reps a batch added or displaced) and
-    migrate_training_data_neardup_banding (reps a re-banding added or
-    dropped) run.
+    """The near-dup pipeline's span stage after a batch added or
+    displaced representatives — training_data_neardup_apply's delta
+    refresh.
 
     ``rep_feats`` are the REFRESHED reps' survivor features,
     ``added_docs`` / ``added_ids`` the reps that entered the set and
@@ -872,8 +858,7 @@ def training_data_neardup_apply(
     Corpus size from the optional ``n_survivors`` counter when
     present, else one survivors count. The counter, the migration
     hook and compaction are the epilogue both incremental pipelines
-    share (_finish_fold); the span refresh is the one the banding
-    migration also runs (_refresh_spans).
+    share (_finish_fold).
 
     ``rank_col`` in the state's params (r18, VERDICT r17 item 1): the
     KEEP-BEST policy, run incrementally (a numeric survivor feature:
@@ -1027,14 +1012,13 @@ def _clean_reps(
 ) -> DataFrame:
     """Representative rows (id, n_ws_tokens, clf_score, component_id)
     of every near-dup component of the CLEAN pipeline — the keep-policy
-    seam shared by the build chain (_clean_build) and the banding
-    migration. ``rank_col=None`` keeps the min-id member (the
-    star label, so the filter is free); ``rank_col`` set keeps the
-    member MAXIMIZING (rank, then smallest id) — the Dolma/FineWeb
-    keep-the-best policy (operators/dedup.dedup_keep_best), as ONE
-    map-side-combining min_by over slim scalar rows. ``rank_col`` is a
-    numeric survivor feature column (n_ws_tokens or clf_score; checked
-    by _pipeline_params)."""
+    seam of its build body (_clean_build). ``rank_col=None`` keeps the
+    min-id member (the star label, so the filter is free); ``rank_col``
+    set keeps the member MAXIMIZING (rank, then smallest id) — the
+    Dolma/FineWeb keep-the-best policy (operators/dedup.dedup_keep_best),
+    as ONE map-side-combining min_by over slim scalar rows. ``rank_col``
+    is a numeric survivor feature column (n_ws_tokens or clf_score;
+    checked by _pipeline_params)."""
     from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
     memb = _labeled(
@@ -1096,8 +1080,7 @@ def _clean_output(survivors: DataFrame, comp: DataFrame, params: dict) -> DataFr
     """The clean pipeline's output rows from its near-dup components
     under the keep policy of ``params`` (_pipeline_params) — min-id or
     keep-best (_clean_reps), or drop-free (_clean_soft_rows) — through
-    the hash split. Shared by the build chain (_clean_build) and the
-    banding migration; the caller decides whether to checkpoint."""
+    the hash split: the lazy tail of the build body (_clean_build)."""
     from build_datawarehouse_demo_spark.operators.sampling import (
         train_val_test_split,
     )
@@ -1261,23 +1244,24 @@ def prepare_clean_filter_dedup(
     [+ (n_members, weight) under soft_weights].
     """
     params = _pipeline_params(locals(), ("n_ws_tokens", "clf_score"))
-    return _clean_build(df, corpus_n, params)["output"]
+    front = clean_filter_survivors(df, **{k: params[k] for k in _CLEAN_FRONT})
+    return _clean_build(*_checkpointed_front(df, corpus_n, front), params)["output"]
 
 
-def _clean_build(df: DataFrame, corpus_n: int | None, params: dict) -> dict:
-    """The clean pipeline's one build chain, run by
-    prepare_clean_filter_dedup (which returns its lazy ``output``) and
+def _clean_build(survivors: DataFrame, corpus_n: int, params: dict) -> dict:
+    """The clean pipeline's one build body, over the checkpointed
+    front ``survivors`` at the banding ``corpus_n`` sizes. Run by
+    prepare_clean_filter_dedup (which returns its lazy ``output``),
     clean_filter_dedup_state (which checkpoints the frames retention
-    needs): clean_filter_survivors → _pair_state → star components →
-    _clean_output. Returns the state's frames
-    (clean_filter_dedup_state); dg_members, rep_digests and output are
-    lazy."""
+    needs) and migrate_clean_filter_banding (over the state's stored
+    survivors): _pair_state → star components → _clean_output.
+    Returns the state's frames (clean_filter_dedup_state);
+    dg_members, rep_digests and output are lazy."""
     from build_datawarehouse_demo_spark.operators.dedup import connected_components_star
 
-    front = clean_filter_survivors(df, **{k: params[k] for k in _CLEAN_FRONT})
-    state = _pair_state(df, corpus_n, front, params)
+    state = _pair_state(survivors, corpus_n, params)
     comp = connected_components_star(state["pairs"])
-    return {**state, "output": _clean_output(state["survivors"], comp, params)}
+    return {**state, "output": _clean_output(survivors, comp, params)}
 
 
 @block_scope
@@ -1347,8 +1331,10 @@ def clean_filter_dedup_state(
     a refresh appends partitions.
     """
     params = _pipeline_params(locals(), ("n_ws_tokens", "clf_score"))
+    front = clean_filter_survivors(df, **{k: params[k] for k in _CLEAN_FRONT})
     return _retained(
-        _clean_build(df, corpus_n, params), ("output", "dg_members", "rep_digests")
+        _clean_build(*_checkpointed_front(df, corpus_n, front), params),
+        ("output", "dg_members", "rep_digests"),
     )
 
 
@@ -1617,59 +1603,31 @@ def clean_filter_dedup_apply(
 # ---------------------------------------------------------------------------
 
 
-def _rebanded_collapse_frames(state: dict, corpus_n: int) -> dict | None:
-    """Re-sign the state's digest-group REPS at
-    ``minhash_auto_params(corpus_n)`` and recompute the rep-level pair
-    set — the shared core of a banding migration. Reps-only cost: ONE
-    distinct-content scan (survivors semi-joined to the rep ids,
-    re-shingled), then _collapsed_pair_state over the reps, expanding
-    through the stored member map. The member map, digests and
-    survivors are untouched — no member is ever re-shingled. Shingle
-    size, threshold and id column come from ``state["params"]``.
+def _banding_moves(state: dict, corpus_n: int) -> bool:
+    """Whether minhash_auto_params at ``corpus_n`` (and the state's
+    Jaccard threshold) chooses another banding than ``state`` holds."""
+    from build_datawarehouse_demo_spark.operators.dedup import minhash_auto_params
 
-    Returns None when the auto params are unchanged (the migration
-    is a no-op), else {bands, rows, band_keys, pairs}, both frames
-    checkpointed. The recomputed
-    pairs are exactly what a full rebuild at the new banding verifies:
-    candidacy and jaccard depend only on the shingle set (the digest-
-    collapse losslessness argument), and within-group pairs regenerate
-    at jaccard 1.0 regardless of banding (identical signatures collide
-    in every band)."""
-    from build_datawarehouse_demo_spark.operators.dedup import (
-        minhash_auto_params,
-        shingle_arrays,
+    threshold = state["params"]["jaccard_threshold"]
+    return minhash_auto_params(corpus_n, threshold=threshold) != (
+        state["bands"], state["rows"]
     )
 
-    p = state["params"]
-    id_col, threshold = p["id_col"], p["jaccard_threshold"]
-    new_bands, new_rows = minhash_auto_params(corpus_n, threshold=threshold)
-    if (new_bands, new_rows) == (state["bands"], state["rows"]):
-        return None
-    rep_ids = state["rep_digests"].select(id_col)
-    rep_sh = shingle_arrays(
-        state["survivors"].join(rep_ids, id_col, "left_semi"),
-        id_col,
-        "cleaned",
-        p["shingle_k"],
-    ).select(id_col, "shingles")
-    # rep-level self rows for expand_rep_pairs' within-group pass:
-    # (id == __rep, group size, shingle count) — derived from the
-    # stored member map + the rep arrays, never from member text
-    gn = state["dg_members"].groupBy("__rep").agg(F.count("*").alias("__gn"))
-    self_reps = (
-        rep_sh.select(F.col(id_col), F.size("shingles").alias("__nsh"))
-        .join(gn, F.col(id_col) == F.col("__rep"))
-        .select(F.col(id_col), "__rep", "__gn", "__nsh")
-    )
-    band_keys, pairs = _collapsed_pair_state(
-        rep_sh, self_reps, state["dg_members"], new_bands, new_rows, threshold, id_col
-    )
-    return {
-        "bands": new_bands,
-        "rows": new_rows,
-        "band_keys": band_keys,
-        "pairs": pairs,
-    }
+
+#: the frames a banding migration keeps: the survivors and what is
+#: derived from them alone (member map, set and text digests)
+_BANDING_FREE = ("params", "survivors", "dg_members", "rep_digests", "text_digests")
+
+
+def _migrated(state: dict, built: dict, keys: tuple[str, ...]) -> dict:
+    """``state`` at the banding of ``built`` — its pipeline's build
+    body rerun over ``state``'s own survivors: every frame the banding
+    decides (bands, rows, band keys, pairs and what follows from them)
+    comes from ``built``, those under ``keys`` checkpointed; the
+    banding-free frames and any other entry (the n_survivors counter)
+    pass through."""
+    built = _retained(built, keys)
+    return {**state, **{k: v for k, v in built.items() if k not in _BANDING_FREE}}
 
 
 @block_scope
@@ -1682,127 +1640,58 @@ def migrate_clean_filter_banding(state: dict, corpus_n: int) -> dict:
     minhash_auto_params would have chosen more rows per band (the
     background-collision law), and every subsequent apply pays the
     difference (the measured 0.241 neardup-apply exponent's visible
-    edge). Migration re-signs the REPS at
-    ``minhash_auto_params(corpus_n)`` and swaps the state's band keys
-    and pair set — reps-only cost, one distinct-content scan — then
-    rebuilds components and output from the new pairs (rep-scale; the
-    filter front and member shingling are never re-run). Shingle size,
-    threshold, split and keep policy are the build's, read from
-    ``state["params"]``.
+    edge).
 
-    No-op when the auto params are unchanged, so callers can invoke it
-    on a corpus-size ratio trigger (e.g. every fold with
-    ``corpus_n=<running count>`` — the boundary crossings are sparse:
-    auto params move at ~100/2k/50k/1M docs).
+    The migration IS the rebuild it must equal: the pipeline's one
+    build body (_clean_build) runs over the state's stored survivors
+    at ``minhash_auto_params(corpus_n)`` — digest grouping, band keys,
+    pairs, components and output — so rebuild parity at the new params
+    holds by construction (oracle pipeline_clean_filter_dedup_migrated).
+    The filter front never re-runs. Shingle size, threshold, split and
+    keep policy are the build's, read from ``state["params"]``.
 
-    EXACT rebuild parity at the NEW params (the oracle contract,
-    pipeline_clean_filter_dedup_migrated): the recomputed pair set is
-    what a full rebuild at the new banding verifies (see
-    _rebanded_collapse_frames); components and the hash split are pure
-    functions of pairs and ids. A pair the OLD banding caught that the
-    new banding misses is dropped — matching the rebuild, which never
-    sees it.
+    No-op (``state`` itself is returned) when the auto params are
+    unchanged, so callers can invoke it on a corpus-size ratio trigger
+    (e.g. every fold with ``corpus_n=<running count>``): the boundary
+    crossings are sparse — the auto params move just past each power
+    of ten (at 101, 1,001, 10,001, 100,001 and 1,000,001 documents) —
+    so a migration runs once per decade of corpus growth.
 
-    Returns the same dict shape; survivors / dg_members / rep_digests
-    pass through untouched. The superseded band_keys/pairs/output
-    frames are NOT retired here (the caller may still hold the old
-    state); compact the migrated state to retire them.
+    Returns the same dict shape; params, survivors, dg_members and
+    rep_digests (equal to what the rebuild derives) and the
+    n_survivors counter pass through. The superseded band_keys /
+    pairs / output frames are NOT retired here (the caller may still
+    hold the old state); compact the migrated state, or run
+    retire_superseded_state, to retire them.
     """
-    from build_datawarehouse_demo_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    rebanded = _rebanded_collapse_frames(state, corpus_n)
-    if rebanded is None:
+    if not _banding_moves(state, corpus_n):
         return state
-    output = materialize(_clean_output(
-        state["survivors"], connected_components_star(rebanded["pairs"]),
-        state["params"],
-    ))
-    # survivors, member maps, digests, the counter and the params pass
-    # through untouched
-    return {**state, **rebanded, "output": output}
+    built = _clean_build(state["survivors"], corpus_n, state["params"])
+    return _migrated(state, built, ("output",))
 
 
 @block_scope
 def migrate_training_data_neardup_banding(state: dict, corpus_n: int) -> dict:
     """Re-train a training_data_neardup_state's FROZEN banding — the
-    neardup-pipeline twin of migrate_clean_filter_banding, sharing the
-    same rep-resign core (_rebanded_collapse_frames: one distinct-
-    content scan, band keys + member-level pairs recomputed at
-    ``minhash_auto_params(corpus_n)``). The extra work here is the
-    SPAN stage: the pipeline's output carries span-cleaned text whose
-    gram statistics are computed over the REP set, and re-banding can
-    change that set (components merge under pairs the new banding
-    catches; they can split under pairs it misses). The refresh is the
-    apply's own span stage (_refresh_spans) aimed at the rep-set diff:
-    dropped reps (component min fell below them under new pairs) and
-    ADDED reps (their component lost its bridging pair) mark their
-    grams' digests changed, affected docs rebuild, untouched reps
-    reuse their stored output rows verbatim. Every knob is the build's,
-    read from ``state["params"]``.
+    near-dup twin of migrate_clean_filter_banding: the pipeline's one
+    build body (_neardup_build) reruns over the state's stored
+    survivors at ``minhash_auto_params(corpus_n)``, span stage
+    included (re-banding can merge or split components, so the rep
+    set and its gram statistics move). Rebuild parity at the new
+    params holds by construction (oracle
+    pipeline_training_data_neardup_migrated); the featured front never
+    re-runs. Every knob is the build's, read from ``state["params"]``.
 
-    No-op when the auto params are unchanged. Returns the same dict
-    shape; survivors / dg_members / rep_digests / text_digests pass
-    through untouched. EXACT rebuild parity at the NEW params (oracle
-    pipeline_training_data_neardup_migrated): pairs match the rebuild
-    by the rep-resign argument, components and the split are pure
-    functions of pairs and ids, and the span stage recomputes exactly
-    the rows whose statistics could differ.
+    No-op (``state`` itself) when the auto params are unchanged.
+    Returns the same dict shape; params, survivors, dg_members,
+    rep_digests, text_digests and the n_survivors counter pass
+    through; bands, rows, band_keys, pairs and rep_grams come from the
+    rebuild, rep_ids and output checkpointed.
     """
-    from build_datawarehouse_demo_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    rebanded = _rebanded_collapse_frames(state, corpus_n)
-    if rebanded is None:
+    if not _banding_moves(state, corpus_n):
         return state
-    id_col, rank_col = state["params"]["id_col"], state["params"]["rank_col"]
-    surv = state["survivors"]
-    old_rep_ids = state["rep_ids"]
-    compR = connected_components_star(rebanded["pairs"]).withColumnRenamed(
-        "node", id_col
-    )
-    if rank_col is None:
-        rep_ids = materialize(
-            _labeled(surv.select(id_col), compR, id_col)
-            .filter(F.col("__cid") == F.col(id_col))
-            .select(id_col)
-        )
-    else:
-        # keep-best: re-banding changes the component set, so the
-        # winners are recomputed globally — one slim min_by over
-        # (component, rank, id), the rep-resign scale this migration
-        # already runs at
-        from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
-
-        rep_ids = materialize(
-            _labeled(surv.select(id_col, rank_col), compR, id_col)
-            .groupBy("__cid")
-            .agg(
-                F.min_by(F.col(id_col), keep_best_key(rank_col, id_col)).alias(
-                    "__keep"
-                )
-            )
-            .select(F.col("__keep").alias(id_col))
-        )
-    dropped = materialize(old_rep_ids.join(rep_ids, id_col, "left_anti"))
-    added = materialize(rep_ids.join(old_rep_ids, id_col, "left_anti"))
-    output, rep_grams = _refresh_spans(
-        state,
-        surv.join(rep_ids, id_col, "left_semi"),
-        surv.join(added, id_col, "left_semi"),
-        added,
-        dropped,
-        compR,
-    )
-    return {
-        **state,
-        **rebanded,
-        "rep_ids": rep_ids,
-        "rep_grams": rep_grams,
-        "output": output,
-    }
+    built = _neardup_build(state["survivors"], corpus_n, state["params"])
+    return _migrated(state, built, ("output", "rep_ids"))
 
 
 # ---------------------------------------------------------------------------
@@ -1968,10 +1857,10 @@ def retire_superseded_state(old_state: dict, new_state: dict) -> None:
     Deterministic, unlike waiting for the ContextCleaner: the driver
     measurably does not GC the old plans within a folding session.
     Unpersisting an already-freed RDD is a no-op."""
-    keep = {r.id() for r in checkpoint_leaves(new_state)}
-    for r in checkpoint_leaves(old_state):
-        if r.id() not in keep:
-            r.unpersist(False)
+    free_blocks(
+        {r.id() for r in checkpoint_leaves(old_state)}
+        - {r.id() for r in checkpoint_leaves(new_state)}
+    )
 
 
 def _write_generation(state: dict, prefix: str, base_path: str | None = None) -> dict:

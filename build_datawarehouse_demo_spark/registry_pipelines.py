@@ -414,16 +414,16 @@ def q_clean_filter_dedup_migrated(
     clean_filter_dedup_state on the first n/5 of the pageified
     corpus (banding auto-sized there), fold [n/5, 3n/4) at that
     FROZEN banding, then MIGRATE the state to the banding
-    auto-params choose at 3n/4 documents — reps re-signed, band
-    keys and pairs swapped, components and output rebuilt at
-    rep scale; survivors and the member map untouched — and fold
-    the last quarter at the migrated banding. The oracle runs the
-    full batch chain over ALL documents at the MIGRATED params, so
-    the hash match is the migrated-apply ≡ rebuild-at-new-params
-    proof. The in-key assert fails loudly if the fixture ever
-    stops matching the pinned migrated params (parity would
-    silently hold even for a no-op migration — the assert keeps
-    the key honest about exercising a real re-band)."""
+    auto-params choose at 3n/4 documents — the pipeline's build
+    body rerun over the stored survivors (grouping, band keys,
+    pairs, components, output); survivors and the member map pass
+    through — and fold the last quarter at the migrated banding.
+    The oracle runs the full batch chain over ALL documents at the
+    MIGRATED params, so the hash match is the migrated-apply ≡
+    rebuild-at-new-params proof. The in-key assert fails loudly if
+    the fixture ever stops matching the pinned migrated params
+    (parity would silently hold even for a no-op migration — the
+    assert keeps the key honest about exercising a real re-band)."""
     from build_datawarehouse_demo_spark.plans.training_data import (
         clean_filter_dedup_apply,
         clean_filter_dedup_state,
@@ -456,15 +456,13 @@ def q_clean_filter_dedup_migrated(
 def q_training_neardup_migrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banding migration for the NEARDUP pipeline state
     (plans/training_data.migrate_training_data_neardup_banding):
-    same rep-resign core as the clean-stack key, plus the SPAN
-    refresh — re-banding can change the component-rep set, so the
-    migration re-runs the apply's span-delta machinery over the
-    rep-set diff (dropped + added reps mark their grams' digests
-    changed; only affected docs rebuild). Build at n/5 (banding
-    (3,2) on the driver fixture), fold [n/5, 3n/4) frozen, migrate
-    at 3n/4 → (4,3), fold the last quarter at the migrated
-    banding; the oracle runs the full chain over ALL documents at
-    the MIGRATED params."""
+    like the clean-stack key, the pipeline's build body rerun over
+    the stored survivors at the new banding — here span stage
+    included, since re-banding can change the component-rep set and
+    so the gram statistics. Build at n/5 (banding (3,2) on the
+    driver fixture), fold [n/5, 3n/4) frozen, migrate at 3n/4 →
+    (4,3), fold the last quarter at the migrated banding; the oracle
+    runs the full chain over ALL documents at the MIGRATED params."""
     from build_datawarehouse_demo_spark.plans.training_data import (
         migrate_training_data_neardup_banding,
         training_data_neardup_apply,
@@ -515,7 +513,16 @@ def q_clean_filter_dedup_keep_best(
     state's frozen banding with the keep-best final selection, so
     the hash match IS the refresh ≡ rebuild proof for the policy.
     component_id is the component's star label (its min id), which
-    under keep-best need not be the kept row's id."""
+    under keep-best need not be the kept row's id.
+
+    At sf0.01 this key cannot tell keep-best from min-id: in DuckDB
+    the keep-best oracle returns the same 131 rows as the min-id
+    oracle, under ``clf_score`` and ``n_ws_tokens`` alike. The
+    corpus's pair graph has five 2-member components; in four both
+    members tie on both features, in the fifth (ids 58 and 293) the
+    min-id member also ranks higher. A policy regression would pass
+    here; tests/test_keep_best_incremental.py pins the displacement
+    on planted fixtures."""
     from build_datawarehouse_demo_spark.plans.training_data import (
         clean_filter_dedup_apply,
         clean_filter_dedup_state,

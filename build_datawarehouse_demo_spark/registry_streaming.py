@@ -40,6 +40,7 @@ from build_datawarehouse_demo_spark.registry_common import (
     _t,
     _W_SQL,
 )
+from build_datawarehouse_demo_spark.session import materialize
 
 
 @register(
@@ -500,7 +501,7 @@ def q_streaming_rag_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verify) race on DROP TABLE + rmtree; a uuid suffix isolates
     # them, and the try/finally below cleans this run's catalog
     # entries and dirs up — the tiny (vec_id, centroid_id) result
-    # is localCheckpoint'ed first so the returned DataFrame
+    # is materialized first so the returned DataFrame
     # survives the drop.
     table = f"rag_streamkey_idx_{uuid.uuid4().hex[:8]}"
     scratch = _bucketed_scratch_dir()
@@ -537,11 +538,7 @@ def q_streaming_rag_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "not finish within 300s — failing loudly rather than "
                 "returning a stale (pre-append) index state"
             )
-        return (
-            spark.table(table)
-            .select("vec_id", "centroid_id")
-            .localCheckpoint()
-        )
+        return materialize(spark.table(table).select("vec_id", "centroid_id"))
     finally:
         for t in (table, f"{table}_centroids"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -655,10 +652,9 @@ def q_streaming_clean_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "stream did not finish within 300s — failing loudly "
                 "rather than returning a stale (pre-fold) state"
             )
-        return (
+        return materialize(
             holder["state"]["output"]
             .select("doc_id", "n_ws_tokens", "clf_score", "component_id", "split")
-            .localCheckpoint()
         )
     finally:
         shutil.rmtree(feed, ignore_errors=True)
@@ -763,10 +759,9 @@ def q_streaming_clean_filter_migrated(
                 "an auto-params boundary mid-stream"
             )
         assert st["n_survivors"] == st["survivors"].count()
-        return (
+        return materialize(
             st["output"]
             .select("doc_id", "n_ws_tokens", "clf_score", "component_id", "split")
-            .localCheckpoint()
         )
     finally:
         shutil.rmtree(feed, ignore_errors=True)
@@ -853,7 +848,7 @@ def q_streaming_training_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "stream did not finish within 300s — failing loudly "
                 "rather than returning a stale (pre-fold) state"
             )
-        return holder["state"]["output"].localCheckpoint()
+        return materialize(holder["state"]["output"])
     finally:
         shutil.rmtree(feed, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -158,12 +158,20 @@ def block_scope(fn):
             stack.pop()
             if made:
                 kept = made & {r.id() for r in checkpoint_leaves(out or {})}
-                rdds = SparkContext._active_spark_context._jsc.getPersistentRDDs()
-                for rid in made - kept:
-                    rdd = rdds.get(rid)
-                    if rdd is not None:
-                        rdd.unpersist(False)
+                free_blocks(made - kept)
                 if stack:
                     stack[-1].update(kept)
 
     return scoped
+
+
+def free_blocks(rdd_ids) -> None:
+    """Unpersist the RDDs with ids ``rdd_ids`` through
+    ``SparkContext.unpersistRDD`` (package-private in Scala, public to
+    py4j) — the call ``RDD.unpersist`` makes after logging a warning
+    for every locally checkpointed RDD, whose lineage was truncated on
+    purpose: that is what a stage boundary is. An id already freed is
+    a no-op."""
+    sc = SparkContext._active_spark_context._jsc.sc()
+    for rid in rdd_ids:
+        sc.unpersistRDD(rid, False)

@@ -229,12 +229,14 @@ def stream_clean_filter_state_append(
     survivor count, maintained INCREMENTALLY: seeded with one count at
     wiring, then += the fold's O(batch) survivor delta — r16 ADVICE,
     no corpus-sized count per micro-batch) — a documented no-op
-    between minhash_auto_params boundaries (~100/2k/50k/1M docs), so
-    the per-fold cost between boundaries is one cached-delta count;
-    at a boundary it pays one reps-only re-sign
-    and the candidate volume stays bounded forever after (the measured
-    10.6x candidate blowup of a 400x-stale banding,
-    BENCH_BANDING_MIGRATION_r15_b100.json, is what this prevents).
+    between minhash_auto_params boundaries (just past each power of
+    ten: 101, 1,001, 10,001, ... docs), so the per-fold cost between
+    boundaries is one cached-delta count; at a boundary it pays one
+    rebuild of the banding-dependent frames over the stored survivors
+    (the filter front never re-runs), and the candidate volume stays
+    bounded forever after (the measured 10.6x candidate blowup of a
+    400x-stale banding, BENCH_BANDING_MIGRATION_r15_b100.json, is what
+    this prevents).
     Checkpoint leaves the migrated state no longer references are
     retired immediately (retire_superseded_state). The migration is the
     apply's own ``migrate_banding=True`` epilogue, so it always runs
@@ -301,8 +303,9 @@ def stream_training_data_state_append(
       the incremental survivor count (seeded once at wiring, += each
       fold's O(batch) delta), run by the apply's own
       ``migrate_banding`` epilogue through
-      migrate_training_data_neardup_banding — span output repaired
-      for exactly the rep-set diff; superseded frames retired.
+      migrate_training_data_neardup_banding — the build body rerun
+      over the stored survivors at the new banding, span stage
+      included; superseded frames retired.
     """
     from build_datawarehouse_demo_spark.plans.training_data import (
         training_data_neardup_apply,

@@ -113,17 +113,27 @@ def _checkpoint_leaf_ids(state: dict) -> set:
     return ids
 
 
-@pytest.mark.parametrize("pipeline", ["neardup", "clean"])
-def test_fold_keeps_only_the_blocks_its_state_reads(built, spark, pipeline):
+@pytest.mark.parametrize(
+    "pipeline, step",
+    [("neardup", "apply"), ("clean", "apply"), ("neardup", "migrate"), ("clean", "migrate")],
+    ids=["neardup", "clean", "neardup-migrate", "clean-migrate"],
+)
+def test_fold_keeps_only_the_blocks_its_state_reads(built, spark, pipeline, step):
     """A fold owns the checkpoint blocks it makes: after a
-    non-compacting apply, every RDD newly persisted is a checkpoint
-    leaf of the returned state. The stage boundaries no state frame
-    reads (component rounds, candidate pairs, the digest match, batch
-    band keys) are freed when the apply returns."""
+    non-compacting apply, or a banding migration across a boundary
+    (the build body rerun over the stored survivors), every RDD newly
+    persisted is a checkpoint leaf of the returned state. The stage
+    boundaries no state frame reads (component rounds, candidate
+    pairs, the digest match, batch band keys, the rerun's digest
+    grouping and reps) are freed when the step returns."""
     state, _ = built[pipeline]
-    apply = _pipeline(pipeline)[1]
+    _, apply, migrate, *_ = _pipeline(pipeline)
     before = _persistent_rdd_ids(spark)
-    refreshed = apply(_corpus(spark, _BATCH), state)
+    if step == "apply":
+        refreshed = apply(_corpus(spark, _BATCH), state)
+    else:
+        refreshed = migrate(state, corpus_n=2000)
+        assert (refreshed["bands"], refreshed["rows"]) != (state["bands"], state["rows"])
     new = _persistent_rdd_ids(spark) - before
     leaves = _checkpoint_leaf_ids(refreshed)
     assert new and new <= leaves, sorted(new - leaves)

@@ -11,11 +11,12 @@ one apply epilogue and one streaming state sink; no fold-side function
 takes a build knob.
 The MinHash near-dup pair pieces (Jaccard verify, rep -> member
 re-expansion) are written once, in operators/dedup.py, and each corpus
-pipeline has one build chain, shared by its one-shot build and its
-state builder. Every eager materialization goes through one seam
-(session.materialize), and nothing reads the session-wide persistent-RDD
-set. Every public package function has a caller outside tests/. Every
-package import in the repo's scripts resolves.
+pipeline has one build chain, shared by its one-shot build, its state
+builder and its banding migration. Every eager materialization outside
+session.py goes through one seam (session.materialize), and nothing
+there reads the session-wide persistent-RDD set. Every public package
+function has a caller outside tests/. Every package import in the
+repo's scripts resolves.
 """
 
 from __future__ import annotations
@@ -136,8 +137,9 @@ def test_parquet_writes_go_through_the_writer_seam():
     assert offenders == []
 
 
-#: package subtrees whose stage boundaries must go through session.materialize
-_STAGE_SCOPE = ("operators", "plans", "streaming")
+#: the one module allowed to checkpoint and read the persistent-RDD set
+#: itself; every other package module goes through session.materialize
+_STAGE_SEAM = "session.py"
 
 
 def _bypasses_stage_seam(src: str) -> list[int]:
@@ -167,16 +169,11 @@ def test_stage_seam_detector_flags_bypasses():
 def test_stage_boundaries_go_through_the_materialize_seam():
     root = os.path.dirname(pkg.__file__)
     offenders = []
-    for sub in _STAGE_SCOPE:
-        for dirpath, _, files in os.walk(os.path.join(root, sub)):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    path = os.path.join(dirpath, f)
-                    with open(path) as fh:
-                        offenders += [
-                            f"{os.path.relpath(path, root)}:{n}"
-                            for n in _bypasses_stage_seam(fh.read())
-                        ]
+    for path in _py_files(root):
+        rel = os.path.relpath(path, root)
+        if rel != _STAGE_SEAM:
+            with open(path) as fh:
+                offenders += [f"{rel}:{n}" for n in _bypasses_stage_seam(fh.read())]
     assert offenders == []
 
 
@@ -268,8 +265,9 @@ _FOLD_SIDE = {
         "clean_filter_dedup_apply",
         "migrate_training_data_neardup_banding",
         "migrate_clean_filter_banding",
+        "_banding_moves",
+        "_migrated",
         "_apply_rep_candidates",
-        "_rebanded_collapse_frames",
         "_refresh_spans",
         "_finish_fold",
         "compact_state",
@@ -357,11 +355,15 @@ def test_minhash_pair_pieces_written_once():
     assert "collapse" not in inspect.signature(lsh_candidate_pairs).parameters
 
 
-#: one-shot build -> the state builder of the same pipeline
-_ONE_SHOTS = {
-    "prepare_training_data_neardup": "training_data_neardup_state",
-    "prepare_clean_filter_dedup": "clean_filter_dedup_state",
-}
+#: (one-shot build, state builder, banding migration) of each corpus pipeline
+_PIPELINE_ENTRIES = (
+    (
+        "prepare_training_data_neardup",
+        "training_data_neardup_state",
+        "migrate_training_data_neardup_banding",
+    ),
+    ("prepare_clean_filter_dedup", "clean_filter_dedup_state", "migrate_clean_filter_banding"),
+)
 
 
 def _called_names(fn) -> set:
@@ -374,39 +376,46 @@ def _called_names(fn) -> set:
 
 def test_one_build_chain_per_corpus_pipeline():
     """Each corpus pipeline's one-shot build calls no operators/dedup.py
-    function itself and delegates to the one private body its state
-    builder runs, and that body reaches the digest grouping and the
-    components step; nothing in plans/training_data.py runs the
-    stand-alone pair or span-removal operators, and
-    minhash_dedup_pairs has no collapse switch."""
+    function itself; it, its state builder and its banding migration
+    all run the one private body, which reaches the digest grouping and
+    the components step. Outside that body the migration runs no dedup
+    operator but the banding rule (minhash_auto_params), so no second,
+    migration-only pair chain is left. Nothing in
+    plans/training_data.py runs the stand-alone pair or span-removal
+    operators, and minhash_dedup_pairs has no collapse switch."""
     from build_datawarehouse_demo_spark.operators import dedup
     from build_datawarehouse_demo_spark.plans import training_data
 
     fns = _top_level_functions(inspect.getsource(training_data))
     calls = {name: _called_names(fn) for name, fn in fns.items()}
     assert not set().union(*calls.values()) & {"minhash_dedup_pairs", "remove_duplicate_spans"}
+    assert not {"_rebanded_collapse_frames", "_collapsed_pair_state"} & set(fns)
 
-    def reaches(name: str, target: str, seen: set) -> bool:
+    def reached(name: str, seen: set) -> set:
+        """Every name ``name`` calls, directly or through the module's
+        functions outside ``seen``."""
         seen.add(name)
-        return target in calls[name] or any(
-            reaches(c, target, seen) for c in calls[name] & set(fns) - seen
-        )
+        out = set(calls[name])
+        for c in calls[name] & set(fns) - seen:
+            out |= reached(c, seen)
+        return out
 
     dedup_fns = {
         name
         for name, obj in inspect.getmembers(dedup, inspect.isfunction)
         if obj.__module__ == dedup.__name__
     }
-    for one_shot, builder in _ONE_SHOTS.items():
+    for one_shot, builder, migration in _PIPELINE_ENTRIES:
         fn = fns[one_shot]
         assert not calls[one_shot] & dedup_fns, one_shot
         assert not any(
             isinstance(n, ast.ImportFrom) and (n.module or "").endswith("operators.dedup")
             for n in ast.walk(fn)
         ), one_shot
-        (body,) = calls[one_shot] & calls[builder] & set(fns) - {"_pipeline_params"}
-        for target in ("shingle_digest_groups", "connected_components_star"):
-            assert reaches(body, target, set()), (body, target)
+        (body,) = calls[one_shot] & calls[builder] & calls[migration] & set(fns)
+        assert {"shingle_digest_groups", "connected_components_star"} <= reached(body, set())
+        own = reached(migration, {body}) & dedup_fns
+        assert own <= {"minhash_auto_params"}, (migration, own)
     assert "collapse" not in inspect.signature(dedup.minhash_dedup_pairs).parameters
 
 

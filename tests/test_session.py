@@ -1,7 +1,11 @@
-"""Session defaults, checked without starting a JVM."""
+"""Session defaults, checked without starting a JVM, and the block
+seam's unpersist, checked in a child process."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import types
 
 import pytest
@@ -50,3 +54,45 @@ def test_driver_heap_defaults_to_half_the_host_capped_at_16g(monkeypatch, host_g
 def test_driver_heap_env_override_wins(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert _driver_memory_conf(monkeypatch, 16 * 2**30) == "3g"
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: frees a scope's hidden block and a superseded state's block, then
+#: prints how many RDDs stay persisted
+_FREE_PROBE = r"""
+from build_datawarehouse_demo_spark.plans.training_data import retire_superseded_state
+from build_datawarehouse_demo_spark.session import block_scope, get_spark, materialize
+
+spark = get_spark("free_blocks_probe", master="local[1]", shuffle_partitions=1)
+df = spark.range(8)
+
+
+@block_scope
+def build():
+    materialize(df.selectExpr("id * 2 AS x"))
+    return {"kept": materialize(df.selectExpr("id * 3 AS x"))}
+
+
+state = build()
+retire_superseded_state(state, {})
+print("persisted", len(spark.sparkContext._jsc.getPersistentRDDs()))
+spark.stop()
+"""
+
+
+def test_freeing_checkpoint_blocks_logs_no_lineage_warning():
+    """The block scope and the retire step free local-checkpoint blocks
+    without RDD.unpersist's one warning line per block (``RDD <n> was
+    locally checkpointed, its lineage has been truncated ...``)."""
+    out = subprocess.run(
+        [sys.executable, "-c", _FREE_PROBE],
+        cwd=ROOT,
+        env={**os.environ, "PYTHONPATH": ROOT, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "persisted 0" in out.stdout, out.stdout
+    assert "was locally checkpointed" not in out.stderr, out.stderr[-2000:]

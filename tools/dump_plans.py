@@ -60,7 +60,7 @@ AUDITED = {
     "streaming_neardup_collapse_batch": "narrow simhash collapse — per-row signature folds in ONE projection (no explode), then a single exchange on the signature for the min/count window",
     "sample_temperature_mix_t3": "general-T mixing (fill rebuilt r19) — quotas are driver-side bigint literals broadcast into the rank filter; the rank comes from the range-partitioned distributed fill (window keyed on (partition, source), never a single task per source)",
     "pipeline_training_data_neardup_incremental": "incremental corpus refresh (r10; r15: TWO folds with a state COMPACTION between) — ONLY each batch takes the feature scan; exact stage anti-joins 16-byte digests against stored survivors; new band keys equi-join the STORED band-key table (old signatures reused, never recomputed); components contract stored+new pairs; span refresh recomputes gram stats only for digests touched by new or dropped reps and rebuilds only affected documents — untouched output rows are reused verbatim; after the mid-sequence compaction the stored side is BUCKETED TABLE SCANS (zero unions, zero checkpoint leaves), the fold-2 plan shape a year-old production state would have",
-    "pipeline_clean_filter_dedup_migrated": "banding migration (r15) — build at n/5, fold frozen, MIGRATE (reps re-signed at the new auto params through one distinct-content semi-join scan, pairs re-expanded through the stored member map, components+output rebuilt at rep scale — the filter front never re-runs), fold at the migrated banding",
+    "pipeline_clean_filter_dedup_migrated": "banding migration (r15) — build at n/5, fold frozen, MIGRATE (the build body rerun over the stored survivors at the new auto params: digest grouping, band keys, pairs, components, output — the filter front never re-runs), fold at the migrated banding",
     "dedup_semantic_semdedup": "SemDeDup prune — trained-quantizer chain (Arrow assign kernels r19, the sim_ivf_trained pattern: MapInPandas scoring, no BNLJ cross-score stages), then ONE rank window per cluster and a cluster-key self equi-join for the pair stage (O(n²/nlist) comparisons — the balanced production sizing makes it n^(4/3), measured in BENCH_SEMDEDUP_SCALE_r10.json); never a corpus nested-loop",
     "dedup_semdedup_incremental": "incremental SemDeDup — frozen quantizer broadcast into BOTH subset assignments; the new batch takes the rank window; two cluster-key equi-joins (new×stored, new×earlier-new) bound pair volume by |new|·cluster_size; stored verdicts never recomputed",
     "sample_token_budget_mix_t1": "token-budget mixing (fill rebuilt r19) — per-source token totals fall out of the fill's bounded per-(partition, source) collect, quotas broadcast back, running sum via the range-partitioned distributed fill (window keyed on (partition, source) — NO per-source single-task sort); the greedy-prefix filter is a narrow comparison; payloads rejoin by (id, source)",
